@@ -5,28 +5,18 @@ import org.apache.spark.sql.SparkSession
 /** Bench main — driver contract: one JSON line with per-query seconds on
   * SPARK_GRAFT_SF_DIR (sf0.1 in driver runs).
   *
-  * Queries are executed with a `noop`-format write so the FULL physical
-  * plan runs (sorts, joins, windows included) — `count()` would let
-  * Catalyst prune most of the work and overstate throughput.
+  * Queries run through [[Harness.drain]], so the FULL physical plan
+  * runs.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session()
     // warm JVM/codegen/shuffle machinery so the first measured query
     // isn't charged for session startup (touches no benchmark table)
-    spark.range(1000).repartition(4).groupBy((org.apache.spark.sql
-      .functions.col("id") % 10).as("k")).count()
-      .write.format("noop").mode("overwrite").save()
+    Harness.drain(spark.range(1000).repartition(4).groupBy((org.apache
+      .spark.sql.functions.col("id") % 10).as("k")).count())
     // Ambient-load honesty (round-14 verdict item 5): three judge
     // rounds adjudicated artifact-vs-probe drift by hand because the
     // artifact carried no load context. Record the 1-min /proc/loadavg
@@ -50,17 +40,9 @@ object Bench {
     // time is kept, not whichever attempt ran first.
     def runOnce(name: String, fn: (SparkSession, String) => org.apache
         .spark.sql.DataFrame): Either[String, (Double, Double)] = {
-      // Hygiene between queries: drop cached relations/broadcasts and
-      // GC — 150 plans in one JVM otherwise bleed memory pressure into
-      // whichever query runs next (observed up to 25× slowdowns)
-      spark.catalog.clearCache()
-      System.gc()
       val l = loadAvg()
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Right(((System.nanoTime() - t0) / 1e9, l))
-      } catch { case e: Throwable =>
+      try Right((Harness.timed(spark)(Harness.drain(fn(spark, sfDir))), l))
+      catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
           .linesIterator.take(1).mkString.take(300)
         System.err.println(s"[bench] $name FAILED: $msg")
@@ -165,7 +147,7 @@ object Bench {
       // stdout tail capture is ~2000 chars, so ANY final line carrying
       // the 378-entry queries map (~12 KB) can never be captured
       // whole. The FINAL line is therefore a BOUNDED summary (total,
-      // wall, n, failure count, load min/max, rerun list — ≤ ~500
+      // wall, n, failure count, load min/max, rerun counts — ≤ ~500
       // chars); the full contract line WITH the per-query map is still
       // printed immediately before it (and after every query), and the
       // complete artifact lives in BENCH_LATEST.json.
@@ -178,7 +160,11 @@ object Bench {
           .mkString("{", ",", "}")
         s""","loads":$ls$mm"""
       }
-      val rr = (if (reruns.isEmpty) "" else
+      // The slim line carries rerun COUNTS only (the name lists are
+      // unbounded); the full rendering keeps the names.
+      val rr = if (slim)
+        s""","n_rerun":${reruns.size},"n_rerun_failed":${rerunsFailed.size}"""
+      else (if (reruns.isEmpty) "" else
         reruns.toSeq.sorted.map(jq).mkString(""","rerun":[""", ",", "]")) +
         (if (rerunsFailed.isEmpty) "" else rerunsFailed.toSeq.sorted
           .map(jq).mkString(""","rerun_failed":[""", ",", "]"))
@@ -210,14 +196,10 @@ object Bench {
     if (only.isEmpty) {
       graft.operators.Memos.clearAll()
       graft.operators.Memos.builders.foreach { case (name, build) =>
-        spark.catalog.clearCache()
-        System.gc()
         val l = loadAvg()
         loads += (name -> l)
-        val t0 = System.nanoTime()
         try {
-          build(spark, sfDir)
-          val sec = (System.nanoTime() - t0) / 1e9
+          val sec = Harness.timed(spark)(build(spark, sfDir))
           results += (name -> sec)
           println(s"""{"query":"$name","sec":$sec,"load":$l}""")
         } catch { case e: Throwable =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-dump utility (round 17, optimization deliverable): write
   * `.explain("formatted")` output for the named queries to files —
   * the `plans/rNN/<query>_{before,after}.txt` evidence the
@@ -9,22 +7,13 @@ import org.apache.spark.sql.SparkSession
   * these files without running Spark).
   *
   * Usage: runMain graft.Plans <sfDir> <outDir> <suffix> <q1,q2,...>
-  * Writes <outDir>/<query>_<suffix>.txt per query. `memo:` builders
-  * are not plannable frames — pass the consumer query instead.
+  * Writes <outDir>/<query>_<suffix>.txt per query; a `memo:<name>`
+  * writes one file per registered build stage of that memo.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(outDir))
     def dump(fileBase: String, df: org.apache.spark.sql.DataFrame)
@@ -40,15 +29,13 @@ object Plans {
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
       if (name.startsWith("memo:")) {
         // Round 18 (verdict r17 item 3): memo BUILD plans — dump the
-        // registered lazy pre-checkpoint build stages, with earlier
-        // builders' state pre-built (dependency order, like Probe).
-        val bs = graft.operators.Memos.builders
-        val i = bs.indexWhere(_._1 == name)
-        if (i < 0) sys.error(s"unknown memo '$name'")
-        bs.take(i).foreach(_._2(spark, sfDir))
-        val pf = graft.operators.Memos.planFrames.toMap.getOrElse(name,
-          sys.error(s"no registered build plan for '$name'; known: " +
-            graft.operators.Memos.planFrames.map(_._1).mkString(", ")))
+        // memo's lazy pre-checkpoint build stages, with the line items
+        // listed before it pre-built (dependency order, like Probe).
+        val m = Harness.memoAfterDeps(spark, sfDir, name)
+        val pf = m.planFrames.getOrElse(sys.error(
+          s"no registered build plan for '$name'; known: " +
+            graft.operators.Memos.lineItems.filter(_.planFrames.nonEmpty)
+              .map(_.label).mkString(", ")))
         pf(spark, sfDir).foreach { case (stage, df) =>
           dump(s"${name.replace(':', '_')}_$stage", df)
         }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Isolated per-query probe (the verify-skill "3×-loop probe"): run ONE
   * query N times in a single warm JVM and print each timing. The warm
   * (non-first) numbers are the intrinsic plan cost — suite numbers carry
@@ -15,53 +13,27 @@ object Probe {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(reps >= 2,
+      s"reps must be >= 2 (the first rep is warmup, excluded): $reps")
+    val spark = Harness.session()
     // Round 18: `memo:*` names probe the memo BUILDERS (the bench's
     // most expensive line items had no isolated-probe path — verdict
-    // r17 items 2/6). Memos are cleared before EVERY rep so each rep
-    // times a full rebuild, mirroring the bench's cleared-registry
-    // build phase.
+    // r17 items 2/6). Every rep clears the registry and pre-builds the
+    // line items listed earlier (e.g. co_edges25 under louvain2_state)
+    // outside the timed region, so each rep times a full rebuild of
+    // the named memo alone, as the bench attributes it.
     val run: () => Double =
-      if (name.startsWith("memo:")) {
-        val bs = graft.operators.Memos.builders
-        val i = bs.indexWhere(_._1 == name)
-        if (i < 0) sys.error(s"unknown memo '$name'; known: " +
-          bs.map(_._1).mkString(", "))
-        // Dependencies (builders listed earlier, e.g. louvain2_state
-        // layering on co_edges25) are pre-built OUTSIDE the timed
-        // region, matching the bench's dependency-order attribution.
-        () => {
-          graft.operators.Memos.clearAll()
-          bs.take(i).foreach(_._2(spark, sfDir))
-          spark.catalog.clearCache()
-          System.gc()
-          val t0 = System.nanoTime()
-          bs(i)._2(spark, sfDir)
-          (System.nanoTime() - t0) / 1e9
-        }
+      if (name.startsWith("memo:")) () => {
+        val m = Harness.memoAfterDeps(spark, sfDir, name)
+        Harness.timed(spark)(m(spark, sfDir))
       } else {
         val fn = SparkEntry.queries.getOrElse(name,
           sys.error(s"unknown query '$name'; known: " +
             SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
-        () => {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
+        () => Harness.timed(spark)(Harness.drain(fn(spark, sfDir)))
       }
     var best = Double.MaxValue
     (1 to reps).foreach { i =>
-      spark.catalog.clearCache()
-      System.gc()
       val sec = run()
       if (i > 1) best = math.min(best, sec) // first rep = warmup, excluded
       println(f"""{"query":"$name","rep":$i,"sec":$sec%.3f}""")

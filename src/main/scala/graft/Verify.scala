@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Write timestamps as TIMESTAMP_MICROS (not INT96, which pyarrow
-      // reads as timestamp[ns]) so the driver's Arrow-level compare sees
-      // the same type DuckDB produces (D6; round-1 q27 lesson).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // events.parquet is TIMESTAMP(NANOS); declared here once so the
-      // Tables.events loader never has to mutate session config
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // GRAFT_VERIFY_ONLY=q59_tfidf,q60_lateral — builder-side iteration
     // filter; the driver never sets it, so graded runs dump everything.

@@ -8,7 +8,10 @@ package graft.avro
   *  - int → long, float → double, str → string, bytes → bytes,
   *    null → null (`avroparser.py:9`);
   *  - dict → nested record whose record NAME is the field name
-  *    (`avroparser.py:42-43` — the naming quirk, SURVEY §7.4.6);
+  *    (`avroparser.py:42-43` — the naming quirk, SURVEY §7.4.6), in
+  *    the enclosing record's full name as NAMESPACE (a departure: the
+  *    reference's bare names make Avro reject two nested records that
+  *    share a field name, e.g. billing.address and shipping.address);
   *  - list → array with items hardcoded to "string"
   *    (`avroparser.py:35-37`, the reference's own TODO FIXME);
   *  - `optionalPrimitives=true` wraps every primitive in
@@ -57,13 +60,16 @@ object AvroInference {
   }
 
   /** Record schema; the nested record's name IS the field name
-    * (`avroparser.py:42-43`). Namespace only on the top level
+    * (`avroparser.py:42-43`) and its namespace is this record's full
+    * name, so every record's full name is its field path and no two
+    * can collide. The top-level namespace is the caller's
     * (`avroparser.py:79-81`). */
   def recordSchema(record: Map[String, Any], name: String,
       optionalPrimitives: Boolean, namespace: Option[String]): String = {
     val ns = namespace.map(n => s""", "namespace": ${quote(n)}""").getOrElse("")
+    val fullName = namespace.filter(_.nonEmpty).fold(name)(n => s"$n.$name")
     val fields = record.map { case (k, v) =>
-      s"""{"name": ${quote(k)}, "type": ${fieldType(v, k, optionalPrimitives, None)}}"""
+      s"""{"name": ${quote(k)}, "type": ${fieldType(v, k, optionalPrimitives, Some(fullName))}}"""
     }.mkString(", ")
     s"""{"type": "record", "name": ${quote(name)}$ns, "fields": [$fields]}"""
   }

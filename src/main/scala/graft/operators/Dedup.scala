@@ -1084,17 +1084,14 @@ object Dedup {
     * per-(session, dir) artifact of the already-cleaned corpus; only
     * the incoming batch varies per call. Same localCheckpoint
     * discipline as the pair memos. */
-  private val crossIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), CrossCorpusIndex]
-
-  private[graft] def crossIndex(spark: SparkSession, dir: String)
-      : CrossCorpusIndex =
-    crossIndexCache.getOrElseUpdate((spark, dir),
+  private[graft] val crossIndex: Memo[CrossCorpusIndex] =
+    Memo("crosscorpus_index", Some(crossIndexPlanFrames _)) { (spark, dir) =>
       crossCorpusIndexOf(load(spark, dir, "documents")
-        .select(col("doc_id"), col("text"))))
+        .select(col("doc_id"), col("text")))
+    }
 
   /** LAZY build-stage frame of the cross-corpus index (plan dumps). */
-  private[operators] def crossIndexPlanFrames(spark: SparkSession,
+  private def crossIndexPlanFrames(spark: SparkSession,
       dir: String): Seq[(String, DataFrame)] = {
     val ex = crossShingleSets(load(spark, dir, "documents")
       .select(col("doc_id"), col("text")), 3)
@@ -1116,74 +1113,42 @@ object Dedup {
     * oracle is uncapped, and a capped run could silently miss a pair
     * whose shared shingles are all hot (ADVICE r3). The pair set is
     * tiny (verified pairs only), so holding it across queries is free. */
-  private val exactPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def exactPairs(spark: SparkSession, dir: String): DataFrame =
-    exactPairsCache.getOrElseUpdate((spark, dir),
-      ngramJaccardPairs(derivedCorpus(spark, dir),
-        dfCap = Int.MaxValue)
-        .localCheckpoint(true))
+  val exactPairs: Memo[DataFrame] = Memo("dedup_exact_pairs",
+    Some((spark, dir) => Seq("build" -> ngramJaccardPairsBuild(
+      derivedCorpus(spark, dir), dfCap = Int.MaxValue)))) { (spark, dir) =>
+    ngramJaccardPairs(derivedCorpus(spark, dir), dfCap = Int.MaxValue)
+      .localCheckpoint(true)
+  }
 
   /** Same memoization for the LSH pair set shared by q33a/q33e (the
     * survivor query is the pair set plus one anti-join). Round 10: the
     * memo holds the ENGINE-SHARED pair set ([[minhashPairsShared]]) —
     * both queries now sit under the hard DuckDB oracle. */
-  private val lshPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Memoized q33g component labels — round 10: FOUR queries view the
-    * closure (q208 sizes, q217 lineage, q232 reps, q235 impact) and
-    * each re-ran the ~2 s propagation loop per Verify/Bench pass; the
-    * label table is docs-sized, so holding it is free (same
-    * localCheckpoint discipline as the pair memo). */
-  private val componentsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Drop this object's memoized frames (see [[Memos.clearAll]]). */
-  private[operators] def clearMemos(): Unit = {
-    exactPairsCache.clear()
-    lshPairsCache.clear()
-    componentsCache.clear()
-    derivedCorpusCache.clear()
-    qualityScoredCache.clear()
-    crossIndexCache.clear()
+  val lshPairs: Memo[DataFrame] = Memo("dedup_lsh_pairs") { (spark, dir) =>
+    minhashPairsShared(derivedCorpus(spark, dir)).localCheckpoint(true)
   }
-
-  def lshPairs(spark: SparkSession, dir: String): DataFrame =
-    lshPairsCache.getOrElseUpdate((spark, dir),
-      minhashPairsShared(derivedCorpus(spark, dir))
-        .localCheckpoint(true))
 
   /** Memoized CHECKPOINTED derived corpus (round 17 —
     * `memo:derived_corpus`): the three learned-filter pipelines each
     * localCheckpoint'ed their own copy of docsWithNearDups(documents)
     * per pass (the round-13 TOKENIZE-ONCE materialization); the frame
     * is docs+twins with text, built once and shared. */
-  private val derivedCorpusCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[operators] def derivedCorpus(spark: SparkSession,
-      dir: String): DataFrame =
-    derivedCorpusCache.getOrElseUpdate((spark, dir),
-      docsWithNearDups(load(spark, dir, "documents"))
-        .localCheckpoint(true))
+  private[operators] val derivedCorpus: Memo[DataFrame] =
+    Memo("derived_corpus") { (spark, dir) =>
+      docsWithNearDups(load(spark, dir, "documents")).localCheckpoint(true)
+    }
 
   /** Memoized q272 scorer output over the derived corpus (round 17 —
     * `memo:quality_scored`): FOUR queries (q273's keeper policy +
     * the q280/q294/q313b pipelines' stage-1 classifier leg) each
     * re-ran the zero-shuffle-but-HOF-heavy scorer over the corpus per
     * pass; the scored frame is docs-sized and slim. */
-  private val qualityScoredCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[operators] def qualityScoredCorpus(spark: SparkSession,
-      dir: String): DataFrame =
-    qualityScoredCache.getOrElseUpdate((spark, dir), {
+  private[operators] val qualityScoredCorpus: Memo[DataFrame] =
+    Memo("quality_scored") { (spark, dir) =>
       graft.functions.SignatureExprs.register(spark)
       CorpusPrep.qualityScore(derivedCorpus(spark, dir))
         .localCheckpoint(true)
-    })
+    }
 
   def q33aMinhash(spark: SparkSession, dir: String): DataFrame =
     lshPairs(spark, dir).orderBy("doc_a", "doc_b")
@@ -1595,19 +1560,23 @@ object Dedup {
       .select("doc_id").orderBy("doc_id")
 
   /** Memoized (unsorted) q33g label table — consumers aggregate it, so
-    * only the q33g query entry itself pays the output sort. */
-  private def dedupComponents(spark: SparkSession, dir: String): DataFrame =
-    componentsCache.getOrElseUpdate((spark, dir), {
+    * only the q33g query entry itself pays the output sort. Round 10:
+    * FOUR queries view the closure (q208 sizes, q217 lineage, q232
+    * reps, q235 impact) and each re-ran the ~2 s propagation loop per
+    * Verify/Bench pass; the label table is docs-sized, so holding it is
+    * free (same localCheckpoint discipline as the pair memo). */
+  private[operators] val dedupComponents: Memo[DataFrame] =
+    Memo("dedup_components") { (spark, dir) =>
       val pairs = exactPairs(spark, dir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val docs = derivedCorpus(spark, dir)
       connectedComponents(docs.select(col("doc_id").as("id")), pairs)
         .select(col("id").as("doc_id"), col("component"))
         .localCheckpoint(true)
-    })
+    }
 
   /** Near-dup component labeling (oracle-gated: recursive-CTE closure).
-    * Memoized per (session, dir) — see [[componentsCache]]. */
+    * Memoized per (session, dir) — see [[dedupComponents]]. */
   def q33gDedupComponents(spark: SparkSession, dir: String): DataFrame =
     dedupComponents(spark, dir).orderBy("doc_id")
 

@@ -1,112 +1,73 @@
 package graft.operators
 
-/** Session-lifetime memo registry (advice r7, Graph.scala:267): the
-  * operator objects memoize localCheckpoint'ed frames per
-  * (SparkSession, dir) — exact/LSH pair sets (Dedup), co-supply edges,
-  * LPA labels and basket co-counts (Graph) — so one Verify/Bench run
-  * computes each shared pipeline once. The caches are deliberately
-  * never evicted during a run (the blocks are tiny: verified pairs,
-  * 25-node labels), but a LONG-RUNNING session that processes many
-  * data directories accumulates one entry set per dir. `clearAll()`
-  * drops every reference; the checkpointed RDDs then become eligible
-  * for ContextCleaner reclamation on the next GC cycle (checkpoint
-  * cleanup is reference-triggered — there is nothing to unpersist
-  * explicitly for localCheckpoint leaves).
+import org.apache.spark.sql.SparkSession
+
+/** The session-lifetime memo layer: one [[Memo]] per shared pipeline
+  * (exact/LSH pair sets in Dedup, co-supply edges, LPA labels and
+  * basket co-counts in Graph, tokenizer and quantizer state in TextOps
+  * and Similarity, the quantile sketch in Percentiles), each holding
+  * its localCheckpoint'ed result per (SparkSession, dir), so one
+  * Verify/Bench run computes each shared pipeline once.
   *
-  * Call between tenants/directories in a resident service; tests pin
-  * that a cleared memo recomputes (MemoSpec). */
+  * [[lineItems]] is the ONE hand-kept list: every memo that is a bench
+  * line item, in dependency order. [[builders]] and the `graft.Plans`
+  * build-stage dumps (each memo's optional `planFrames`) are derived
+  * from it; [[clearAll]] walks the self-registered memos instead, so a
+  * memo that is not a line item (TextOps.uniEdges, the head both
+  * tokenizer memos share) is still cleared.
+  *
+  * The memos are never evicted during a run (the blocks are small:
+  * verified pairs, 25-node labels), but a LONG-RUNNING session that
+  * processes many data directories accumulates one entry set per dir.
+  * `clearAll()` drops every reference; the checkpointed RDDs then
+  * become eligible for ContextCleaner reclamation on the next GC cycle
+  * (checkpoint cleanup is reference-triggered — there is nothing to
+  * unpersist explicitly for localCheckpoint leaves). Call it between
+  * tenants/directories in a resident service; MemoSpec pins that a
+  * cleared memo recomputes. */
 object Memos {
 
   /** Drop every memoized frame across the operator library. */
-  def clearAll(): Unit = {
-    Dedup.clearMemos()
-    Graph.clearMemos()
-    TextOps.clearMemos()
-    Similarity.clearMemos()
-    Percentiles.clearMemos()
-  }
+  def clearAll(): Unit = Memo.registered.foreach(_.clear())
 
-  /** Every memoized build, NAMED, in dependency order (lpa25 layers on
-    * coEdges25, so timing them in this order attributes each layer's
-    * cost to its own line). Each builder forces materialization — the
-    * getters end in an EAGER localCheckpoint, so returning is
-    * materialized. Bench times these as first-class `memo:*` line
-    * items before the query loop (round-8 verdict item 4: the first
-    * consumer of a memoized frame used to absorb its build, which made
-    * per-query numbers mean different things depending on suite order
-    * — three rounds of bench-reading confusion). */
-  def builders: Seq[(String, (org.apache.spark.sql.SparkSession,
-      String) => Unit)] = Seq(
-    // derived_corpus FIRST (round 18): every Dedup/TextOps consumer of
-    // the docs+twins corpus now reads this memo instead of re-deriving
-    // it per call, so it must build before the pair memos that layer
-    // on it (the lpa25-on-coEdges25 attribution rule).
-    "memo:derived_corpus" ->
-      ((s, d) => { Dedup.derivedCorpus(s, d); () }),
-    "memo:dedup_exact_pairs" ->
-      ((s, d) => { Dedup.exactPairs(s, d); () }),
-    "memo:dedup_lsh_pairs" ->
-      ((s, d) => { Dedup.lshPairs(s, d); () }),
-    "memo:co_edges25" ->
-      ((s, d) => { Graph.coEdges25(s, d); () }),
-    "memo:lpa25" ->
-      ((s, d) => { Graph.lpa25(s, d); () }),
-    "memo:basket_co" ->
-      ((s, d) => { Graph.basketCo(s, d); () }),
-    "memo:fuzzy_pairs" ->
-      ((s, d) => { TextOps.fuzzyPairs(s, d); () }),
-    "memo:bpe_state" ->
-      ((s, d) => { TextOps.bpeState6(s, d); () }),
-    "memo:dedup_components" ->
-      ((s, d) => { Dedup.q33gDedupComponents(s, d); () }),
-    // round 18 (verdict r17 item 5): the q137 existing-side postings
-    // index — stable per (session, dir); only the incoming batch is
-    // per-call work.
-    "memo:crosscorpus_index" ->
-      ((s, d) => { Dedup.crossIndex(s, d); () }),
-    "memo:quality_scored" ->
-      ((s, d) => { Dedup.qualityScoredCorpus(s, d); () }),
-    "memo:kmeans_cells" ->
-      ((s, d) => { Similarity.kmeansShared83(s, d); () }),
-    "memo:pq_state" ->
-      ((s, d) => { Similarity.pqShared168(s, d); () }),
-    "memo:pq_res_state" ->
-      ((s, d) => { Similarity.pqResShared(s, d); () }),
-    "memo:pq_ref_state" ->
-      ((s, d) => { Similarity.pqRefShared(s, d); () }),
-    "memo:resid_shortlist" ->
-      ((s, d) => { Similarity.residShortlist50(s, d); () }),
-    "memo:hybrid_fused" ->
-      ((s, d) => { Similarity.hybridMultiRankings(s, d); () }),
-    "memo:qsketch_state" ->
-      ((s, d) => { Percentiles.qsketchState(s, d); () }),
-    "memo:unigram_state" ->
-      ((s, d) => { TextOps.uniState(s, d); () }),
-    "memo:wordpiece_state" ->
-      ((s, d) => { TextOps.wpState(s, d); () }),
-    "memo:louvain2_state" ->
-      ((s, d) => { Graph.louvain2State(s, d); () }),
-    "memo:pr_rounds25" ->
-      ((s, d) => { Graph.prRounds25Build(s, d); () }))
+  /** Every bench line-item memo, in dependency order: a memo is listed
+    * after every memo its build reads (lpa25 after co_edges25, the pq
+    * chain after kmeans_cells), so timing them in this order attributes
+    * each layer's cost to its own line and pre-building the prefix
+    * before entry i leaves entry i only its own work (MemoSpec pins
+    * the order). derived_corpus comes FIRST: every Dedup/TextOps
+    * consumer of the docs+twins corpus reads it. */
+  private[graft] def lineItems: Seq[Memo[_]] = Seq(
+    Dedup.derivedCorpus,
+    Dedup.exactPairs,
+    Dedup.lshPairs,
+    Graph.coEdges25,
+    Graph.lpa25,
+    Graph.basketCo,
+    TextOps.fuzzyPairs,
+    TextOps.bpeState6,
+    Dedup.dedupComponents,
+    Dedup.crossIndex,
+    Dedup.qualityScoredCorpus,
+    Similarity.kmeansShared83,
+    Similarity.pqShared168,
+    Similarity.pqResShared,
+    Similarity.pqRefShared,
+    Similarity.residShortlist50,
+    Similarity.hybridMultiRankings,
+    Percentiles.qsketchState,
+    TextOps.uniState,
+    TextOps.wpState,
+    Graph.louvain2State,
+    Graph.prRounds25)
 
-  /** LAZY pre-checkpoint build-stage frames per memo, for
-    * `graft.Plans` dumps (round 18, verdict r17 item 3: the most
-    * expensive bench entries are memo builds whose plans were
-    * invisible — the eager localCheckpoint hides the build behind a
-    * leaf). Each entry may assume earlier builders' state exists
-    * (Plans pre-builds dependencies, like Probe). Only the expensive
-    * builds are registered; a memo absent here has a trivial or
-    * leaf-projection build. */
-  def planFrames: Seq[(String, (org.apache.spark.sql.SparkSession,
-      String) => Seq[(String, org.apache.spark.sql.DataFrame)])] = Seq(
-    "memo:dedup_exact_pairs" -> ((s, d) => Seq(
-      "build" -> Dedup.ngramJaccardPairsBuild(
-        Dedup.derivedCorpus(s, d), dfCap = Int.MaxValue))),
-    "memo:crosscorpus_index" -> (Dedup.crossIndexPlanFrames _),
-    "memo:basket_co" -> (Graph.basketCoPlanFrames _),
-    "memo:co_edges25" -> (Graph.coEdges25PlanFrames _),
-    "memo:louvain2_state" -> (Graph.louvain2PlanFrames _),
-    "memo:qsketch_state" -> (Percentiles.qsketchPlanFrames _),
-    "memo:fuzzy_pairs" -> (TextOps.fuzzyPlanFrames _),
-    "memo:bpe_state" -> (TextOps.bpePlanFrames _))
+  /** The line items as named builds (`memo:<name>`). Each build forces
+    * materialization (the memos end in an EAGER localCheckpoint). Bench
+    * times these as first-class `memo:*` entries before the query loop
+    * (round-8 verdict item 4: the first consumer of a memoized frame
+    * used to absorb its build, so per-query numbers meant different
+    * things depending on suite order). */
+  def builders: Seq[(String, (SparkSession, String) => Unit)] =
+    lineItems.map(m => m.label ->
+      ((s: SparkSession, d: String) => { m(s, d); () }))
 }

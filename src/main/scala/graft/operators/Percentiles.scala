@@ -487,12 +487,6 @@ object Percentiles {
       .drop("__n")
   }
 
-  private val qsketchCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-
-  /** Drop this object's memoized frames (see [[Memos.clearAll]]). */
-  private[operators] def clearMemos(): Unit = qsketchCache.clear()
-
   /** Memoized SHARED quantile-sketch state (q302 + q302b both read
     * it): lineitem extendedprice CENTS (floor(x·100+0.5) — the
     * round-10 double→BIGINT rule), deterministically sharded 32 ways
@@ -534,7 +528,7 @@ object Percentiles {
 
   /** LAZY build-stage frames for plan dumps (round 18): the sharded
     * base and one compaction round over its materialized leaf. */
-  private[operators] def qsketchPlanFrames(
+  private def qsketchPlanFrames(
       spark: org.apache.spark.sql.SparkSession, dir: String)
       : Seq[(String, DataFrame)] = {
     val base = sketchBaseOf(qsketchValues(spark, dir))
@@ -552,10 +546,10 @@ object Percentiles {
         col("l_orderkey").cast("long").as("ok"),
         col("l_linenumber").cast("long").as("ln"))
 
-  private[operators] def qsketchState(
-      spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    qsketchCache.getOrElseUpdate((spark, dir),
-      sketchFromValues(qsketchValues(spark, dir)))
+  private[operators] val qsketchState: Memo[DataFrame] =
+    Memo("qsketch_state", Some(qsketchPlanFrames _)) { (spark, dir) =>
+      sketchFromValues(qsketchValues(spark, dir))
+    }
 
   /** The shared cascade as DuckDB CTE text (base/sh/s0/s1..s14) — the
     * ONE renderer both q302 and q302b oracles compose (the pqCtes

@@ -395,8 +395,13 @@ object TextOps {
     * computation — the pair list, and its transitive closure.
     * localCheckpoint'ed so the second consumer reads a few hundred
     * materialized rows instead of re-running the segment blocking. */
-  private val fuzzyPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  val fuzzyPairs: Memo[DataFrame] =
+    Memo("fuzzy_pairs", Some(fuzzyPlanFrames _)) { (spark, dir) =>
+      fuzzyMatchPairs(load(spark, dir, "customer"), "c_nationkey",
+        "c_custkey", "c_name")
+        .withColumnRenamed("blk", "nation")
+        .localCheckpoint(true)
+    }
 
   /** Memoized 6-merge BPE training state shared by q229 (merge
     * table), q231/q241 (encoding readouts), q238 (budget curve) and
@@ -408,30 +413,10 @@ object TextOps {
     * boundary in TextOpsSpec), in fewer distributed rounds: the
     * production-trainer swap the q248 experiment existed to earn.
     * All returned frames are eagerly checkpointed by the loop. */
-  private val bpeStateCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, Seq[(Long, Long)])]
-
-  def bpeState6(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Seq[(Long, Long)]) =
-    bpeStateCache.getOrElseUpdate((spark, dir),
-      bpeTrainStateBatched(load(spark, dir, "documents"),
-        merges = 6, k = 4))
-
-  /** Drop this object's memoized frames (see [[Memos.clearAll]]). */
-  private[operators] def clearMemos(): Unit = {
-    fuzzyPairsCache.clear()
-    bpeStateCache.clear()
-    uniCache.clear()
-    uniEdgeCache.clear()
-    wpCache.clear()
-  }
-
-  def fuzzyPairs(spark: SparkSession, dir: String): DataFrame =
-    fuzzyPairsCache.getOrElseUpdate((spark, dir),
-      fuzzyMatchPairs(load(spark, dir, "customer"), "c_nationkey",
-        "c_custkey", "c_name")
-        .withColumnRenamed("blk", "nation")
-        .localCheckpoint(true))
+  val bpeState6: Memo[(DataFrame, DataFrame, Seq[(Long, Long)])] =
+    Memo("bpe_state", Some(bpePlanFrames _)) { (spark, dir) =>
+      bpeTrainStateBatched(load(spark, dir, "documents"), merges = 6, k = 4)
+    }
 
   def q57FuzzyMatch(spark: SparkSession, dir: String): DataFrame =
     fuzzyPairs(spark, dir).orderBy("nation", "id_a", "id_b")
@@ -877,7 +862,7 @@ object TextOps {
   /** LAZY build-stage frames for plan dumps (round 18): the initial
     * symbol table and the round-1 candidate pair stats over its
     * materialized leaf (the batched trainer's per-round shape). */
-  private[operators] def bpePlanFrames(spark: SparkSession,
+  private def bpePlanFrames(spark: SparkSession,
       dir: String): Seq[(String, DataFrame)] = {
     val s = bpeInitialSymbols(load(spark, dir, "documents"))
       .localCheckpoint()
@@ -893,7 +878,7 @@ object TextOps {
   }
 
   /** fuzzy_pairs build plan (the PassJoin blocking + verify, LAZY). */
-  private[operators] def fuzzyPlanFrames(spark: SparkSession,
+  private def fuzzyPlanFrames(spark: SparkSession,
       dir: String): Seq[(String, DataFrame)] = Seq(
     "pairs" -> fuzzyMatchPairs(load(spark, dir, "customer"),
       "c_nationkey", "c_custkey", "c_name"))
@@ -1316,9 +1301,6 @@ object TextOps {
 
   // ---------------------------------------------------------------- q304
 
-  private val uniCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** UNIGRAM-LM TOKENIZER core (q304) — the SentencePiece-family
     * segmenter beside BPE (Kudo 2018, public): segment each word into
     * vocabulary pieces by Viterbi dynamic programming. The gateable
@@ -1406,14 +1388,12 @@ object TextOps {
     * read by BOTH tokenizer memos (`memo:unigram_state` and
     * `memo:wordpiece_state`; whichever builds first pays the head,
     * the pq_res/pq_ref dependency precedent) and the serving-replica
-    * builder. */
-  private val uniEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-
-  private[graft] def uniEdges(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    uniEdgeCache.getOrElseUpdate((spark, dir),
-      uniEdgesOf(load(spark, dir, "documents")))
+    * builder. Not a bench line item of its own: its cost is part of
+    * whichever tokenizer memo builds first. */
+  private[graft] val uniEdges: Memo[(DataFrame, DataFrame, DataFrame)] =
+    Memo("uni_edges") { (spark, dir) =>
+      uniEdgesOf(load(spark, dir, "documents"))
+    }
 
   private[graft] def uniStateOf(docs: DataFrame): DataFrame =
     uniDpOf(uniEdgesOf(docs))
@@ -1470,10 +1450,8 @@ object TextOps {
 
   /** Memoized unigram segmentation state over the corpus (q304 +
     * q304b share one DP run — `memo:unigram_state`). */
-  private[graft] def uniState(spark: SparkSession, dir: String)
-      : DataFrame =
-    uniCache.getOrElseUpdate((spark, dir),
-      uniDpOf(uniEdges(spark, dir)))
+  private[graft] val uniState: Memo[DataFrame] =
+    Memo("unigram_state") { (spark, dir) => uniDpOf(uniEdges(spark, dir)) }
 
   // ---------------------------------------------------------------- q312
 
@@ -1540,16 +1518,13 @@ object TextOps {
       .localCheckpoint()
   }
 
-  private val wpCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** Memoized WordPiece segmentation state (`memo:wordpiece_state`) —
     * q312 + q304b's third row share one greedy run over the memoized
     * edge head. */
-  private[graft] def wpState(spark: SparkSession, dir: String)
-      : DataFrame =
-    wpCache.getOrElseUpdate((spark, dir),
-      wordPieceOf(uniEdges(spark, dir)))
+  private[graft] val wpState: Memo[DataFrame] =
+    Memo("wordpiece_state") { (spark, dir) =>
+      wordPieceOf(uniEdges(spark, dir))
+    }
 
   /** Q315: WORDPIECE VOCAB-BUDGET CURVE — corpus fertility (pieces
     * per token, e3) for the GREEDY encoder at budgets {50, 200, 500}

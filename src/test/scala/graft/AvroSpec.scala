@@ -53,6 +53,27 @@ class AvroSpec extends AnyFunSuite {
     assert(fobj.getField("fobjstr").schema().getType.getName == "union")
   }
 
+  test("golden: nested records sharing a field name get distinct full " +
+      "names and round-trip (SURVEY §7 item 6)") {
+    val address = Map("street" -> "main st", "zip" -> 12345L)
+    val value = Map(
+      "billing" -> Map("address" -> address),
+      "shipping" -> Map("address" -> address),
+      "address" -> Map("address" -> address))
+    val schema = AvroCodec.parseable(AvroInference.toValueSchema(value))
+    def at(path: String*) =
+      path.foldLeft(schema)((s, f) => s.getField(f).schema())
+    // the simple name keeps the field-name quirk; the namespace is the
+    // enclosing record's full name
+    assert(at("billing", "address").getName == "address")
+    assert(at("billing", "address").getFullName == "value.billing.address")
+    assert(at("shipping", "address").getFullName ==
+      "value.shipping.address")
+    assert(at("address").getFullName == "value.address")
+    assert(at("address", "address").getFullName == "value.address.address")
+    assert(AvroCodec.decode(AvroCodec.encode(value, schema), schema) == value)
+  }
+
   test("lists infer as array of string (avroparser.py:35-37 quirk)") {
     val json = AvroInference.schemaFromRecord(
       "r", Map("xs" -> Seq("a", "b")))

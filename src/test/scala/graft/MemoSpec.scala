@@ -39,7 +39,22 @@ class MemoSpec extends SparkSpecBase {
     Memos.clearAll()
     val f2 = graft.operators.TextOps.fuzzyPairs(spark, sf)
     assert(!(f1 eq f2), "clearAll must drop the fuzzy pair memo")
+    // The list order is a build order: from a cleared registry,
+    // building entry i populates no line item listed after it.
     Memos.clearAll()
-    Memos.builders.foreach { case (_, b) => b(spark, sf) }
+    Memos.builders.zipWithIndex.foreach { case ((name, b), i) =>
+      b(spark, sf)
+      val ahead = Memos.lineItems.drop(i + 1).filterNot(_.isEmpty)
+        .map(_.label)
+      assert(ahead.isEmpty, s"building $name populated later line " +
+        s"items $ahead")
+    }
+    // clearAll reaches every registered memo, including the unigram
+    // edge head that is not a line item
+    Memos.clearAll()
+    val registered = graft.operators.Memo.registered
+    assert(registered.exists(_.name == "uni_edges"))
+    val held = registered.filterNot(_.isEmpty).map(_.name)
+    assert(held.isEmpty, s"clearAll left memos populated: $held")
   }
 }

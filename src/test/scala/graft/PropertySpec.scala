@@ -1,6 +1,7 @@
 package graft
 
 import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.avro.{AvroCodec, AvroInference}
@@ -13,10 +14,21 @@ import graft.sources.Json
   * cache ships no scalatestplus bridge). */
 class PropertySpec extends AnyFunSuite {
 
+  /** Runs `prop` from a fresh random seed; a failure reports the seed
+    * (replay: `withInitialSeed(Seed.fromBase64(seed).get)`)
+    * and the failing arguments. */
   private def check(prop: Prop, n: Int = 50): Unit = {
-    val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(n), prop)
-    assert(res.passed, res.status.toString)
+    val seed = Seed.random()
+    val res = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(n).withInitialSeed(seed), prop)
+    val counterexample = res.status match {
+      case SCTest.Failed(args, _) => args.map(_.arg).mkString(", ")
+      case SCTest.PropException(args, e, _) =>
+        args.map(_.arg).mkString(", ") + s" threw $e"
+      case other => other.toString
+    }
+    assert(res.passed, s"seed ${seed.toBase64}; counterexample: " +
+      s"$counterexample; status: ${res.status}")
   }
 
   private val fieldName: Gen[String] =
