@@ -1,36 +1,52 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, FunctionIdentifier}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-import graft.operators.{AsofJoin, Behavioral, Clustering, CorpusPrep, Dedup, Graph, Quality, Similarity, TextOps}
+import graft.functions.{CosineSimilarityExpr, DotProductExpr, Native, NearestCentroidExpr, SignatureExprs}
+import graft.operators._
 
 /** SQL front door for the operator library — everything a SQL-only user
   * needs to reach the LLM-pipeline operators from `spark.sql` alone.
   *
-  * Two layers:
-  *  1. the native expression surface (`graft_minhash`, `graft_simhash`,
+  * Two lists, one mechanism:
+  *  1. [[natives]], the native expressions (`graft_minhash`,
   *     `graft_hyperplane`, `graft_cosine`, `graft_dot`,
-  *     `graft_nearest_centroid`, …) — injected session-wide by
-  *     `spark.sql.extensions=graft.functions.GraftExtensions`, or
-  *     post-hoc on a live session via [[registerFunctions]]. With these
-  *     a SQL user composes the same banded/bucketed plans the Scala
-  *     operators build (SQLSurfaceSpec runs one end-to-end);
-  *  2. whole-operator entry points whose driving logic isn't a single
-  *     expression (as-of join, dedup pair generation, kNN): exposed as
-  *     temp-VIEW BUILDERS — the operator's DataFrame is registered
-  *     under a name, and from there on it is plain SQL. Views are lazy
-  *     plans, not materializations: the full operator pipeline plans,
-  *     optimizes, and distributes exactly as the Scala call would.
+  *     `graft_nearest_centroid`, …). With these a SQL user composes the
+  *     same banded/bucketed plans the Scala operators build;
+  *  2. [[tableFunctions]], whole operators whose driving logic isn't a
+  *     single expression (as-of join, dedup pair generation, kNN, …) as
+  *     `graft_*` table functions: `SELECT * FROM graft_knn('embeddings',
+  *     'embeddings', 5)`. Arguments are literals — view names, numbers,
+  *     string/int arrays — and trailing ones take the defaults shown by
+  *     `DESCRIBE FUNCTION`. The body runs the operator on the named
+  *     views when the query is analyzed and returns its analyzed plan,
+  *     so the pipeline plans, optimizes and distributes exactly as the
+  *     Scala call would; eager operators run their jobs at that point.
+  *
+  * Both reach a session either at construction
+  * (`spark.sql.extensions=graft.functions.GraftExtensions`) or post hoc
+  * through [[register]].
   */
 object SqlSurface {
 
-  /** Register every graft native expression on a live session (the
+  type TableFunction =
+    (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)
+
+  val natives: Seq[Native.Function] = Seq(CosineSimilarityExpr.function,
+    DotProductExpr.function, NearestCentroidExpr.function) ++
+    SignatureExprs.functions
+
+  /** Register every native and table function on a live session (the
     * post-hoc twin of the GraftExtensions injection). */
-  def registerFunctions(spark: SparkSession): Unit = {
-    functions.CosineSimilarityExpr.register(spark)
-    functions.DotProductExpr.register(spark)
-    functions.NearestCentroidExpr.register(spark)
-    functions.SignatureExprs.register(spark)
+  def register(spark: SparkSession): Unit = {
+    Native.register(spark, natives)
+    tableFunctions.foreach { case (id, info, builder) =>
+      spark.sessionState.tableFunctionRegistry
+        .registerFunction(id, info, builder)
+    }
   }
 
   /** Register the data directory's tables as temp views (`documents`,
@@ -44,652 +60,530 @@ object SqlSurface {
     Tables.events(spark, dir).createOrReplaceTempView("events")
   }
 
-  /** Exact n-gram Jaccard near-dup pairs of `docsView` (doc_id, text) →
-    * view (doc_a, doc_b, jaccard). */
-  def createNearDupPairsView(spark: SparkSession, docsView: String,
-      viewName: String, k: Int = 3, threshold: Double = 0.5): Unit =
-    Dedup.ngramJaccardPairs(spark.table(docsView), k = k,
-      threshold = threshold).createOrReplaceTempView(viewName)
+  /** The literal arguments of one table-function call, read by position.
+    * Values go through Catalyst's Scala converters first, so a SQL `0.5`
+    * (a Decimal literal) reads as a number like `5` or `5L` does. */
+  private final class Args(call: String, exprs: Seq[Expression]) {
+    private def bad(i: Int, v: Any): Nothing =
+      throw new IllegalArgumentException(
+        s"$call: argument ${i + 1} must be a literal of the listed kind, " +
+          s"got $v")
+    private def arg[T](i: Int, default: => T)(read: PartialFunction[Any, T])
+        : T =
+      if (i >= exprs.length) default
+      else {
+        val e = exprs(i)
+        if (!e.foldable) bad(i, e.sql)
+        val v = CatalystTypeConverters.convertToScala(e.eval(), e.dataType)
+        read.applyOrElse(v, bad(i, _: Any))
+      }
+    // Unreachable once the arity check passed: marks a required argument.
+    private def required: Nothing = throw new IllegalStateException(call)
 
-  /** Survivors of exact near-dup removal over `docsView` → view with the
-    * source schema. */
-  def createDedupSurvivorsView(spark: SparkSession, docsView: String,
-      viewName: String, k: Int = 3, threshold: Double = 0.5): Unit =
-    Dedup.dropNearDuplicatesExact(spark.table(docsView), k = k,
-      threshold = threshold).createOrReplaceTempView(viewName)
-
-  /** Backward as-of join of two views → view (left columns + carried
-    * right value columns). */
-  def createAsofJoinView(spark: SparkSession, leftView: String,
-      rightView: String, key: String, ts: String, valueCols: Seq[String],
-      viewName: String): Unit =
-    AsofJoin.asofJoin(spark.table(leftView), spark.table(rightView),
-      key, ts, valueCols).createOrReplaceTempView(viewName)
-
-  /** Exact brute-force kNN of `queriesView` against `vectorsView`
-    * (vec_id, embedding) → view (qid, rank, neighbor, cos). */
-  def createKnnView(spark: SparkSession, vectorsView: String,
-      queriesView: String, k: Int, viewName: String): Unit =
-    Similarity.knnBrute(spark.table(vectorsView),
-      spark.table(queriesView), k).createOrReplaceTempView(viewName)
-
-  /** Overlapping character chunks of `docsView` (doc_id, text, n_chars)
-    * → view (doc_id, chunk_idx, chunk, chunk_len). */
-  def createChunksView(spark: SparkSession, docsView: String,
-      viewName: String, window: Int = 200, stride: Int = 150): Unit =
-    CorpusPrep.chunkDocuments(spark.table(docsView), window, stride)
-      .createOrReplaceTempView(viewName)
-
-  /** Per-user strict-funnel first-completion times of `eventsView`
-    * (user_id, event_type, ts_ns) → view (user_id, t0 … tk). */
-  def createFunnelView(spark: SparkSession, eventsView: String,
-      stages: Seq[String], viewName: String): Unit =
-    Behavioral.funnelTimes(spark.table(eventsView), stages)
-      .createOrReplaceTempView(viewName)
-
-  /** Cohort retention cells of `eventsView` → view
-    * (cohort_wk, week_offset, n_users). */
-  def createCohortView(spark: SparkSession, eventsView: String,
-      viewName: String): Unit =
-    Behavioral.cohortRetention(spark.table(eventsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Per-source dataset card of `docsView` (doc_id, text, lang, source,
-    * n_chars) → view (source, n_docs, tok_sum, avg_chars, en_bp,
-    * dup_bp). */
-  def createCorpusReportView(spark: SparkSession, docsView: String,
-      viewName: String): Unit =
-    CorpusPrep.corpusReport(spark.table(docsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Collocations of `docsView` by integer lift → view
-    * (bigram, n_ab, n_a, n_b, lift_ppm). */
-  def createCollocationsView(spark: SparkSession, docsView: String,
-      minCount: Long, k: Int, viewName: String): Unit =
-    TextOps.collocations(spark.table(docsView), minCount, k)
-      .createOrReplaceTempView(viewName)
-
-  /** Triangle census of an edge-list view (u, v; u < v, deduped) →
-    * 1-row view (n_nodes, n_edges, n_wedges, n_triangles,
-    * closure_ppm). */
-  def createTriangleCensusView(spark: SparkSession, edgesView: String,
-      viewName: String): Unit =
-    Graph.triangleCensus(spark.table(edgesView))
-      .createOrReplaceTempView(viewName)
-
-  /** Integer-scaled PageRank of an edge-list view → view
-    * (node, score). */
-  def createPageRankView(spark: SparkSession, edgesView: String,
-      iters: Int, viewName: String): Unit =
-    Graph.pageRank(spark.table(edgesView), iters)
-      .createOrReplaceTempView(viewName)
-
-  /** Winnowing fingerprints of `docsView` (doc_id, text) → view
-    * (doc_id, pos, fp). */
-  def createWinnowView(spark: SparkSession, docsView: String,
-      viewName: String): Unit =
-    TextOps.winnowFingerprints(spark.table(docsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Data-quality constraint report over the registered TPC-H-ish
-    * views → view (check_name, n_bad). */
-  def createQualityReportView(spark: SparkSession, viewName: String)
-      : Unit =
-    Quality.dataQualityReport(spark.table("orders"),
-      spark.table("lineitem"), spark.table("customer"),
-      spark.table("nation")).createOrReplaceTempView(viewName)
-
-  /** Misra–Gries heavy hitters of a token view (`tokenCol` string
-    * column) → view (w, c): every token with frequency >
-    * n·`thresholdNum`/`thresholdDen`, exact counts, O(k) state per
-    * partition — the 100 TB path that never shuffles the full
-    * vocabulary. */
-  def createHeavyHittersView(spark: SparkSession, tokensView: String,
-      tokenCol: String, k: Int, viewName: String,
-      thresholdNum: Long = 1, thresholdDen: Long = 400): Unit =
-    TextOps.heavyHittersMG(spark.table(tokensView), tokenCol, k,
-      thresholdNum, thresholdDen).createOrReplaceTempView(viewName)
-
-  /** Snapshot diff (CDC) of two keyed views → view (key, op ∈ I/U/D,
-    * plus old_c and new_c for each compared column c). */
-  def createSnapshotDiffView(spark: SparkSession, oldView: String,
-      newView: String, key: String, compareCols: Seq[String],
-      viewName: String): Unit =
-    operators.Relational.snapshotDiff(spark.table(oldView),
-      spark.table(newView), key, compareCols)
-      .createOrReplaceTempView(viewName)
-
-  /** Event-time interval join (conversion attribution) of two event
-    * views → view (user_id, a_id, b_id, b_value, gap_us). On batch
-    * views this is the theta join; the SAME builder body on streaming
-    * views yields the state-bounded stream-stream join. */
-  def createIntervalJoinView(spark: SparkSession, triggersView: String,
-      followUpsView: String, triggerType: String, followType: String,
-      horizonSeconds: Long, viewName: String): Unit =
-    streaming.StreamOps.intervalJoinStream(spark.table(triggersView),
-      spark.table(followUpsView), triggerType, followType,
-      horizonSeconds).createOrReplaceTempView(viewName)
-
-  /** Per-event session labels of an events view (user_id, ts_ns,
-    * event_id, event_type) → view with (…, session_no) under the
-    * 30-minute (default) inactivity-gap definition — q141's exact
-    * derivation (round 8). */
-  def createSessionsView(spark: SparkSession, eventsView: String,
-      viewName: String, gapUs: Long = 1800L * 1000000L): Unit =
-    Behavioral.sessionized(spark.table(eventsView), gapUs)
-      .createOrReplaceTempView(viewName)
-
-  /** Rolling distinct-user window (7-day WAU by default) of an events
-    * view (user_id, ts) → view (d, wau7) — q144's distinct-collapse +
-    * broadcast anchor-range plan. */
-  def createRollingWauView(spark: SparkSession, eventsView: String,
-      viewName: String, windowDays: Int = 7): Unit =
-    Behavioral.rollingWau(spark.table(eventsView), windowDays)
-      .createOrReplaceTempView(viewName)
-
-  /** Fixed-round label-propagation communities of an edge-list view
-    * (u, v) → view (node, community) — q143's deterministic argmax
-    * propagation. */
-  def createCommunitiesView(spark: SparkSession, edgesView: String,
-      viewName: String, rounds: Int = 3): Unit =
-    Graph.labelPropagation(spark.table(edgesView), rounds)
-      .createOrReplaceTempView(viewName)
-
-  /** Per-community modularity decomposition of an edge-list view
-    * against a (node, community) labels view → view (community,
-    * n_nodes, e_in, k_sum, q_num, q_e6) — q155's exact integer
-    * Newman–Girvan audit. */
-  def createModularityView(spark: SparkSession, edgesView: String,
-      labelsView: String, viewName: String): Unit =
-    Graph.modularityByCommunity(spark.table(edgesView),
-      spark.table(labelsView)).createOrReplaceTempView(viewName)
-
-  /** Holt level+trend smoothing of a per-key daily series view
-    * (event_type, dnum, v) → view (event_type, n_days, level_e3,
-    * trend_e3, forecast_e3) — q146's two-long-state spill-sorted
-    * fold. */
-  def createHoltView(spark: SparkSession, dailyView: String,
-      viewName: String): Unit =
-    operators.Stats.holtByType(spark.table(dailyView))
-      .createOrReplaceTempView(viewName)
-
-  /** Daily OHLC bars of an events view (event_type, ts, ts_ns,
-    * event_id, value) → view (event_type, day, n_events, open, high,
-    * low, close) — q136's two-direction row_number selection. */
-  def createOhlcView(spark: SparkSession, eventsView: String,
-      viewName: String): Unit =
-    operators.TimeSeries.ohlcBars(spark.table(eventsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Last-touch attribution rollup of an events view (user_id, ts_ns,
-    * event_id, event_type, value) → view (channel, n_conv,
-    * revenue_cents) — q169's single window-pass credit assignment
-    * (round 8). */
-  def createAttributionView(spark: SparkSession, eventsView: String,
-      viewName: String): Unit =
-    Behavioral.lastTouchReport(spark.table(eventsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Time-windowed funnel census of an events view → view (stage,
-    * n_users): users counted at the deepest stage whose strict
-    * first-completion chain finishes within `horizonNs` of the funnel
-    * start — q186 (round 8). */
-  def createWindowedFunnelView(spark: SparkSession, eventsView: String,
-      stages: Seq[String], horizonNs: Long, viewName: String): Unit =
-    Behavioral.funnelWindowed(spark.table(eventsView), stages,
-      horizonNs).createOrReplaceTempView(viewName)
-
-  /** Day-N retention of an events view (user_id, ts) → view (n_day,
-    * n_cohort, n_retained, retention_bp) — q187's exact
-    * active-exactly-N-days-later curve (round 8). */
-  def createDnRetentionView(spark: SparkSession, eventsView: String,
-      viewName: String, days: Seq[Int] = Seq(1, 7, 14)): Unit =
-    Behavioral.dnRetention(spark.table(eventsView), days)
-      .createOrReplaceTempView(viewName)
-
-  /** Growth accounting of an events view (user_id, ts) → view (d,
-    * n_active, n_new, n_returning, cum_users) — q199's new/returning
-    * decomposition with exact cumulative distinct users (round 8). */
-  def createGrowthAccountingView(spark: SparkSession,
-      eventsView: String, viewName: String): Unit =
-    Behavioral.growthAccounting(spark.table(eventsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Discrete-hazard life table of an orders view (o_custkey,
-    * o_orderdate) → view (q, n_risk, n_churn, hazard_ppm) — q198's
-    * censoring-aware Kaplan–Meier input (round 8). */
-  def createLifeTableView(spark: SparkSession, ordersView: String,
-      viewName: String): Unit =
-    operators.Stats.lifeTable(spark.table(ordersView))
-      .createOrReplaceTempView(viewName)
-
-  /** Balance-decile report of a customer view (c_custkey, c_acctbal)
-    * → view (decile, n_cust, hi, lo) — q189's NTILE cut under the
-    * deterministic (balance desc, key) total order (round 8). */
-  def createDecilesView(spark: SparkSession, customersView: String,
-      viewName: String): Unit =
-    operators.Relational.ntileDeciles(spark.table(customersView))
-      .createOrReplaceTempView(viewName)
-
-  /** Keyword-in-context concordance of a docs view (doc_id, text) →
-    * view (doc_id, pos, left_ctx, right_ctx) — q201 (round 9). */
-  def createKwicView(spark: SparkSession, docsView: String,
-      term: String, viewName: String, ctx: Int = 2): Unit =
-    TextOps.kwic(spark.table(docsView), term, ctx)
-      .createOrReplaceTempView(viewName)
-
-  /** Semantic dedup (SemDeDup shape) over an embeddings view
-    * (vec_id, embedding) → view (vec_id) of survivors — q230
-    * (round 10): seed-Voronoi cells, within-cell exact-cosine pairs,
-    * greedy keep-lowest-id. */
-  def createSemanticDedupView(spark: SparkSession, embView: String,
-      viewName: String, k: Int = 8, thresholdE6: Long = 900000L): Unit =
-    Similarity.semanticDedup(spark.table(embView), k, thresholdE6)
-      .createOrReplaceTempView(viewName)
-
-  /** N-round BPE tokenizer training over a docs view (text) → view
-    * (merge_round, merge_l, merge_r, weight) — q229 (round 10). */
-  def createBpeMergesView(spark: SparkSession, docsView: String,
-      viewName: String, rounds: Int = 6): Unit =
-    TextOps.bpeTrain(spark.table(docsView), rounds)
-      .createOrReplaceTempView(viewName)
-
-  /** SCD2 interval history of an events view (user_id, ts_ns,
-    * event_id, event_type) → view (user_id, version_no, state,
-    * valid_from_us, valid_to_us, n_events) — q202's change-only run
-    * collapse (round 9). */
-  def createScd2View(spark: SparkSession, eventsView: String,
-      viewName: String): Unit =
-    Behavioral.scd2Intervals(spark.table(eventsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Per-node local clustering of an edge-list view (u, v with
-    * u < v, deduplicated) → view (node, degree, n_tri, cc_ppm) —
-    * q204 (round 9). */
-  def createLocalClusteringView(spark: SparkSession, edgesView: String,
-      viewName: String): Unit =
-    operators.Graph.localClustering(spark.table(edgesView))
-      .createOrReplaceTempView(viewName)
-
-  /** Partition-key skew audit over (label, view, keyCol) triples →
-    * view (key_col, n_rows, n_keys, max_cnt, top_share_ppm,
-    * skew_x1000) — q207 (round 9). */
-  def createSkewAuditView(spark: SparkSession,
-      cols: Seq[(String, String, String)], viewName: String): Unit =
-    Quality.skewAudit(cols.map { case (n, v, k) =>
-      (n, spark.table(v), k) }).createOrReplaceTempView(viewName)
-
-  /** Markov steady-state distribution of an events view → view
-    * (state, pi_ppm) — q213's 5 integer power iterations (round 9). */
-  def createMarkovSteadyView(spark: SparkSession, eventsView: String,
-      viewName: String, iters: Int = 5): Unit =
-    Behavioral.markovSteady(spark.table(eventsView), iters)
-      .createOrReplaceTempView(viewName)
-
-  /** Functional-dependency audit over (name, view, lhs, rhs) tuples →
-    * view (fd, n_lhs, n_violating, holds) — q215 (round 9). */
-  def createFdAuditView(spark: SparkSession,
-      fds: Seq[(String, String, String, String)],
-      viewName: String): Unit =
-    Quality.fdAudit(fds.map { case (n, v, l, r) =>
-      (n, spark.table(v), l, r) }).createOrReplaceTempView(viewName)
-
-  /** Join-cardinality audit over (label, leftView, leftKey,
-    * rightView, rightKey) tuples → view (join_key, left_rows,
-    * right_rows, n_matched_keys, join_rows, amp_x1000) — q221's
-    * exact-size-without-running-it planner readout (round 9). */
-  def createJoinCardinalityView(spark: SparkSession,
-      joins: Seq[(String, String, String, String, String)],
-      viewName: String): Unit =
-    Quality.joinCardinality(joins.map { case (n, lv, lk, rv, rk) =>
-      (n, spark.table(lv), lk, spark.table(rv), rk)
-    }).createOrReplaceTempView(viewName)
-
-  /** Peak ingest rate of an events view (event_type, ts_ns) → view
-    * (event_type, n_active_minutes, n_events, peak_per_min,
-    * peak_minute, mean_per_min_e3, burst_x1000) — q222 (round 9). */
-  def createPeakRateView(spark: SparkSession, eventsView: String,
-      viewName: String): Unit =
-    operators.TimeSeries.peakRate(spark.table(eventsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Length-distribution drift between the two ingest halves of a
-    * documents view (doc_id, n_chars) → view (bucket, n1, n2, s1_ppm,
-    * s2_ppm, d_ppm) with a bucket = -1 TOTAL row carrying the exact
-    * TVD — q223 (round 9). */
-  def createDistDriftView(spark: SparkSession, docsView: String,
-      viewName: String): Unit =
-    TextOps.distDrift(spark.table(docsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Dedup threshold sweep over a verified-pairs view (doc_a, doc_b,
-    * jaccard) → view (threshold_ppm, n_pairs, n_docs) — q237
-    * (round 10). */
-  def createThresholdSweepView(spark: SparkSession, pairsView: String,
-      viewName: String): Unit =
-    Dedup.thresholdSweep(spark.table(pairsView))
-      .createOrReplaceTempView(viewName)
-
-  /** MinHash calibration curve: docs view (doc_id, text) + verified
-    * pairs view (doc_a, doc_b, jaccard) → view (bucket, n_pairs,
-    * agree_ppm) — q236 (round 10). */
-  def createLshCalibrationView(spark: SparkSession, docsView: String,
-      pairsView: String, viewName: String): Unit =
-    Dedup.lshCalibration(spark.table(docsView), spark.table(pairsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Quality-representative selection: docs view (doc_id, text) +
-    * components view (doc_id, component) → view (component,
-    * cluster_size, rep_id, rep_len) — q232 (round 10). */
-  def createClusterRepsView(spark: SparkSession, docsView: String,
-      compsView: String, viewName: String): Unit =
-    Dedup.clusterReps(spark.table(docsView), spark.table(compsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Dedup mixture impact: components view (doc_id, component) + meta
-    * view (doc_id, source, len) → view (source, n_docs, n_removed,
-    * removed_ppm, chars_total, chars_removed, chars_removed_ppm) —
-    * q235 (round 10). */
-  def createDedupImpactView(spark: SparkSession, compsView: String,
-      metaView: String, viewName: String): Unit =
-    Dedup.dedupImpact(spark.table(compsView), spark.table(metaView))
-      .createOrReplaceTempView(viewName)
-
-  /** Split-leakage audit: pairs view (doc_a, doc_b) + splits view
-    * (doc_id, split) → view (split_a, split_b, n_pairs, share_ppm) —
-    * q234 (round 10). */
-  def createSplitLeakageView(spark: SparkSession, pairsView: String,
-      splitsView: String, viewName: String): Unit =
-    Dedup.splitLeakage(spark.table(pairsView), spark.table(splitsView))
-      .createOrReplaceTempView(viewName)
-
-  /** Cross-source contamination matrix: pairs view (doc_a, doc_b) +
-    * sources view (doc_id, source) → view (source_a, source_b,
-    * n_pairs) — q233 (round 10). */
-  def createContaminationMatrixView(spark: SparkSession,
-      pairsView: String, sourcesView: String, viewName: String): Unit =
-    Dedup.contaminationMatrix(spark.table(pairsView),
-      spark.table(sourcesView))
-      .createOrReplaceTempView(viewName)
-
-  /** ANN recall audit: exact and approximate top-k views (qid, rank,
-    * neighbor, cos) → view (qid, n_brute, n_found, recall_ppm) — q239
-    * (round 10). */
-  def createAnnRecallView(spark: SparkSession, exactView: String,
-      approxView: String, viewName: String): Unit =
-    Similarity.annRecall(spark.table(exactView), spark.table(approxView))
-      .createOrReplaceTempView(viewName)
-
-  /** CDC apply / MERGE INTO: old-snapshot view + changelog view (key,
-    * op ∈ {I,U,D}, new_* columns) → view of the reconstructed new
-    * snapshot — q240 (round 10). */
-  def createApplyCdcView(spark: SparkSession, oldView: String,
-      diffView: String, key: String, valueCols: Seq[String],
-      viewName: String): Unit =
-    operators.Relational.applyCdc(spark.table(oldView),
-      spark.table(diffView), key, valueCols)
-      .createOrReplaceTempView(viewName)
-
-  /** Shingle df spectrum of a docs view (doc_id, text) → view (bucket,
-    * n_shingles, postings_mass) — q243 (round 10): the measurement
-    * behind a df-cap choice. */
-  def createDfSpectrumView(spark: SparkSession, docsView: String,
-      viewName: String, cap: Long = 64L): Unit =
-    Dedup.dfSpectrum(spark.table(docsView), cap)
-      .createOrReplaceTempView(viewName)
-
-  /** LSH banding sweep of a docs view (doc_id, text) → view (bands,
-    * n_candidates, n_verified, precision_ppm) — q244 (round 10): the
-    * measured banding S-curve. */
-  def createBandingSweepView(spark: SparkSession, docsView: String,
-      viewName: String, bandConfigs: Seq[Int] = Seq(8, 16, 32)): Unit =
-    Dedup.bandingSweep(spark.table(docsView), bandConfigs)
-      .createOrReplaceTempView(viewName)
-
-  /** Any-length maximal duplicated-substring spans of a docs view
-    * (doc_id, text) → view (doc_a, pos_a, doc_b, pos_b, span_len) —
-    * q245 (round 11): suffix-array-grade exact-substring dedup via
-    * L-gram grouping + diagonal islands. */
-  def createSubstringSpansView(spark: SparkSession, docsView: String,
-      viewName: String, minLen: Int = 8): Unit =
-    CorpusPrep.substringDupSpans(spark.table(docsView), minLen)
-      .createOrReplaceTempView(viewName)
-
-  /** Batched BPE training of a docs view (doc_id, text) → view
-    * (merge_round, merge_l, merge_r, weight) — q248 (round 11):
-    * top-k conflict-free merges per round; k = 1 ≡ the sequential
-    * trainer. */
-  def createBatchedBpeMergesView(spark: SparkSession, docsView: String,
-      viewName: String, rounds: Int = 3, k: Int = 2): Unit =
-    TextOps.bpeTrainBatched(spark.table(docsView), rounds, k)
-      .createOrReplaceTempView(viewName)
-
-  /** Engine-replayable integer k-means of an embeddings view
-    * (vec_id, embedding) → view (cell, dim, c_e3) of the trained
-    * centroid table — q246 (round 11). */
-  def createKmeansCentroidsView(spark: SparkSession, embView: String,
-      viewName: String, k: Int = 8, rounds: Int = 3): Unit =
-    Clustering.kMeansShared(spark.table(embView), k, rounds)._1
-      .toDF("cell", "dim", "c_e3")
-      .createOrReplaceTempView(viewName)
-
-  /** Engine-replayable integer PRODUCT-QUANTIZATION codebooks of an
-    * embeddings view (vec_id, embedding) → view (s, cell, dim, c_e3)
-    * of the per-subspace trained codebook table — q282 (round 13):
-    * the kMeansShared discipline with the subspace id in every
-    * grouping key. */
-  def createPqCodebooksView(spark: SparkSession, embView: String,
-      viewName: String, subDim: Int = 16, kSub: Int = 8,
-      rounds: Int = 2): Unit =
-    Clustering.pqShared(spark.table(embView), subDim, kSub, rounds)._2
-      .toDF("s", "cell", "dim", "c_e3")
-      .createOrReplaceTempView(viewName)
-
-  /** BM25 retrieval readout of a docs view (doc_id, text) → view
-    * (rank, doc_id, score, n_terms) — q247 (round 11): fixed-point
-    * BM25 over the mid-head query-term set, postings-bounded. */
-  def createBm25View(spark: SparkSession, docsView: String,
-      viewName: String, topK: Int = 20): Unit =
-    TextOps.bm25TopDocs(spark.table(docsView), topK)
-      .createOrReplaceTempView(viewName)
-
-  /** BPE ENCODER from SQL — apply a merges view (merge_round, merge_l,
-    * merge_r) to a docs view in table order; the resulting final
-    * segmentation state registers as (w, c, pos, sym) — q249's
-    * inference-side primitive. */
-  def createBpeEncodeView(spark: SparkSession, docsView: String,
-      mergesView: String, viewName: String): Unit = {
-    val merges = spark.table(mergesView).orderBy("merge_round")
-      .select("merge_l", "merge_r").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    TextOps.bpeEncodeState(spark.table(docsView), merges)
-      .createOrReplaceTempView(viewName)
+    def str(i: Int): String = arg(i, required) { case s: String => s }
+    def table(i: Int): DataFrame = SparkSession.active.table(str(i))
+    def int(i: Int, default: => Int = required): Int =
+      arg(i, default) { case n: Number if n.doubleValue.isValidInt =>
+        n.intValue }
+    def long(i: Int, default: => Long = required): Long =
+      arg(i, default) { case n: Number if n.doubleValue.isWhole =>
+        n.longValue }
+    def double(i: Int, default: => Double = required): Double =
+      arg(i, default) { case n: Number => n.doubleValue }
+    def strs(i: Int): Seq[String] = arg(i, required) {
+      case s: collection.Seq[_] if s.forall(_.isInstanceOf[String]) =>
+        s.map(_.toString).toSeq }
+    def ints(i: Int, default: => Seq[Int]): Seq[Int] = arg(i, default) {
+      case s: collection.Seq[_] if s.forall(_.isInstanceOf[Number]) =>
+        s.map(_.asInstanceOf[Number].intValue).toSeq }
+    /** An array of string arrays: one tuple per inner array. */
+    def tuples(i: Int): Seq[Seq[String]] = arg(i, required) {
+      case s: collection.Seq[_]
+          if s.forall(_.isInstanceOf[collection.Seq[_]]) =>
+        s.map(_.asInstanceOf[collection.Seq[_]].map(_.toString).toSeq).toSeq }
   }
 
-  /** HITS hubs & authorities of an edges view (hub, auth) → two views
-    * (hub, h) / (auth, a) in e6 — q250 (round 11). */
-  def createHitsViews(spark: SparkSession, edgesView: String,
-      hubViewName: String, authViewName: String,
-      rounds: Int = 3): Unit = {
-    val (hub, auth) = Graph.hits(spark.table(edgesView), rounds)
-    hub.createOrReplaceTempView(hubViewName)
-    auth.createOrReplaceTempView(authViewName)
+  /** One registry entry. `params` name the positional arguments, a
+    * trailing `p = v` marks a default; `doc` is the usage text. */
+  private def fn(name: String, params: String*)(doc: String)(
+      body: Args => DataFrame): TableFunction = {
+    val call = params.mkString(s"$name(", ", ", ")")
+    val arity = params.count(!_.contains(" = ")) to params.length
+    val usage = s"$call - ${doc.stripMargin.replace('\n', ' ')}"
+    (FunctionIdentifier(name), new ExpressionInfo("graft.SqlSurface", null,
+      name, usage, "", "", "", "", "", "", ""), { exprs =>
+      if (!arity.contains(exprs.length))
+        throw new IllegalArgumentException(
+          s"$name takes $call, got ${exprs.length} arguments")
+      body(new Args(call, exprs)).queryExecution.analyzed
+    })
   }
 
-  /** Principal direction of an embeddings view (vec_id, embedding) →
-    * view (dim, v_e6) — q251 (round 11). */
-  def createPrincipalDirView(spark: SparkSession, embView: String,
-      viewName: String, rounds: Int = 3): Unit =
-    Similarity.principalDirection(spark.table(embView), rounds)
-      .createOrReplaceTempView(viewName)
+  /** Every `graft_*` table function, in registration order. */
+  val tableFunctions: Seq[TableFunction] = Seq(
+    fn("graft_near_dup_pairs", "docs", "k = 3", "threshold = 0.5")(
+      """Exact n-gram Jaccard near-dup pairs of `docs` (doc_id, text) →
+        |(doc_a, doc_b, jaccard).""") { a =>
+      Dedup.ngramJaccardPairs(a.table(0), a.int(1, 3), a.double(2, 0.5)) },
 
-  /** Multi-query BM25 over a docs view (doc_id, text) and a query
-    * view (query_id, term) → view (query_id, rank, doc_id, score,
-    * n_terms) — q255 (round 12): the batched-serving shape. */
-  def createBm25MultiView(spark: SparkSession, docsView: String,
-      queryView: String, viewName: String, topK: Int = 10): Unit =
-    TextOps.bm25TopDocsMulti(spark.table(docsView),
-      spark.table(queryView), topK)
-      .createOrReplaceTempView(viewName)
+    fn("graft_dedup_survivors", "docs", "k = 3", "threshold = 0.5")(
+      """Survivors of exact near-dup removal over `docs` → the source
+        |schema.""") { a =>
+      Dedup.dropNearDuplicatesExact(a.table(0), a.int(1, 3),
+        a.double(2, 0.5)) },
 
-  /** Postings delta between a base docs view and a next-snapshot docs
-    * view is the q261 shape; this builder diffs the base view against
-    * its derived snapshot → view (doc_id, n_added, n_removed, status)
-    * — q261 (round 12). */
-  def createPostingsDeltaView(spark: SparkSession, docsView: String,
-      viewName: String): Unit =
-    TextOps.postingsDelta(spark.table(docsView))
-      .createOrReplaceTempView(viewName)
+    fn("graft_asof_join", "left", "right", "key", "ts", "value_cols")(
+      """Backward as-of join of two views → left columns + carried right
+        |value columns.""") { a =>
+      AsofJoin.asofJoin(a.table(0), a.table(1), a.str(2), a.str(3),
+        a.strs(4)) },
 
-  /** Katz centrality of an undirected edges view (u, v) → view
-    * (node, score) — q262 (round 12). */
-  def createKatzView(spark: SparkSession, edgesView: String,
-      viewName: String, iters: Int = 3): Unit =
-    operators.Graph.katzCentrality(spark.table(edgesView), iters)
-      .createOrReplaceTempView(viewName)
+    fn("graft_knn", "vectors", "queries", "k")(
+      """Exact brute-force kNN of `queries` against `vectors`
+        |(vec_id, embedding) → (qid, rank, neighbor, cos).""") { a =>
+      Similarity.knnBrute(a.table(0), a.table(1), a.int(2)) },
 
-  /** Int8 quantization error audit of an embeddings view
-    * (vec_id, label, embedding) → per-label error-budget view —
-    * q264 (round 12). */
-  def createQuantAuditView(spark: SparkSession, embView: String,
-      viewName: String): Unit =
-    Similarity.quantAudit(spark.table(embView))
-      .createOrReplaceTempView(viewName)
+    fn("graft_chunks", "docs", "window = 200", "stride = 150")(
+      """Overlapping character chunks of `docs` (doc_id, text, n_chars) →
+        |(doc_id, chunk_idx, chunk, chunk_len).""") { a =>
+      CorpusPrep.chunkDocuments(a.table(0), a.int(1, 200), a.int(2, 150)) },
 
-  /** Quality-classifier scores for a (doc_id, text) view — q272's
-    * hashed-n-gram integer linear scorer (round 13): per doc token/
-    * feature counts, raw + mean score, keep flag. */
-  def createQualityScoreView(spark: SparkSession, docsView: String,
-      viewName: String): Unit =
-    operators.CorpusPrep.qualityScore(spark.table(docsView))
-      .createOrReplaceTempView(viewName)
+    fn("graft_funnel", "events", "stages")(
+      """Per-user strict-funnel first-completion times of `events`
+        |(user_id, event_type, ts_ns) → (user_id, t0 … tk).""") { a =>
+      Behavioral.funnelTimes(a.table(0), a.strs(1)) },
 
-  /** Per-doc bigram mean-surprisal score + keep flag for a
-    * (doc_id, text) view — q294's perplexity-surrogate scorer
-    * (round 14), the LM-filter sibling of [[createQualityScoreView]]. */
-  def createSurprisalScoreView(spark: SparkSession, docsView: String,
-      viewName: String): Unit =
-    operators.CorpusPrep.surprisalScore(spark.table(docsView))
-      .createOrReplaceTempView(viewName)
+    fn("graft_cohort", "events")(
+      """Cohort retention cells of `events` → (cohort_wk, week_offset,
+        |n_users).""") { a =>
+      Behavioral.cohortRetention(a.table(0)) },
 
-  /** Pseudo-relevance-feedback expanded BM25 top-20 for a
-    * (doc_id, text) view — q275's two-stage RM3-lite loop
-    * (round 13). */
-  def createPrfExpansionView(spark: SparkSession, docsView: String,
-      viewName: String): Unit =
-    operators.TextOps.prfExpansion(spark.table(docsView))
-      .createOrReplaceTempView(viewName)
+    fn("graft_corpus_report", "docs")(
+      """Per-source dataset card of `docs` (doc_id, text, lang, source,
+        |n_chars) → (source, n_docs, tok_sum, avg_chars, en_bp,
+        |dup_bp).""") { a =>
+      CorpusPrep.corpusReport(a.table(0)) },
 
-  /** Perceptual near-dup pairs for a (media_id, phash) signature view
-    * — qm7's Hamming banding + exact bit_count verify (round 13),
-    * expressed directly in SQL over the signature table so any
-    * signature source (dHash, simhash) can ride it. Round 14:
-    * parameterized by band count (must divide 56; 2/4/7/8/14 all do)
-    * — B bands of 56/B bits guarantee recall 1 within Hamming B−1
-    * (pigeonhole), the trade qm9 measures. */
-  def createPhashNearDupView(spark: SparkSession, sigView: String,
-      viewName: String, maxHamming: Int = 6, nBands: Int = 4): Unit = {
-    require(nBands >= 1 && 56 % nBands == 0, s"bands must divide 56")
-    val w = 56 / nBands
-    val divisors = (0 until nBands).map(b => s"${1L << (b * w)}L")
-      .mkString("array(", ", ", ")")
-    val bandIdx = (0 until nBands).mkString("array(", ", ", ")")
-    spark.sql(
-      s"""WITH bands AS (
-         |  SELECT media_id, phash, b,
-         |    (phash div element_at($divisors, b + 1)) % ${1L << w}
-         |      AS bv
-         |  FROM $sigView
-         |  LATERAL VIEW explode($bandIdx) t AS b),
-         |cand AS (
-         |  SELECT DISTINCT x.media_id AS a, y.media_id AS b,
-         |    x.phash AS pa, y.phash AS pb
-         |  FROM bands x JOIN bands y
-         |    ON x.b = y.b AND x.bv = y.bv AND x.media_id < y.media_id)
-         |SELECT a, b, CAST(bit_count(pa ^ pb) AS BIGINT) AS hamming
-         |FROM cand WHERE bit_count(pa ^ pb) <= $maxHamming"""
-        .stripMargin).createOrReplaceTempView(viewName)
-  }
+    fn("graft_collocations", "docs", "min_count", "k")(
+      """Collocations of `docs` by integer lift → (bigram, n_ab, n_a, n_b,
+        |lift_ppm).""") { a =>
+      TextOps.collocations(a.table(0), a.long(1), a.int(2)) },
 
-  /** Quantile-sketch register cascade from SQL (q302, round 15): for
-    * a (v, ok, ln) BIGINT values view, the deterministic MRL cascade
-    * at the graded shard/budget config — the final compactor state
-    * (kb, shard, v, ok, ln, w) as a view. ONE body with the gated
-    * q302 state ([[operators.Percentiles.sketchFromValues]]). */
-  def createQuantileSketchView(spark: SparkSession, valuesView: String,
-      viewName: String): Unit =
-    operators.Percentiles.sketchFromValues(spark.table(valuesView))
-      .createOrReplaceTempView(viewName)
+    fn("graft_triangle_census", "edges")(
+      """Triangle census of an edge-list view (u, v; u < v, deduped) →
+        |1 row (n_nodes, n_edges, n_wedges, n_triangles,
+        |closure_ppm).""") { a =>
+      Graph.triangleCensus(a.table(0)) },
 
-  /** Louvain one-level communities from SQL (q305, round 15) for a
-    * (u, v) edges view — 3 synchronous integer-gain rounds. */
-  def createLouvainView(spark: SparkSession, edgesView: String,
-      viewName: String, rounds: Int = 3): Unit =
-    operators.Graph.louvainRounds(spark.table(edgesView), rounds)
-      .createOrReplaceTempView(viewName)
+    fn("graft_page_rank", "edges", "iters")(
+      """Integer-scaled PageRank of an edge-list view → (node,
+        |score).""") { a =>
+      Graph.pageRank(a.table(0), a.int(1)) },
 
-  /** Unigram-LM segmentation state from SQL (q304, round 15) for a
-    * (text) docs view — per eligible word: (w, c, len, n, fs). */
-  def createUnigramEncodeView(spark: SparkSession, docsView: String,
-      viewName: String): Unit =
-    operators.TextOps.uniStateOf(spark.table(docsView))
-      .createOrReplaceTempView(viewName)
+    fn("graft_winnow", "docs")(
+      """Winnowing fingerprints of `docs` (doc_id, text) → (doc_id, pos,
+        |fp).""") { a =>
+      TextOps.winnowFingerprints(a.table(0)) },
 
-  /** SERP near-dup collapse from SQL (q301/round-15 serving twin):
-    * a (orig_rank, doc_id, score) result-list view collapsed by a
-    * (doc_id, component) label view. */
-  def createSerpDedupView(spark: SparkSession, resultsView: String,
-      componentsView: String, viewName: String): Unit =
-    operators.Dedup.serpDedupCollapse(spark.table(resultsView),
-        spark.table(componentsView))
-      .createOrReplaceTempView(viewName)
+    fn("graft_quality_report")(
+      """Data-quality constraint report over the registered TPC-H-ish
+        |views orders, lineitem, customer and nation → (check_name,
+        |n_bad).""") { _ =>
+      val s = SparkSession.active
+      Quality.dataQualityReport(s.table("orders"), s.table("lineitem"),
+        s.table("customer"), s.table("nation")) },
 
-  /** Decontamination overlap counts from SQL (q62/q306, round 15):
-    * per doc of `docsView`, the distinct k-shingle overlap with
-    * `benchView` — cut at any τ downstream (the q306 sweep reads one
-    * view at several thresholds). */
-  def createDecontamOverlapView(spark: SparkSession, docsView: String,
-      benchView: String, k: Int, viewName: String): Unit =
-    operators.Dedup.overlapCounts(spark.table(docsView),
-        spark.table(benchView), k)
-      .createOrReplaceTempView(viewName)
+    fn("graft_heavy_hitters", "tokens", "token_col", "k",
+        "threshold_num = 1", "threshold_den = 400")(
+      """Misra–Gries heavy hitters of a token view (`token_col` string
+        |column) → (w, c): every token with frequency >
+        |n·`threshold_num`/`threshold_den`, exact counts, O(k) state per
+        |partition — the 100 TB path that never shuffles the full
+        |vocabulary.""") { a =>
+      TextOps.heavyHittersMG(a.table(0), a.str(1), a.int(2), a.long(3, 1),
+        a.long(4, 400)) },
 
-  /** WordPiece greedy segmentation from SQL (q312, round 16) for a
-    * (text) docs view — per eligible word: (w, c, len, n); the same
-    * shared vocab head the unigram view reads. */
-  def createWordpieceEncodeView(spark: SparkSession, docsView: String,
-      viewName: String): Unit =
-    operators.TextOps.wordPieceOf(
-        operators.TextOps.uniEdgesOf(spark.table(docsView)))
-      .createOrReplaceTempView(viewName)
+    fn("graft_snapshot_diff", "old", "new", "key", "compare_cols")(
+      """Snapshot diff (CDC) of two keyed views → (key, op ∈ I/U/D, plus
+        |old_c and new_c for each compared column c).""") { a =>
+      Relational.snapshotDiff(a.table(0), a.table(1), a.str(2),
+        a.strs(3)) },
 
-  /** DSIR importance weights + deterministic keep flags from SQL
-    * (q313, round 16) for a (doc_id, text) docs view against a
-    * (doc_id) target-ids view. */
-  def createImportanceWeightsView(spark: SparkSession,
-      docsView: String, targetIdsView: String, viewName: String): Unit =
-    operators.CorpusPrep.importanceWeights(spark.table(docsView),
-        spark.table(targetIdsView))
-      .createOrReplaceTempView(viewName)
+    fn("graft_interval_join", "triggers", "follow_ups", "trigger_type",
+        "follow_type", "horizon_seconds")(
+      """Event-time interval join (conversion attribution) of two event
+        |views → (user_id, a_id, b_id, b_value, gap_us). On batch views
+        |this is the theta join; the same body on streaming views yields
+        |the state-bounded stream-stream join.""") { a =>
+      streaming.StreamOps.intervalJoinStream(a.table(0), a.table(1),
+        a.str(2), a.str(3), a.long(4)) },
 
-  /** Two-level Louvain from SQL (q311, round 16) for a (u, v) edges
-    * view — per node: (community = level-1, c2 = level-2). */
-  def createLouvainTwoLevelView(spark: SparkSession, edgesView: String,
-      viewName: String): Unit = {
-    val (_, _, _, map2) =
-      operators.Graph.louvainTwoLevelOf(spark.table(edgesView))
-    map2.createOrReplaceTempView(viewName)
-  }
+    fn("graft_sessions", "events", "gap_us = 1800000000")(
+      """Per-event session labels of an events view (user_id, ts_ns,
+        |event_id, event_type) → (…, session_no) under the 30-minute
+        |(default) inactivity-gap definition — q141's exact derivation
+        |(round 8).""") { a =>
+      Behavioral.sessionized(a.table(0), a.long(1, 1800L * 1000000L)) },
 
-  /** Z-order layout from SQL: writes `srcView` to `path` laid out
-    * along the (xCol, yCol) Z-curve (one range shuffle at ingest), and
-    * registers the written files as `viewName` so subsequent SQL box
-    * queries scan the skipping-friendly layout. */
-  def zOrderWriteAsView(spark: SparkSession, srcView: String,
-      xCol: String, yCol: String, bits: Int, numFiles: Int,
-      path: String, viewName: String): Unit = {
-    operators.ZOrder.zOrderWrite(spark.table(srcView), xCol, yCol,
-      bits, numFiles, path)
-    spark.read.parquet(path).createOrReplaceTempView(viewName)
-  }
+    fn("graft_rolling_wau", "events", "window_days = 7")(
+      """Rolling distinct-user window (7-day WAU by default) of an events
+        |view (user_id, ts) → (d, wau7) — q144's distinct-collapse +
+        |broadcast anchor-range plan.""") { a =>
+      Behavioral.rollingWau(a.table(0), a.int(1, 7)) },
+
+    fn("graft_communities", "edges", "rounds = 3")(
+      """Fixed-round label-propagation communities of an edge-list view
+        |(u, v) → (node, community) — q143's deterministic argmax
+        |propagation.""") { a =>
+      Graph.labelPropagation(a.table(0), a.int(1, 3)) },
+
+    fn("graft_modularity", "edges", "labels")(
+      """Per-community modularity decomposition of an edge-list view
+        |against a (node, community) labels view → (community, n_nodes,
+        |e_in, k_sum, q_num, q_e6) — q155's exact integer Newman–Girvan
+        |audit.""") { a =>
+      Graph.modularityByCommunity(a.table(0), a.table(1)) },
+
+    fn("graft_holt", "daily")(
+      """Holt level+trend smoothing of a per-key daily series view
+        |(event_type, dnum, v) → (event_type, n_days, level_e3, trend_e3,
+        |forecast_e3) — q146's two-long-state spill-sorted fold.""") { a =>
+      Stats.holtByType(a.table(0)) },
+
+    fn("graft_ohlc", "events")(
+      """Daily OHLC bars of an events view (event_type, ts, ts_ns,
+        |event_id, value) → (event_type, day, n_events, open, high, low,
+        |close) — q136's two-direction row_number selection.""") { a =>
+      TimeSeries.ohlcBars(a.table(0)) },
+
+    fn("graft_attribution", "events")(
+      """Last-touch attribution rollup of an events view (user_id, ts_ns,
+        |event_id, event_type, value) → (channel, n_conv, revenue_cents)
+        |— q169's single window-pass credit assignment (round 8).""") { a =>
+      Behavioral.lastTouchReport(a.table(0)) },
+
+    fn("graft_windowed_funnel", "events", "stages", "horizon_ns")(
+      """Time-windowed funnel census of an events view → (stage,
+        |n_users): users counted at the deepest stage whose strict
+        |first-completion chain finishes within `horizon_ns` of the
+        |funnel start — q186 (round 8).""") { a =>
+      Behavioral.funnelWindowed(a.table(0), a.strs(1), a.long(2)) },
+
+    fn("graft_dn_retention", "events", "days = array(1, 7, 14)")(
+      """Day-N retention of an events view (user_id, ts) → (n_day,
+        |n_cohort, n_retained, retention_bp) — q187's exact
+        |active-exactly-N-days-later curve (round 8).""") { a =>
+      Behavioral.dnRetention(a.table(0), a.ints(1, Seq(1, 7, 14))) },
+
+    fn("graft_growth_accounting", "events")(
+      """Growth accounting of an events view (user_id, ts) → (d,
+        |n_active, n_new, n_returning, cum_users) — q199's new/returning
+        |decomposition with exact cumulative distinct users
+        |(round 8).""") { a =>
+      Behavioral.growthAccounting(a.table(0)) },
+
+    fn("graft_life_table", "orders")(
+      """Discrete-hazard life table of an orders view (o_custkey,
+        |o_orderdate) → (q, n_risk, n_churn, hazard_ppm) — q198's
+        |censoring-aware Kaplan–Meier input (round 8).""") { a =>
+      Stats.lifeTable(a.table(0)) },
+
+    fn("graft_deciles", "customers")(
+      """Balance-decile report of a customer view (c_custkey, c_acctbal)
+        |→ (decile, n_cust, hi, lo) — q189's NTILE cut under the
+        |deterministic (balance desc, key) total order (round 8).""") { a =>
+      Relational.ntileDeciles(a.table(0)) },
+
+    fn("graft_kwic", "docs", "term", "ctx = 2")(
+      """Keyword-in-context concordance of a docs view (doc_id, text) →
+        |(doc_id, pos, left_ctx, right_ctx) — q201 (round 9).""") { a =>
+      TextOps.kwic(a.table(0), a.str(1), a.int(2, 2)) },
+
+    fn("graft_scd2", "events")(
+      """SCD2 interval history of an events view (user_id, ts_ns,
+        |event_id, event_type) → (user_id, version_no, state,
+        |valid_from_us, valid_to_us, n_events) — q202's change-only run
+        |collapse (round 9).""") { a =>
+      Behavioral.scd2Intervals(a.table(0)) },
+
+    fn("graft_local_clustering", "edges")(
+      """Per-node local clustering of an edge-list view (u, v with u < v,
+        |deduplicated) → (node, degree, n_tri, cc_ppm) — q204
+        |(round 9).""") { a =>
+      Graph.localClustering(a.table(0)) },
+
+    fn("graft_skew_audit", "cols")(
+      """Partition-key skew audit over an array of (label, view, key_col)
+        |string arrays → (key_col, n_rows, n_keys, max_cnt,
+        |top_share_ppm, skew_x1000) — q207 (round 9).""") { a =>
+      Quality.skewAudit(a.tuples(0).map { case Seq(n, v, k) =>
+        (n, SparkSession.active.table(v), k) }) },
+
+    fn("graft_markov_steady", "events", "iters = 5")(
+      """Markov steady-state distribution of an events view → (state,
+        |pi_ppm) — q213's 5 integer power iterations (round 9).""") { a =>
+      Behavioral.markovSteady(a.table(0), a.int(1, 5)) },
+
+    fn("graft_fd_audit", "fds")(
+      """Functional-dependency audit over an array of (name, view, lhs,
+        |rhs) string arrays → (fd, n_lhs, n_violating, holds) — q215
+        |(round 9).""") { a =>
+      Quality.fdAudit(a.tuples(0).map { case Seq(n, v, l, r) =>
+        (n, SparkSession.active.table(v), l, r) }) },
+
+    fn("graft_join_cardinality", "joins")(
+      """Join-cardinality audit over an array of (label, left_view,
+        |left_key, right_view, right_key) string arrays → (join_key,
+        |left_rows, right_rows, n_matched_keys, join_rows, amp_x1000) —
+        |q221's exact-size-without-running-it planner readout
+        |(round 9).""") { a =>
+      val s = SparkSession.active
+      Quality.joinCardinality(a.tuples(0).map { case Seq(n, lv, lk, rv, rk) =>
+        (n, s.table(lv), lk, s.table(rv), rk) }) },
+
+    fn("graft_peak_rate", "events")(
+      """Peak ingest rate of an events view (event_type, ts_ns) →
+        |(event_type, n_active_minutes, n_events, peak_per_min,
+        |peak_minute, mean_per_min_e3, burst_x1000) — q222
+        |(round 9).""") { a =>
+      TimeSeries.peakRate(a.table(0)) },
+
+    fn("graft_dist_drift", "docs")(
+      """Length-distribution drift between the two ingest halves of a
+        |documents view (doc_id, n_chars) → (bucket, n1, n2, s1_ppm,
+        |s2_ppm, d_ppm) with a bucket = -1 TOTAL row carrying the exact
+        |TVD — q223 (round 9).""") { a =>
+      TextOps.distDrift(a.table(0)) },
+
+    fn("graft_threshold_sweep", "pairs")(
+      """Dedup threshold sweep over a verified-pairs view (doc_a, doc_b,
+        |jaccard) → (threshold_ppm, n_pairs, n_docs) — q237
+        |(round 10).""") { a =>
+      Dedup.thresholdSweep(a.table(0)) },
+
+    fn("graft_lsh_calibration", "docs", "pairs")(
+      """MinHash calibration curve: docs view (doc_id, text) + verified
+        |pairs view (doc_a, doc_b, jaccard) → (bucket, n_pairs,
+        |agree_ppm) — q236 (round 10).""") { a =>
+      Dedup.lshCalibration(a.table(0), a.table(1)) },
+
+    fn("graft_cluster_reps", "docs", "components")(
+      """Quality-representative selection: docs view (doc_id, text) +
+        |components view (doc_id, component) → (component, cluster_size,
+        |rep_id, rep_len) — q232 (round 10).""") { a =>
+      Dedup.clusterReps(a.table(0), a.table(1)) },
+
+    fn("graft_contamination_matrix", "pairs", "sources")(
+      """Cross-source contamination matrix: pairs view (doc_a, doc_b) +
+        |sources view (doc_id, source) → (source_a, source_b, n_pairs) —
+        |q233 (round 10).""") { a =>
+      Dedup.contaminationMatrix(a.table(0), a.table(1)) },
+
+    fn("graft_ann_recall", "exact", "approx")(
+      """ANN recall audit: exact and approximate top-k views (qid, rank,
+        |neighbor, cos) → (qid, n_brute, n_found, recall_ppm) — q239
+        |(round 10).""") { a =>
+      Similarity.annRecall(a.table(0), a.table(1)) },
+
+    fn("graft_apply_cdc", "old", "diff", "key", "value_cols")(
+      """CDC apply / MERGE INTO: old-snapshot view + changelog view (key,
+        |op ∈ {I,U,D}, new_* columns) → the reconstructed new snapshot —
+        |q240 (round 10).""") { a =>
+      Relational.applyCdc(a.table(0), a.table(1), a.str(2), a.strs(3)) },
+
+    fn("graft_df_spectrum", "docs", "cap = 64")(
+      """Shingle df spectrum of a docs view (doc_id, text) → (bucket,
+        |n_shingles, postings_mass) — q243 (round 10): the measurement
+        |behind a df-cap choice.""") { a =>
+      Dedup.dfSpectrum(a.table(0), a.long(1, 64L)) },
+
+    fn("graft_banding_sweep", "docs", "band_configs = array(8, 16, 32)")(
+      """LSH banding sweep of a docs view (doc_id, text) → (bands,
+        |n_candidates, n_verified, precision_ppm) — q244 (round 10): the
+        |measured banding S-curve.""") { a =>
+      Dedup.bandingSweep(a.table(0), a.ints(1, Seq(8, 16, 32))) },
+
+    fn("graft_substring_spans", "docs", "min_len = 8")(
+      """Any-length maximal duplicated-substring spans of a docs view
+        |(doc_id, text) → (doc_a, pos_a, doc_b, pos_b, span_len) — q245
+        |(round 11): suffix-array-grade exact-substring dedup via L-gram
+        |grouping + diagonal islands.""") { a =>
+      CorpusPrep.substringDupSpans(a.table(0), a.int(1, 8)) },
+
+    fn("graft_batched_bpe_merges", "docs", "rounds = 3", "k = 2")(
+      """Batched BPE training of a docs view (doc_id, text) →
+        |(merge_round, merge_l, merge_r, weight) — q248 (round 11): top-k
+        |conflict-free merges per round; k = 1 ≡ the sequential
+        |trainer.""") { a =>
+      TextOps.bpeTrainBatched(a.table(0), a.int(1, 3), a.int(2, 2)) },
+
+    fn("graft_kmeans_centroids", "embeddings", "k = 8", "rounds = 3")(
+      """Engine-replayable integer k-means of an embeddings view
+        |(vec_id, embedding) → (cell, dim, c_e3), the trained centroid
+        |table — q246 (round 11).""") { a =>
+      Clustering.kMeansShared(a.table(0), a.int(1, 8), a.int(2, 3))._1
+        .toDF("cell", "dim", "c_e3") },
+
+    fn("graft_pq_codebooks", "embeddings", "sub_dim = 16", "k_sub = 8",
+        "rounds = 2")(
+      """Engine-replayable integer PRODUCT-QUANTIZATION codebooks of an
+        |embeddings view (vec_id, embedding) → (s, cell, dim, c_e3), the
+        |per-subspace trained codebook table — q282 (round 13): the
+        |kMeansShared discipline with the subspace id in every grouping
+        |key.""") { a =>
+      Clustering.pqShared(a.table(0), a.int(1, 16), a.int(2, 8),
+        a.int(3, 2))._2.toDF("s", "cell", "dim", "c_e3") },
+
+    fn("graft_bm25", "docs", "top_k = 20")(
+      """BM25 retrieval readout of a docs view (doc_id, text) → (rank,
+        |doc_id, score, n_terms) — q247 (round 11): fixed-point BM25 over
+        |the mid-head query-term set, postings-bounded.""") { a =>
+      TextOps.bm25TopDocs(a.table(0), a.int(1, 20)) },
+
+    fn("graft_bpe_encode", "docs", "merges")(
+      """BPE ENCODER — apply a merges view (merge_round, merge_l,
+        |merge_r) to a docs view in table order; the final segmentation
+        |state is (w, c, pos, sym) — q249's inference-side primitive.
+        |Collects the merges when the query is analyzed.""") { a =>
+      val merges = a.table(1).orderBy("merge_round")
+        .select("merge_l", "merge_r").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+      TextOps.bpeEncodeState(a.table(0), merges) },
+
+    fn("graft_hits", "edges", "side", "rounds = 3")(
+      """HITS hubs & authorities of an edges view (hub, auth) in e6:
+        |side 'hub' → (hub, h), side 'auth' → (auth, a) — q250
+        |(round 11).""") { a =>
+      val (hub, auth) = Graph.hits(a.table(0), a.int(2, 3))
+      a.str(1) match {
+        case "hub" => hub
+        case "auth" => auth
+        case other => throw new IllegalArgumentException(
+          s"graft_hits: side must be 'hub' or 'auth', got '$other'")
+      } },
+
+    fn("graft_principal_dir", "embeddings", "rounds = 3")(
+      """Principal direction of an embeddings view (vec_id, embedding) →
+        |(dim, v_e6) — q251 (round 11).""") { a =>
+      Similarity.principalDirection(a.table(0), a.int(1, 3)) },
+
+    fn("graft_bm25_multi", "docs", "queries", "top_k = 10")(
+      """Multi-query BM25 over a docs view (doc_id, text) and a query
+        |view (query_id, term) → (query_id, rank, doc_id, score, n_terms)
+        |— q255 (round 12): the batched-serving shape.""") { a =>
+      TextOps.bm25TopDocsMulti(a.table(0), a.table(1), a.int(2, 10)) },
+
+    fn("graft_postings_delta", "docs")(
+      """Postings delta between a base docs view and its derived next
+        |snapshot → (doc_id, n_added, n_removed, status) — q261
+        |(round 12).""") { a =>
+      TextOps.postingsDelta(a.table(0)) },
+
+    fn("graft_katz", "edges", "iters = 3")(
+      """Katz centrality of an undirected edges view (u, v) → (node,
+        |score) — q262 (round 12).""") { a =>
+      Graph.katzCentrality(a.table(0), a.int(1, 3)) },
+
+    fn("graft_quant_audit", "embeddings")(
+      """Int8 quantization error audit of an embeddings view
+        |(vec_id, label, embedding) → per-label error budget — q264
+        |(round 12).""") { a =>
+      Similarity.quantAudit(a.table(0)) },
+
+    fn("graft_quality_score", "docs")(
+      """Quality-classifier scores for a (doc_id, text) view — q272's
+        |hashed-n-gram integer linear scorer (round 13): per doc token/
+        |feature counts, raw + mean score, keep flag.""") { a =>
+      CorpusPrep.qualityScore(a.table(0)) },
+
+    fn("graft_surprisal_score", "docs")(
+      """Per-doc bigram mean-surprisal score + keep flag for a
+        |(doc_id, text) view — q294's perplexity-surrogate scorer
+        |(round 14), the LM-filter sibling of graft_quality_score.""") { a =>
+      CorpusPrep.surprisalScore(a.table(0)) },
+
+    fn("graft_prf_expansion", "docs")(
+      """Pseudo-relevance-feedback expanded BM25 top-20 for a
+        |(doc_id, text) view — q275's two-stage RM3-lite loop
+        |(round 13).""") { a =>
+      TextOps.prfExpansion(a.table(0)) },
+
+    fn("graft_phash_near_dup", "signatures", "max_hamming = 6",
+        "n_bands = 4")(
+      """Perceptual near-dup pairs (a, b, hamming) for a (media_id,
+        |phash) signature view — qm7's Hamming banding + exact bit_count
+        |verify (round 13), expressed directly in SQL over the signature
+        |table so any signature source (dHash, simhash) can ride it.
+        |Round 14: parameterized by band count (must divide 56;
+        |2/4/7/8/14 all do) — B bands of 56/B bits guarantee recall 1
+        |within Hamming B−1 (pigeonhole), the trade qm9 measures.""") { a =>
+      val (sigView, maxHamming, nBands) = (a.str(0), a.int(1, 6), a.int(2, 4))
+      require(nBands >= 1 && 56 % nBands == 0, s"bands must divide 56")
+      val w = 56 / nBands
+      val divisors = (0 until nBands).map(b => s"${1L << (b * w)}L")
+        .mkString("array(", ", ", ")")
+      val bandIdx = (0 until nBands).mkString("array(", ", ", ")")
+      SparkSession.active.sql(
+        s"""WITH bands AS (
+           |  SELECT media_id, phash, b,
+           |    (phash div element_at($divisors, b + 1)) % ${1L << w}
+           |      AS bv
+           |  FROM $sigView
+           |  LATERAL VIEW explode($bandIdx) t AS b),
+           |cand AS (
+           |  SELECT DISTINCT x.media_id AS a, y.media_id AS b,
+           |    x.phash AS pa, y.phash AS pb
+           |  FROM bands x JOIN bands y
+           |    ON x.b = y.b AND x.bv = y.bv AND x.media_id < y.media_id)
+           |SELECT a, b, CAST(bit_count(pa ^ pb) AS BIGINT) AS hamming
+           |FROM cand WHERE bit_count(pa ^ pb) <= $maxHamming"""
+          .stripMargin) },
+
+    fn("graft_quantile_sketch", "values")(
+      """Quantile-sketch register cascade (q302, round 15): for a
+        |(v, ok, ln) BIGINT values view, the deterministic MRL cascade at
+        |the graded shard/budget config — the final compactor state
+        |(kb, shard, v, ok, ln, w). One body with the gated q302 state
+        |(Percentiles.sketchFromValues).""") { a =>
+      Percentiles.sketchFromValues(a.table(0)) },
+
+    fn("graft_louvain", "edges", "rounds = 3")(
+      """Louvain one-level communities (q305, round 15) for a (u, v)
+        |edges view — synchronous integer-gain rounds.""") { a =>
+      Graph.louvainRounds(a.table(0), a.int(1, 3)) },
+
+    fn("graft_unigram_encode", "docs")(
+      """Unigram-LM segmentation state (q304, round 15) for a (text) docs
+        |view — per eligible word: (w, c, len, n, fs).""") { a =>
+      TextOps.uniStateOf(a.table(0)) },
+
+    fn("graft_serp_dedup", "results", "components")(
+      """SERP near-dup collapse (q301/round-15 serving twin): a
+        |(orig_rank, doc_id, score) result-list view collapsed by a
+        |(doc_id, component) label view.""") { a =>
+      Dedup.serpDedupCollapse(a.table(0), a.table(1)) },
+
+    fn("graft_decontam_overlap", "docs", "bench", "k")(
+      """Decontamination overlap counts (q62/q306, round 15): per doc of
+        |`docs`, the distinct k-shingle overlap with `bench` — cut at any
+        |τ downstream (the q306 sweep reads one result at several
+        |thresholds).""") { a =>
+      Dedup.overlapCounts(a.table(0), a.table(1), a.int(2)) },
+
+    fn("graft_wordpiece_encode", "docs")(
+      """WordPiece greedy segmentation (q312, round 16) for a (text) docs
+        |view — per eligible word: (w, c, len, n); the same shared vocab
+        |head graft_unigram_encode reads.""") { a =>
+      TextOps.wordPieceOf(TextOps.uniEdgesOf(a.table(0))) },
+
+    fn("graft_importance_weights", "docs", "target_ids")(
+      """DSIR importance weights + deterministic keep flags for a
+        |(doc_id, text) docs view against a (doc_id) target-ids
+        |view.""") { a =>
+      CorpusPrep.importanceWeights(a.table(0), a.table(1)) },
+
+    fn("graft_louvain_two_level", "edges")(
+      """Two-level Louvain (q311, round 16) for a (u, v) edges view — per
+        |node: (community = level-1, c2 = level-2).""") { a =>
+      Graph.louvainTwoLevelOf(a.table(0))._4 })
 }

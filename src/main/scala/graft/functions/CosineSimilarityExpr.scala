@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType}
@@ -175,58 +174,33 @@ case class DotProductExpr(left: Expression, right: Expression)
 object DotProductExpr {
   val name = "graft_dot"
 
-  private val info = new ExpressionInfo(classOf[DotProductExpr].getName, name)
+  val function: Native.Function =
+    Native(name, classOf[DotProductExpr], "(array, array)") {
+      case Seq(a, b) => DotProductExpr(a, b) }
 
-  val builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => DotProductExpr(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_dot takes 2 arguments, got ${other.length}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
+  def register(spark: SparkSession): Unit = Native.register(spark, Seq(function))
 }
 
 object CosineSimilarityExpr {
   val name = "graft_cosine"
 
-  private val info = new ExpressionInfo(
-    classOf[CosineSimilarityExpr].getName, name)
-
-  private val builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => CosineSimilarityExpr(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_cosine takes 2 arguments, got ${other.length}")
-  }
+  val function: Native.Function =
+    Native(name, classOf[CosineSimilarityExpr], "(array, array)") {
+      case Seq(a, b) => CosineSimilarityExpr(a, b) }
 
   /** Post-hoc registration on a live session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
+  def register(spark: SparkSession): Unit = Native.register(spark, Seq(function))
 }
 
 /** `SparkSessionExtensions` hook: enable with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
-  * Injects the native function surface plus the opt-in approx-distinct
-  * optimizer rule (active only under its flag). */
+  * Injects the native functions and the `graft_*` table functions (the
+  * two lists `graft.SqlSurface.register` registers post hoc) plus the
+  * opt-in approx-distinct optimizer rule (active only under its flag). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier(CosineSimilarityExpr.name),
-      new ExpressionInfo(classOf[CosineSimilarityExpr].getName,
-        CosineSimilarityExpr.name),
-      { exprs: Seq[Expression] => exprs match {
-        case Seq(a, b) => CosineSimilarityExpr(a, b)
-        case other => throw new IllegalArgumentException(
-          s"graft_cosine takes 2 arguments, got ${other.length}")
-      } }))
-    ext.injectFunction((FunctionIdentifier(DotProductExpr.name),
-      new ExpressionInfo(classOf[DotProductExpr].getName,
-        DotProductExpr.name), DotProductExpr.builder))
-    ext.injectFunction((FunctionIdentifier(NearestCentroidExpr.name),
-      new ExpressionInfo(classOf[NearestCentroidExpr].getName,
-        NearestCentroidExpr.name), NearestCentroidExpr.builder))
-    SignatureExprs.functions.foreach(ext.injectFunction)
+    graft.SqlSurface.natives.foreach(ext.injectFunction)
+    graft.SqlSurface.tableFunctions.foreach(ext.injectTableFunction)
     ext.injectOptimizerRule(_ => graft.plans.ApproxDistinctRule)
     ext.injectOptimizerRule(_ => graft.plans.BandedRangeJoinRule)
   }

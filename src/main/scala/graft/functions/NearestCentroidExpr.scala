@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
@@ -108,23 +107,17 @@ case class NearestCentroidExpr(child: Expression, cids: Array[Long],
 object NearestCentroidExpr {
   val name = "graft_nearest_centroid"
 
-  private val info = new ExpressionInfo(
-    classOf[NearestCentroidExpr].getName, name)
-
   /** Folds the two literal args (ids, matrix) into JVM arrays at plan
     * time — callers pass `typedlit` values via `call_function`. */
-  val builder: Seq[Expression] => Expression = {
+  val function: Native.Function = Native(name,
+      classOf[NearestCentroidExpr], "(vector, foldable ids, foldable matrix)") {
     case Seq(v, cidsE, matE) if cidsE.foldable && matE.foldable =>
       val cids = cidsE.eval().asInstanceOf[ArrayData].toLongArray()
       val matAd = matE.eval().asInstanceOf[ArrayData]
       val mat = Array.tabulate(matAd.numElements())(i =>
         matAd.getArray(i).toDoubleArray())
       NearestCentroidExpr(v, cids, mat)
-    case other => throw new IllegalArgumentException(
-      s"$name takes (vector, foldable ids, foldable matrix), got $other")
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
+  def register(spark: SparkSession): Unit = Native.register(spark, Seq(function))
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -200,21 +198,4 @@ case class RollHashExpr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(
       newChild: Expression): RollHashExpr = copy(child = newChild)
-}
-
-object PolyHashExpr {
-  val name = "graft_polyhash"
-
-  private val info = new ExpressionInfo(
-    classOf[PolyHashExpr].getName, name)
-
-  private val builder: Seq[Expression] => Expression = {
-    case Seq(s) => PolyHashExpr(s)
-    case args => throw new IllegalArgumentException(
-      s"$name expects 1 argument, got ${args.length}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

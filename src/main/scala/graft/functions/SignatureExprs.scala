@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -520,107 +519,37 @@ case class HyperplaneModExpr(child: Expression, planes: Int)
 
 object SignatureExprs {
 
-  /** (identifier, info, builder) triples — shared by post-hoc
-    * `register()` and `GraftExtensions.injectFunction`. */
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSignatureExpr].getName,
-        "graft_minhash"),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(arr, n) => MinHashSignatureExpr(arr,
-            n.eval().asInstanceOf[Number].intValue())
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash takes (array, numHashes), got ${other.length} args")
-        }
-      }),
-    (FunctionIdentifier("graft_minhash_mod"),
-      new ExpressionInfo(classOf[MinHashModExpr].getName,
-        "graft_minhash_mod"),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(arr, n) => MinHashModExpr(arr,
-            n.eval().asInstanceOf[Number].intValue())
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash_mod takes (array, numHashes), got ${other.length} args")
-        }
-      }),
-    (FunctionIdentifier("graft_simhash_mod"),
-      new ExpressionInfo(classOf[SimHashModExpr].getName,
-        "graft_simhash_mod"),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(arr) => SimHashModExpr(arr)
-          case other => throw new IllegalArgumentException(
-            s"graft_simhash_mod takes (array), got ${other.length} args")
-        }
-      }),
-    (FunctionIdentifier("graft_hyperplane"),
-      new ExpressionInfo(classOf[HyperplaneLshExpr].getName,
-        "graft_hyperplane"),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(arr, n) => HyperplaneLshExpr(arr,
-            n.eval().asInstanceOf[Number].intValue())
-          case other => throw new IllegalArgumentException(
-            s"graft_hyperplane takes (array, planes), got ${other.length} args")
-        }
-      }),
-    (FunctionIdentifier("graft_hyperplane_mod"),
-      new ExpressionInfo(classOf[HyperplaneModExpr].getName,
-        "graft_hyperplane_mod"),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(arr, n) => HyperplaneModExpr(arr,
-            n.eval().asInstanceOf[Number].intValue())
-          case other => throw new IllegalArgumentException(
-            s"graft_hyperplane_mod takes (array, planes), got " +
-              s"${other.length} args")
-        }
-      }),
-    (FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "graft_simhash"),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(arr) => SimHash64Expr(arr)
-          case other => throw new IllegalArgumentException(
-            s"graft_simhash takes (array), got ${other.length} args")
-        }
-      }),
-    (FunctionIdentifier("graft_polyhash"),
-      new ExpressionInfo(classOf[PolyHashExpr].getName, "graft_polyhash"),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(str) => PolyHashExpr(str)
-          case other => throw new IllegalArgumentException(
-            s"graft_polyhash takes (string), got ${other.length} args")
-        }
-      }),
-    (FunctionIdentifier("graft_polyhash2"),
-      new ExpressionInfo(classOf[PolyHash2Expr].getName, "graft_polyhash2"),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(str) => PolyHash2Expr(str)
-          case other => throw new IllegalArgumentException(
-            s"graft_polyhash2 takes (string), got ${other.length} args")
-        }
-      }),
-    (FunctionIdentifier("graft_rollhash"),
-      new ExpressionInfo(classOf[RollHashExpr].getName, "graft_rollhash"),
-      { exprs: Seq[Expression] =>
-        exprs match {
-          case Seq(str) => RollHashExpr(str)
-          case other => throw new IllegalArgumentException(
-            s"graft_rollhash takes (string), got ${other.length} args")
-        }
-      }))
+  private def intArg(e: Expression): Int =
+    e.eval().asInstanceOf[Number].intValue()
+
+  /** Listed in `graft.SqlSurface.natives` and registered by
+    * [[register]]. */
+  val functions: Seq[Native.Function] = Seq(
+    Native("graft_minhash", classOf[MinHashSignatureExpr],
+        "(array, numHashes)") {
+      case Seq(arr, n) => MinHashSignatureExpr(arr, intArg(n)) },
+    Native("graft_minhash_mod", classOf[MinHashModExpr],
+        "(array, numHashes)") {
+      case Seq(arr, n) => MinHashModExpr(arr, intArg(n)) },
+    Native("graft_simhash_mod", classOf[SimHashModExpr], "(array)") {
+      case Seq(arr) => SimHashModExpr(arr) },
+    Native("graft_hyperplane", classOf[HyperplaneLshExpr],
+        "(array, planes)") {
+      case Seq(arr, n) => HyperplaneLshExpr(arr, intArg(n)) },
+    Native("graft_hyperplane_mod", classOf[HyperplaneModExpr],
+        "(array, planes)") {
+      case Seq(arr, n) => HyperplaneModExpr(arr, intArg(n)) },
+    Native("graft_simhash", classOf[SimHash64Expr], "(array)") {
+      case Seq(arr) => SimHash64Expr(arr) },
+    Native("graft_polyhash", classOf[PolyHashExpr], "(string)") {
+      case Seq(str) => PolyHashExpr(str) },
+    Native("graft_polyhash2", classOf[PolyHash2Expr], "(string)") {
+      case Seq(str) => PolyHash2Expr(str) },
+    Native("graft_rollhash", classOf[RollHashExpr], "(string)") {
+      case Seq(str) => RollHashExpr(str) })
 
   /** Register the signature functions on a live session:
     * `graft_minhash(arr, n)`, `graft_hyperplane(arr, p)`,
     * `graft_simhash(arr)`. */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
+  def register(spark: SparkSession): Unit = Native.register(spark, functions)
 }

@@ -43,10 +43,4 @@ object VectorOps {
             x * when(pmod(xxhash64(p * lit(4099) + i), lit(2)) === 0,
               lit(1.0)).otherwise(lit(-1.0))),
           lit(0.0), (acc, x) => acc + x) >= 0, lit(1)).otherwise(lit(0)))
-
-  /** Pack a 0/1 bit array (≤ 63 bits) into a long bucket key. */
-  def packBits(bits: Column): Column =
-    aggregate(zip_with(bits, sequence(lit(0), size(bits) - 1), (b, i) =>
-      call_function("shiftleft", b.cast("long"), i)),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
 }

@@ -68,16 +68,6 @@ object Dedup {
   private def sizesHint(sizes: DataFrame, nDocs: Long): DataFrame =
     if (nDocs <= SizesBroadcastCeiling) broadcast(sizes) else sizes
 
-  /** MinHash signature — reference HOF formulation (kept for semantics
-    * docs): min over shingles of xxhash64(shingle, s) per seed. The
-    * production path uses the native `graft_minhash` expression
-    * (functions/SignatureExprs.scala), which hashes each shingle once and
-    * derives all permutations by multiply-add mixing — ~40× faster at
-    * sf0.1 because interpreted nested lambdas re-hash strings per seed. */
-  def minhashSignatureHof(sh: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      s => array_min(transform(sh, x => xxhash64(x, s))))
-
   def minhashSignature(sh: Column, numHashes: Int): Column =
     call_function("graft_minhash", sh, lit(numHashes))
 
@@ -401,31 +391,6 @@ object Dedup {
         least(col("id"), coalesce(col("nbr_min"), col("id")))
           .as("component"))
       .localCheckpoint(true)
-  }
-
-  /** Near-dup GROUPS from the exact pair set: each doc labeled with the
-    * minimum doc_id of its duplicate cluster (transitive closure — the
-    * fix for pairwise removal's over-keeping on chains). Deterministic,
-    * so it sits under the hard oracle (q33g, DuckDB recursive CTE). */
-  def nearDupComponents(docs: DataFrame, k: Int = 3,
-      threshold: Double = 0.5): DataFrame = {
-    val pairs = ngramJaccardPairs(docs, k = k, threshold = threshold)
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    connectedComponents(docs.select(col("doc_id").as("id")), pairs)
-      .select(col("id").as("doc_id"), col("component"))
-  }
-
-  /** 64-bit SimHash of the word stream: per-token hash votes ±1 on every
-    * bit, sign of the vote sum is the bit. HOF formulation kept for
-    * semantics docs; production uses the native `graft_simhash`
-    * expression (one loop per row vs 64 interpreted lambdas per token). */
-  def simhashHof(text: Column): Column = {
-    val counters = aggregate(split(text, " "), array_repeat(lit(0L), 64),
-      (acc, t) => zip_with(acc, sequence(lit(0), lit(63)), (a, i) =>
-        a + when(call_function("shiftrightunsigned", xxhash64(t), i)
-          .bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L))))
-    VectorOps.packBits(transform(counters,
-      c => when(c > 0, lit(1)).otherwise(lit(0))))
   }
 
   def simhash(text: Column): Column =

@@ -34,16 +34,6 @@ object StreamOps {
       .select(col("win.start").as("w"), col("event_type"),
         col("cnt"), col("sv"))
 
-  /** Sliding window variant. */
-  def slidingCounts(events: DataFrame, width: String = "1 hour",
-      slide: String = "30 minutes",
-      watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), width, slide).as("win"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("win.start").as("w"), col("event_type"), col("cnt"))
-
   /** Session windows: gap-based grouping per user. */
   def sessionCounts(events: DataFrame, gap: String = "30 minutes",
       watermark: String = "10 minutes"): DataFrame =

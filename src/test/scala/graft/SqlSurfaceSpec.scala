@@ -1,18 +1,33 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
 
 /** SQL-only access to the operator library: a SQL user with just
   * `spark.sql` (natives registered) can run the same near-dup pipeline
-  * the Scala operators build, and the view builders expose whole
-  * operators (as-of, dedup, kNN) to SQL sessions. */
+  * the Scala operators build, and the `graft_*` table functions expose
+  * whole operators (as-of, dedup, kNN, …) to SQL sessions. */
 class SqlSurfaceSpec extends SparkSpecBase {
 
-  private lazy val ready: Unit = {
-    SqlSurface.registerFunctions(spark)
-    SqlSurface.registerTables(spark, sf)
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    SqlSurface.register(spark)
+  }
+
+  private lazy val ready: Unit = SqlSurface.registerTables(spark, sf)
+
+  /** Names of the table functions called so far; the census test at the
+    * end checks them against the registry. */
+  private val called = collection.mutable.Set.empty[String]
+
+  /** Every table-function call of this spec goes through here: `call` is
+    * the SQL invocation, e.g. "graft_knn('embeddings', 'embeddings', 5)". */
+  private def tvf(call: String): DataFrame = {
+    called += call.takeWhile(_ != '(')
+    spark.sql(s"SELECT * FROM $call")
   }
 
   test("end-to-end SQL near-dup: hyperplane-LSH bucket join + native " +
@@ -59,10 +74,12 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("view builders expose whole operators to SQL sessions") {
     ready
-    SqlSurface.createNearDupPairsView(spark, "documents", "neardup_pairs")
-    SqlSurface.createDedupSurvivorsView(spark, "documents", "survivors")
-    SqlSurface.createKnnView(spark, "embeddings", "embeddings", 5,
-      "knn")
+    tvf("graft_near_dup_pairs('documents')")
+      .createOrReplaceTempView("neardup_pairs")
+    tvf("graft_dedup_survivors('documents')")
+      .createOrReplaceTempView("survivors")
+    tvf("graft_knn('embeddings', 'embeddings', 5)")
+      .createOrReplaceTempView("knn")
     // pair view: queryable, and consistent with the survivors view
     val nPairs = spark.sql("SELECT COUNT(*) AS c FROM neardup_pairs")
       .collect().head.getLong(0)
@@ -77,6 +94,16 @@ class SqlSurfaceSpec extends SparkSpecBase {
       "SELECT COUNT(DISTINCT doc_b) AS c FROM neardup_pairs")
       .collect().head.getLong(0)
     assert(nSurv == nDocs - nLosers)
+    // explicit defaults: SQL 0.5 is a Decimal literal, read as a double
+    assert(tvf("graft_near_dup_pairs('documents', 3, 0.5)").count()
+      == nPairs)
+    // a wrong argument count names the function and its signature
+    val arity = intercept[IllegalArgumentException](
+      tvf("graft_knn('embeddings')"))
+    assert(arity.getMessage.contains("graft_knn(vectors, queries, k)"))
+    // a fractional k is rejected, not truncated
+    intercept[IllegalArgumentException](
+      tvf("graft_knn('embeddings', 'embeddings', 2.5)"))
     // kNN view: plain SQL aggregation over an operator view
     val worst = spark.sql(
       """SELECT qid, MIN(cos) AS worst FROM knn
@@ -90,8 +117,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .createOrReplaceTempView("order_snap")
     spark.sql("SELECT event_id, user_id, ts FROM events")
       .createOrReplaceTempView("ev")
-    SqlSurface.createAsofJoinView(spark, "ev", "order_snap",
-      "user_id", "ts", Seq("asof_ok"), "ev_asof")
+    tvf("graft_asof_join('ev', 'order_snap', 'user_id', 'ts', " +
+        "array('asof_ok'))").createOrReplaceTempView("ev_asof")
     val n = spark.sql("SELECT COUNT(*) AS c FROM ev_asof")
       .collect().head.getLong(0)
     assert(n == Tables.events(spark, sf).count())
@@ -100,14 +127,15 @@ class SqlSurfaceSpec extends SparkSpecBase {
   test("chunk / funnel / cohort view builders reach the operators " +
       "from plain SQL") {
     SqlSurface.registerTables(spark, sf)
-    SqlSurface.createChunksView(spark, "documents", "doc_chunks")
+    tvf("graft_chunks('documents')").createOrReplaceTempView("doc_chunks")
     val chunked = spark.sql(
       "SELECT COUNT(DISTINCT doc_id) AS d FROM doc_chunks")
       .collect().head.getLong(0)
     assert(chunked == Tables.load(spark, sf, "documents").count())
-    SqlSurface.createFunnelView(spark, "events",
-      Seq("signup", "view", "click", "purchase"), "funnel_t")
-    SqlSurface.createCohortView(spark, "events", "cohorts")
+    tvf("graft_funnel('events', " +
+        "array('signup', 'view', 'click', 'purchase'))")
+      .createOrReplaceTempView("funnel_t")
+    tvf("graft_cohort('events')").createOrReplaceTempView("cohorts")
     // SQL-side funnel depth histogram ≡ the q73 operator result
     val sqlDepths = spark.sql(
       """SELECT CAST((CASE WHEN t0 IS NOT NULL THEN 1 ELSE 0 END) +
@@ -127,9 +155,10 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("corpus-report / collocation view builders match the operators") {
     SqlSurface.registerTables(spark, sf)
-    SqlSurface.createCorpusReportView(spark, "documents", "corpus_card")
-    SqlSurface.createCollocationsView(spark, "documents", 5L, 50,
-      "collocs")
+    tvf("graft_corpus_report('documents')")
+      .createOrReplaceTempView("corpus_card")
+    tvf("graft_collocations('documents', 5L, 50)")
+      .createOrReplaceTempView("collocs")
     val viaSql = spark.sql(
       "SELECT source, n_docs, tok_sum, dup_bp FROM corpus_card")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
@@ -157,19 +186,19 @@ class SqlSurfaceSpec extends SparkSpecBase {
     // K4 minus one edge (GraphSpec golden): 2 triangles, closure 75%
     Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L))
       .toDF("u", "v").createOrReplaceTempView("edges")
-    SqlSurface.createTriangleCensusView(spark, "edges", "census")
+    tvf("graft_triangle_census('edges')").createOrReplaceTempView("census")
     val c = spark.sql(
       "SELECT n_triangles, closure_ppm FROM census").collect().head
     assert((c.getLong(0), c.getLong(1)) == ((2L, 750000L)))
-    SqlSurface.createPageRankView(spark, "edges", 5, "pr")
+    tvf("graft_page_rank('edges', 5)").createOrReplaceTempView("pr")
     assert(spark.sql("SELECT COUNT(*) FROM pr").collect().head
       .getLong(0) == 4L)
-    SqlSurface.createWinnowView(spark, "documents", "prints")
+    tvf("graft_winnow('documents')").createOrReplaceTempView("prints")
     val perDoc = spark.sql(
       "SELECT COUNT(DISTINCT doc_id) FROM prints").collect().head
     assert(perDoc.getLong(0) ==
       Tables.load(spark, sf, "documents").count())
-    SqlSurface.createQualityReportView(spark, "dq")
+    tvf("graft_quality_report()").createOrReplaceTempView("dq")
     val bad = spark.sql("SELECT SUM(n_bad) FROM dq").collect().head
     assert(bad.getLong(0) == 0L, "fixture is clean")
   }
@@ -178,8 +207,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
     SqlSurface.registerTables(spark, sf)
     spark.sql("SELECT explode(split(text, ' ')) AS w FROM documents")
       .createOrReplaceTempView("doc_tokens")
-    SqlSurface.createHeavyHittersView(spark, "doc_tokens", "w",
-      k = 400, viewName = "hh")
+    tvf("graft_heavy_hitters('doc_tokens', 'w', 400)")
+      .createOrReplaceTempView("hh")
     val viaSql = spark.sql(
         "SELECT w, cnt, freq_bp FROM hh ORDER BY cnt DESC, w")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -202,8 +231,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
         "ELSE o_orderstatus END AS o_orderstatus FROM orders " +
         "WHERE o_orderkey % 11 <> 0")
       .createOrReplaceTempView("v_new")
-    SqlSurface.createSnapshotDiffView(spark, "v_old", "v_new",
-      "o_orderkey", Seq("o_orderstatus"), "diff")
+    tvf("graft_snapshot_diff('v_old', 'v_new', 'o_orderkey', " +
+        "array('o_orderstatus'))").createOrReplaceTempView("diff")
     val viaSql = spark.sql("SELECT o_orderkey, op FROM diff")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val direct = graft.operators.Relational.snapshotDiff(
@@ -212,8 +241,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .select("o_orderkey", "op")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(viaSql == direct && viaSql.nonEmpty)
-    SqlSurface.createIntervalJoinView(spark, "events", "events",
-      "click", "purchase", 3600, "attrib")
+    tvf("graft_interval_join('events', 'events', 'click', " +
+        "'purchase', 3600)").createOrReplaceTempView("attrib")
     val nSql = spark.sql("SELECT COUNT(*) FROM attrib")
       .collect().head.getLong(0)
     val nDirect = graft.operators.Behavioral
@@ -226,7 +255,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
     SqlSurface.registerTables(spark, sf)
     import org.apache.spark.sql.functions.{col, desc}
 
-    SqlSurface.createSessionsView(spark, "events", "sess")
+    tvf("graft_sessions('events')").createOrReplaceTempView("sess")
     val sSql = spark.sql("SELECT user_id, event_id, session_no FROM sess")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val sDir = graft.operators.Behavioral.sessionized(spark.table("events"))
@@ -234,7 +263,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(sSql == sDir && sSql.nonEmpty)
 
-    SqlSurface.createRollingWauView(spark, "events", "wau")
+    tvf("graft_rolling_wau('events')").createOrReplaceTempView("wau")
     val wSql = spark.sql("SELECT d, wau7 FROM wau")
       .collect().map(r => (r.getDate(0).toString, r.getLong(1))).toSet
     val wDir = graft.operators.Behavioral.rollingWau(spark.table("events"))
@@ -244,14 +273,15 @@ class SqlSurfaceSpec extends SparkSpecBase {
     import spark.implicits._
     Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L),
       (3L, 4L)).toDF("u", "v").createOrReplaceTempView("lpa_edges")
-    SqlSurface.createCommunitiesView(spark, "lpa_edges", "comm")
+    tvf("graft_communities('lpa_edges')").createOrReplaceTempView("comm")
     val cSql = spark.sql("SELECT node, community FROM comm")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val cDir = graft.operators.Graph
       .labelPropagation(spark.table("lpa_edges"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cSql == cDir && cSql.nonEmpty)
-    SqlSurface.createModularityView(spark, "lpa_edges", "comm", "modu")
+    tvf("graft_modularity('lpa_edges', 'comm')")
+      .createOrReplaceTempView("modu")
     val mSql = spark.sql("SELECT community, q_num FROM modu")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val mDir = graft.operators.Graph.modularityByCommunity(
@@ -264,7 +294,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
         "SUM(CAST(floor(value * 1000 + 0.5) AS BIGINT)) AS v " +
         "FROM events WHERE value IS NOT NULL GROUP BY 1, 2")
       .createOrReplaceTempView("daily")
-    SqlSurface.createHoltView(spark, "daily", "holt")
+    tvf("graft_holt('daily')").createOrReplaceTempView("holt")
     val hSql = spark.sql(
         "SELECT event_type, level_e3, trend_e3 FROM holt")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -275,7 +305,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .toSet
     assert(hSql == hDir && hSql.nonEmpty)
 
-    SqlSurface.createOhlcView(spark, "events", "ohlc")
+    tvf("graft_ohlc('events')").createOrReplaceTempView("ohlc")
     val oSql = spark.sql(
         "SELECT event_type, day, open, close FROM ohlc")
       .collect().map(r => (r.getString(0), r.getDate(1).toString,
@@ -292,7 +322,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
       "SQL ≡ Scala operator (round-8 verdict item 5)") {
     SqlSurface.registerTables(spark, sf)
 
-    SqlSurface.createAttributionView(spark, "events", "attrib")
+    tvf("graft_attribution('events')").createOrReplaceTempView("attrib")
     val aSql = spark.sql(
         "SELECT channel, n_conv, revenue_cents FROM attrib")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -303,16 +333,16 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .toSet
     assert(aSql == aDir && aSql.nonEmpty)
 
-    SqlSurface.createWindowedFunnelView(spark, "events",
-      Seq("signup", "view", "click", "purchase"),
-      horizonNs = 3600L * 1000000000L, "wfunnel")
+    tvf("graft_windowed_funnel('events', " +
+        "array('signup', 'view', 'click', 'purchase'), 3600000000000L)")
+      .createOrReplaceTempView("wfunnel")
     val fSql = spark.sql("SELECT stage, n_users FROM wfunnel")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val fDir = graft.operators.Behavioral.q186FunnelWindowed(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fSql == fDir && fSql.nonEmpty)
 
-    SqlSurface.createDnRetentionView(spark, "events", "dnret")
+    tvf("graft_dn_retention('events')").createOrReplaceTempView("dnret")
     val rSql = spark.sql(
         "SELECT n_day, n_retained, retention_bp FROM dnret")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -323,7 +353,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .toSet
     assert(rSql == rDir && rSql.nonEmpty)
 
-    SqlSurface.createGrowthAccountingView(spark, "events", "growth")
+    tvf("graft_growth_accounting('events')")
+      .createOrReplaceTempView("growth")
     val gSql = spark.sql(
         "SELECT d, n_active, n_new, n_returning, cum_users FROM growth")
       .collect().map(r => (r.getDate(0).toString, r.getLong(1),
@@ -333,7 +364,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
         r.getLong(2), r.getLong(3), r.getLong(4))).toSet
     assert(gSql == gDir && gSql.nonEmpty)
 
-    SqlSurface.createLifeTableView(spark, "orders", "lifetab")
+    tvf("graft_life_table('orders')").createOrReplaceTempView("lifetab")
     val lSql = spark.sql(
         "SELECT q, n_risk, n_churn, hazard_ppm FROM lifetab")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -343,7 +374,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
         r.getLong(3))).toSet
     assert(lSql == lDir && lSql.nonEmpty)
 
-    SqlSurface.createDecilesView(spark, "customer", "deciles")
+    tvf("graft_deciles('customer')").createOrReplaceTempView("deciles")
     val dSql = spark.sql("SELECT decile, n_cust, hi, lo FROM deciles")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3))).toSet
@@ -357,7 +388,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
       "/ skew audit / markov / fd audit): SQL ≡ Scala operator") {
     SqlSurface.registerTables(spark, sf)
 
-    SqlSurface.createKwicView(spark, "documents", "scan", "kwic")
+    tvf("graft_kwic('documents', 'scan')").createOrReplaceTempView("kwic")
     val kSql = spark.sql(
         "SELECT doc_id, pos, left_ctx, right_ctx FROM kwic")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
@@ -368,7 +399,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
         r.getString(3))).toSet
     assert(kSql == kDir && kSql.nonEmpty)
 
-    SqlSurface.createScd2View(spark, "events", "scd2")
+    tvf("graft_scd2('events')").createOrReplaceTempView("scd2")
     val sSql = spark.sql(
         "SELECT user_id, version_no, state, n_events FROM scd2")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
@@ -383,14 +414,15 @@ class SqlSurfaceSpec extends SparkSpecBase {
     import spark.implicits._
     Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L))
       .toDF("u", "v").createOrReplaceTempView("cc_edges")
-    SqlSurface.createLocalClusteringView(spark, "cc_edges", "lcc")
+    tvf("graft_local_clustering('cc_edges')").createOrReplaceTempView("lcc")
     val cSql = spark.sql("SELECT node, cc_ppm FROM lcc")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cSql == Set((1L, 666666L), (2L, 666666L), (3L, 1000000L),
       (4L, 1000000L)))
 
-    SqlSurface.createSkewAuditView(spark,
-      Seq(("orders.o_custkey", "orders", "o_custkey")), "skew")
+    tvf("graft_skew_audit(" +
+        "array(array('orders.o_custkey', 'orders', 'o_custkey')))")
+      .createOrReplaceTempView("skew")
     val wSql = spark.sql(
         "SELECT key_col, n_rows, n_keys, max_cnt FROM skew")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
@@ -402,17 +434,17 @@ class SqlSurfaceSpec extends SparkSpecBase {
         r.getLong(3))).toSet
     assert(wSql == wDir && wSql.nonEmpty)
 
-    SqlSurface.createMarkovSteadyView(spark, "events", "markov")
+    tvf("graft_markov_steady('events')").createOrReplaceTempView("markov")
     val mSql = spark.sql("SELECT state, pi_ppm FROM markov")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val mDir = graft.operators.Behavioral.q213MarkovSteady(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(mSql == mDir && mSql.nonEmpty)
 
-    SqlSurface.createFdAuditView(spark,
-      Seq(("part: p_partkey->p_brand", "part", "p_partkey", "p_brand"),
-        ("events: user_id->event_type", "events", "user_id",
-          "event_type")), "fds")
+    tvf("graft_fd_audit(array(" +
+        "array('part: p_partkey->p_brand', 'part', 'p_partkey', 'p_brand'), " +
+        "array('events: user_id->event_type', 'events', 'user_id', " +
+        "'event_type')))").createOrReplaceTempView("fds")
     val fSql = spark.sql("SELECT fd, holds FROM fds")
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(fSql("part: p_partkey->p_brand") == 1L)
@@ -423,9 +455,9 @@ class SqlSurfaceSpec extends SparkSpecBase {
       "dist drift): SQL ≡ Scala operator") {
     SqlSurface.registerTables(spark, sf)
 
-    SqlSurface.createJoinCardinalityView(spark,
-      Seq(("o=l", "orders", "o_orderkey", "lineitem", "l_orderkey")),
-      "jcard")
+    tvf("graft_join_cardinality(array(" +
+        "array('o=l', 'orders', 'o_orderkey', 'lineitem', 'l_orderkey')))")
+      .createOrReplaceTempView("jcard")
     val jSql = spark.sql(
         "SELECT join_key, join_rows, amp_x1000 FROM jcard")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -436,7 +468,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(jSql.toSeq == jDir.toSeq && jSql.nonEmpty)
 
-    SqlSurface.createPeakRateView(spark, "events", "peak")
+    tvf("graft_peak_rate('events')").createOrReplaceTempView("peak")
     val pSql = spark.sql(
         "SELECT event_type, peak_per_min, peak_minute FROM peak")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -447,7 +479,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .toSet
     assert(pSql == pDir && pSql.nonEmpty)
 
-    SqlSurface.createDistDriftView(spark, "documents", "drift")
+    tvf("graft_dist_drift('documents')").createOrReplaceTempView("drift")
     val dSql = spark.sql("SELECT bucket, d_ppm FROM drift")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val dDir = graft.operators.TextOps.q223DistDrift(spark, sf)
@@ -468,7 +500,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
     // (the builder's capped default is exercised by the round-3 test;
     // equality against the memoized queries needs the uncapped set)
     Dedup.exactPairs(spark, sf).createOrReplaceTempView("nd_pairs")
-    SqlSurface.createThresholdSweepView(spark, "nd_pairs", "tsweep")
+    tvf("graft_threshold_sweep('nd_pairs')")
+      .createOrReplaceTempView("tsweep")
     val tSql = spark.sql(
         "SELECT threshold_ppm, n_pairs, n_docs FROM tsweep")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -478,8 +511,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .toSet
     assert(tSql == tDir && tSql.nonEmpty)
 
-    SqlSurface.createLshCalibrationView(spark, "nd_docs", "nd_pairs",
-      "calib")
+    tvf("graft_lsh_calibration('nd_docs', 'nd_pairs')")
+      .createOrReplaceTempView("calib")
     val cSql = spark.sql("SELECT bucket, n_pairs, agree_ppm FROM calib")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
@@ -488,7 +521,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .toSet
     assert(cSql == cDir && cSql.nonEmpty)
 
-    SqlSurface.createDfSpectrumView(spark, "nd_docs", "dfspec")
+    tvf("graft_df_spectrum('nd_docs')").createOrReplaceTempView("dfspec")
     val fSql = spark.sql(
         "SELECT bucket, n_shingles, postings_mass FROM dfspec")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -498,8 +531,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .toSet
     assert(fSql == fDir && fSql.nonEmpty)
 
-    SqlSurface.createBandingSweepView(spark, "nd_docs", "bsweep",
-      bandConfigs = Seq(16))
+    tvf("graft_banding_sweep('nd_docs', array(16))")
+      .createOrReplaceTempView("bsweep")
     val bSql = spark.sql(
         "SELECT bands, n_candidates, n_verified FROM bsweep")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -512,8 +545,9 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .createOrReplaceTempView("snap_old")
     graft.operators.Relational.q129SnapshotDiff(spark, sf)
       .createOrReplaceTempView("snap_diff")
-    SqlSurface.createApplyCdcView(spark, "snap_old", "snap_diff",
-      "o_orderkey", Seq("o_orderstatus", "o_totalprice"), "snap_new")
+    tvf("graft_apply_cdc('snap_old', 'snap_diff', 'o_orderkey', " +
+        "array('o_orderstatus', 'o_totalprice'))")
+      .createOrReplaceTempView("snap_new")
     val aSql = spark.sql(
         "SELECT o_orderkey, o_orderstatus FROM snap_new")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -527,8 +561,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .createOrReplaceTempView("knn_exact")
     graft.operators.Similarity.q34bKnnLsh(spark, sf)
       .createOrReplaceTempView("knn_lsh")
-    SqlSurface.createAnnRecallView(spark, "knn_exact", "knn_lsh",
-      "recall")
+    tvf("graft_ann_recall('knn_exact', 'knn_lsh')")
+      .createOrReplaceTempView("recall")
     val rSql = spark.sql("SELECT qid, recall_ppm FROM recall")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val rDir = graft.operators.Similarity.q239AnnRecall(spark, sf)
@@ -544,8 +578,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .createOrReplaceTempView("nd_sources")
     Dedup.q33gDedupComponents(spark, sf)
       .createOrReplaceTempView("nd_comps")
-    SqlSurface.createContaminationMatrixView(spark, "nd_pairs",
-      "nd_sources", "contam")
+    tvf("graft_contamination_matrix('nd_pairs', 'nd_sources')")
+      .createOrReplaceTempView("contam")
     val mSql = spark.sql(
         "SELECT source_a, source_b, n_pairs FROM contam")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
@@ -555,8 +589,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .toSet
     assert(mSql == mDir && mSql.nonEmpty)
 
-    SqlSurface.createClusterRepsView(spark, "nd_docs", "nd_comps",
-      "reps")
+    tvf("graft_cluster_reps('nd_docs', 'nd_comps')")
+      .createOrReplaceTempView("reps")
     val pSql = spark.sql(
         "SELECT component, rep_id, rep_len FROM reps")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -572,7 +606,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       "k-means centroids / BM25): SQL ≡ Scala operator") {
     SqlSurface.registerTables(spark, sf)
 
-    SqlSurface.createSubstringSpansView(spark, "documents", "subspans")
+    tvf("graft_substring_spans('documents')")
+      .createOrReplaceTempView("subspans")
     val sSql = spark.sql(
         "SELECT doc_a, pos_a, doc_b, pos_b, span_len FROM subspans")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -582,7 +617,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
         r.getLong(3), r.getLong(4))).toSet
     assert(sSql == sDir && sSql.nonEmpty)
 
-    SqlSurface.createBatchedBpeMergesView(spark, "documents", "bpeb")
+    tvf("graft_batched_bpe_merges('documents')")
+      .createOrReplaceTempView("bpeb")
     val bSql = spark.sql(
         "SELECT merge_round, merge_l, merge_r, weight FROM bpeb")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
@@ -592,7 +628,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
         r.getLong(3))).toSet
     assert(bSql == bDir && bSql.nonEmpty)
 
-    SqlSurface.createKmeansCentroidsView(spark, "embeddings", "kmc")
+    tvf("graft_kmeans_centroids('embeddings')")
+      .createOrReplaceTempView("kmc")
     val kSql = spark.sql("SELECT cell, dim, c_e3 FROM kmc")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
@@ -604,7 +641,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
     // PQ codebooks view ≡ the gated q282 chain's final codebooks
     // (member/distortion readout keys (s, cell) resolve against it)
-    SqlSurface.createPqCodebooksView(spark, "embeddings", "pqc")
+    tvf("graft_pq_codebooks('embeddings')").createOrReplaceTempView("pqc")
     val pSql = spark.sql("SELECT s, cell, dim, c_e3 FROM pqc")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -619,9 +656,10 @@ class SqlSurfaceSpec extends SparkSpecBase {
     // encoder: train on documents (via the batched view at k = 1 ≡
     // sequential), then encode — final per-word token counts must
     // equal the training state's (the q249 invariant through SQL)
-    SqlSurface.createBatchedBpeMergesView(spark, "documents", "bpem",
-      rounds = 6, k = 1)
-    SqlSurface.createBpeEncodeView(spark, "documents", "bpem", "bpenc")
+    tvf("graft_batched_bpe_merges('documents', 6, 1)")
+      .createOrReplaceTempView("bpem")
+    tvf("graft_bpe_encode('documents', 'bpem')")
+      .createOrReplaceTempView("bpenc")
     val eSql = spark.sql(
         "SELECT w, COUNT(*) AS n FROM bpenc GROUP BY w")
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -633,7 +671,10 @@ class SqlSurfaceSpec extends SparkSpecBase {
     spark.sql("""SELECT o.o_custkey AS hub, l.l_partkey AS auth
       FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
       GROUP BY 1, 2""").createOrReplaceTempView("purchase_edges")
-    SqlSurface.createHitsViews(spark, "purchase_edges", "hubv", "authv")
+    tvf("graft_hits('purchase_edges', 'hub')")
+      .createOrReplaceTempView("hubv")
+    tvf("graft_hits('purchase_edges', 'auth')")
+      .createOrReplaceTempView("authv")
     val hSql = spark.sql("SELECT hub, h FROM hubv ORDER BY h DESC, hub LIMIT 5")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val hDir = graft.operators.Graph.q250Hits(spark, sf)
@@ -641,15 +682,23 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .select("node_id", "score_e6")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(hSql == hDir && hSql.nonEmpty)
+    val aSql = spark.sql(
+        "SELECT auth, a FROM authv ORDER BY a DESC, auth LIMIT 5")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val aDir = graft.operators.Graph.q250Hits(spark, sf)
+      .filter(col("kind") === "authority").orderBy("rank").limit(5)
+      .select("node_id", "score_e6")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(aSql == aDir && aSql.nonEmpty)
 
-    SqlSurface.createPrincipalDirView(spark, "embeddings", "pdir")
+    tvf("graft_principal_dir('embeddings')").createOrReplaceTempView("pdir")
     val pSql2 = spark.sql("SELECT dim, v_e6 FROM pdir")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val pDir2 = graft.operators.Similarity.q251PrincipalDir(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pSql2 == pDir2 && pSql2.nonEmpty)
 
-    SqlSurface.createBm25View(spark, "documents", "bm25")
+    tvf("graft_bm25('documents')").createOrReplaceTempView("bm25")
     val mSql = spark.sql(
         "SELECT rank, doc_id, score, n_terms FROM bm25")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -677,7 +726,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
         FROM (SELECT doc_id, explode(split(text, ' ')) AS term
               FROM documents) GROUP BY term) WHERE r BETWEEN 16 AND 20
       """).createOrReplaceTempView("qtable")
-    SqlSurface.createBm25MultiView(spark, "documents", "qtable", "bm25m")
+    tvf("graft_bm25_multi('documents', 'qtable')")
+      .createOrReplaceTempView("bm25m")
     val mmSql = spark.sql(
         "SELECT query_id, rank, doc_id, score FROM bm25m")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -689,7 +739,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
         r.getLong(3))).toSet
     assert(mmSql == mmDir && mmSql.nonEmpty)
 
-    SqlSurface.createPostingsDeltaView(spark, "documents", "pdelta")
+    tvf("graft_postings_delta('documents')")
+      .createOrReplaceTempView("pdelta")
     val dSql = spark.sql(
         "SELECT doc_id, n_added, n_removed, status FROM pdelta")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -705,14 +756,14 @@ class SqlSurfaceSpec extends SparkSpecBase {
         ON a.l_partkey = b.l_partkey AND a.l_suppkey < b.l_suppkey
       GROUP BY 1, 2 HAVING COUNT(*) >= 25""")
       .createOrReplaceTempView("co_edges")
-    SqlSurface.createKatzView(spark, "co_edges", "katzv")
+    tvf("graft_katz('co_edges')").createOrReplaceTempView("katzv")
     val kSql = spark.sql("SELECT node, score FROM katzv")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val kDir = graft.operators.Graph.q262Katz(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kSql == kDir && kSql.nonEmpty)
 
-    SqlSurface.createQuantAuditView(spark, "embeddings", "qaudit")
+    tvf("graft_quant_audit('embeddings')").createOrReplaceTempView("qaudit")
     val qSql = spark.sql("SELECT label, n_vecs, n_dims, " +
         "sum_abs_err_e6, mean_err_e6, max_err_e6 FROM qaudit")
       .collect().map(_.toSeq).toSet
@@ -725,21 +776,23 @@ class SqlSurfaceSpec extends SparkSpecBase {
       "PRF expansion, phash near-dup banding)") {
     SqlSurface.registerTables(spark, sf)
 
-    SqlSurface.createQualityScoreView(spark, "documents", "qscore")
+    tvf("graft_quality_score('documents')")
+      .createOrReplaceTempView("qscore")
     val sSql = spark.sql("SELECT * FROM qscore")
       .collect().map(_.toSeq).toSet
     val sDir = graft.operators.CorpusPrep
       .q272QualityScore(spark, sf).collect().map(_.toSeq).toSet
     assert(sSql == sDir && sSql.nonEmpty)
 
-    SqlSurface.createSurprisalScoreView(spark, "documents", "surp")
+    tvf("graft_surprisal_score('documents')")
+      .createOrReplaceTempView("surp")
     val uSql = spark.sql("SELECT * FROM surp")
       .collect().map(_.toSeq).toSet
     val uDir = graft.operators.CorpusPrep
       .q294SurprisalScore(spark, sf).collect().map(_.toSeq).toSet
     assert(uSql == uDir && uSql.nonEmpty)
 
-    SqlSurface.createPrfExpansionView(spark, "documents", "prf")
+    tvf("graft_prf_expansion('documents')").createOrReplaceTempView("prf")
     val pSql = spark.sql("SELECT * FROM prf ORDER BY rank")
       .collect().map(_.toSeq).toSeq
     val pDir = graft.operators.TextOps.q275PrfExpansion(spark, sf)
@@ -758,7 +811,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
           + 1000000L).as("media_id"),
           org.apache.spark.sql.functions.col("phash")))
       .createOrReplaceTempView("phash_sig")
-    SqlSurface.createPhashNearDupView(spark, "phash_sig", "phash_nd")
+    tvf("graft_phash_near_dup('phash_sig')")
+      .createOrReplaceTempView("phash_nd")
     val hSql = spark.sql("SELECT * FROM phash_nd")
       .collect().map(_.toSeq).toSet
     val hDir = graft.operators.Multimodal.qm7MediaNearDup(spark, sf)
@@ -772,8 +826,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .qm9PhashBandingSweep(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(3)).toMap
     Seq(2, 4, 7).foreach { nb =>
-      SqlSurface.createPhashNearDupView(spark, "phash_sig",
-        s"phash_nd_$nb", nBands = nb)
+      tvf(s"graft_phash_near_dup('phash_sig', 6, $nb)")
+        .createOrReplaceTempView(s"phash_nd_$nb")
       val n = spark.sql(s"SELECT COUNT(*) FROM phash_nd_$nb")
         .collect().head.getLong(0)
       assert(n == sweep(nb.toLong),
@@ -789,8 +843,9 @@ class SqlSurfaceSpec extends SparkSpecBase {
     spark.sql("SELECT p_partkey, p_partkey % 256 AS x, " +
         "CAST(p_size AS BIGINT) AS y FROM part")
       .createOrReplaceTempView("part_xy")
-    SqlSurface.zOrderWriteAsView(spark, "part_xy", "x", "y",
-      bits = 8, numFiles = 4, path = path, viewName = "part_z")
+    graft.operators.ZOrder.zOrderWrite(spark.table("part_xy"), "x", "y",
+      bits = 8, numFiles = 4, path = path)
+    spark.read.parquet(path).createOrReplaceTempView("part_z")
     val boxSql = spark.sql("SELECT COUNT(*) FROM part_z WHERE " +
       "x BETWEEN 10 AND 20 AND y BETWEEN 10 AND 20")
       .collect().head.getLong(0)
@@ -813,7 +868,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
         CAST(l_orderkey AS BIGINT) AS ok,
         CAST(l_linenumber AS BIGINT) AS ln
       FROM lineitem""").createOrReplaceTempView("li_cents")
-    SqlSurface.createQuantileSketchView(spark, "li_cents", "qsk")
+    tvf("graft_quantile_sketch('li_cents')").createOrReplaceTempView("qsk")
     val skSql = spark.sql("SELECT kb, shard, v, w FROM qsk")
       .collect().map(_.toSeq).groupBy(identity).view
       .mapValues(_.length).toMap
@@ -831,7 +886,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
         ON a.l_partkey = b.l_partkey AND a.l_suppkey < b.l_suppkey
       GROUP BY 1, 2 HAVING COUNT(*) >= 25""")
       .createOrReplaceTempView("co_edges15")
-    SqlSurface.createLouvainView(spark, "co_edges15", "louv")
+    tvf("graft_louvain('co_edges15')").createOrReplaceTempView("louv")
     val lvSql = spark.sql("SELECT node, community FROM louv")
       .collect().map(_.toSeq).toSet
     val lvDir = graft.operators.Graph.q305Louvain(spark, sf)
@@ -839,7 +894,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
     assert(lvSql == lvDir && lvSql.nonEmpty)
 
     // unigram state over documents ≡ the memoized gated state
-    SqlSurface.createUnigramEncodeView(spark, "documents", "unig")
+    tvf("graft_unigram_encode('documents')")
+      .createOrReplaceTempView("unig")
     val ugSql = spark.sql("SELECT * FROM unig")
       .collect().map(_.toSeq).toSet
     val ugDir = graft.operators.TextOps.uniState(spark, sf)
@@ -853,8 +909,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .createOrReplaceTempView("serp_in")
     Seq((10L, 1L), (11L, 1L)).toDF("doc_id", "component")
       .createOrReplaceTempView("serp_comp")
-    SqlSurface.createSerpDedupView(spark, "serp_in", "serp_comp",
-      "serp_out")
+    tvf("graft_serp_dedup('serp_in', 'serp_comp')")
+      .createOrReplaceTempView("serp_out")
     assert(spark.sql(
         "SELECT new_rank, doc_id, n_collapsed FROM serp_out")
       .collect().map(_.toSeq).toSet ==
@@ -863,8 +919,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
     // decontam overlap view cut at τ=5, anti-joined ≡ q62 survivors
     spark.sql("SELECT doc_id, text FROM documents WHERE doc_id % 17 = 0")
       .createOrReplaceTempView("bench15")
-    SqlSurface.createDecontamOverlapView(spark, "documents",
-      "bench15", k = 3, viewName = "dov")
+    tvf("graft_decontam_overlap('documents', 'bench15', 3)")
+      .createOrReplaceTempView("dov")
     val survSql = spark.sql("""SELECT d.doc_id FROM documents d
         WHERE d.doc_id NOT IN
           (SELECT doc_id FROM dov WHERE overlap >= 5)""")
@@ -879,7 +935,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
     SqlSurface.registerTables(spark, sf)
 
     // wordpiece state over documents ≡ the memoized gated state
-    SqlSurface.createWordpieceEncodeView(spark, "documents", "wpenc")
+    tvf("graft_wordpiece_encode('documents')")
+      .createOrReplaceTempView("wpenc")
     val wpSql = spark.sql("SELECT * FROM wpenc")
       .collect().map(_.toSeq).toSet
     val wpDir = graft.operators.TextOps.wpState(spark, sf)
@@ -891,8 +948,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .createOrReplaceTempView("tgt_en")
     spark.sql("SELECT doc_id, text FROM documents")
       .createOrReplaceTempView("docs_it")
-    SqlSurface.createImportanceWeightsView(spark, "docs_it",
-      "tgt_en", "impw")
+    tvf("graft_importance_weights('docs_it', 'tgt_en')")
+      .createOrReplaceTempView("impw")
     val iwSql = spark.sql("SELECT * FROM impw")
       .collect().map(_.toSeq).toSet
     val iwDir = graft.operators.CorpusPrep
@@ -907,7 +964,8 @@ class SqlSurfaceSpec extends SparkSpecBase {
         ON a.l_partkey = b.l_partkey AND a.l_suppkey < b.l_suppkey
       GROUP BY 1, 2 HAVING COUNT(*) >= 25""")
       .createOrReplaceTempView("co_edges16")
-    SqlSurface.createLouvainTwoLevelView(spark, "co_edges16", "louv2")
+    tvf("graft_louvain_two_level('co_edges16')")
+      .createOrReplaceTempView("louv2")
     val l2Sql = spark
       .sql("SELECT node, community, c2 FROM louv2")
       .collect().map(_.toSeq).toSet
@@ -916,5 +974,44 @@ class SqlSurfaceSpec extends SparkSpecBase {
       .select(col("node"), col("community_l1"), col("community_l2"))
       .collect().map(_.toSeq).toSet
     assert(l2Sql == l2Dir && l2Sql.nonEmpty)
+  }
+
+  test("table-function census: every registry entry is called above, " +
+      "with usage text, through both registration paths") {
+    ready
+    val names = SqlSurface.tableFunctions.map(_._1.funcName)
+    assert(names.length == 69 && names.distinct == names)
+    assert(called.toSet == names.toSet,
+      s"never called: ${names.toSet -- called}")
+    val knnUsage = SqlSurface.tableFunctions
+      .find(_._1.funcName == "graft_knn").get._2.getUsage
+    assert(knnUsage.contains("Exact brute-force kNN"))
+    assert(spark.sql("DESCRIBE FUNCTION graft_knn").collect()
+      .map(_.getString(0)).contains(s"Usage: $knnUsage"))
+    val listed = spark.sql("SHOW USER FUNCTIONS LIKE 'graft*'").collect()
+      .map(_.getString(0)).toSet
+    assert(names.toSet.subsetOf(listed))
+
+    // the injected path: a session built with GraftExtensions resolves
+    // every native and table function without a register() call
+    val knn = "SELECT * FROM graft_knn('embeddings', 'embeddings', 5)"
+    val viaRegister = spark.sql(knn).collect().toSet
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = try {
+      SparkSession.builder()
+        .withExtensions(new graft.functions.GraftExtensions).getOrCreate()
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+    assert(ext ne spark)
+    assert(names.forall(n => ext.sessionState.tableFunctionRegistry
+      .functionExists(FunctionIdentifier(n))))
+    assert(SqlSurface.natives.forall { case (id, _, _) =>
+      ext.sessionState.functionRegistry.functionExists(id) })
+    SqlSurface.registerTables(ext, sf)
+    assert(ext.sql(knn).collect().toSet == viaRegister
+      && viaRegister.size == 2500)
   }
 }
