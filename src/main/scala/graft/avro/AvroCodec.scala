@@ -49,7 +49,7 @@ object AvroCodec {
   def fromDatum(datum: Any): Any = datum match {
     case r: GenericRecord =>
       r.getSchema.getFields.asScala
-        .map(f => f.name() -> fromDatum(r.get(f.name()))).toMap
+        .map(f => f.name() -> fromDatum(r.get(f.pos()))).toMap
     case u: org.apache.avro.util.Utf8 => u.toString
     case a: java.util.Collection[_] => a.asScala.toSeq.map(fromDatum)
     case b: ByteBuffer =>
@@ -57,42 +57,76 @@ object AvroCodec {
     case other => other
   }
 
-  def encode(value: Any, schema: Schema): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    val encoder = EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[Any](schema).write(toDatum(value, schema), encoder)
-    encoder.flush()
-    out.toByteArray
+  /** A schema compiled once for the hot path: the parsed `Schema` with
+    * one datum writer and one datum reader. Encoding and decoding reuse
+    * them, so Avro's per-thread resolver cache keeps one entry per
+    * compiled schema instead of one per parse. It keeps no per-call
+    * buffers, so one instance may be shared across threads. */
+  final case class Compiled(schema: Schema) {
+    private val writer = new GenericDatumWriter[Any](schema)
+    private val reader = new GenericDatumReader[Any](schema)
+
+    private def write(value: Any, out: ByteArrayOutputStream): Array[Byte] = {
+      val encoder = EncoderFactory.get().binaryEncoder(out, null)
+      writer.write(toDatum(value, schema), encoder)
+      encoder.flush()
+      out.toByteArray
+    }
+
+    private def read(bytes: Array[Byte], offset: Int): Any =
+      fromDatum(reader.read(null, DecoderFactory.get()
+        .binaryDecoder(bytes, offset, bytes.length - offset, null)))
+
+    def encode(value: Any): Array[Byte] = write(value, new ByteArrayOutputStream())
+
+    def decode(bytes: Array[Byte]): Any = read(bytes, 0)
+
+    /** Confluent frame of `value`: header and payload written into one
+      * buffer. */
+    def encodeFramed(value: Any, schemaId: Int): Array[Byte] = {
+      val out = new ByteArrayOutputStream()
+      out.write(MagicByte)
+      out.write(schemaId >>> 24); out.write(schemaId >>> 16)
+      out.write(schemaId >>> 8); out.write(schemaId)
+      write(value, out)
+    }
+
+    /** Decode a Confluent frame in place, after checking its header. The
+      * frame's id is not compared with this schema: callers pick the
+      * codec by [[schemaIdOf]]. */
+    def decodeFramed(bytes: Array[Byte]): Any = {
+      checkFrame(bytes)
+      read(bytes, 5)
+    }
   }
 
-  def decode(bytes: Array[Byte], schema: Schema): Any = {
-    val decoder = DecoderFactory.get().binaryDecoder(bytes, null)
-    fromDatum(new GenericDatumReader[Any](schema).read(null, decoder))
-  }
+  def encode(value: Any, schema: Schema): Array[Byte] =
+    Compiled(schema).encode(value)
 
-  /** Confluent frame: 0x00 + 4-byte BE schema id + payload. */
-  def frame(schemaId: Int, payload: Array[Byte]): Array[Byte] =
-    ByteBuffer.allocate(5 + payload.length)
-      .put(MagicByte).putInt(schemaId).put(payload).array()
+  def decode(bytes: Array[Byte], schema: Schema): Any =
+    Compiled(schema).decode(bytes)
 
-  /** Strip a Confluent frame → (schemaId, payload). Poison-pill policy
-    * (SURVEY §2-A K14): malformed frames throw; callers choose FAILFAST
-    * (propagate) or PERMISSIVE (null row) at the connector level. */
-  def unframe(bytes: Array[Byte]): (Int, Array[Byte]) = {
+  /** Poison-pill policy (SURVEY §2-A K14): malformed frames throw;
+    * callers choose FAILFAST (propagate) or PERMISSIVE (null row) at the
+    * connector level. */
+  private def checkFrame(bytes: Array[Byte]): Unit =
     if (bytes.length < 5 || bytes(0) != MagicByte)
       throw new IllegalArgumentException(
         s"not a Confluent-framed Avro message (len=${bytes.length})")
-    val buf = ByteBuffer.wrap(bytes)
-    buf.get()
-    val id = buf.getInt
-    val payload = new Array[Byte](bytes.length - 5)
-    buf.get(payload)
-    (id, payload)
+
+  /** Schema id of a Confluent frame (0x00 + 4-byte BE id + payload). */
+  def schemaIdOf(bytes: Array[Byte]): Int = {
+    checkFrame(bytes)
+    ByteBuffer.wrap(bytes, 1, 4).getInt
   }
 
+  /** Strip a Confluent frame → (schemaId, payload copy). */
+  def unframe(bytes: Array[Byte]): (Int, Array[Byte]) =
+    (schemaIdOf(bytes), java.util.Arrays.copyOfRange(bytes, 5, bytes.length))
+
   def encodeFramed(value: Any, schema: Schema, schemaId: Int): Array[Byte] =
-    frame(schemaId, encode(value, schema))
+    Compiled(schema).encodeFramed(value, schemaId)
 
   def decodeFramed(bytes: Array[Byte], schema: Schema): Any =
-    decode(unframe(bytes)._2, schema)
+    Compiled(schema).decodeFramed(bytes)
 }

@@ -1,5 +1,10 @@
 package graft.core
 
+import scala.collection.immutable.ListMap
+
+import graft.config.Logging
+import graft.sources.Json
+
 /** Connector run-loop state machine — reference parity with pyconnect's
   * `core.py` (SURVEY.md §2-A C1–C8).
   *
@@ -28,13 +33,38 @@ object Status {
 final class NoCrashInfo extends RuntimeException(
   "callback returned CRASHED but no exception was recorded")
 
+/** One snapshot of a connector's counters, logged once at `close()`.
+  *
+  * @param lag per assigned partition, end offset minus committed offset
+  *   (a source consumes nothing and reports none)
+  * @param lastFlushToCommitMs the last completed flush-then-commit: for a
+  *   sink from the start of `onFlush` to the end of the commit, for a
+  *   source from producing its offset record to the end of the producer
+  *   flush that delivers it
+  */
+final case class ConnectorMetrics(role: String, produced: Long,
+    consumed: Long, flushes: Long, commits: Long, commitRetries: Long,
+    crashes: Long, lag: Map[TopicPartition, Long],
+    lastFlushToCommitMs: Option[Double]) {
+  def json: String = Json.render(ListMap(
+    "role" -> role, "produced" -> produced, "consumed" -> consumed,
+    "flushes" -> flushes, "commits" -> commits,
+    "commit_retries" -> commitRetries, "crashes" -> crashes,
+    "lag" -> ListMap(lag.toSeq.sortBy(e => (e._1.topic, e._1.partition))
+      .map { case (tp, n) => s"${tp.topic}-${tp.partition}" -> n }: _*),
+    "last_flush_to_commit_ms" -> lastFlushToCommitMs.getOrElse(null)))
+}
+
 abstract class BaseConnector {
 
   @volatile private var _status: Status = Status.NotYetRunning
   @volatile private var _statusInfo: Option[Throwable] = None
+  private var _crashes = 0L
 
   def status: Status = _status
   def statusInfo: Option[Throwable] = _statusInfo
+  /** Times the connector entered CRASHED (a resumed loop can crash again). */
+  protected def crashCount: Long = _crashes
   def isRunning: Boolean = _status == Status.Running
 
   /** Ask the loop to stop gracefully (the reference's user-returned
@@ -51,17 +81,27 @@ abstract class BaseConnector {
   /** Resource cleanup; must tolerate double-close (`pyconnectsink.py:351-356`). */
   def close(): Unit = {}
 
+  def metrics: ConnectorMetrics
+
+  /** The one metrics line of a connector's life, written by `close()`. */
+  protected def logMetrics(): Unit = Logging.info(s"connector metrics ${metrics.json}")
+
+  private def crash(): Unit = {
+    if (_status != Status.Crashed) _crashes += 1
+    _status = Status.Crashed
+  }
+
   /** Apply a callback result to the state machine (`core.py:186-220`). */
   protected def handleCallbackResult(result: Option[Status]): Unit =
     result.foreach {
       case Status.Crashed =>
-        _status = Status.Crashed
+        crash()
         throw _statusInfo.getOrElse(new NoCrashInfo)
       case s => _status = s
     }
 
   protected def recordCrash(t: Throwable): Unit = {
-    _status = Status.Crashed
+    crash()
     _statusInfo = Some(t)
   }
 
@@ -93,7 +133,7 @@ abstract class BaseConnector {
     catch {
       case _: InterruptedException => _status = Status.Stopped
       case t: Throwable =>
-        if (_statusInfo.isEmpty) recordCrash(t) else _status = Status.Crashed
+        if (_statusInfo.isEmpty) recordCrash(t) else crash()
         if (_status == Status.Crashed)
           try onCrashDuringRun().foreach { s =>
             _status = s

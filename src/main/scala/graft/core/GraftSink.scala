@@ -21,6 +21,9 @@ import graft.config.SinkConfig
   *    crash on poison pills (K14) — `failFast` option;
   *  - one final flush on graceful stop, never after a crash (K15);
   *  - close tolerates double-close (K16).
+  *
+  * Each schema id is resolved and compiled once per sink instance; ids
+  * are only unique within one registry, so the cache is not shared.
   */
 abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
     extends BaseConnector {
@@ -34,8 +37,13 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
   private val offsets = mutable.Map[TopicPartition, Long]()
   private val eofReached = mutable.Map[TopicPartition, Boolean]()
 
+  private val codecs = mutable.LongMap[AvroCodec.Compiled]()
+
   var flushCount: Long = 0L
   var messageCount: Long = 0L
+  private var commitCount = 0L
+  private var commitRetries = 0L
+  private var lastFlushToCommitMs: Option[Double] = None
 
   // ---- abstract API (K4/K8/K9) ----------------------------------------
   /** Per-message user logic (buffer/persist). */
@@ -51,10 +59,12 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
   /** Decode a Confluent-framed Avro payload by resolving the frame's
     * schema id against the broker registry (K3's deserializer role). */
   protected def decodeFramed(bytes: Array[Byte]): Any = {
-    val (id, payload) = AvroCodec.unframe(bytes)
-    val schemaJson = broker.schemaById(id).getOrElse(
-      throw new IllegalStateException(s"unknown schema id $id (poison pill)"))
-    AvroCodec.decode(payload, AvroCodec.parseable(schemaJson))
+    val id = AvroCodec.schemaIdOf(bytes)
+    codecs.getOrElseUpdate(id, {
+      val schemaJson = broker.schemaById(id).getOrElse(
+        throw new IllegalStateException(s"unknown schema id $id (poison pill)"))
+      AvroCodec.Compiled(AvroCodec.parseable(schemaJson))
+    }).decodeFramed(bytes)
   }
 
   def hasPartitionAssignments: Boolean = consumer.assignment.nonEmpty
@@ -97,20 +107,26 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
 
   /** K9: user flush, then commit — commit skipped when flush crashed. */
   private def doFlush(): Option[Status] = {
+    val flushStart = System.nanoTime()
     val res = onFlush()
     flushCount += 1
     if (res.contains(Status.Crashed)) res
-    else commitWithRetry().orElse(res)
+    else commitWithRetry(flushStart).orElse(res)
   }
 
   /** K10: bounded synchronous commit retry. */
-  private def commitWithRetry(): Option[Status] = {
+  private def commitWithRetry(flushStart: Long): Option[Status] = {
     if (offsets.isEmpty) return None
     var lastError: Throwable = null
     var attempt = 0
     while (attempt <= config.base.sinkCommitRetryCount) {
-      try { consumer.commit(offsets.toMap); return None }
-      catch { case t: Throwable => lastError = t; attempt += 1 }
+      if (attempt > 0) commitRetries += 1
+      try {
+        consumer.commit(offsets.toMap)
+        commitCount += 1
+        lastFlushToCommitMs = Some((System.nanoTime() - flushStart) / 1e6)
+        return None
+      } catch { case t: Throwable => lastError = t; attempt += 1 }
     }
     recordCrash(lastError)
     Some(Status.Crashed)
@@ -120,9 +136,17 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
   override protected def afterRunLoop(): Unit =
     if (status == Status.Stopped) { doFlush(); () }
 
+  def metrics: ConnectorMetrics = ConnectorMetrics("sink", produced = 0,
+    consumed = messageCount, flushes = flushCount, commits = commitCount,
+    commitRetries = commitRetries, crashes = crashCount,
+    lag = consumer.assignment.map(tp =>
+      tp -> (broker.endOffset(tp) - consumer.committed(tp).getOrElse(0L))).toMap,
+    lastFlushToCommitMs = lastFlushToCommitMs)
+
   private var closed = false
   override def close(): Unit = if (!closed) {
     closed = true
     consumer.close()
+    logMetrics()
   }
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.avro.Schema
+import org.apache.avro.SchemaNormalization
 
 import graft.avro.{AvroCodec, AvroInference}
 import graft.config.SourceConfig
@@ -14,6 +14,9 @@ import graft.config.SourceConfig
   * → `onEof` (default: 100 ms backoff retry, S11); close always performs
   * a final offset commit (S12); the offset value itself is an arbitrary
   * schema-inferred Avro value produced to a dedicated topic (S7).
+  *
+  * Each of the key, value and offset schemas is compiled, fingerprinted
+  * and registered once, when it is inferred; records only encode.
   */
 abstract class GraftSource(val config: SourceConfig, broker: InMemoryBroker)
     extends BaseConnector {
@@ -22,10 +25,24 @@ abstract class GraftSource(val config: SourceConfig, broker: InMemoryBroker)
   private val offsetConsumer: TransportConsumer =
     broker.consumer(s"${config.offsetTopic}-reader")
 
-  private var keySchema: Option[Schema] = None
-  private var valueSchema: Option[Schema] = None
-  private var offsetSchema: Option[Schema] = None
+  /** A compiled schema and the id its frames carry. Offline stand-in for
+    * registry ids: a stable schema fingerprint, registered with the
+    * broker's in-memory registry so sinks can resolve it from the frame. */
+  private final class FrameWriter(schemaJson: String) {
+    val codec: AvroCodec.Compiled = AvroCodec.Compiled(AvroCodec.parseable(schemaJson))
+    val id: Int =
+      SchemaNormalization.parsingFingerprint64(codec.schema).toInt & 0x7fffffff
+    broker.registerSchema(id, codec.schema.toString)
+    def encode(value: Any): Array[Byte] = codec.encodeFramed(value, id)
+  }
+
+  private var keyWriter: Option[FrameWriter] = None
+  private var valueWriter: Option[FrameWriter] = None
+  private var offsetWriter: Option[FrameWriter] = None
   var produceCount: Long = 0L
+  private var flushCount = 0L
+  private var commitCount = 0L
+  private var lastFlushToCommitMs: Option[Double] = None
 
   // ---- abstract API (S2/S3/S4) ----------------------------------------
   /** Next record, or None at EOF (the reference's StopIteration). */
@@ -62,28 +79,24 @@ abstract class GraftSource(val config: SourceConfig, broker: InMemoryBroker)
 
   /** Lazy one-shot schema inference (`pyconnectsource.py:177-196`). */
   private def createSchemasIfNecessary(key: Any, value: Any): Unit = {
-    if (keySchema.isEmpty)
-      keySchema = Some(AvroCodec.parseable(AvroInference.toKeySchema(key)))
-    if (valueSchema.isEmpty)
-      valueSchema = Some(AvroCodec.parseable(AvroInference.toValueSchema(value)))
+    if (keyWriter.isEmpty)
+      keyWriter = Some(new FrameWriter(AvroInference.toKeySchema(key)))
+    if (valueWriter.isEmpty)
+      valueWriter = Some(new FrameWriter(AvroInference.toValueSchema(value)))
+  }
+
+  /** The offset value's writer, inferred from `sample` on first use. */
+  private def offsetWriterFor(sample: Any): FrameWriter = {
+    if (offsetWriter.isEmpty)
+      offsetWriter = Some(new FrameWriter(AvroInference.toValueSchema(sample)))
+    offsetWriter.get
   }
 
   protected def produce(key: Any, value: Any): Unit = {
     createSchemasIfNecessary(key, value)
     producer.produce(config.topic,
-      AvroCodec.encodeFramed(key, keySchema.get, schemaId(keySchema.get)),
-      AvroCodec.encodeFramed(value, valueSchema.get, schemaId(valueSchema.get)))
+      keyWriter.get.encode(key), valueWriter.get.encode(value))
     produceCount += 1
-  }
-
-  /** Offline stand-in for registry ids: stable schema fingerprint,
-    * registered with the broker's in-memory registry so sinks can
-    * resolve it from the frame. */
-  private def schemaId(s: Schema): Int = {
-    val id = org.apache.avro.SchemaNormalization
-      .parsingFingerprint64(s).toInt & 0x7fffffff
-    broker.registerSchema(id, s.toString)
-    id
   }
 
   /** Final commit of the source's own read position to the offset topic
@@ -91,33 +104,35 @@ abstract class GraftSource(val config: SourceConfig, broker: InMemoryBroker)
     * produce, flush. */
   protected def commitOffset(): Unit = {
     val idx = getIndex
-    if (idx != null) {
-      if (offsetSchema.isEmpty)
-        offsetSchema = Some(AvroCodec.parseable(AvroInference.toValueSchema(idx)))
-      producer.produce(config.offsetTopic, null,
-        AvroCodec.encodeFramed(idx, offsetSchema.get,
-          schemaId(offsetSchema.get)))
-    }
+    val start = System.nanoTime()
+    if (idx != null)
+      producer.produce(config.offsetTopic, null, offsetWriterFor(idx).encode(idx))
     producer.flush()
+    flushCount += 1
+    if (idx != null) {
+      commitCount += 1
+      lastFlushToCommitMs = Some((System.nanoTime() - start) / 1e6)
+    }
   }
 
-  /** Last message of the offset topic (`pyconnectsource.py:96-124`). */
+  /** Last message of the offset topic (`pyconnectsource.py:96-124`). The
+    * schema travels out of band in the reference (registry); here the
+    * subclass's index type re-infers it from a sample on first use. */
   protected def getCommittedOffset: Option[Any] =
     offsetConsumer.lastMessage(config.offsetTopic).map { msg =>
-      val (_, payload) = AvroCodec.unframe(msg.value)
-      if (offsetSchema.isEmpty) {
-        // schema travels out of band in the reference (registry); here the
-        // subclass's index type re-infers it from a sample on first use.
-        offsetSchema = Some(AvroCodec.parseable(
-          AvroInference.toValueSchema(getIndex)))
-      }
-      AvroCodec.decode(payload, offsetSchema.get)
+      offsetWriterFor(getIndex).codec.decodeFramed(msg.value)
     }
+
+  def metrics: ConnectorMetrics = ConnectorMetrics("source",
+    produced = produceCount, consumed = 0, flushes = flushCount,
+    commits = commitCount, commitRetries = 0, crashes = crashCount,
+    lag = Map.empty, lastFlushToCommitMs = lastFlushToCommitMs)
 
   private var closed = false
   override def close(): Unit = if (!closed) {
     closed = true
     commitOffset() // final commit (`pyconnectsource.py:208-214`)
     offsetConsumer.close()
+    logMetrics()
   }
 }

@@ -112,13 +112,16 @@ final class InMemoryBroker(numPartitions: Int = 1) {
   }
 
   def consumer(group: String): TransportConsumer = new TransportConsumer {
-    private var tps: Seq[TopicPartition] = Nil
+    private var tps: IndexedSeq[TopicPartition] = IndexedSeq.empty
     private val positions = mutable.Map[TopicPartition, Long]()
     private val eofSignalled = mutable.Set[TopicPartition]()
+    /** Index into `tps` of the partition the next poll tries first. */
+    private var cursor = 0
     private var closed = false
 
     def subscribe(topics: Seq[String]): Unit = {
-      tps = topics.flatMap(partitionsOf)
+      tps = topics.flatMap(partitionsOf).toIndexedSeq
+      cursor = 0
       tps.foreach { tp =>
         // auto.offset.reset=earliest unless a commit exists (K3 parity)
         positions(tp) = InMemoryBroker.this.committed(group, tp).getOrElse(0L)
@@ -127,21 +130,28 @@ final class InMemoryBroker(numPartitions: Int = 1) {
 
     def poll(timeoutMs: Long): Poll = {
       require(!closed, "consumer closed")
-      // round-robin across assigned partitions; EOF signalled once per
-      // catch-up, re-armed when new data arrives (partition-EOF parity)
-      tps.find(tp => read(tp, positions(tp)).isDefined) match {
-        case Some(tp) =>
-          val msg = read(tp, positions(tp)).get
+      // round-robin across assigned partitions: start after the partition
+      // that delivered last, read each record once
+      var i = 0
+      while (i < tps.length) {
+        val at = (cursor + i) % tps.length
+        val tp = tps(at)
+        val next = read(tp, positions(tp))
+        if (next.isDefined) {
           positions(tp) += 1
           eofSignalled -= tp
-          Poll.Record(msg)
-        case None =>
-          tps.find(tp => !eofSignalled.contains(tp)) match {
-            case Some(tp) =>
-              eofSignalled += tp
-              Poll.Eof(tp, positions(tp))
-            case None => Poll.NoMessage
-          }
+          cursor = at + 1
+          return Poll.Record(next.get)
+        }
+        i += 1
+      }
+      // EOF signalled once per catch-up, re-armed when new data arrives
+      // (partition-EOF parity)
+      tps.find(tp => !eofSignalled.contains(tp)) match {
+        case Some(tp) =>
+          eofSignalled += tp
+          Poll.Eof(tp, positions(tp))
+        case None => Poll.NoMessage
       }
     }
 

@@ -25,14 +25,20 @@ import graft.sources.Json
   */
 object AvroStreamOps {
 
+  /** Ships the schema JSON with the UDF; each deserialized copy (one per
+    * task) compiles it once, on first use. */
+  private final class CodecHolder(schemaJson: String) extends Serializable {
+    @transient lazy val codec: AvroCodec.Compiled =
+      AvroCodec.Compiled(AvroCodec.parseable(schemaJson))
+  }
+
   /** bytes → JSON string of the decoded record (frame-stripped). */
   def decodedJson(avroSchemaJson: String, failFast: Boolean = true): Column => Column = {
+    val holder = new CodecHolder(avroSchemaJson)
     val decode = udf { (bytes: Array[Byte]) =>
       if (bytes == null) null
-      else try {
-        val schema = AvroCodec.parseable(avroSchemaJson)
-        Json.render(AvroCodec.decodeFramed(bytes, schema))
-      } catch {
+      else try Json.render(holder.codec.decodeFramed(bytes))
+      catch {
         case e: Exception => if (failFast) throw e else null
       }
     }

@@ -1,5 +1,6 @@
 package graft
 
+import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.Files
 
 import scala.collection.mutable
@@ -7,7 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.config.{SinkConfig, SourceConfig}
+import graft.avro.{AvroCodec, SchemaRegistryHttpClient, SchemaRegistryServer}
+import graft.config.{Logging, SinkConfig, SourceConfig}
 import graft.core._
 import graft.sources.{FileSink, FileSource}
 
@@ -159,6 +161,47 @@ class ConnectorSpec extends AnyFunSuite {
     assert(second.received.nonEmpty)
   }
 
+  test("metrics snapshot: counters match the crash-then-restart scenario, " +
+      "one JSON line per connector at close") {
+    val buf = new ByteArrayOutputStream()
+    Logging.configureForTest(Logging.LogConfig("INFO", colorize = false,
+      serialize = true, useStderr = false), new PrintStream(buf, true, "UTF-8"))
+    // lag is read from the broker when the snapshot is taken, so each
+    // incarnation's snapshot is taken right after its run
+    val (s, m1, m2) = try {
+      val broker = new InMemoryBroker()
+      val src = new TestSource((0 until 4).map(i => (s"k$i", s"v$i")), broker)
+      src.run()
+      val first = new TestSink(broker, flushInterval = 2)
+      first.failNextFlush = true
+      intercept[RuntimeException](first.run())
+      val m1 = first.metrics
+      val second = new TestSink(broker, flushInterval = 1)
+      second.run()
+      (src.metrics, m1, second.metrics)
+    } finally Logging.configureForTest(Logging.fromEnv(Map.empty), System.out)
+
+    assert(s.produced == 4 && s.consumed == 0 && s.crashes == 0)
+    assert(s.commits == 1 && s.flushes == 1 && s.lag.isEmpty)
+    assert(s.lastFlushToCommitMs.isDefined)
+    val tp = TopicPartition("t", 0)
+    // the first incarnation crashed in its second flush, before any commit
+    assert(m1.crashes == 1 && m1.commits == 0 && m1.flushes == 1)
+    assert(m1.lag == Map(tp -> 4L) && m1.lastFlushToCommitMs.isEmpty)
+    assert(m2.crashes == 0 && m2.lag == Map(tp -> 0L))
+    assert(m2.consumed == 4 && m2.commits > 0 && m2.commits <= m2.flushes)
+    assert(m2.commitRetries == 0 && m2.lastFlushToCommitMs.exists(_ >= 0))
+
+    val lines = buf.toString("UTF-8").linesIterator
+      .filter(_.contains("connector metrics")).toSeq
+    assert(lines.size == 3, lines)
+    assert(lines.forall(_.startsWith("""{"level":"INFO",""")), lines)
+    assert(lines.map(l => """\\"role\\": \\"(\w+)\\"""".r
+      .findFirstMatchIn(l).map(_.group(1)).orNull) ==
+      Seq("source", "sink", "sink"), lines)
+    assert(lines(2).contains("""\"lag\": {\"t-0\": 0}"""), lines)
+  }
+
   test("sink: final flush happens exactly once on graceful stop (K15)") {
     val broker = new InMemoryBroker()
     produce(broker, 2)
@@ -219,6 +262,77 @@ class ConnectorSpec extends AnyFunSuite {
         assert(broker.committed("g", tp).contains(broker.endOffset(tp)))
       }
     }
+  }
+
+  test("in-memory consumer: polls alternate across partitions with data, " +
+      "each record once; EOF once per catch-up, re-armed by new data") {
+    val broker = new InMemoryBroker(numPartitions = 2)
+    val producer = broker.producer()
+    // a 1-byte key b lands in partition (31 + b) mod 2
+    def send(bs: Int*): Unit = {
+      bs.foreach(b => producer.produce("t", Array(b.toByte), Array(b.toByte)))
+      producer.flush()
+    }
+    send(0 until 8: _*)
+    val consumer = broker.consumer("g")
+    consumer.subscribe(Seq("t"))
+    val records = Seq.fill(8)(consumer.poll(0)).collect {
+      case Poll.Record(m) => (m.partition, m.value(0).toInt)
+    }
+    assert(records.map(_._1) == Seq(0, 1, 0, 1, 0, 1, 0, 1))
+    assert(records.map(_._2).sorted == (0 until 8))
+    assert(Seq.fill(3)(consumer.poll(0)) == Seq(
+      Poll.Eof(TopicPartition("t", 0), 4), Poll.Eof(TopicPartition("t", 1), 4),
+      Poll.NoMessage))
+    send(2)
+    assert(consumer.poll(0).asInstanceOf[Poll.Record].msg.partition == 1)
+    assert(consumer.poll(0) == Poll.Eof(TopicPartition("t", 1), 5))
+    assert(consumer.poll(0) == Poll.NoMessage)
+  }
+
+  /** Writes raw values to topic `t`, bypassing any source. */
+  private def sendRaw(broker: InMemoryBroker, values: Array[Byte]*): Unit = {
+    val producer = broker.producer()
+    values.foreach(v => producer.produce("t", null, v))
+    producer.flush()
+  }
+
+  test("sink: a frame whose schema id is not registered crashes the " +
+      "sink under fail-fast (poison pill)") {
+    val broker = new InMemoryBroker()
+    sendRaw(broker, AvroCodec.encodeFramed("v", AvroCodec.parseable("\"string\""), 77))
+    val sink = new TestSink(broker)
+    val e = intercept[IllegalStateException](sink.run())
+    assert(e.getMessage == "unknown schema id 77 (poison pill)")
+    assert(sink.status == Status.Crashed && sink.received.isEmpty)
+  }
+
+  test("sink: a frame shorter than its 5-byte header is rejected") {
+    val broker = new InMemoryBroker()
+    sendRaw(broker, Array[Byte](0, 0, 0))
+    val sink = new TestSink(broker)
+    val e = intercept[IllegalArgumentException](sink.run())
+    assert(e.getMessage.contains("not a Confluent-framed Avro message"))
+    assert(sink.status == Status.Crashed)
+  }
+
+  test("sink: the schema cache is per sink — two registries that give " +
+      "id 1 to different schemas each decode their own records") {
+    val schemas = Seq(
+      """{"type":"record","name":"A","fields":[{"name":"x","type":"long"}]}""",
+      """{"type":"record","name":"B","fields":[{"name":"y","type":"string"}]}""")
+    val values = Seq(Map("x" -> 42L), Map("y" -> "hello"))
+    val brokers = schemas.zip(values).map { case (json, value) =>
+      val broker = new InMemoryBroker()
+      val server = new SchemaRegistryServer(Some(broker)).start()
+      val id = try new SchemaRegistryHttpClient(server.baseUrl)
+        .register("t-value", json) finally server.stop()
+      assert(id == 1)
+      sendRaw(broker, AvroCodec.encodeFramed(value, AvroCodec.parseable(json), id))
+      broker
+    }
+    val sinks = brokers.map { b => val s = new TestSink(b); s.run(); s }
+    assert(sinks.map(_.received.toSeq) == values.map(Seq(_)))
   }
 
   /** Consumer wrapper that yields one Failure before delegating. */

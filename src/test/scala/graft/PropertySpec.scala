@@ -87,6 +87,38 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("a compiled codec writes the bytes of a fresh Avro writer and of " +
+      "the one-shot encode, frames them, and decodes every form alike") {
+    check(Prop.forAllNoShrink(record(2), Gen.choose(0, Int.MaxValue)) {
+      (rec, id) =>
+        val schema = AvroCodec.parseable(AvroInference.toValueSchema(rec))
+        val value = norm(rec)
+        val reference = {
+          val out = new java.io.ByteArrayOutputStream()
+          val enc = org.apache.avro.io.EncoderFactory.get()
+            .binaryEncoder(out, null)
+          new org.apache.avro.generic.GenericDatumWriter[Any](schema)
+            .write(AvroCodec.toDatum(value, schema), enc)
+          enc.flush()
+          out.toByteArray
+        }
+        val codec = AvroCodec.Compiled(schema)
+        // twice: the writer and reader are reused across calls
+        val bytes = Seq.fill(2)(codec.encode(value))
+        val framed = codec.encodeFramed(value, id)
+        val header = java.nio.ByteBuffer.allocate(5)
+          .put(AvroCodec.MagicByte).putInt(id).array()
+        bytes.forall(_.sameElements(reference)) &&
+          AvroCodec.encode(value, schema).sameElements(reference) &&
+          framed.sameElements(header ++ reference) &&
+          AvroCodec.schemaIdOf(framed) == id &&
+          Seq.fill(2)(codec.decode(reference)).forall(_ == value) &&
+          codec.decodeFramed(framed) == value &&
+          AvroCodec.decode(reference, schema) == value &&
+          AvroCodec.decodeFramed(framed, schema) == value
+    })
+  }
+
   test("optional-primitive schemas stay parseable for any record") {
     check(Prop.forAll(record(1)) { rec =>
       AvroInference.parse(
