@@ -1,11 +1,25 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Parquet table registry for the driver test data (TESTDATA.md) plus the
   * determinism helpers that make Spark-vs-DuckDB hash equality achievable
   * (SURVEY.md §2-B rules D1–D6).
+  *
+  * Each table path is resolved once per session: the first read infers
+  * the schema (`spark.read.parquet`, a one-task footer job) and keeps it
+  * with a stamp of what it was inferred from — every leaf file's path,
+  * length and modification time, and the session's `spark.sql.parquet.*`
+  * and `spark.sql.legacy.parquet.*` settings. A later read declares that
+  * schema (`spark.read.schema(s).parquet`, no job) and keeps it only if
+  * the stamp of the files it lists still matches; otherwise it infers
+  * again and replaces the entry. Only schemas and stamps are held, never
+  * a `DataFrame`, and every read is a fresh relation with fresh
+  * attribute ids, so self-joins and `df("col")` resolve as before.
   *
   * Scale notes: single-file-per-table here, but nothing below assumes a
   * single partition — `spark.read.parquet` splits large files by
@@ -21,7 +35,48 @@ object Tables {
     * because we return the raw declarative scan and let Catalyst do the
     * rest (verified via `.explain` → `PushedFilters`/`ReadSchema`). */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** What a schema was inferred from: (path, length, modification time)
+    * of each leaf file, and the parquet settings that steer inference. */
+  private final case class Stamp(files: Set[(String, Long, Long)], conf: Map[String, String])
+  private final case class Resolved(schema: StructType, stamp: Stamp)
+
+  /** Resolved paths per session; weak keys, so a stopped session's
+    * entries go with it. */
+  private val resolved = new java.util.WeakHashMap[SparkSession, TrieMap[String, Resolved]]()
+
+  private def resolvedIn(spark: SparkSession): TrieMap[String, Resolved] =
+    resolved.synchronized(resolved.computeIfAbsent(spark, _ => TrieMap.empty))
+
+  /** The stamp of a parquet read, from the file listing its relation
+    * already holds (no second listing). None for a relation that is not
+    * a listed file index: such a read is not cached, and a cached entry
+    * never matches it. */
+  private def stampOf(spark: SparkSession, df: DataFrame): Option[Stamp] =
+    df.queryExecution.analyzed.collectFirst {
+      case r: LogicalRelation => r.relation
+    }.collect {
+      case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
+        Stamp(
+          index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet,
+          spark.conf.getAll.filter { case (k, _) =>
+            k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+          })
+    }
+
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val known = resolvedIn(spark)
+    val declared = known.get(path).flatMap { r =>
+      val df = spark.read.schema(r.schema).parquet(path)
+      if (stampOf(spark, df).contains(r.stamp)) Some(df) else None
+    }
+    declared.getOrElse {
+      val df = spark.read.parquet(path)
+      stampOf(spark, df).foreach(stamp => known(path) = Resolved(df.schema, stamp))
+      df
+    }
+  }
 
   /** D2 discipline: doubles are money-like 2-decimal values; cast to
     * DECIMAL(18,2) before any SUM so the aggregate is exact and
@@ -56,7 +111,7 @@ object Tables {
     // BEFORE the read: a NANOS file fails schema conversion without it.
     if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").isEmpty)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = read(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType => // INT64-nanos file scanned under nanosAsLong
         raw.withColumn("ts_ns", col("ts").cast("long"))

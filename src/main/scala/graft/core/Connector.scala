@@ -39,8 +39,8 @@ final class NoCrashInfo extends RuntimeException(
   *   (a source consumes nothing and reports none)
   * @param lastFlushToCommitMs the last completed flush-then-commit: for a
   *   sink from the start of `onFlush` to the end of the commit, for a
-  *   source from producing its offset record to the end of the producer
-  *   flush that delivers it
+  *   source from producing its offset record (delivered when produced)
+  *   to the end of the producer flush after it
   */
 final case class ConnectorMetrics(role: String, produced: Long,
     consumed: Long, flushes: Long, commits: Long, commitRetries: Long,

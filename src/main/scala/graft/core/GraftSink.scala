@@ -35,6 +35,9 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
   protected lazy val consumer: TransportConsumer = makeConsumer()
 
   private val offsets = mutable.Map[TopicPartition, Long]()
+  /** The offsets of the last successful commit; an equal map is not
+    * committed again. */
+  private var lastCommitted = Map.empty[TopicPartition, Long]
   private val eofReached = mutable.Map[TopicPartition, Boolean]()
 
   private val codecs = mutable.LongMap[AvroCodec.Compiled]()
@@ -114,15 +117,19 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
     else commitWithRetry(flushStart).orElse(res)
   }
 
-  /** K10: bounded synchronous commit retry. */
+  /** K10: bounded synchronous commit retry. Offsets equal to the last
+    * committed ones are already on the broker and are not sent again
+    * (an idle or caught-up sink would otherwise commit on every poll). */
   private def commitWithRetry(flushStart: Long): Option[Status] = {
-    if (offsets.isEmpty) return None
+    if (offsets == lastCommitted) return None
+    val toCommit = offsets.toMap
     var lastError: Throwable = null
     var attempt = 0
     while (attempt <= config.base.sinkCommitRetryCount) {
       if (attempt > 0) commitRetries += 1
       try {
-        consumer.commit(offsets.toMap)
+        consumer.commit(toCommit)
+        lastCommitted = toCommit
         commitCount += 1
         lastFlushToCommitMs = Some((System.nanoTime() - flushStart) / 1e6)
         return None

@@ -77,9 +77,9 @@ final class InMemoryBroker(numPartitions: Int = 1) {
       if (numPartitions == 1) 0
       else math.floorMod(
         Option(key).map(java.util.Arrays.hashCode).getOrElse(0), numPartitions)
-    // append must happen inside the broker monitor: a producer flush()
-    // racing a consumer poll()/read() would otherwise mutate the
-    // ArrayBuffer unsynchronized (resize corruption)
+    // append must happen inside the broker monitor: a producer's
+    // produce() racing a consumer poll()/read() would otherwise mutate
+    // the ArrayBuffer unsynchronized (resize corruption)
     synchronized { log(TopicPartition(topic, partition)) += ((key, value)) }
   }
 
@@ -99,16 +99,14 @@ final class InMemoryBroker(numPartitions: Int = 1) {
   def committed(group: String, tp: TopicPartition): Option[Long] =
     synchronized(committedOffsets.get((group, tp)))
 
+  /** Delivers each record when it is produced, in produce order; `flush`
+    * has nothing left to wait for. The reference's librdkafka producer
+    * delivers within `linger.ms` and uses flush only as a barrier
+    * (`pyconnectsource.py:163-175`, flush at `:236-238`). */
   def producer(): TransportProducer = new TransportProducer {
-    private val pending = mutable.ArrayBuffer[(String, Array[Byte], Array[Byte])]()
-    // async produce + flush barrier, like the reference's librdkafka
-    // producer (`pyconnectsource.py:163-175`, flush at `:236-238`)
     def produce(topic: String, key: Array[Byte], value: Array[Byte]): Unit =
-      synchronized(pending += ((topic, key, value)))
-    def flush(): Unit = synchronized {
-      pending.foreach { case (t, k, v) => append(t, k, v) }
-      pending.clear()
-    }
+      append(topic, key, value)
+    def flush(): Unit = ()
   }
 
   def consumer(group: String): TransportConsumer = new TransportConsumer {

@@ -115,6 +115,29 @@ class ConnectorSpec extends AnyFunSuite {
     assert(broker.endOffset(TopicPartition("t-offsets", 0)) > 1)
   }
 
+  test("source: a consumer sees produced records before the source's " +
+      "first offset commit") {
+    val broker = new InMemoryBroker()
+    val consumer = broker.consumer("g")
+    consumer.subscribe(Seq("t"))
+    var consumed = 0
+    // per read: (records the consumer has seen, offset-topic records)
+    val atRead = mutable.ArrayBuffer[(Int, Long)]()
+    val src = new TestSource((0 until 3).map(i => (s"k$i", s"v$i")), broker) {
+      override def read(): Option[(Any, Any)] = {
+        consumed += Iterator.continually(consumer.poll(0))
+          .takeWhile(_.isInstanceOf[Poll.Record]).size
+        atRead += ((consumed, broker.endOffset(TopicPartition("t-offsets", 0))))
+        super.read()
+      }
+    }
+    src.run()
+    // each read sees every record produced before it; the only offset
+    // commit is the one at close
+    assert(atRead.toSeq == Seq((0, 0L), (1, 0L), (2, 0L), (3, 0L)))
+    assert(broker.endOffset(TopicPartition("t-offsets", 0)) == 1)
+  }
+
   test("source: commits offset on close; restart seeks past it (S7/S10)") {
     val broker = new InMemoryBroker()
     val records = Seq[(Any, Any)](("a", "1"), ("b", "2"), ("c", "3"))
@@ -200,6 +223,33 @@ class ConnectorSpec extends AnyFunSuite {
       .findFirstMatchIn(l).map(_.group(1)).orNull) ==
       Seq("source", "sink", "sink"), lines)
     assert(lines(2).contains("""\"lag\": {\"t-0\": 0}"""), lines)
+  }
+
+  test("sink: a caught-up sink does not re-commit unchanged offsets") {
+    val broker = new InMemoryBroker()
+    produce(broker, 2)
+    val commits = mutable.ArrayBuffer[Map[TopicPartition, Long]]()
+    var idlePolls = 0
+    val sink = new TestSink(broker) {
+      override protected def makeConsumer(): TransportConsumer =
+        new ChaosConsumer(broker.consumer(config.groupId), 0, None, config.topics) {
+          override def commit(o: Map[TopicPartition, Long]): Unit = {
+            commits += o; super.commit(o)
+          }
+        }
+      // keep polling NoMessage a while after the partition hit EOF
+      override protected def onNoMessageReceived(): Option[Status] = {
+        idlePolls += 1
+        if (idlePolls == 5) Some(Status.Stopped) else None
+      }
+    }
+    sink.run()
+    assert(sink.status == Status.Stopped && sink.received.size == 2)
+    assert(sink.flushCount == 2 + 1 + 5 + 1) // gate on every poll + final
+    val tp = TopicPartition("t", 0)
+    assert(commits.toSeq == Seq(Map(tp -> 1L), Map(tp -> 2L)))
+    assert(sink.metrics.commits == 2)
+    assert(broker.committed("g", tp).contains(2L))
   }
 
   test("sink: final flush happens exactly once on graceful stop (K15)") {
