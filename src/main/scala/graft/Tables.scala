@@ -10,16 +10,18 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   * determinism helpers that make Spark-vs-DuckDB hash equality achievable
   * (SURVEY.md §2-B rules D1–D6).
   *
-  * Each table path is resolved once per session: the first read infers
-  * the schema (`spark.read.parquet`, a one-task footer job) and keeps it
-  * with a stamp of what it was inferred from — every leaf file's path,
-  * length and modification time, and the session's `spark.sql.parquet.*`
-  * and `spark.sql.legacy.parquet.*` settings. A later read declares that
-  * schema (`spark.read.schema(s).parquet`, no job) and keeps it only if
-  * the stamp of the files it lists still matches; otherwise it infers
-  * again and replaces the entry. Only schemas and stamps are held, never
-  * a `DataFrame`, and every read is a fresh relation with fresh
-  * attribute ids, so self-joins and `df("col")` resolve as before.
+  * Each table path is resolved once: the first read infers the schema
+  * (`spark.read.parquet`, a one-task footer job) and keeps it with a
+  * stamp of what it was inferred from — every leaf file's path, length
+  * and modification time, and the reading session's
+  * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` settings. A
+  * later read, in this session or another, declares that schema
+  * (`spark.read.schema(s).parquet`, no job) and keeps it only if its own
+  * stamp (the files it lists, its session's settings) still matches;
+  * otherwise it infers again and replaces the entry. Only schemas and
+  * stamps are held, never a `DataFrame`, and every read is a fresh
+  * relation with fresh attribute ids, so self-joins and `df("col")`
+  * resolve as before.
   *
   * Scale notes: single-file-per-table here, but nothing below assumes a
   * single partition — `spark.read.parquet` splits large files by
@@ -42,12 +44,10 @@ object Tables {
   private final case class Stamp(files: Set[(String, Long, Long)], conf: Map[String, String])
   private final case class Resolved(schema: StructType, stamp: Stamp)
 
-  /** Resolved paths per session; weak keys, so a stopped session's
-    * entries go with it. */
-  private val resolved = new java.util.WeakHashMap[SparkSession, TrieMap[String, Resolved]]()
-
-  private def resolvedIn(spark: SparkSession): TrieMap[String, Resolved] =
-    resolved.synchronized(resolved.computeIfAbsent(spark, _ => TrieMap.empty))
+  /** Resolved paths. Keyed by path alone: the stamp holds everything a
+    * session contributes to inference, so an entry serves any session
+    * whose stamp matches it. */
+  private val resolved = TrieMap.empty[String, Resolved]
 
   /** The stamp of a parquet read, from the file listing its relation
     * already holds (no second listing). None for a relation that is not
@@ -66,14 +66,13 @@ object Tables {
     }
 
   private def read(spark: SparkSession, path: String): DataFrame = {
-    val known = resolvedIn(spark)
-    val declared = known.get(path).flatMap { r =>
+    val declared = resolved.get(path).flatMap { r =>
       val df = spark.read.schema(r.schema).parquet(path)
       if (stampOf(spark, df).contains(r.stamp)) Some(df) else None
     }
     declared.getOrElse {
       val df = spark.read.parquet(path)
-      stampOf(spark, df).foreach(stamp => known(path) = Resolved(df.schema, stamp))
+      stampOf(spark, df).foreach(stamp => resolved(path) = Resolved(df.schema, stamp))
       df
     }
   }

@@ -8,7 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
-/** `Tables` resolves each parquet path once per session: later reads
+/** `Tables` resolves each parquet path once: later reads
   * declare the inferred schema and run no job, stay independent
   * relations, and re-infer when the files or parquet settings change. */
 class TablesSpec extends SparkSpecBase {

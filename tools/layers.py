@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Diff two perfbench trace files field by field.
 
-    python3 tools/layers.py PARENT.json CHANGE.json [--top N]
+    python3 tools/layers.py PARENT.json CHANGE.json
 
 The trace files are the ones a traced run writes
 (`python3 perfbench/run.py --workload W --seed N --trace 1` leaves
@@ -15,7 +15,7 @@ side only is shown with `-` for the other side and sorts last.
 """
 import argparse
 import json
-import math
+import signal
 import sys
 
 
@@ -37,7 +37,8 @@ def totals_by_group(rows):
     for (g, _), r in rows.items():
         t = out.setdefault(g, {})
         for k, v in r.items():
-            t[k] = t.get(k, 0) + v
+            if v is not None:  # perfbench writes NaN/Inf as null
+                t[k] = t.get(k, 0) + v
     return out
 
 
@@ -59,8 +60,6 @@ def by_abs_delta(rows, delta_at):
 def fmt(v):
     if v is None:
         return "-"
-    if isinstance(v, float) and (math.isnan(v) or math.isinf(v)):
-        return str(v)
     return f"{v:.6g}" if isinstance(v, float) and v != int(v) else str(int(v))
 
 
@@ -72,10 +71,10 @@ def table(header, rows):
 
 
 def main():
+    signal.signal(signal.SIGPIPE, signal.SIG_DFL)  # quiet under `| head`
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent")
     ap.add_argument("change")
-    ap.add_argument("--top", type=int, default=0, help="print only the N largest per-row deltas")
     a = ap.parse_args()
     with open(a.parent) as f:
         par = json.load(f)
@@ -94,8 +93,6 @@ def main():
     per_row = [(name, k, p, c, d) for (g, name) in keys
                for (k, p, c, d) in diff(prow.get((g, name), {}), crow.get((g, name), {}))]
     per_row = by_abs_delta(per_row, 4)
-    if a.top:
-        per_row = per_row[:a.top]
     print("\n== rows")
     print(table(["row", "field", "parent", "change", "delta"], per_row))
 
