@@ -376,8 +376,8 @@ case class SimHashModExpr(child: Expression) extends UnaryExpression {
 
 /** array<float|double> → long: packed sign bits of `planes` pseudo-random
   * hyperplane projections (plane (p,i) weight = ±1 from splitmix64 parity,
-  * matching VectorOps.hyperplaneSignature semantics in spirit but one
-  * tight loop per row instead of planes×dims interpreted lambdas). */
+  * one tight loop per row — the random-hyperplane LSH family for cosine
+  * distance). */
 case class HyperplaneLshExpr(child: Expression, planes: Int)
     extends UnaryExpression with CodegenFallback {
 

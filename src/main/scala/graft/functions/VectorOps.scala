@@ -29,18 +29,4 @@ object VectorOps {
     * then every pairwise comparison is just a dot product). */
   def cosinePrenormed(dotAB: Column, normA: Column, normB: Column): Column =
     dotAB / (normA * normB)
-
-  /** Sign-bit signature against `planes` pseudo-random hyperplanes — the
-    * random-hyperplane LSH family for cosine distance. Plane (p, i) is a
-    * deterministic hash-derived ±1, so executors regenerate identical
-    * planes with zero driver-side state to broadcast.
-    * signature bit p = sign( Σ_i  v[i] * h(p,i) ). */
-  def hyperplaneSignature(v: Column, planes: Int): Column =
-    transform(sequence(lit(0), lit(planes - 1)), p =>
-      when(
-        aggregate(
-          zip_with(v, sequence(lit(0), size(v) - 1), (x, i) =>
-            x * when(pmod(xxhash64(p * lit(4099) + i), lit(2)) === 0,
-              lit(1.0)).otherwise(lit(-1.0))),
-          lit(0.0), (acc, x) => acc + x) >= 0, lit(1)).otherwise(lit(0)))
 }

@@ -397,10 +397,11 @@ object Behavioral {
     * window end Spark reports), event count.
     *
     * Scale: one user-keyed shuffle + Spark's native session-merge
-    * aggregation (map-side partial merge; no window sort); the
-    * streaming twin [[graft.streaming.StreamOps.sessionWindowStream]]
-    * runs this SAME body under a watermark — the canonical streaming
-    * sessionization shape. */
+    * aggregation (map-side partial merge; no window sort). On a
+    * stream, this SAME body over `events.withWatermark("ts", …)` is
+    * the canonical streaming sessionization: a session emits in
+    * append mode once the watermark passes its end (StreamingSpec
+    * pins batch ≡ stream). */
   def sessionWindowAgg(events: DataFrame,
       gap: String = "30 minutes"): DataFrame =
     events

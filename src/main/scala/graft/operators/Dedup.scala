@@ -189,30 +189,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold), withSh)
   }
 
-  /** EXACT dedup at scale: shuffle (content-hash, doc_id) pairs — never
-    * document bodies — and keep the lowest doc_id per hash (the SCALE.md
-    * "hash-first" form of dropDuplicates; collision odds n²/2⁶⁵ accepted,
-    * or re-verify survivors by text for audited pipelines). */
-  def exactDedupByHash(docs: DataFrame): DataFrame = {
-    val keep = docs
-      .select(col("doc_id"), xxhash64(col("text")).as("h"))
-      .groupBy("h").agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    docs.join(keep, Seq("doc_id"), "left_semi")
-  }
-
-  /** Near-dup REMOVAL (the operator a training pipeline actually runs):
-    * greedy keep-lowest-id — every doc named as the greater side of a
-    * verified pair is dropped. One pass, no iteration; transitive
-    * near-dup chains keep one representative per detected pair edge,
-    * which over-keeps relative to full connected components but never
-    * drops a non-duplicate. */
-  def dropNearDuplicates(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val losers = minhashPairs(docs, threshold = threshold)
-      .select(col("doc_b").as("doc_id")).distinct()
-    docs.join(losers, Seq("doc_id"), "left_anti")
-  }
-
   /** Near-dup removal from the EXACT pair set (q33c's postings form)
     * instead of the LSH candidates: same greedy keep-lowest-id policy,
     * but fully deterministic — with an uncapped df the recall is 1 by
@@ -221,9 +197,9 @@ object Dedup {
     * hotter than the cap would be missed — the oracle-gated entries
     * therefore run uncapped; see `exactPairs`). The survivor set is
     * DuckDB-expressible and sits under the hard oracle (q33f), unlike
-    * `dropNearDuplicates` whose survivors depend on LSH band
-    * collisions. Same scale shape: the pair set is the postings join,
-    * and removal is one anti-join on doc_id. */
+    * dropping the losers of [[minhashPairs]], whose survivors depend
+    * on LSH band collisions. Same scale shape: the pair set is the
+    * postings join, and removal is one anti-join on doc_id. */
   def dropNearDuplicatesExact(docs: DataFrame, k: Int = 3,
       threshold: Double = 0.5): DataFrame =
     dropPairLosers(docs,
@@ -393,39 +369,11 @@ object Dedup {
       .localCheckpoint(true)
   }
 
-  def simhash(text: Column): Column =
-    call_function("graft_simhash", split(text, " "))
-
-  /** SimHash near-dup pairs with multi-band Hamming LSH: 4 bands of 16
-    * bits — by pigeonhole, any pair within Hamming distance 3 agrees on
-    * at least one full band, so recall at maxHamming ≤ 3 is exact (the
-    * single-prefix variant missed pairs whose flips hit the prefix).
-    * Verify with bit_count(xor) ≤ maxHamming. */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-      bands: Int = 4): DataFrame = {
-    graft.functions.SignatureExprs.register(docs.sparkSession)
-    val bits = 64 / bands
-    val mask = (1L << bits) - 1
-    val sigs = docs.select(col("doc_id"), simhash(col("text")).as("sig"))
-    val banded = sigs.select(col("doc_id"), col("sig"),
-      posexplode(array((0 until bands).map(b =>
-        call_function("shiftrightunsigned", col("sig"), lit(b * bits))
-          .bitwiseAND(lit(mask))): _*)).as(Seq("band", "bkey")))
-    banded.as("a")
-      .join(banded.as("b"), col("a.band") === col("b.band")
-        && col("a.bkey") === col("b.bkey")
-        && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
-  /** ENGINE-SHARED SimHash pairs — the ORACLE-GATED form of
-    * [[simhashPairs]]: token hashes via `graft_polyhash` (one hash per
-    * OCCURRENCE — multiplicity votes, matching classic SimHash), bit j
-    * votes by the parity of (aⱼ·x + bⱼ) mod P (`graft_simhash_mod`,
-    * same Mix.modMults/modAdds constants the oracle inlines), signature
+  /** ENGINE-SHARED SimHash near-dup pairs (ORACLE-GATED): token
+    * hashes via `graft_polyhash` (one hash per OCCURRENCE —
+    * multiplicity votes, matching classic SimHash), bit j votes by the
+    * parity of (aⱼ·x + bⱼ) mod P (`graft_simhash_mod`, same
+    * Mix.modMults/modAdds constants the oracle inlines), signature
     * carried as 4 × 16-bit band values (always positive — no BIGINT
     * sign traps in SQL). Candidates by band equality (pigeonhole: any
     * pair within Hamming 3 of 64 bits agrees on ≥ 1 of 4 bands — exact
@@ -457,68 +405,12 @@ object Dedup {
     finishAndRelease(pairs, sigs)
   }
 
-  /** Exact n-gram Jaccard with AllPairs-style PREFIX FILTERING (Bayardo
-    * et al., "Scaling Up All Pairs Similarity Search", WWW'07 — public
-    * algorithm): under a global token order, any pair with
-    * Jaccard ≥ t must share a token within the first
-    * `|x| − ⌈t·|x|⌉ + 1` tokens of EACH side's sorted set, so only that
-    * prefix is indexed. Candidate volume drops from Σ C(df,2) over all
-    * shingles to Σ C(df,2) over prefix shingles (roughly (1−t) of the
-    * index) while staying LOSSLESS — DedupSpec pins equality with the
-    * full-index form.
-    *
-    * Plan shape: one groupBy per prefix shingle (df-capped hot-shingle
-    * guard), map-side pair generation from the posting lists, distinct,
-    * then ONE join per side against the persisted sorted-set table for
-    * the exact |A∩B|/|A∪B| — no self-join of the index, no O(n²). */
-  def ngramJaccardPairsPrefix(docs: DataFrame, k: Int = 3,
-      threshold: Double = 0.5, dfCap: Int = 1000): DataFrame = {
-    // 64-bit shingle hashes, not strings — shuffles move 8-byte keys
-    // (collision odds ~n²/2⁶⁴); sorted ascending = the global token order
-    // the prefix filter requires. Persisted (feeds the prefix index and
-    // both verification sides); released by finishAndRelease (advice r6).
-    val shSets = docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id"),
-        array_sort(array_distinct(transform(shinglesOf(col("w"), k),
-          s => xxhash64(s)))).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val prefixLen = (size(col("sh")) -
-      ceil(lit(threshold) * size(col("sh"))).cast("int") + 1)
-    val prefix = shSets
-      .select(col("doc_id"),
-        explode(slice(col("sh"), lit(1), prefixLen)).as("p"))
-    val postings = prefix.groupBy("p")
-      .agg(array_sort(collect_list(col("doc_id"))).as("docs"))
-      .filter(size(col("docs")).between(2, dfCap))
-    // Two-step explode: pairs stream out row-by-row with per-row
-    // allocation bounded by one df-length slice (<= 8 KB), instead of one
-    // flattened C(df,2)-struct array per posting row (tens of MB for a
-    // df-capped hot shingle) — those humongous allocations caused
-    // multi-10x GC variance in the bench.
-    val cand = postings
-      .select(posexplode(col("docs")).as(Seq("i", "doc_a")), col("docs"))
-      .select(col("doc_a"), explode(slice(col("docs"), col("i") + lit(2),
-        size(col("docs")))).as("doc_b"))
-      .distinct()
-    finishAndRelease(cand
-      .join(shSets.as("va"), col("doc_a") === col("va.doc_id"))
-      .join(shSets.as("vb"), col("doc_b") === col("vb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
-        (size(array_intersect(col("va.sh"), col("vb.sh"))).cast("double") /
-          size(array_union(col("va.sh"), col("vb.sh"))).cast("double"))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold), shSets)
-  }
-
-  /** Full-index postings form — the DEFAULT (and q33c's path): at
-    * moderate thresholds it beats the prefix filter because verification
-    * is a map-side COUNT of 16-byte pair rows, never a join of full
-    * shingle arrays (measured at sf0.1/t=0.5: 7s vs 30s — the prefix
-    * variant's array-shipping verification dominates when the prefix is
-    * still ~half the index). Use `ngramJaccardPairsPrefix` for high
-    * thresholds (t ≥ 0.8), where the prefix shrinks to (1−t) of the
-    * index and candidate volume collapses. */
+  /** Exact n-gram Jaccard pairs over the full postings index (q33c's
+    * path): verification is a map-side COUNT of 16-byte pair rows,
+    * never a join of full shingle arrays (measured at sf0.1/t=0.5: 7s
+    * vs 30s for an AllPairs prefix-filter variant, whose
+    * array-shipping verification dominates while the prefix is still
+    * ~half the index). */
   def ngramJaccardPairs(docs: DataFrame, k: Int = 3,
       threshold: Double = 0.5, dfCap: Int = 1000): DataFrame =
     finishAndRelease(ngramJaccardPairsBuild(docs, k, threshold, dfCap))
@@ -554,8 +446,10 @@ object Dedup {
     val postings = sh.groupBy("sh")
       .agg(array_sort(collect_list(col("doc_id"))).as("docs"))
       .filter(size(col("docs")).between(2, dfCap))
-    // Two-step explode (see ngramJaccardPairsPrefix): bounded per-row
-    // allocation, no humongous pair arrays.
+    // Two-step explode: pairs stream out row-by-row with per-row
+    // allocation bounded by one df-length slice, instead of one
+    // flattened C(df,2)-struct array per posting row — those humongous
+    // allocations caused multi-10x GC variance in the bench.
     // sizes joins BROADCAST under the row ceiling (round 17 + ADVICE
     // r17 #1 size-switch, guide §3.1): the per-doc size frame is
     // docs-sized and slim while the shared-count pair frame is the big
@@ -755,49 +649,6 @@ object Dedup {
       .filter(col("overlap") >= minOverlap)
       .select("doc_id")
 
-  /** Bloom-filter decontamination — the 100 TB escape hatch for when the
-    * benchmark's distinct shingle set outgrows an exact broadcast (a
-    * full eval-suite union can reach billions of shingles; a Bloom
-    * filter at fpp=1e-3 is ~1.8 bytes/item vs 8+ for the exact set).
-    *
-    * One-sided error, the SAFE direction for decontamination: Bloom
-    * filters have NO false negatives, so every truly-overlapping
-    * shingle still counts and `overlap_bloom ≥ overlap_exact` — a
-    * contaminated doc can NEVER survive. False positives can only
-    * over-drop clean docs, bounded by fpp per shingle (DedupSpec pins
-    * survivors(bloom) ⊆ survivors(exact), and equality at tight fpp on
-    * the fixture). Impl-only by the same reasoning as q13/q42b: the
-    * sketch's decisions are engine-specific.
-    *
-    * The `mightContainLong` probe is a deserialized-object UDF (not
-    * codegen'd) — acceptable because it replaces a broadcast JOIN, not
-    * an expression; the stream side stays one scan + filter + slim
-    * per-doc count, identical shape to [[decontaminate]]. */
-  def decontaminateBloom(docs: DataFrame, benchmark: DataFrame,
-      k: Int = 3, minOverlap: Int = 5, fpp: Double = 0.001): DataFrame = {
-    val benchSh = benchmark
-      .select(split(col("text"), " ").as("w"))
-      .select(explode(transform(shinglesOf(col("w"), k),
-        s => xxhash64(s))).as("sh"))
-      .distinct()
-    // sizing count runs one job over the (benchmark-sized, small
-    // relative to the corpus) eval side only — never over `docs`
-    val n = math.max(benchSh.count(), 1L)
-    val bloom = benchSh.stat.bloomFilter("sh", n, fpp)
-    val bloomBc = docs.sparkSession.sparkContext.broadcast(bloom)
-    val mightContain = udf((sh: Long) => bloomBc.value.mightContainLong(sh))
-    val contaminated = docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id"),
-        explode(transform(shinglesOf(col("w"), k),
-          s => xxhash64(s))).as("sh"))
-      .filter(mightContain(col("sh")))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("overlap"))
-      .filter(col("overlap") >= minOverlap)
-    docs.join(contaminated.select("doc_id"), Seq("doc_id"), "left_anti")
-  }
-
   /** Embedding-cosine near-dup: hyperplane-LSH bucket join + exact cosine
     * verification. */
   def embeddingNearDupPairs(embeddings: DataFrame, planes: Int = 8,
@@ -876,6 +727,36 @@ object Dedup {
           (x, i) => when(i === 0, x * lit(1.5f))
             .otherwise(x * lit(1.01f))).as("embedding")))
 
+  /** The EXISTING-side artifact of [[crossCorpusDedupIndexed]],
+    * materialized once (round 18, verdict r17 item 5): per-doc shingle
+    * SETS (the verification side), the postings occurrences WITH their
+    * df (both branch indexes are filters over it), and the slim
+    * per-shingle df table (the hot-shingle predicate). All three are
+    * cap-AGNOSTIC — df is data, the cap is a query-time filter — so
+    * one index serves every dfCap, and the postings⋈df subtree runs
+    * once, not once per consumer (small postings, hot set, hot
+    * postings). */
+  case class CrossCorpusIndex(ex: DataFrame, post: DataFrame,
+      dfc: DataFrame)
+
+  /** Build (and eagerly materialize) the existing-side index. */
+  def crossCorpusIndexOf(existing: DataFrame, k: Int = 3)
+      : CrossCorpusIndex = {
+    val ex = crossShingleSets(existing, k).localCheckpoint(true)
+    val exPost = ex.select(col("doc_id").as("old_id"),
+      explode(col("sh")).as("h"))
+    val dfc = exPost.groupBy("h").agg(count(lit(1)).as("df"))
+      .localCheckpoint(true)
+    val post = exPost.join(dfc, "h").localCheckpoint(true)
+    CrossCorpusIndex(ex, post, dfc)
+  }
+
+  private def crossShingleSets(d: DataFrame, k: Int): DataFrame = d
+    .select(col("doc_id"), split(col("text"), " ").as("w"))
+    .select(col("doc_id"),
+      array_distinct(transform(shinglesOf(col("w"), k),
+        s => xxhash64(s))).as("sh"))
+
   /** CROSS-CORPUS dedup: drop each INCOMING document whose exact
     * k-shingle jaccard against ANY EXISTING document reaches
     * `threshold` — the INCREMENTAL-ingest primitive (new crawl batch vs
@@ -884,7 +765,10 @@ object Dedup {
     * inverted index, so the work is |batch|-proportional, never a
     * corpus self-join.
     *
-    * Returns the surviving incoming doc_ids.
+    * Returns the surviving incoming doc_ids. The existing side comes
+    * in pre-built ([[crossCorpusIndexOf]]): only the incoming side
+    * changes between calls, so q137 memoizes the index and streaming
+    * reuses it across batches.
     *
     * SCALE SHAPE (round-8 fix of the uncapped candidate join — the
     * q102 df-cap + exact-heavy-residual pattern, adapted to the
@@ -908,46 +792,6 @@ object Dedup {
     * while uncapped candidates grow with corpus size). dfCap only moves
     * cost between the branches; `dfCap = Int.MaxValue` reproduces the
     * original uncapped join. */
-  def crossCorpusDedup(existing: DataFrame, incoming: DataFrame,
-      k: Int = 3, threshold: Double = 0.5, dfCap: Int = 64): DataFrame =
-    crossCorpusDedupIndexed(crossCorpusIndexOf(existing, k), incoming,
-      k, threshold, dfCap)
-
-  /** The EXISTING-side artifact of [[crossCorpusDedup]], materialized
-    * once (round 18, verdict r17 item 5): per-doc shingle SETS (the
-    * verification side), the postings occurrences WITH their df (both
-    * branch indexes are filters over it), and the slim per-shingle df
-    * table (the hot-shingle predicate). All three are cap-AGNOSTIC —
-    * df is data, the cap is a query-time filter — so one index serves
-    * every dfCap. Previously the postings⋈df subtree re-executed once
-    * per consumer (small postings, hot set, hot postings = 3×) inside
-    * EVERY call, and the whole existing side was rebuilt per call /
-    * per streaming batch even though only the incoming side changes. */
-  case class CrossCorpusIndex(ex: DataFrame, post: DataFrame,
-      dfc: DataFrame)
-
-  /** Build (and eagerly materialize) the existing-side index. */
-  def crossCorpusIndexOf(existing: DataFrame, k: Int = 3)
-      : CrossCorpusIndex = {
-    val ex = crossShingleSets(existing, k).localCheckpoint(true)
-    val exPost = ex.select(col("doc_id").as("old_id"),
-      explode(col("sh")).as("h"))
-    val dfc = exPost.groupBy("h").agg(count(lit(1)).as("df"))
-      .localCheckpoint(true)
-    val post = exPost.join(dfc, "h").localCheckpoint(true)
-    CrossCorpusIndex(ex, post, dfc)
-  }
-
-  private def crossShingleSets(d: DataFrame, k: Int): DataFrame = d
-    .select(col("doc_id"), split(col("text"), " ").as("w"))
-    .select(col("doc_id"),
-      array_distinct(transform(shinglesOf(col("w"), k),
-        s => xxhash64(s))).as("sh"))
-
-  /** [[crossCorpusDedup]] body over a pre-built existing-side index —
-    * the per-batch part (the incoming side is the only thing that
-    * changes between calls; streaming reuses the index across
-    * batches). */
   def crossCorpusDedupIndexed(idx: CrossCorpusIndex,
       incoming: DataFrame, k: Int = 3, threshold: Double = 0.5,
       dfCap: Int = 64): DataFrame = {
@@ -972,9 +816,10 @@ object Dedup {
         Seq("doc_id"), "left_anti"), in)
   }
 
-  /** Candidate (new_id, old_id) pairs for [[crossCorpusDedup]] — the
-    * df-capped existing-side inverted index plus the exact heavy
-    * residual (soundness argument in the caller's scaladoc). Exposed
+  /** Candidate (new_id, old_id) pairs for
+    * [[crossCorpusDedupIndexed]] — the df-capped existing-side inverted
+    * index plus the exact heavy residual (soundness argument in the
+    * caller's scaladoc). Exposed
     * `private[graft]` so DedupSpec can assert candidate-count bounds
     * directly. No broadcast hints: the hot-shingle set is
     * corpus-frequency-bounded (≤ occurrences/dfCap) and the heavy set

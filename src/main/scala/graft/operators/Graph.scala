@@ -1251,34 +1251,6 @@ object Graph {
     cur
   }
 
-  /** Core numbers per node: core(n) = max k with n in the k-core —
-    * computed by peeling k = 1, 2, … until the core empties. The loop
-    * over k is driver control flow; each level reuses the PREVIOUS
-    * level's (already peeled, checkpointed) edges as its input, so
-    * total work is the telescoped peel, not #levels × full graph. */
-  def coreNumbers(edges: DataFrame, maxK: Int = 64): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var cur = edges.select(col("u"), col("v"))
-    var out: DataFrame = null
-    var k = 1L
-    var done = false
-    while (!done && k <= maxK) {
-      cur = kCore(cur, k)
-      val nodes = cur.select(col("u").as("node"))
-        .unionAll(cur.select(col("v").as("node"))).distinct()
-        .withColumn("core", lit(k))
-      if (nodes.isEmpty) done = true
-      else {
-        out = if (out == null) nodes else out.unionAll(nodes)
-        k += 1
-      }
-    }
-    if (out == null) spark.emptyDataset[(Long, Long)]
-      .toDF("node", "core")
-    else out.groupBy("node").agg(max(col("core")).as("core"))
-  }
-
   /** Fixed-round peel — the oracle-gateable sibling of [[kCore]] (the
     * q93/q99 discipline: both engines run EXACTLY `rounds` rounds, so
     * the result is deterministic whether or not the peel has converged;
@@ -1421,13 +1393,7 @@ object Graph {
     * frames, plus one 1-row broadcast for N. Magnitudes: co ≤ N ≤ 10⁸
     * baskets keeps co·N·10⁶ far under BIGINT range for any co that
     * survives a minCo at that scale. */
-  def assocRules(lineitem: DataFrame, orders: DataFrame,
-      minCo: Long = 2L, k: Int = 100): DataFrame = {
-    val bought = boughtItems(lineitem, orders)
-    assocRulesFrom(bought, coCounts(bought, minCo), k)
-  }
-
-  private def assocRulesFrom(bought: DataFrame, co: DataFrame,
+  private[graft] def assocRulesFrom(bought: DataFrame, co: DataFrame,
       k: Int): DataFrame = {
     val sizes = bought.groupBy("item").agg(count(lit(1)).as("nb"))
     val nBaskets = bought.select(col("cust")).distinct()

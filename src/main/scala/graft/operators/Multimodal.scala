@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal column surface — north star: treat image/audio/video as
   * opaque `binary` columns with typed metadata, and run decode /
-  * feature-extract / resize / frame-sample as distributed per-partition
-  * batch transforms.
+  * feature-extract / frame-sample as distributed per-partition batch
+  * transforms.
   *
   * The Spark-side plumbing is real and tested: schema (binary payload +
   * typed metadata struct), partition-parallel batched processing via
@@ -316,11 +316,6 @@ object Multimodal {
         .orElse(decodeImageIo(payload)
           .map(i => (true, dHash56(gridLum63(i)))))
         .getOrElse((false, dHash56(fallbackCells63(payload))))
-
-    /** STUB resize: real impl re-encodes pixels; fake keeps bytes,
-      * rewrites metadata (the Spark plumbing under test). */
-    def resize(row: MediaRow, w: Int, h: Int): MediaRow =
-      row.copy(width = w, height = h)
 
     /** STUB frame sampling: pick every `stride`-th "frame" (fixed-size
       * byte windows stand in for decoded frames). */

@@ -1562,10 +1562,10 @@ object Relational {
     *
     * Scale shape: ONE full-outer shuffle join on the key — the minimal
     * movement any exact diff needs; both sides partition by the same
-    * key, so with [[Bucketing]]-laid-out snapshots the Exchange
-    * disappears entirely. Unchanged keys are filtered before the
-    * projection, so the output is proportional to the CHANGE volume,
-    * not the table. */
+    * key, so with both snapshots written `bucketBy(n, key)` the
+    * Exchange disappears entirely. Unchanged keys are filtered before
+    * the projection, so the output is proportional to the CHANGE
+    * volume, not the table. */
   def snapshotDiff(oldDf: DataFrame, newDf: DataFrame, key: String,
       compareCols: Seq[String]): DataFrame = {
     val o = oldDf.as("o")
@@ -1614,8 +1614,8 @@ object Relational {
     * changelog's new values, D rows drop the key, untouched keys pass
     * through. Scale shape: ONE key-partitioned full-outer join (the
     * change volume is usually ≪ the snapshot, so AQE broadcasts the
-    * diff side); with [[Bucketing]]-laid-out snapshots the Exchange
-    * disappears — the lakehouse MERGE pattern. */
+    * diff side); with both snapshots written `bucketBy(n, key)` the
+    * Exchange disappears — the lakehouse MERGE pattern. */
   def applyCdc(oldDf: DataFrame, diff: DataFrame, key: String,
       valueCols: Seq[String]): DataFrame = {
     val d = diff.select(

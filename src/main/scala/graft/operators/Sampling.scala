@@ -34,21 +34,6 @@ object Sampling {
       .isin(hex.take(buckets).map(_.toString): _*))
   }
 
-  /** Disjoint, covering train/val/test split: val gets `valBuckets`
-    * 16ths, test the next `testBuckets` 16ths, train the rest. */
-  def trainValTestSplit(df: DataFrame, keyCol: String,
-      valBuckets: Int = 1, testBuckets: Int = 1)
-      : (DataFrame, DataFrame, DataFrame) = {
-    require(valBuckets + testBuckets < 16, "no train buckets left")
-    val b = md5Bucket(col(keyCol))
-    val valSet = hex.take(valBuckets).map(_.toString)
-    val testSet = hex.slice(valBuckets, valBuckets + testBuckets)
-      .map(_.toString)
-    (df.filter(!b.isin(valSet ++ testSet: _*)),
-      df.filter(b.isin(valSet: _*)),
-      df.filter(b.isin(testSet: _*)))
-  }
-
   /** Q46: per-source doc counts of the deterministic 4/16 sample. */
   def q46Sample(spark: SparkSession, dir: String): DataFrame =
     deterministicSample(load(spark, dir, "documents"), "doc_id", 4)

@@ -72,31 +72,9 @@ object Similarity {
 
   /** Approximate top-k: candidates restricted to the query's hyperplane-
     * LSH bucket. With b planes the expected candidate set is N/2^b — the
-    * knob that turns an O(Q·N) scan into an O(Q·N/2^b) one. Exactness is
-    * traded for recall (measured against knnBrute in SimilaritySpec). */
-  def knnLsh(vectors: DataFrame, queries: DataFrame, k: Int,
-      planes: Int = 4): DataFrame = {
-    graft.functions.SignatureExprs.register(vectors.sparkSession)
-    DotProductExpr.register(vectors.sparkSession)
-    val base = vectors
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("bucket",
-        call_function("graft_hyperplane", col("v"), lit(planes)))
-      .withColumn("nv", nativeNorm(col("v")))
-    val qs = queries
-      .select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qv"))
-      .withColumn("bucket",
-        call_function("graft_hyperplane", col("qv"), lit(planes)))
-      .withColumn("nq", nativeNorm(col("qv")))
-    val scored = base.join(broadcast(qs),
-        base("bucket") === qs("bucket") && col("vec_id") =!= col("qid"))
-      .withColumn("cos", cosinePrenormed(
-        nativeDot(col("v"), col("qv")), col("nv"), col("nq")))
-    topKPerQuery(scored, k)
-  }
-
-  /** ENGINE-SHARED twin of [[knnLsh]] (round-10, the q33d flip applied
-    * to approximate kNN): buckets via `graft_hyperplane_mod`
+    * knob that turns an O(Q·N) scan into an O(Q·N/2^b) one.
+    * ENGINE-SHARED (round-10, the q33d flip applied to approximate
+    * kNN): buckets via `graft_hyperplane_mod`
     * (universal-hash parity weights, index-order accumulation — DuckDB
     * replays the fold), so the LSH candidate set — and therefore the
     * approximate top-k itself, ties broken by neighbor id — is a
@@ -263,53 +241,6 @@ object Similarity {
       .drop("v")
   }
 
-  /** Approximate kNN by ASYMMETRIC DISTANCE COMPUTATION over PQ codes,
-    * with exact re-ranking: each query precomputes its m×kSub table of
-    * subvector·centroid dots (tiny, broadcast with the query), so
-    * scoring a candidate is m ARRAY LOOKUPS instead of a dim-length
-    * dot — the compressed-domain scan reads codes (bytes), never
-    * vectors. The approximate top `k·refine` then re-rank EXACTLY
-    * against the raw vectors (a k·refine-per-query join, not a scan).
-    * Recall < 1 by construction (quantization error) — measured, not
-    * asserted away, in SimilaritySpec; `refine` is the recall knob. */
-  def knnPq(vectors: DataFrame, queries: DataFrame, k: Int, m: Int = 8,
-      kSub: Int = 16, iters: Int = 3, refine: Int = 4): DataFrame = {
-    DotProductExpr.register(vectors.sparkSession)
-    val books = pqTrain(vectors, m, kSub, iters)
-    val d = books(0)(0).length
-    val coded = pqEncode(vectors, books)
-    val booksL = typedlit(books.map(_.map(_.toSeq).toSeq).toSeq)
-    val qs = queries
-      .select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qv"))
-      .withColumn("nq", nativeNorm(col("qv")))
-      .withColumn("qtab", transform(sequence(lit(0), lit(m - 1)), s =>
-        transform(sequence(lit(0), lit(kSub - 1)), c =>
-          aggregate(zip_with(
-            slice(col("qv"), s * d + lit(1), lit(d)),
-            element_at(element_at(booksL, s + 1), c + 1),
-            (x, y) => x * y), lit(0.0), (a, x) => a + x))))
-    val adc = aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-      (acc, s) => acc + element_at(element_at(col("qtab"), s + 1),
-        element_at(col("codes"), s + 1).cast("int") + 1))
-    val approx = coded.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos",
-        cosinePrenormed(adc, sqrt(col("vn2a")), col("nq")))
-    val cand = topKPerQuery(approx, k * refine)
-      .select(col("qid").as("cqid"), col("neighbor"))
-    // exact re-rank of the shortlist only
-    val base = vectors
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("nv", nativeNorm(col("v")))
-    val rescored = cand
-      .join(base, col("neighbor") === col("vec_id"))
-      .join(broadcast(qs.select(col("qid"), col("qv"), col("nq"))),
-        col("cqid") === col("qid"))
-      .withColumn("cos", cosinePrenormed(
-        nativeDot(col("v"), col("qv")), col("nv"), col("nq")))
-    topKPerQuery(rescored, k)
-  }
-
   /** Exact cosine pair join: every unordered vector pair whose cosine,
     * rounded to integer millionths (the q34a discipline — identical raw
     * doubles round identically in any engine), clears `thresholdE6`.
@@ -355,8 +286,7 @@ object Similarity {
   }
 
   /** Round 10: graded on the ENGINE-SHARED hyperplane form (candidate
-    * set deterministic → hard oracle); the production splitmix-weights
-    * [[knnLsh]] keeps its recall spec. */
+    * set deterministic → hard oracle). */
   def q34bKnnLsh(spark: SparkSession, dir: String): DataFrame = {
     val vecs = load(spark, dir, "embeddings")
     knnLshShared(vecs, queryVectors(vecs), k = 10).orderBy("qid", "rank")
@@ -418,7 +348,7 @@ object Similarity {
     * map-side combine collapses each partition's candidates to one
     * row per vec before the shuffle, so the exchange moves |V| rows,
     * not |V|². The documented 100 TB path swaps the cross join for
-    * the IVF/PQ candidate generators (knnIvf/knnPq) + exact re-rank
+    * the IVF candidate generator (knnIvf) + exact re-rank
     * with the label predicate pushed into the candidate filter —
     * identical scoring, recall < 1. cos_e6 is BIGINT (D6). */
   def hardNegatives(vectors: DataFrame): DataFrame = {
@@ -2523,35 +2453,6 @@ object Similarity {
       .unionAll(metrics(sem, "sem_rank", "sem"))
       .unionAll(metrics(fusedRank, "rank", "fused"))
       .orderBy("ranking")
-  }
-
-  /** [[semanticDedup]] with the PRODUCTION centroid source swapped in
-    * (round-11 closure of the q230 "centroid source is the knob"
-    * note): cells come from [[Clustering.kMeansShared]]'s trained
-    * assignment — itself oracle-gated via q246 — instead of the raw
-    * seed Voronoi; the within-cell exact-cosine dedup machinery is
-    * byte-identical. Candidates stay CELL-BOUNDED by construction
-    * (SimilaritySpec pins pair count = Σ n_c·(n_c−1)/2 and a
-    * cartesian-free plan). */
-  def semanticDedupKMeans(embeddings: DataFrame, k: Int = 8,
-      rounds: Int = 3, thresholdE6: Long = 900000L): DataFrame = {
-    DotProductExpr.register(embeddings.sparkSession)
-    val (_, assigned) = Clustering.kMeansShared(embeddings, k, rounds)
-    val v = embeddings
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("nv", nativeNorm(col("v")))
-    val cv = v.join(assigned, "vec_id")
-    val losers = cv.as("a")
-      .join(cv.as("b"), col("a.cell") === col("b.cell")
-        && col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cos_e6", floor(cosinePrenormed(
-          nativeDot(col("a.v"), col("b.v")), col("a.nv"), col("b.nv"))
-        * lit(1e6) + lit(0.5)).cast("long"))
-      .filter(col("cos_e6") >= thresholdE6)
-      .select(col("b.vec_id").as("vec_id")).distinct()
-    embeddings.select("vec_id")
-      .join(losers, Seq("vec_id"), "left_anti")
-      .orderBy("vec_id")
   }
 
   // ---------------------------------------------------------------- q271

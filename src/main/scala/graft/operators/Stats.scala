@@ -99,8 +99,8 @@ object Stats {
     * detection itself is a scan-speed row predicate — no shuffle of the
     * event stream, no window. */
   /** Per-event-type exact power sums — q90's stats frame, split out so
-    * the STREAMING twin (StreamOps.valueOutliersStream) computes it
-    * once from a static history table and shares the exact predicate. */
+    * a streaming query computes it once from a static history table
+    * and runs [[flagOutliers]]'s exact predicate over the stream. */
   def valueStats(events: DataFrame): DataFrame = {
     val x = col("value")
     events.groupBy("event_type").agg(

@@ -1554,7 +1554,8 @@ object TextOps {
     * vocab-sized driver state (the codebook-class rule: ≤ kb + |code
     * points| entries, independent of corpus size). Encoding an unseen
     * stream against a FIXED vocab is stateless, so the stream twin is
-    * one flatMap over this replica (the pqEncodeStream discipline). */
+    * one flatMap over this replica (the [[Similarity.pqEncode]]
+    * discipline). */
   def unigramVocabBuild(spark: SparkSession, dir: String)
       : Map[String, Long] = {
     val (_, uvoc, _) = uniEdges(spark, dir)

@@ -142,8 +142,8 @@ object StreamOps {
     *
     * At 100 TB the same two-branch union runs inside the
     * `foreachBatch` form (batch survivors from
-    * `Dedup.crossCorpusDedup` ∪ batch arrivals → one windowed count
-    * into the metrics sink) — work per window stays ∝ batch volume,
+    * `Dedup.crossCorpusDedupIndexed` ∪ batch arrivals → one windowed
+    * count into the metrics sink) — work per window stays ∝ batch volume,
     * state stays the dedup stream's own watermark-bounded hash set
     * plus one window's two counters. */
   def dedupRateStream(incoming: DataFrame, existing: DataFrame,
@@ -618,22 +618,6 @@ object StreamOps {
     * emit (the trailing window keeps counting for 6 days after
     * activity stops) — the StreamingSpec pin compares on the batch
     * side's observed-day anchors. */
-  /** STREAMING SESSIONIZATION — q276's twin (round 13): Spark's
-    * native `session_window` state merge under a watermark, running
-    * the SAME [[graft.operators.Behavioral.sessionWindowAgg]] body
-    * the batch entry gates (the intervalJoinStream one-body
-    * discipline). A session closes — and emits, in append mode — once
-    * the watermark passes its end; state per open session is one
-    * (start, end, count) triple, watermark-bounded. The canonical
-    * streaming-sessionization shape every behavioral pipeline needs
-    * first. StreamingSpec pins batch ≡ stream across batches incl. a
-    * cross-batch session merge and the exact-gap boundary split. */
-  def sessionWindowStream(events: DataFrame,
-      gap: String = "30 minutes",
-      watermark: String = "2 hours"): DataFrame =
-    graft.operators.Behavioral.sessionWindowAgg(
-      events.withWatermark("ts", watermark), gap)
-
   def rollingWauStream(events: DataFrame,
       watermark: String = "7 days"): DataFrame =
     events
@@ -797,65 +781,15 @@ object StreamOps {
       .select(col("w.start").as("w_start"), col("source"),
         col("n_docs"), col("tok_sum"), col("n_en"))
 
-  /** STREAMING ANOMALY DETECTION — q90's z-score outlier sweep as a
-    * continuous filter: per-event-type mean/σ derive ONCE from a
-    * STATIC history table (`Stats.valueStats` — exact decimal power
-    * sums) and broadcast; the stream side is `Stats.flagOutliers`'s
-    * stateless row predicate. No keyed state, no watermark
-    * requirement — alert latency is micro-batch latency.
-    *
-    * Batch≡stream holds by construction (the join+predicate ARE the
-    * batch operator's; pinned in StreamingSpec). 100 TB: the stats
-    * frame is one row per event type — always broadcastable; its
-    * refresh cadence is a deployment choice (restart on history
-    * redefinition, or recompute in foreachBatch). */
-  def valueOutliersStream(stream: DataFrame, history: DataFrame,
-      k: Int = 3): DataFrame =
-    graft.operators.Stats.flagOutliers(stream,
-      graft.operators.Stats.valueStats(history), k)
-
-  /** STREAMING PQ ENCODE — vector-ingest compression: each arriving
-    * (vec_id, embedding) row encodes against a TRAINED driver-held
-    * codebook via [[graft.operators.Similarity.pqEncode]]'s
-    * zero-shuffle codegen'd argmin projection — no keyed state, no
-    * watermark, no shuffle; encode latency is micro-batch latency.
-    * The codebook is codebook-class state a PQ deployment already
-    * versions (trained offline by pqTrain, audited by q282); its
-    * refresh is a restart or a foreachBatch re-broadcast — the
-    * valueOutliersStream contract. Batch ≡ stream holds by
-    * construction (the projection IS the batch operator's; pinned in
-    * StreamingSpec). 100 TB: the sink writes m small codes + one
-    * reconstructed norm per vector — the 64×-compressed ingest row. */
-  def pqEncodeStream(vectors: DataFrame,
-      books: Array[Array[Array[Double]]]): DataFrame =
-    graft.operators.Similarity.pqEncode(vectors, books)
-
-  /** STREAMING IVF-ADC SERVING (q285's twin — round-14 verdict item
-    * 5): an incoming micro-batch of query vectors scores against the
-    * driver-held serving replica of the GATED index
-    * ([[graft.operators.Similarity.ivfAdcIndexBuild]] off the memoized
-    * trainer state) — probe/ADC/re-rank are one stateless per-row
-    * projection, so there is NO state store, no watermark, no shuffle:
-    * serve latency is micro-batch latency, the deployment shape of a
-    * vector-search endpoint. Index refresh is a restart or a
-    * foreachBatch re-broadcast (the pqEncodeStream codebook contract);
-    * at 10⁹+ vectors shard the replica by cell or fall back to
-    * foreachBatch over the relational q285 chain. Batch ≡ stream AND
-    * serve ≡ q285 pinned in StreamingSpec. */
-  def ivfAdcServeStream(queries: DataFrame,
-      ix: graft.operators.Similarity.IvfAdcIndex, probes: Int = 4,
-      shortlist: Int = 50, k: Int = 10): DataFrame =
-    graft.operators.Similarity.ivfAdcServe(queries, ix, probes,
-      shortlist, k)
-
   /** STREAMING UNIGRAM ENCODER (q304's serving twin — round-15
     * verdict item 7): an incoming micro-batch of words segments
     * against the driver-held kb = 500 vocab replica
     * ([[graft.operators.TextOps.unigramVocabBuild]] off the memoized
     * gated head) — the Viterbi DP per word is a pure function of
     * (word, vocab), so there is NO state store, no watermark, no
-    * shuffle (the pqEncodeStream discipline: encode against FIXED
-    * trained state is stateless; vocab refresh = restart or
+    * shuffle (the [[graft.operators.Similarity.pqEncode]]
+    * discipline: encode against FIXED trained state is stateless;
+    * vocab refresh = restart or
     * foreachBatch re-broadcast). Out-of-scope / unsegmentable words
     * emit nothing (production adds a byte-fallback tier).
     * StreamingSpec pins stream ≡ the gated q304 state (kb = 500)
@@ -889,30 +823,6 @@ object StreamOps {
       }
       .toDF("w", "n")
   }
-
-  /** STREAMING BM25 SERVING (q255's twin — round-15 verdict item 8,
-    * the lexical sibling of [[ivfAdcServeStream]]): query batches
-    * (query_id, terms) score against the driver-held postings
-    * replica ([[graft.operators.TextOps.bm25IndexBuild]] off the
-    * gated aggregate chain) — one stateless flatMap, the exact q255
-    * integer div chain, per-query work ∝ its terms' postings.
-    * StreamingSpec pins serve ≡ the gated q255 row for row. */
-  def bm25ServeStream(queries: DataFrame,
-      ix: graft.operators.TextOps.Bm25Index, topK: Int = 10)
-      : DataFrame =
-    graft.operators.TextOps.bm25Serve(queries, ix, topK)
-
-  /** STREAMING IVFADC+R SERVE (q303's twin): the codes-only replica
-    * serve body over a query stream — same stateless contract as
-    * [[ivfAdcServeStream]], but the replica holds NO raw vectors
-    * (refine re-rank decodes cc + rc + fc), so the deployable
-    * replica is sized by codes alone. StreamingSpec pins serve ≡ the
-    * gated q303 chain row for row. */
-  def ivfAdcRefineServeStream(queries: DataFrame,
-      ix: graft.operators.Similarity.IvfAdcRefineIndex,
-      probes: Int = 4, shortlist: Int = 50, k: Int = 10): DataFrame =
-    graft.operators.Similarity.ivfAdcRefineServe(queries, ix, probes,
-      shortlist, k)
 
   /** STREAMING SERP DEDUP (q301's twin) — serving-time result-list
     * collapse as a foreachBatch deployment: each micro-batch is one

@@ -56,80 +56,4 @@ class AsofJoinSpec extends SparkSpecBase {
     // fixture: all orders predate all events → every event matches
     assert(out.forall(!_.isNullAt(2)))
   }
-
-  test("bucketed as-of equals the plain as-of on a skewed hot key") {
-    // one celebrity key with 20k left rows + a cold key, rights sparse:
-    // the shape that serializes the plain form onto one sorting reducer
-    val left = spark.range(20000)
-      .select(lit(1L).as("k"),
-        timestamp_seconds(lit(1700000000L) + col("id") * 7).as("ts"),
-        concat(lit("l"), col("id")).as("lval"))
-      .union(spark.range(100).select(lit(2L),
-        timestamp_seconds(lit(1700000000L) + col("id") * 1000),
-        concat(lit("c"), col("id"))))
-    val right = spark.range(50)
-      .select(lit(1L).as("k"),
-        timestamp_seconds(lit(1700000000L) + col("id") * 2857).as("ts"),
-        (col("id") * 10).as("rval"))
-      .union(spark.range(5).select(lit(2L),
-        timestamp_seconds(lit(1700000000L) + col("id") * 20000),
-        col("id") + 100))
-    val plain = AsofJoin.asofJoin(left, right, "k", "ts", Seq("rval"))
-      .select("k", "ts", "lval", "rval").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
-    val bucketed = AsofJoin.asofJoinBucketed(left, right, "k", "ts",
-        Seq("rval"), b => floor(unix_timestamp(b) / 3600))
-      .select("k", "ts", "lval", "rval").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1), r.getString(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
-    assert(bucketed == plain)
-    assert(plain.size == 20100)
-  }
-
-  test("bucketed ≡ plain when right value columns contain NULLs " +
-      "(per-column forward-fill, advice r3)") {
-    // Two value columns where nulls alternate: a packed-struct carry
-    // would let a null in one column erase the other's carried value;
-    // per-column last(ignoreNulls) must survive both forms identically.
-    val left = spark.range(60)
-      .select(lit(1L).as("k"),
-        timestamp_seconds(lit(1700000000L) + col("id") * 50).as("ts"))
-    val right = spark.range(20)
-      .select(lit(1L).as("k"),
-        timestamp_seconds(lit(1700000000L) + col("id") * 137).as("ts"),
-        when(col("id") % 2 === 0, col("id") * 10).as("va"),
-        when(col("id") % 3 === 0, col("id") * 100).as("vb"))
-    def norm(df: org.apache.spark.sql.DataFrame) =
-      df.select("k", "ts", "va", "vb").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1),
-          if (r.isNullAt(2)) -1L else r.getLong(2),
-          if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
-    val plain = norm(AsofJoin.asofJoin(left, right, "k", "ts",
-      Seq("va", "vb")))
-    val bucketed = norm(AsofJoin.asofJoinBucketed(left, right, "k", "ts",
-      Seq("va", "vb"), b => floor(unix_timestamp(b) / 300)))
-    assert(bucketed == plain)
-    // the fixture actually exercises the divergence: some matched row
-    // carries va and vb from DIFFERENT right rows
-    assert(plain.exists { case (_, _, va, vb) =>
-      va >= 0 && vb >= 0 && va / 10 != vb / 100 })
-  }
-
-  test("bucketed as-of: the main window partitions by (key, bucket), " +
-      "so a hot key's sort spreads across buckets") {
-    val left = spark.range(100).select(lit(1L).as("k"),
-      timestamp_seconds(lit(1700000000L) + col("id") * 7).as("ts"))
-    val right = spark.range(5).select(lit(1L).as("k"),
-      timestamp_seconds(lit(1700000000L) + col("id") * 100).as("ts"),
-      col("id").as("rval"))
-    val plan = AsofJoin.asofJoinBucketed(left, right, "k", "ts",
-        Seq("rval"), b => floor(unix_timestamp(b) / 60))
-      .queryExecution.optimizedPlan.toString
-    // the Window's partition spec must include the bucket column —
-    // that IS the bounded-partition property
-    val winLine = plan.linesIterator.find(_.contains("windowspecdefinition"))
-    assert(winLine.exists(l => l.contains("__b")),
-      s"window not partitioned by bucket:\n$plan")
-  }
 }

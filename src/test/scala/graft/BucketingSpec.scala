@@ -1,69 +1,25 @@
 package graft
 
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
-import graft.operators.Bucketing
 
-/** Bucketed layout (round 4): the claim is a PLAN property — joining
-  * two co-bucketed tables must not shuffle either side — plus result
-  * equality with the plain (shuffling) join. */
+/** Snapshot diff / CDC apply over bucketed snapshots: the claim is a
+  * PLAN property — diffing two co-bucketed versions must not shuffle
+  * either side — plus result equality with the plain read, and the
+  * diff/apply round trip. */
 class BucketingSpec extends SparkSpecBase {
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("co-bucketed join plans with zero Exchange and matches the " +
-      "plain join") {
-    val orders = spark.read.parquet(s"$sf/orders.parquet")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    val lineitem = spark.read.parquet(s"$sf/lineitem.parquet")
-      .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
-    Bucketing.writeBucketed(orders, "b_orders", "o_orderkey", 8)
-    Bucketing.writeBucketed(lineitem, "b_lineitem", "o_orderkey", 8)
-    // force the sort-merge path: at fixture scale Spark would broadcast
-    // (which also shows an Exchange); the claim under test is the
-    // BIG-big join shape, where broadcast is off the table anyway
-    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(thresholdKey)
-    spark.conf.set(thresholdKey, "-1")
-    try {
-      val joined = Bucketing.coLocatedJoin(spark, "b_orders",
-        "b_lineitem", "o_orderkey")
-      val plan = planOf(joined)
-      assert(!plan.contains("Exchange"),
-        s"co-bucketed join must not shuffle:\n$plan")
-      // NOTE: Spark still inserts a WITHIN-PARTITION Sort before the
-      // merge join (its sorted-bucket scan detection is conservative);
-      // that sort is per-task and spillable — the property that matters
-      // at 100 TB is the absent Exchange, which moves data across the
-      // cluster. Pin the join strategy too:
-      assert(plan.contains("SortMergeJoin"), "bucketed big-big join " +
-        "is a sort-merge join, not a nested loop")
-      val expected = orders.join(lineitem, "o_orderkey").count()
-      assert(joined.count() == expected)
-    } finally {
-      spark.conf.set(thresholdKey, prev)
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    }
-  }
-
-  test("mismatched bucket counts fall back to a correct (shuffling) join") {
-    val orders = spark.read.parquet(s"$sf/orders.parquet")
-      .select(col("o_orderkey"), col("o_totalprice"))
-    val lineitem = spark.read.parquet(s"$sf/lineitem.parquet")
-      .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
-    Bucketing.writeBucketed(orders, "b8_orders", "o_orderkey", 8)
-    Bucketing.writeBucketed(lineitem, "b4_lineitem", "o_orderkey", 4)
-    try {
-      val joined = Bucketing.coLocatedJoin(spark, "b8_orders",
-        "b4_lineitem", "o_orderkey")
-      assert(joined.count() ==
-        orders.join(lineitem, "o_orderkey").count())
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS b8_orders")
-      spark.sql("DROP TABLE IF EXISTS b4_lineitem")
-    }
-  }
+  /** `bucketBy(buckets, key)` managed table, pre-shuffled onto the
+    * bucket hash so each task writes one file per bucket. */
+  private def writeBucketed(df: org.apache.spark.sql.DataFrame,
+      table: String, key: String, buckets: Int): Unit =
+    df.repartition(buckets, df.col(key))
+      .write.mode(SaveMode.Overwrite)
+      .format("parquet").bucketBy(buckets, key).sortBy(key)
+      .saveAsTable(table)
 
   test("snapshot diff over co-bucketed versions plans with ZERO " +
       "Exchange — the nightly-CDC claim in snapshotDiff's scaladoc, " +
@@ -74,8 +30,8 @@ class BucketingSpec extends SparkSpecBase {
       .select(col("o_orderkey"),
         when(col("o_orderkey") % 7 === 0, "Z")
           .otherwise(col("o_orderstatus")).as("o_orderstatus"))
-    Bucketing.writeBucketed(v0, "snap_v0", "o_orderkey", 8)
-    Bucketing.writeBucketed(v1, "snap_v1", "o_orderkey", 8)
+    writeBucketed(v0, "snap_v0", "o_orderkey", 8)
+    writeBucketed(v1, "snap_v1", "o_orderkey", 8)
     try {
       val diff = graft.operators.Relational.snapshotDiff(
         spark.table("snap_v0"), spark.table("snap_v1"),

@@ -35,16 +35,6 @@ class DedupSpec extends SparkSpecBase {
     assert(recall > 0.99, s"recall $recall")
   }
 
-  test("prefix-filtered jaccard ≡ full-index jaccard (lossless filter)") {
-    val withDups = Dedup.docsWithNearDups(docs)
-    val pref = Dedup.ngramJaccardPairsPrefix(withDups)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val full = Dedup.ngramJaccardPairs(withDups)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pref == full,
-      s"prefix-only=${pref -- full} full-only=${full -- pref}")
-  }
-
   test("minhash candidates ≈ exact jaccard pairs (LSH vs ground truth)") {
     val lsh = Dedup.minhashPairs(Dedup.docsWithNearDups(docs))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -171,39 +161,6 @@ class DedupSpec extends SparkSpecBase {
     assert(got == brute, s"only-got=${got -- brute} only-brute=${brute -- got}")
   }
 
-  test("simhash multi-band LSH is EXACT for hamming ≤ 3 (pigeonhole)") {
-    val corpus = Dedup.docsWithNearDups(docs)
-    val found = Dedup.simhashPairs(corpus).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    assert(found.forall(_._3 <= 3))
-    // ground truth: brute-force hamming over all pairs
-    graft.functions.SignatureExprs.register(spark)
-    val sigs = corpus.select(col("doc_id"),
-      Dedup.simhash(col("text")).as("sig"))
-    val truth = sigs.as("a").crossJoin(sigs.as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id"), col("b.doc_id"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("h"))
-      .filter(col("h") <= 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(found.toSet == truth,
-      s"found ${found.length} vs truth ${truth.size}")
-  }
-
-  test("dropNearDuplicates keeps one representative per pair") {
-    val corpus = Dedup.docsWithNearDups(docs)
-    val survivors = Dedup.dropNearDuplicates(corpus)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // greedy keep-lowest-id: survivors = all docs minus every doc named
-    // as the greater side of a verified pair (organic near-dups exist
-    // among the originals too — e.g. docs 0↔50 — so originals CAN drop)
-    val detected = Dedup.minhashPairs(corpus)
-      .select("doc_b").collect().map(_.getLong(0)).toSet
-    assert(survivors.contains(0L)) // smallest id can never be doc_b
-    assert(detected.forall(d => !survivors.contains(d)))
-    assert(survivors.size == 1000 - detected.size)
-  }
-
   test("embedding near-dup finds scaled copies via hyperplane LSH") {
     val emb = load(spark, sf, "embeddings")
     val rows = Dedup.embeddingNearDupPairs(Dedup.embeddingsWithNearDups(emb))
@@ -212,16 +169,6 @@ class DedupSpec extends SparkSpecBase {
     val recall = planted(500).count(found.contains).toDouble / 500
     assert(recall > 0.7, s"recall $recall")
     assert(rows.forall(_.getDouble(2) >= 0.95))
-  }
-
-  test("hash-first exact dedup keeps one row per distinct text") {
-    // duplicate the corpus exactly (same text, shifted ids): survivors
-    // must be the 500 originals (lowest id per content hash)
-    val doubled = docs.select(col("doc_id"), col("text"))
-      .union(docs.select(col("doc_id") + 500000, col("text")))
-    val survivors = Dedup.exactDedupByHash(doubled)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(survivors == (0L until 500L).toSet)
   }
 
   test("exact dedup: distinct-text count matches groupBy-distinct sum") {
@@ -314,24 +261,6 @@ class DedupSpec extends SparkSpecBase {
     assert(kept == Set(2L, 3L))
   }
 
-  test("bloom decontamination: survivors ⊆ exact survivors (no false " +
-      "negatives), and ≡ exact at tight fpp on the fixture") {
-    val docs = load(spark, sf, "documents")
-    val bench = docs.filter(col("doc_id") % 17 === 0)
-    val exact = Dedup.decontaminate(docs, bench)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val bloomed = Dedup.decontaminateBloom(docs, bench, fpp = 1e-6)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // one-sided error: a contaminated doc can never survive the bloom
-    assert(bloomed.subsetOf(exact))
-    // at fpp 1e-6 on a fixture-sized shingle set, no FP fires
-    assert(bloomed == exact)
-    // looser filter may over-drop but never under-drop
-    val loose = Dedup.decontaminateBloom(docs, bench, fpp = 0.05)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(loose.subsetOf(exact))
-  }
-
   test("q63 pipeline: every stage only removes rows; survivors respect " +
       "all four stage predicates") {
     val corpus = Dedup.docsWithNearDups(load(spark, sf, "documents"))
@@ -408,7 +337,8 @@ class DedupSpec extends SparkSpecBase {
       (13L, "completely unrelated words in this new document"))
       .toDF("doc_id", "text")
     val survivors = graft.operators.Dedup
-      .crossCorpusDedup(existing, incoming)
+      .crossCorpusDedupIndexed(
+        graft.operators.Dedup.crossCorpusIndexOf(existing), incoming)
       .collect().map(_.getLong(0)).toSet
     assert(survivors == Set(12L, 13L))
   }
@@ -441,8 +371,9 @@ class DedupSpec extends SparkSpecBase {
     val incoming = docs.select(
       (col("doc_id") + lit(Dedup.NearDupIdOffset)).as("doc_id"),
       when(col("doc_id") % 3 === 0, nearDup).otherwise(half).as("text"))
+    val idx = Dedup.crossCorpusIndexOf(docs)
     def run(cap: Int): Set[Long] =
-      Dedup.crossCorpusDedup(docs, incoming, dfCap = cap)
+      Dedup.crossCorpusDedupIndexed(idx, incoming, dfCap = cap)
         .collect().map(_.getLong(0)).toSet
     val uncapped = run(Int.MaxValue)
     assert(uncapped.nonEmpty)
@@ -486,8 +417,9 @@ class DedupSpec extends SparkSpecBase {
     assert(capped < n)
     // correctness: the near-copy 5002 is dropped, boilerplate-only
     // 5001 survives — identically under both caps
+    val idx = Dedup.crossCorpusIndexOf(existing)
     def run(cap: Int): Set[Long] =
-      Dedup.crossCorpusDedup(existing, incoming, dfCap = cap)
+      Dedup.crossCorpusDedupIndexed(idx, incoming, dfCap = cap)
         .collect().map(_.getLong(0)).toSet
     assert(run(8) == Set(5001L))
     assert(run(Int.MaxValue) == Set(5001L))
@@ -497,8 +429,8 @@ class DedupSpec extends SparkSpecBase {
     val allSame = (1 to n).map(i => (i.toLong, "alpha beta gamma delta"))
       .toDF("doc_id", "text")
     val copyIn = Seq((9001L, "alpha beta gamma delta")).toDF("doc_id", "text")
-    assert(Dedup.crossCorpusDedup(allSame, copyIn, dfCap = 4)
-      .collect().isEmpty)
+    assert(Dedup.crossCorpusDedupIndexed(Dedup.crossCorpusIndexOf(allSame),
+      copyIn, dfCap = 4).collect().isEmpty)
   }
 
   // ------------------------- round-10 dedup ops-audit family pins

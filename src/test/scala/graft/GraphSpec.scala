@@ -334,12 +334,11 @@ class GraphSpec extends SparkSpecBase {
     // baskets: c1{10,20}, c2{10,20}, c3{10,30}, c4{40} -> N=4 baskets
     // co(10,20)=2, n10=3, n20=2: conf 10->20 = 2e6 div 3 = 666666,
     // conf 20->10 = 1000000, lift = 2*4e6 div (3*2) = 1333333
-    val li = Seq((1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L),
+    val bought = Seq((1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L),
       (3L, 10L), (3L, 30L), (4L, 40L))
-      .toDF("l_orderkey", "l_partkey")
-    val ord = Seq((1L, 1L), (2L, 2L), (3L, 3L), (4L, 4L))
-      .toDF("o_orderkey", "o_custkey")
-    val rules = Graph.assocRules(li, ord, minCo = 2L, k = 10)
+      .toDF("cust", "item")
+    val rules = Graph.assocRulesFrom(bought,
+      Graph.coCounts(bought, minCo = 2L), k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(rules((10L, 20L)) == ((2L, 666666L, 1333333L)))
@@ -360,11 +359,6 @@ class GraphSpec extends SparkSpecBase {
     assert(nodes(Graph.kCore(g, 2)) == Set(1L, 2L, 3L, 4L))
     assert(nodes(Graph.kCore(g, 3)) == Set(1L, 2L, 3L, 4L))
     assert(Graph.kCore(g, 4).isEmpty)
-    // core numbers agree: core(n) ≥ k ⟺ n ∈ k-core
-    val cores = Graph.coreNumbers(g).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cores == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
-      5L -> 1L, 6L -> 1L, 7L -> 1L))
   }
 
   test("k-core on the co-supply graph ≡ a driver-side peeling replay") {

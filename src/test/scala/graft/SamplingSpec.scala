@@ -3,7 +3,7 @@ package graft
 import graft.Tables.load
 import graft.operators.Sampling
 
-/** Deterministic sampling: stability, rate, and split partition laws. */
+/** Deterministic sampling: stability, rate, and weighted-sample laws. */
 class SamplingSpec extends SparkSpecBase {
 
   private lazy val docs = load(spark, sf, "documents")
@@ -21,17 +21,6 @@ class SamplingSpec extends SparkSpecBase {
     val n = docs.count().toDouble
     val k = Sampling.deterministicSample(docs, "doc_id", 4).count().toDouble
     assert(math.abs(k / n - 0.25) < 0.1, s"rate ${k / n}")
-  }
-
-  test("train/val/test partitions: disjoint and covering") {
-    val (tr, va, te) = Sampling.trainValTestSplit(docs, "doc_id", 2, 2)
-    val trs = tr.select("doc_id").collect().map(_.getLong(0)).toSet
-    val vas = va.select("doc_id").collect().map(_.getLong(0)).toSet
-    val tes = te.select("doc_id").collect().map(_.getLong(0)).toSet
-    val all = docs.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert((trs & vas).isEmpty && (trs & tes).isEmpty && (vas & tes).isEmpty)
-    assert((trs | vas | tes) == all)
-    assert(vas.nonEmpty && tes.nonEmpty)
   }
 
   test("md5Bucket20 stays in [0, 2^20) and is a pure key function") {

@@ -199,19 +199,6 @@ class SimilaritySpec extends SparkSpecBase {
     assert(vn2as.forall(v => v > 0 && v <= 2.0),
       s"reconstructed norm² outside (0, 2]: " +
         s"${vn2as.filter(v => v <= 0 || v > 2.0).take(3).mkString(",")}")
-    // recall against brute force on the fixture queries
-    val brute = Similarity.q34aKnnBrute(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSet
-    def recall(refine: Int): Double = {
-      val got = Similarity.knnPq(emb, emb.filter(col("vec_id") < 5),
-        k = 10, refine = refine).collect()
-        .map(r => (r.getLong(0), r.getLong(2))).toSet
-      brute.count(got.contains).toDouble / brute.size
-    }
-    val r1 = recall(1)
-    val r4 = recall(4)
-    assert(r4 >= r1, s"refine=4 recall $r4 < refine=1 recall $r1")
-    assert(r4 > 0.5, s"refine=4 recall $r4 — ADC shortlist too lossy")
   }
 
   test("q154 dispersion identity == brute-force pairwise sum on " +
@@ -364,38 +351,6 @@ class SimilaritySpec extends SparkSpecBase {
         r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     assert(got(0L) == ((1L, 2L, 3938L, 1969L, 3938L)), s"$got")
     assert(got(1L) == ((1L, 2L, 1969L, 984L, 1969L)), s"$got")
-  }
-
-  test("semanticDedupKMeans (q246 trained cells in q230's machinery): " +
-      "candidates stay CELL-BOUNDED — pair fan-out = Σ n_c·(n_c−1)/2 " +
-      "over the trained assignment, plan cartesian-free, and a " +
-      "within-cell duplicate still drops") {
-    import spark.implicits._
-    val vecs = Seq(
-      (0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)),
-      (2L, Seq(0.9f, 0.1f, 0f, 0f)), (3L, Seq(0.9f, 0.1f, 0f, 0f)),
-      (4L, Seq(0.6f, 0.59f, 0f, 0f)), (5L, Seq(0.59f, 0.6f, 0f, 0f)))
-      .toDF("vec_id", "embedding")
-    val dedup = Similarity.semanticDedupKMeans(vecs, k = 2, rounds = 2,
-      thresholdE6 = 999000L)
-    assert(!dedup.queryExecution.executedPlan.toString
-      .contains("CartesianProduct"),
-      "within-cell pair join must be an equi-join on the cell key")
-    val survivors = dedup.collect().map(_.getLong(0)).toSet
-    assert(!survivors.contains(3L) && survivors.contains(2L),
-      s"got $survivors — the within-cell exact dup must drop")
-    // cell-bounded candidate count: pair join rows = Σ n_c·(n_c−1)/2
-    val (_, assign) = graft.operators.Clustering.kMeansShared(
-      vecs, k = 2, rounds = 2)
-    val sizes = assign.groupBy("cell").count().collect()
-      .map(_.getLong(1))
-    val expectPairs = sizes.map(n => n * (n - 1) / 2).sum
-    val cv = vecs.join(assign, "vec_id")
-    val gotPairs = cv.as("a").join(cv.as("b"),
-      col("a.cell") === col("b.cell") &&
-        col("a.vec_id") < col("b.vec_id")).count()
-    assert(gotPairs == expectPairs,
-      s"pair join must be cell-bounded: $gotPairs != $expectPairs")
   }
 
   test("q299 MMR: rank-1 pick is the pure relevance argmax, ranks " +

@@ -323,7 +323,8 @@ class StreamingSpec extends SparkSpecBase {
       SVec(0L, Seq(0f, 0f, 1f, 1f)), SVec(1L, Seq(4f, 4f, 5f, 5f)),
       SVec(2L, Seq(0.1f, 0f, 1f, 1.1f)), SVec(3L, Seq(4f, 4.1f, 5f, 5f)))
     val streamed = key(runAvailableNow(
-      StreamOps.pqEncodeStream(input.toDF(), books), "pqencode"))
+      graft.operators.Similarity.pqEncode(input.toDF(), books),
+      "pqencode"))
     assert(streamed == batch && batch.size == 4)
   }
 
@@ -342,7 +343,8 @@ class StreamingSpec extends SparkSpecBase {
       .collect()
       .map(r => SVec(r.getLong(0), r.getSeq[Float](1)))
     val input = MemoryStream[SVec](spark)
-    val df = StreamOps.ivfAdcServeStream(input.toDF(), ix)
+    val df = Similarity.ivfAdcServe(input.toDF(), ix, probes = 4,
+      shortlist = 50, k = 10)
     val q = df.writeStream.format("memory").queryName("ivfserve")
       .outputMode("append")
       .option("checkpointLocation",
@@ -378,7 +380,8 @@ class StreamingSpec extends SparkSpecBase {
       .collect()
       .map(r => SVec(r.getLong(0), r.getSeq[Float](1)))
     val input = MemoryStream[SVec](spark)
-    val df = StreamOps.ivfAdcRefineServeStream(input.toDF(), ix)
+    val df = Similarity.ivfAdcRefineServe(input.toDF(), ix, probes = 4,
+      shortlist = 50, k = 10)
     val q = df.writeStream.format("memory").queryName("ivfrefserve")
       .outputMode("append")
       .option("checkpointLocation",
@@ -497,7 +500,8 @@ class StreamingSpec extends SparkSpecBase {
     val firstArrivals = (b1 ++ b2).filterNot(_.doc_id == 103L)
       .map(d => (d.doc_id, d.text)).toDF("doc_id", "text")
     val batch = graft.operators.Dedup
-      .crossCorpusDedup(existing, firstArrivals)
+      .crossCorpusDedupIndexed(
+        graft.operators.Dedup.crossCorpusIndexOf(existing), firstArrivals)
       .collect().map(_.getLong(0)).toSet
     assert(batch == Set(102L, 104L, 999L))
     assert(streamed == batch,
@@ -544,7 +548,9 @@ class StreamingSpec extends SparkSpecBase {
     val firstArrivals = real.filterNot(_.doc_id == 103L)
       .map(d => (d.doc_id, d.text)).toDF("doc_id", "text")
     val batchSurvivors = graft.operators.Dedup
-      .crossCorpusDedup(existing, firstArrivals).count()
+      .crossCorpusDedupIndexed(
+        graft.operators.Dedup.crossCorpusIndexOf(existing), firstArrivals)
+      .count()
     assert(incoming == real.length.toLong)
     assert(dropped == incoming - batchSurvivors,
       s"dropped $dropped != ${incoming - batchSurvivors}")
@@ -1092,7 +1098,8 @@ class StreamingSpec extends SparkSpecBase {
       Ev(ts(3), "q", 999.0, 203L), Ev(ts(5), "q", 7.0, 205L),
       Ev(ts(4), "x", 1e9, 204L))
     val streamed = runAvailableNow(
-      StreamOps.valueOutliersStream(input.toDF(), history.toDF()),
+      graft.operators.Stats.flagOutliers(input.toDF(),
+        graft.operators.Stats.valueStats(history.toDF()), 3),
       "outliers")
       .collect().map(_.getAs[Long]("user_id")).toSet
     assert(streamed == Set(202L, 203L))
@@ -1490,8 +1497,9 @@ class StreamingSpec extends SparkSpecBase {
     val b2 = Seq((1L, ts(40)),
       (9L, Timestamp.valueOf("2024-01-02 10:00:00")))
     val input = MemoryStream[(Long, Timestamp)](spark)
-    val q = StreamOps.sessionWindowStream(
-        input.toDF().toDF("user_id", "ts"))
+    val q = graft.operators.Behavioral.sessionWindowAgg(
+        input.toDF().toDF("user_id", "ts").withWatermark("ts", "2 hours"),
+        "30 minutes")
       .writeStream.format("memory").queryName("swstream")
       .outputMode("append")
       .option("checkpointLocation",
@@ -1605,7 +1613,7 @@ class StreamingSpec extends SparkSpecBase {
       .map { case (qid, ts2) => (qid, ts2.map(_._2)) }
       .sortBy(_._1)
     val input = MemoryStream[(Long, Seq[String])](spark)
-    val df = StreamOps.bm25ServeStream(
+    val df = TextOps.bm25Serve(
       input.toDF().toDF("query_id", "terms"), ix)
     val q = df.writeStream.format("memory").queryName("bm25serve")
       .outputMode("append")
