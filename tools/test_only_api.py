@@ -151,7 +151,7 @@ def main():
     use = {}
     decls = []
     for top in USERS:
-        for path in sources(top, (".scala", ".java", ".py")):
+        for path in sources(top, (".scala", ".py")):
             code, braces = code_of(path)
             for w, k in words(code).items():
                 use[w] = use.get(w, 0) + k
@@ -163,7 +163,7 @@ def main():
     for _, _, name in decls:
         ndefs[name] = ndefs.get(name, 0) + 1
     tests = {}
-    for path in sources(TEST, (".scala", ".java")):
+    for path in sources(TEST, (".scala",)):
         for w in words(code_of(path)[0]):
             tests.setdefault(w, []).append(os.path.basename(path))
     for rel, lineno, name in decls:
