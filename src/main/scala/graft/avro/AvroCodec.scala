@@ -3,11 +3,13 @@ package graft.avro
 import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.avro.{AvroTypeException, Schema, UnresolvedUnionException}
+import org.apache.avro.Schema.Type._
+import org.apache.avro.generic.{GenericData, GenericEnumSymbol, GenericFixed, GenericRecord}
+import org.apache.avro.io.{Decoder, DecoderFactory, Encoder, EncoderFactory}
 
 /** Binary Avro encode/decode with optional Confluent wire framing.
   *
@@ -17,6 +19,12 @@ import org.apache.avro.io.{DecoderFactory, EncoderFactory}
   * §7.4.1). Offline there is no registry, so the id is caller-supplied
   * and registry HTTP is out of scope — the framing itself round-trips
   * exactly.
+  *
+  * Values are plain Scala, as in AvroInference: `Map[String, Any]` for a
+  * record or an Avro map, `Seq` for an array, `String`, `Int`/`Long`,
+  * `Float`/`Double`, `Boolean`, `Array[Byte]` and `null`. Enum and fixed
+  * values are Avro's own `GenericEnumSymbol` and `GenericFixed`, as the
+  * Generic datum reader returns them.
   */
 object AvroCodec {
 
@@ -24,9 +32,24 @@ object AvroCodec {
 
   def parseable(json: String): Schema = new Schema.Parser().parse(json)
 
-  /** Scala value (Map/Seq/primitive, as in AvroInference) → Avro datum. */
-  def toDatum(value: Any, schema: Schema): Any = value match {
-    case m: Map[_, _] =>
+  /** Scala value → Avro Generic datum; with [[fromDatum]] and Avro's
+    * `GenericDatumWriter`/`GenericDatumReader`, the reference that the
+    * compiled codec is tested against. */
+  def toDatum(value: Any, schema: Schema): Any = (value, schema.getType) match {
+    case (m: Map[_, _], UNION) =>
+      val i = mapBranch(schema, m.asInstanceOf[Map[String, Any]])
+      if (i < 0) throw new UnresolvedUnionException(schema, value)
+      toDatum(m, schema.getTypes.get(i))
+    case (xs: Seq[_], UNION) =>
+      toDatum(xs, schema.getTypes.asScala.find(_.getType == ARRAY)
+        .getOrElse(throw new UnresolvedUnionException(schema, value)))
+    case (m: Map[_, _], MAP) =>
+      val datum = new java.util.LinkedHashMap[String, Any]()
+      m.asInstanceOf[Map[String, Any]].foreach { case (k, v) =>
+        datum.put(k, toDatum(v, schema.getValueType))
+      }
+      datum
+    case (m: Map[_, _], _) =>
       val rec = new GenericData.Record(schema)
       m.asInstanceOf[Map[String, Any]].foreach { case (k, v) =>
         val f = schema.getField(k)
@@ -34,22 +57,25 @@ object AvroCodec {
         rec.put(k, toDatum(v, f.schema()))
       }
       rec
-    case xs: Seq[_] =>
+    case (xs: Seq[_], _) =>
       new GenericData.Array[Any](schema,
         xs.map(x => toDatum(x, schema.getElementType)).asJava)
-    case s: String => new org.apache.avro.util.Utf8(s)
-    case i: Int => i.toLong
-    case b: Array[Byte] => ByteBuffer.wrap(b)
-    case other =>
-      // unions ([null, T]) accept the raw value directly
+    case (s: String, _) => new org.apache.avro.util.Utf8(s)
+    case (i: Int, _) => i.toLong
+    case (b: Array[Byte], _) => ByteBuffer.wrap(b)
+    case (other, _) =>
+      // primitives, enum symbols and fixeds are datums already; a union
+      // picks their branch from the datum's class (GenericData.resolveUnion)
       other
   }
 
-  /** Avro datum → plain Scala value (inverse of toDatum). */
+  /** Avro Generic datum → plain Scala value (inverse of toDatum). */
   def fromDatum(datum: Any): Any = datum match {
     case r: GenericRecord =>
       r.getSchema.getFields.asScala
         .map(f => f.name() -> fromDatum(r.get(f.pos()))).toMap
+    case m: java.util.Map[_, _] =>
+      m.asScala.map { case (k, v) => k.toString -> fromDatum(v) }.toMap
     case u: org.apache.avro.util.Utf8 => u.toString
     case a: java.util.Collection[_] => a.asScala.toSeq.map(fromDatum)
     case b: ByteBuffer =>
@@ -57,25 +83,237 @@ object AvroCodec {
     case other => other
   }
 
-  /** A schema compiled once for the hot path: the parsed `Schema` with
-    * one datum writer and one datum reader. Encoding and decoding reuse
-    * them, so Avro's per-thread resolver cache keeps one entry per
-    * compiled schema instead of one per parse. It keeps no per-call
-    * buffers, so one instance may be shared across threads. */
+  /** The union branch a Scala `Map` is written as: the first record
+    * branch with a field for each of its keys, else the map branch; -1
+    * when neither exists. */
+  private def mapBranch(union: Schema, m: Map[String, Any]): Int = {
+    val branches = union.getTypes.asScala
+    val record = branches.indexWhere(b =>
+      b.getType == RECORD && m.keysIterator.forall(b.getField(_) != null))
+    if (record >= 0) record else branches.indexWhere(_.getType == MAP)
+  }
+
+  /** One node of a compiled schema: writes a Scala value of its schema
+    * to an encoder, and reads one back from a decoder. */
+  private abstract class Node {
+    def write(value: Any, out: Encoder): Unit
+    def read(in: Decoder): Any
+  }
+
+  // Primitive writers convert as GenericDatumWriter does: numbers through
+  // `Number`, so an Int fits a long slot; a null value throws.
+  private object NullNode extends Node {
+    def write(value: Any, out: Encoder): Unit = out.writeNull()
+    def read(in: Decoder): Any = { in.readNull(); null }
+  }
+  private object BooleanNode extends Node {
+    def write(value: Any, out: Encoder): Unit =
+      out.writeBoolean(value.asInstanceOf[java.lang.Boolean].booleanValue)
+    def read(in: Decoder): Any = in.readBoolean()
+  }
+  private object IntNode extends Node {
+    def write(value: Any, out: Encoder): Unit =
+      out.writeInt(value.asInstanceOf[Number].intValue)
+    def read(in: Decoder): Any = in.readInt()
+  }
+  private object LongNode extends Node {
+    def write(value: Any, out: Encoder): Unit =
+      out.writeLong(value.asInstanceOf[Number].longValue)
+    def read(in: Decoder): Any = in.readLong()
+  }
+  private object FloatNode extends Node {
+    def write(value: Any, out: Encoder): Unit =
+      out.writeFloat(value.asInstanceOf[Number].floatValue)
+    def read(in: Decoder): Any = in.readFloat()
+  }
+  private object DoubleNode extends Node {
+    def write(value: Any, out: Encoder): Unit =
+      out.writeDouble(value.asInstanceOf[Number].doubleValue)
+    def read(in: Decoder): Any = in.readDouble()
+  }
+  private object StringNode extends Node {
+    def write(value: Any, out: Encoder): Unit =
+      out.writeString(value.asInstanceOf[CharSequence])
+    def read(in: Decoder): Any = in.readString()
+  }
+  private object BytesNode extends Node {
+    def write(value: Any, out: Encoder): Unit =
+      out.writeBytes(value.asInstanceOf[Array[Byte]])
+    // readBytes(null) allocates a buffer of exactly the payload's length
+    def read(in: Decoder): Any = in.readBytes(null).array()
+  }
+
+  private final class EnumNode(schema: Schema) extends Node {
+    private val symbols: Array[AnyRef] = schema.getEnumSymbols.asScala
+      .map(s => new GenericData.EnumSymbol(schema, s): AnyRef).toArray
+    def write(value: Any, out: Encoder): Unit = value match {
+      case e: GenericEnumSymbol[_] => out.writeEnum(schema.getEnumOrdinal(e.toString))
+      case _ => throw new AvroTypeException(
+        s"value $value is not a symbol of enum ${schema.getFullName}")
+    }
+    def read(in: Decoder): Any = symbols(in.readEnum())
+  }
+
+  private final class FixedNode(schema: Schema) extends Node {
+    private val size = schema.getFixedSize
+    def write(value: Any, out: Encoder): Unit =
+      out.writeFixed(value.asInstanceOf[GenericFixed].bytes(), 0, size)
+    def read(in: Decoder): Any = {
+      val bytes = new Array[Byte](size)
+      in.readFixed(bytes, 0, size)
+      new GenericData.Fixed(schema, bytes)
+    }
+  }
+
+  private final class ArrayNode(items: Node) extends Node {
+    def write(value: Any, out: Encoder): Unit = {
+      val xs = value.asInstanceOf[Seq[Any]]
+      out.writeArrayStart()
+      out.setItemCount(xs.size)
+      val it = xs.iterator
+      while (it.hasNext) { out.startItem(); items.write(it.next(), out) }
+      out.writeArrayEnd()
+    }
+    def read(in: Decoder): Any = {
+      val xs = List.newBuilder[Any]
+      var n = in.readArrayStart()
+      while (n > 0) {
+        var i = 0L
+        while (i < n) { xs += items.read(in); i += 1 }
+        n = in.arrayNext()
+      }
+      xs.result()
+    }
+  }
+
+  private final class MapNode(values: Node) extends Node {
+    def write(value: Any, out: Encoder): Unit = {
+      val m = value.asInstanceOf[Map[String, Any]]
+      out.writeMapStart()
+      out.setItemCount(m.size)
+      m.foreachEntry { (k, v) =>
+        out.startItem(); out.writeString(k); values.write(v, out)
+      }
+      out.writeMapEnd()
+    }
+    def read(in: Decoder): Any = {
+      val m = Map.newBuilder[String, Any]
+      var n = in.readMapStart()
+      while (n > 0) {
+        var i = 0L
+        while (i < n) { m += in.readString() -> values.read(in); i += 1 }
+        n = in.mapNext()
+      }
+      m.result()
+    }
+  }
+
+  /** A record's field nodes are set after the node exists, so a field
+    * can refer back to its own record (recursive schemas). */
+  private final class RecordNode(schema: Schema) extends Node {
+    private val names = schema.getFields.asScala.map(_.name).toArray
+    private val index = new java.util.HashMap[String, Integer]()
+    names.indices.foreach(i => index.put(names(i), i))
+    var fields: Array[Node] = _
+
+    /** Keys are checked before any field is written, as toDatum does. */
+    def write(value: Any, out: Encoder): Unit = {
+      val values = new Array[Any](names.length)
+      value.asInstanceOf[Map[String, Any]].foreachEntry { (k, v) =>
+        val i = index.get(k)
+        if (i == null) throw new IllegalArgumentException(s"field '$k' not in schema")
+        values(i) = v
+      }
+      var i = 0
+      while (i < values.length) { fields(i).write(values(i), out); i += 1 }
+    }
+    def read(in: Decoder): Any = {
+      val m = Map.newBuilder[String, Any]
+      var i = 0
+      while (i < names.length) { m += names(i) -> fields(i).read(in); i += 1 }
+      m.result()
+    }
+  }
+
+  /** Picks a value's branch as GenericData.resolveUnion picks it for
+    * `toDatum(value)`: by the datum's class, with Int widened to long. */
+  private final class UnionNode(schema: Schema, branches: Array[Node]) extends Node {
+    /** Branch index of each unnamed type, by `Schema.Type` ordinal; -1
+      * where the union has no such branch. */
+    private val byType = Schema.Type.values.map(t =>
+      schema.getTypes.asScala.indexWhere(_.getType == t))
+    private def at(t: Schema.Type): Int = byType(t.ordinal)
+
+    private def named(name: String): Int =
+      Option(schema.getIndexNamed(name)).fold(-1)(_.intValue)
+
+    private def branchOf(value: Any): Int = value match {
+      case null => at(NULL)
+      case m: Map[_, _] => mapBranch(schema, m.asInstanceOf[Map[String, Any]])
+      case _: Seq[_] => at(ARRAY)
+      case _: CharSequence => at(STRING)
+      case _: Int | _: Long => at(LONG)
+      case _: Double => at(DOUBLE)
+      case _: Boolean => at(BOOLEAN)
+      case _: Array[Byte] => at(BYTES)
+      case _: Float => at(FLOAT)
+      case e: GenericEnumSymbol[_] => named(e.getSchema.getFullName)
+      case f: GenericFixed => named(f.getSchema.getFullName)
+      case _ => -1
+    }
+
+    def write(value: Any, out: Encoder): Unit = {
+      val i = branchOf(value)
+      if (i < 0) throw new UnresolvedUnionException(schema, value)
+      out.writeIndex(i)
+      branches(i).write(value, out)
+    }
+    def read(in: Decoder): Any = branches(in.readIndex()).read(in)
+  }
+
+  /** One node per schema node; a named record compiles once, so a
+    * recursive reference reuses the node being built. */
+  private def compile(schema: Schema, records: mutable.Map[String, RecordNode]): Node =
+    schema.getType match {
+      case RECORD => records.getOrElse(schema.getFullName, {
+        val node = new RecordNode(schema)
+        records(schema.getFullName) = node
+        node.fields = schema.getFields.asScala.map(f => compile(f.schema(), records)).toArray
+        node
+      })
+      case ENUM => new EnumNode(schema)
+      case ARRAY => new ArrayNode(compile(schema.getElementType, records))
+      case MAP => new MapNode(compile(schema.getValueType, records))
+      case UNION =>
+        new UnionNode(schema, schema.getTypes.asScala.map(compile(_, records)).toArray)
+      case FIXED => new FixedNode(schema)
+      case STRING => StringNode
+      case BYTES => BytesNode
+      case INT => IntNode
+      case LONG => LongNode
+      case FLOAT => FloatNode
+      case DOUBLE => DoubleNode
+      case BOOLEAN => BooleanNode
+      case NULL => NullNode
+    }
+
+  /** A schema compiled once for the hot path into one writer/reader node
+    * per schema node. Encoding walks the Scala value straight into a
+    * direct binary encoder over the output stream; decoding reads the
+    * binary decoder straight into Scala values. The nodes are immutable
+    * once built and each call makes its own encoder or decoder, so one
+    * instance may be shared across threads. */
   final case class Compiled(schema: Schema) {
-    private val writer = new GenericDatumWriter[Any](schema)
-    private val reader = new GenericDatumReader[Any](schema)
+    private val root = compile(schema, mutable.Map.empty)
 
     private def write(value: Any, out: ByteArrayOutputStream): Array[Byte] = {
-      val encoder = EncoderFactory.get().binaryEncoder(out, null)
-      writer.write(toDatum(value, schema), encoder)
-      encoder.flush()
+      root.write(value, EncoderFactory.get().directBinaryEncoder(out, null))
       out.toByteArray
     }
 
     private def read(bytes: Array[Byte], offset: Int): Any =
-      fromDatum(reader.read(null, DecoderFactory.get()
-        .binaryDecoder(bytes, offset, bytes.length - offset, null)))
+      root.read(DecoderFactory.get()
+        .binaryDecoder(bytes, offset, bytes.length - offset, null))
 
     def encode(value: Any): Array[Byte] = write(value, new ByteArrayOutputStream())
 
@@ -96,8 +334,12 @@ object AvroCodec {
       * codec by [[schemaIdOf]]. */
     def decodeFramed(bytes: Array[Byte]): Any = {
       checkFrame(bytes)
-      read(bytes, 5)
+      decodeChecked(bytes)
     }
+
+    /** [[decodeFramed]] for a frame whose header [[schemaIdOf]] has
+      * already checked. */
+    private[graft] def decodeChecked(frame: Array[Byte]): Any = read(frame, 5)
   }
 
   def encode(value: Any, schema: Schema): Array[Byte] =

@@ -35,9 +35,9 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
   protected lazy val consumer: TransportConsumer = makeConsumer()
 
   private val offsets = mutable.Map[TopicPartition, Long]()
-  /** The offsets of the last successful commit; an equal map is not
-    * committed again. */
-  private var lastCommitted = Map.empty[TopicPartition, Long]
+  /** Set when an offset changes, cleared by a successful commit: offsets
+    * already on the broker are not committed again. */
+  private var offsetsChanged = false
   private val eofReached = mutable.Map[TopicPartition, Boolean]()
 
   private val codecs = mutable.LongMap[AvroCodec.Compiled]()
@@ -67,7 +67,7 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
       val schemaJson = broker.schemaById(id).getOrElse(
         throw new IllegalStateException(s"unknown schema id $id (poison pill)"))
       AvroCodec.Compiled(AvroCodec.parseable(schemaJson))
-    }).decodeFramed(bytes)
+    }).decodeChecked(bytes)
   }
 
   def hasPartitionAssignments: Boolean = consumer.assignment.nonEmpty
@@ -91,10 +91,14 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
       eofReached(tp) = false
       val res = onMessageReceived(msg)
       offsets(tp) = msg.offset + 1 // K5: +1 semantics
+      offsetsChanged = true
       res
     case Poll.Eof(tp, nextOffset) =>
       eofReached(tp) = true
-      offsets.getOrElseUpdate(tp, nextOffset) // keep offset alive (K6)
+      if (!offsets.contains(tp)) { // keep offset alive (K6)
+        offsets(tp) = nextOffset
+        offsetsChanged = true
+      }
       onEofReceived(tp)
     case Poll.NoMessage => onNoMessageReceived()
     case Poll.Failure(e) =>
@@ -117,11 +121,12 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
     else commitWithRetry(flushStart).orElse(res)
   }
 
-  /** K10: bounded synchronous commit retry. Offsets equal to the last
-    * committed ones are already on the broker and are not sent again
-    * (an idle or caught-up sink would otherwise commit on every poll). */
+  /** K10: bounded synchronous commit retry. Offsets unchanged since the
+    * last successful commit are already on the broker and are not sent
+    * again (an idle or caught-up sink would otherwise commit on every
+    * poll). */
   private def commitWithRetry(flushStart: Long): Option[Status] = {
-    if (offsets == lastCommitted) return None
+    if (!offsetsChanged) return None
     val toCommit = offsets.toMap
     var lastError: Throwable = null
     var attempt = 0
@@ -129,7 +134,7 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
       if (attempt > 0) commitRetries += 1
       try {
         consumer.commit(toCommit)
-        lastCommitted = toCommit
+        offsetsChanged = false
         commitCount += 1
         lastFlushToCommitMs = Some((System.nanoTime() - flushStart) / 1e6)
         return None

@@ -66,11 +66,9 @@ final class InMemoryBroker(numPartitions: Int = 1) {
   private def log(tp: TopicPartition) =
     synchronized(logs.getOrElseUpdate(tp, mutable.ArrayBuffer.empty))
 
-  def partitionsOf(topic: String): Seq[TopicPartition] = synchronized {
-    val existing = logs.keys.filter(_.topic == topic).toSeq
-    if (existing.nonEmpty) existing.sortBy(_.partition)
-    else (0 until numPartitions).map(TopicPartition(topic, _))
-  }
+  /** Every partition of `topic`, whether or not it holds data yet. */
+  def partitionsOf(topic: String): Seq[TopicPartition] =
+    (0 until numPartitions).map(TopicPartition(topic, _))
 
   def append(topic: String, key: Array[Byte], value: Array[Byte]): Unit = {
     val partition =

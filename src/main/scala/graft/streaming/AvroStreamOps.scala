@@ -13,7 +13,7 @@ import graft.sources.Json
   * yields in `value`) decoded into typed columns.
   *
   * Without the spark-avro module (absent offline), decode goes through
-  * the plain-Avro codec: frame-strip → GenericRecord → JSON →
+  * the compiled Avro codec: framed bytes → Scala value → JSON →
   * `from_json` with the locked schema. The UDF boundary is ONLY the
   * bytes→JSON hop; schema projection and downstream ops stay columnar.
   * With spark-avro on the cluster classpath, swap `decodedJson` for

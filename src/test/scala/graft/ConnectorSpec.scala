@@ -314,6 +314,32 @@ class ConnectorSpec extends AnyFunSuite {
     }
   }
 
+  test("sink: a sink that subscribes after the first record is assigned " +
+      "every partition and drains them all") {
+    val broker = new InMemoryBroker(numPartitions = 4)
+    val schema = AvroCodec.parseable("\"string\"")
+    broker.registerSchema(1, schema.toString)
+    val producer = broker.producer()
+    // a 1-byte key b lands in partition (31 + b) mod 4
+    def send(i: Int): Unit =
+      producer.produce("t", Array(i.toByte), AvroCodec.encodeFramed(s"v$i", schema, 1))
+    send(0)
+    val sink = new TestSink(broker) {
+      override protected def beforeRunLoop(): Unit = {
+        super.beforeRunLoop()
+        (1 to 40).foreach(send)
+      }
+    }
+    sink.run()
+    assert(sink.status == Status.Stopped)
+    assert(sink.received.sortBy(_.toString) == (0 to 40).map(i => s"v$i").sorted)
+    (0 until 4).foreach { p =>
+      val tp = TopicPartition("t", p)
+      assert(broker.endOffset(tp) > 0)
+      assert(broker.committed("g", tp).contains(broker.endOffset(tp)))
+    }
+  }
+
   test("in-memory consumer: polls alternate across partitions with data, " +
       "each record once; EOF once per catch-up, re-armed by new data") {
     val broker = new InMemoryBroker(numPartitions = 2)

@@ -1,5 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.avro.Schema
+import org.apache.avro.Schema.Type._
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter}
+import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -117,6 +124,175 @@ class PropertySpec extends AnyFunSuite {
           AvroCodec.decode(reference, schema) == value &&
           AvroCodec.decodeFramed(framed, schema) == value
     })
+  }
+
+  /** Bytes of Avro's Generic writer on `toDatum(value)`. */
+  private def genericBytes(value: Any, schema: Schema): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    new GenericDatumWriter[Any](schema)
+      .write(AvroCodec.toDatum(value, schema), enc)
+    enc.flush()
+    out.toByteArray
+  }
+
+  /** `fromDatum` of Avro's Generic reader on `bytes`. */
+  private def genericValue(bytes: Array[Byte], schema: Schema): Any =
+    AvroCodec.fromDatum(new GenericDatumReader[Any](schema)
+      .read(null, DecoderFactory.get().binaryDecoder(bytes, null)))
+
+  /** Value equality that compares byte arrays by content. */
+  private def same(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Array[Byte], y: Array[Byte]) => x.sameElements(y)
+    case (x: Map[_, _], y: Map[_, _]) =>
+      x.size == y.size && x.forall { case (k, v) =>
+        y.asInstanceOf[Map[Any, Any]].get(k).exists(same(v, _)) }
+    case (x: Seq[_], y: Seq[_]) =>
+      x.size == y.size && x.zip(y).forall { case (p, q) => same(p, q) }
+    case _ => a == b
+  }
+
+  /** Schemas built directly, over every Avro type; `name` prefixes the
+    * named types, so each name in one schema is unique. */
+  private def schemaOf(depth: Int, name: String): Gen[Schema] = {
+    val leaf = Gen.frequency(
+      8 -> Gen.oneOf(INT, LONG, FLOAT, DOUBLE, BOOLEAN, STRING, BYTES, NULL)
+        .map(Schema.create),
+      1 -> Gen.const(Schema.createEnum(s"${name}_E", null, null,
+        List("A", "B", "C").asJava)),
+      1 -> Gen.choose(0, 4).map(Schema.createFixed(s"${name}_X", null, null, _)))
+    if (depth <= 0) leaf
+    else Gen.frequency(
+      4 -> leaf,
+      1 -> Gen.lzy(schemaOf(depth - 1, s"${name}_A")).map(Schema.createArray),
+      1 -> Gen.lzy(schemaOf(depth - 1, s"${name}_M")).map(Schema.createMap),
+      2 -> Gen.lzy(recordOf(depth - 1, s"${name}_R")),
+      2 -> Gen.lzy(unionOf(depth - 1, s"${name}_U")))
+  }
+
+  private def recordOf(depth: Int, name: String): Gen[Schema] = for {
+    n <- Gen.choose(1, 4)
+    types <- Gen.sequence[List[Schema], Schema](
+      (0 until n).map(i => schemaOf(depth, s"${name}_f$i")))
+  } yield Schema.createRecord(name, null, null, false,
+    types.zipWithIndex.map { case (t, i) =>
+      new Schema.Field(s"f$i", t, null, null: Object) }.asJava)
+
+  /** `[null, record]`, or some distinct unnamed branches and named ones
+    * in any order. An int branch is never the one a Scala Int resolves
+    * to, so values of it must be rejected. */
+  private def unionOf(depth: Int, name: String): Gen[Schema] = Gen.frequency(
+    1 -> recordOf(depth, s"${name}_R").map(r =>
+      Schema.createUnion(Schema.create(NULL), r)),
+    2 -> (for {
+      prims <- Gen.someOf(NULL, BOOLEAN, INT, LONG, FLOAT, DOUBLE, STRING, BYTES)
+      others <- Gen.someOf(
+        Gen.lzy(schemaOf(depth, s"${name}_A")).map(Schema.createArray),
+        Gen.lzy(schemaOf(depth, s"${name}_M")).map(Schema.createMap),
+        recordOf(depth, s"${name}_R"),
+        Gen.const(Schema.createEnum(s"${name}_E", null, null, List("A", "B").asJava)),
+        Gen.const(Schema.createFixed(s"${name}_X", null, null, 2)))
+      seed <- Arbitrary.arbitrary[Long]
+    } yield {
+      val branches = new scala.util.Random(seed)
+        .shuffle(prims.map(Schema.create) ++ others)
+      Schema.createUnion(
+        (if (branches.isEmpty) Seq(Schema.create(NULL)) else branches).asJava)
+    }))
+
+  /** A Scala value of `schema`, in the codec's value model. */
+  private def valueOf(schema: Schema): Gen[Any] = {
+    val small = Gen.choose(0, 3)
+    schema.getType match {
+      case NULL => Gen.const(null)
+      case BOOLEAN => Arbitrary.arbitrary[Boolean]
+      case INT => Arbitrary.arbitrary[Int]
+      case LONG => Gen.oneOf(Arbitrary.arbitrary[Long], Arbitrary.arbitrary[Int])
+      case FLOAT => Arbitrary.arbitrary[Float].map(f => if (f.isNaN) 0f else f)
+      case DOUBLE => Arbitrary.arbitrary[Double].map(d => if (d.isNaN) 0.0 else d)
+      case STRING => Gen.oneOf(Gen.alphaNumStr, Arbitrary.arbitrary[String])
+      case BYTES => Gen.listOf(Arbitrary.arbitrary[Byte]).map(_.toArray)
+      case ENUM => Gen.oneOf(schema.getEnumSymbols.asScala.toSeq)
+        .map(new GenericData.EnumSymbol(schema, _))
+      case FIXED => Gen.listOfN(schema.getFixedSize, Arbitrary.arbitrary[Byte])
+        .map(b => new GenericData.Fixed(schema, b.toArray))
+      case ARRAY => small.flatMap(Gen.listOfN(_, valueOf(schema.getElementType)))
+      case MAP => small.flatMap(Gen.listOfN(_,
+        Gen.zip(fieldName, valueOf(schema.getValueType)))).map(_.toMap)
+      case RECORD => Gen.sequence[List[Any], Any](
+          schema.getFields.asScala.map(f => valueOf(f.schema())))
+        .map(vs => schema.getFields.asScala.map(_.name).zip(vs).toMap)
+      case UNION => Gen.oneOf(schema.getTypes.asScala.toSeq).flatMap(valueOf)
+    }
+  }
+
+  test("the compiled codec matches Avro's Generic writer and reader on " +
+      "directly built schemas over every Avro type") {
+    val schemaAndValue = for {
+      schema <- Gen.frequency(3 -> recordOf(2, "r"), 1 -> schemaOf(2, "t"))
+      value <- valueOf(schema)
+    } yield (schema, value)
+    check(Prop.forAllNoShrink(schemaAndValue) { case (schema, value) =>
+      val codec = AvroCodec.Compiled(schema)
+      (Try(genericBytes(value, schema)).toOption,
+        Try(codec.encode(value)).toOption) match {
+        // a value the Generic path rejects is rejected here too
+        case (None, compiled) => compiled.isEmpty
+        case (Some(reference), Some(bytes)) =>
+          bytes.sameElements(reference) &&
+            same(codec.decode(bytes), genericValue(bytes, schema))
+        case (Some(_), None) => false
+      }
+    }, n = 300)
+  }
+
+  test("golden: a recursive schema compiles and round-trips") {
+    val list = AvroCodec.parseable("""{"type": "record", "name": "Cell",
+      "fields": [{"name": "v", "type": "long"},
+                 {"name": "next", "type": ["null", "Cell"]}]}""")
+    val cells = Map("v" -> 1L, "next" -> Map("v" -> 2L, "next" -> null))
+    val bytes = AvroCodec.encode(cells, list)
+    // v=1, branch 1, v=2, branch 0 (zigzag varints)
+    assert(bytes.sameElements(Array[Byte](2, 2, 4, 0)))
+    assert(bytes.sameElements(genericBytes(cells, list)))
+    assert(AvroCodec.decode(bytes, list) == cells)
+
+    val tree = AvroCodec.parseable("""{"type": "record", "name": "Tree",
+      "fields": [{"name": "label", "type": "string"},
+                 {"name": "kids", "type": {"type": "array", "items": "Tree"}}]}""")
+    val leaf = (l: String) => Map("label" -> l, "kids" -> Nil)
+    val root = Map("label" -> "r", "kids" -> Seq(leaf("a"),
+      Map("label" -> "b", "kids" -> Seq(leaf("c")))))
+    val treeBytes = AvroCodec.encode(root, tree)
+    assert(treeBytes.sameElements(genericBytes(root, tree)))
+    assert(AvroCodec.decode(treeBytes, tree) == root)
+    assert(genericValue(treeBytes, tree) == root)
+  }
+
+  test("the compiled codec rejects what the Generic path rejects: an " +
+      "unknown key, a null in a non-null slot, a truncated payload") {
+    val schema = AvroCodec.parseable("""{"type": "record", "name": "R",
+      "fields": [{"name": "s", "type": "string"},
+                 {"name": "n", "type": "long"},
+                 {"name": "sub", "type": {"type": "record", "name": "S",
+                   "fields": [{"name": "x", "type": "double"}]}}]}""")
+    val codec = AvroCodec.Compiled(schema)
+    val good = Map("s" -> "abc", "n" -> 300L, "sub" -> Map("x" -> 1.5))
+    val extra = intercept[IllegalArgumentException](codec.encode(good + ("k" -> 1L)))
+    assert(extra.getMessage == "field 'k' not in schema")
+    intercept[IllegalArgumentException](
+      codec.encode(good + ("sub" -> Map("x" -> 1.5, "k" -> 1L))))
+    for (slot <- Seq("s", "n", "sub"))
+      intercept[NullPointerException](codec.encode(good + (slot -> null)))
+    intercept[NullPointerException](codec.encode(good - "n"))
+    val optional = AvroCodec.parseable("""["long", "string"]""")
+    intercept[org.apache.avro.UnresolvedUnionException](
+      AvroCodec.encode(null, optional))
+    // every strict prefix of a frame with a valid header fails to decode
+    val frame = codec.encodeFramed(good, 7)
+    for (len <- 5 until frame.length)
+      intercept[Exception](codec.decodeFramed(frame.take(len)))
+    assert(codec.decodeFramed(frame) == good)
   }
 
   test("optional-primitive schemas stay parseable for any record") {
