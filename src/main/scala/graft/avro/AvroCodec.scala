@@ -101,7 +101,8 @@ object AvroCodec {
   }
 
   // Primitive writers convert as GenericDatumWriter does: numbers through
-  // `Number`, so an Int fits a long slot; a null value throws.
+  // `Number`, so an Int fits a long slot; a null in a non-null slot
+  // throws, and a null slot writes nothing whatever the value.
   private object NullNode extends Node {
     def write(value: Any, out: Encoder): Unit = out.writeNull()
     def read(in: Decoder): Any = { in.readNull(); null }
