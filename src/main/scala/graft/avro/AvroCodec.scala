@@ -1,9 +1,10 @@
 package graft.avro
 
-import java.io.ByteArrayOutputStream
+import java.io.OutputStream
 import java.nio.ByteBuffer
 
-import scala.collection.mutable
+import scala.collection.{AbstractIterator, immutable, mutable}
+import scala.collection.generic.DefaultSerializable
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.{AvroTypeException, Schema, UnresolvedUnionException}
@@ -24,7 +25,9 @@ import org.apache.avro.io.{Decoder, DecoderFactory, Encoder, EncoderFactory}
   * record or an Avro map, `Seq` for an array, `String`, `Int`/`Long`,
   * `Float`/`Double`, `Boolean`, `Array[Byte]` and `null`. Enum and fixed
   * values are Avro's own `GenericEnumSymbol` and `GenericFixed`, as the
-  * Generic datum reader returns them.
+  * Generic datum reader returns them. A decoded record is an immutable
+  * `Map` that iterates in schema field order and equals (and hashes as)
+  * any `Map` with the same entries.
   */
 object AvroCodec {
 
@@ -229,11 +232,44 @@ object AvroCodec {
       while (i < values.length) { fields(i).write(values(i), out); i += 1 }
     }
     def read(in: Decoder): Any = {
-      val m = Map.newBuilder[String, Any]
+      val values = new Array[Any](names.length)
       var i = 0
-      while (i < names.length) { m += names(i) -> fields(i).read(in); i += 1 }
-      m.result()
+      while (i < values.length) { values(i) = fields(i).read(in); i += 1 }
+      new RecordMap(names, index, values)
     }
+  }
+
+  /** A decoded record: its field values in one array, keyed through its
+    * node's field names and name→index table, so decoding builds no hash
+    * map. Iterates in schema field order; equality and hashing are those
+    * of any `Map`. `updated` and `removed` return ordinary maps, and it
+    * serializes as an ordinary map. */
+  private final class RecordMap(names: Array[String],
+      index: java.util.HashMap[String, Integer], slots: Array[Any])
+      extends immutable.AbstractMap[String, Any] with DefaultSerializable {
+    def get(key: String): Option[Any] = {
+      val i = index.get(key)
+      if (i == null) None else Some(slots(i))
+    }
+    def iterator: Iterator[(String, Any)] = new AbstractIterator[(String, Any)] {
+      private var i = 0
+      def hasNext: Boolean = i < names.length
+      def next(): (String, Any) = {
+        if (i >= names.length) Iterator.empty.next()
+        i += 1
+        (names(i - 1), slots(i - 1))
+      }
+    }
+    override def foreachEntry[U](f: (String, Any) => U): Unit = {
+      var i = 0
+      while (i < names.length) { f(names(i), slots(i)); i += 1 }
+    }
+    override def size: Int = names.length
+    override def knownSize: Int = names.length
+    private def plain: Map[String, Any] = (Map.newBuilder[String, Any] ++= this).result()
+    def updated[V1 >: Any](key: String, value: V1): Map[String, V1] =
+      plain.updated(key, value)
+    def removed(key: String): Map[String, Any] = plain.removed(key)
   }
 
   /** Picks a value's branch as GenericData.resolveUnion picks it for
@@ -298,16 +334,33 @@ object AvroCodec {
       case NULL => NullNode
     }
 
+  /** `ByteArrayOutputStream` without its monitor, which the direct
+    * encoder would otherwise take once per byte written. */
+  private final class ByteSink extends OutputStream {
+    private var buf = new Array[Byte](128)
+    private var count = 0
+    private def reserve(n: Int): Unit =
+      if (count + n > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length << 1, count + n))
+    override def write(b: Int): Unit = {
+      reserve(1); buf(count) = b.toByte; count += 1
+    }
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      reserve(len); System.arraycopy(b, off, buf, count, len); count += len
+    }
+    def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, count)
+  }
+
   /** A schema compiled once for the hot path into one writer/reader node
     * per schema node. Encoding walks the Scala value straight into a
-    * direct binary encoder over the output stream; decoding reads the
-    * binary decoder straight into Scala values. The nodes are immutable
-    * once built and each call makes its own encoder or decoder, so one
-    * instance may be shared across threads. */
+    * direct binary encoder over a byte buffer; decoding reads the binary
+    * decoder straight into Scala values. The nodes are immutable once
+    * built and each call makes its own buffer and encoder or decoder, so
+    * one instance may be shared across threads. */
   final case class Compiled(schema: Schema) {
     private val root = compile(schema, mutable.Map.empty)
 
-    private def write(value: Any, out: ByteArrayOutputStream): Array[Byte] = {
+    private def write(value: Any, out: ByteSink): Array[Byte] = {
       root.write(value, EncoderFactory.get().directBinaryEncoder(out, null))
       out.toByteArray
     }
@@ -316,14 +369,14 @@ object AvroCodec {
       root.read(DecoderFactory.get()
         .binaryDecoder(bytes, offset, bytes.length - offset, null))
 
-    def encode(value: Any): Array[Byte] = write(value, new ByteArrayOutputStream())
+    def encode(value: Any): Array[Byte] = write(value, new ByteSink)
 
     def decode(bytes: Array[Byte]): Any = read(bytes, 0)
 
     /** Confluent frame of `value`: header and payload written into one
       * buffer. */
     def encodeFramed(value: Any, schemaId: Int): Array[Byte] = {
-      val out = new ByteArrayOutputStream()
+      val out = new ByteSink
       out.write(MagicByte)
       out.write(schemaId >>> 24); out.write(schemaId >>> 16)
       out.write(schemaId >>> 8); out.write(schemaId)

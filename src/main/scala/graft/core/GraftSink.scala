@@ -34,11 +34,23 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
     broker.consumer(config.groupId)
   protected lazy val consumer: TransportConsumer = makeConsumer()
 
-  private val offsets = mutable.Map[TopicPartition, Long]()
-  /** Set when an offset changes, cleared by a successful commit: offsets
-    * already on the broker are not committed again. */
-  private var offsetsChanged = false
-  private val eofReached = mutable.Map[TopicPartition, Boolean]()
+  /** Next offset and EOF flag of one partition; `pending` while its
+    * offset is not yet committed. */
+  private final class PartitionState(val tp: TopicPartition) {
+    var next = -1L // none until a record or an EOF gives one (K6)
+    var eof = false
+    var pending = false
+  }
+  private val partitions = new java.util.HashMap[TopicPartition, PartitionState]()
+  /** The last record's partition: a run of records from one partition
+    * looks it up once. */
+  private var last: PartitionState = _
+  /** Partitions whose offset moved since the last successful commit:
+    * offsets already on the broker are not committed again. */
+  private val pending = mutable.ArrayBuffer[PartitionState]()
+  /** What a commit sends: every partition's next offset. A commit
+    * updates only the `pending` partitions in it. */
+  private var toCommit = Map.empty[TopicPartition, Long]
 
   private val codecs = mutable.LongMap[AvroCodec.Compiled]()
 
@@ -72,8 +84,10 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
 
   def hasPartitionAssignments: Boolean = consumer.assignment.nonEmpty
   def allPartitionsAtEof: Boolean =
-    consumer.assignment.nonEmpty &&
-      consumer.assignment.forall(tp => eofReached.getOrElse(tp, false))
+    consumer.assignment.nonEmpty && consumer.assignment.forall { tp =>
+      val p = partitions.get(tp)
+      p != null && p.eof
+    }
 
   // ---- lifecycle -------------------------------------------------------
   override protected def beforeRunLoop(): Unit =
@@ -84,21 +98,36 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
     flushIfNeeded().orElse(dispatch(polled))
   }
 
+  private def stateOf(topic: String, partition: Int): PartitionState = {
+    val p = last
+    if (p != null && p.tp.partition == partition && p.tp.topic == topic) p
+    else stateOf(TopicPartition(topic, partition))
+  }
+
+  private def stateOf(tp: TopicPartition): PartitionState = {
+    var p = partitions.get(tp)
+    if (p == null) { p = new PartitionState(tp); partitions.put(tp, p) }
+    last = p
+    p
+  }
+
+  private def setNext(p: PartitionState, next: Long): Unit = {
+    p.next = next
+    if (!p.pending) { p.pending = true; pending += p }
+  }
+
   private def dispatch(polled: Poll): Option[Status] = polled match {
     case Poll.Record(msg) =>
       messageCount += 1
-      val tp = TopicPartition(msg.topic, msg.partition)
-      eofReached(tp) = false
+      val p = stateOf(msg.topic, msg.partition)
+      p.eof = false
       val res = onMessageReceived(msg)
-      offsets(tp) = msg.offset + 1 // K5: +1 semantics
-      offsetsChanged = true
+      setNext(p, msg.offset + 1) // K5: +1 semantics
       res
     case Poll.Eof(tp, nextOffset) =>
-      eofReached(tp) = true
-      if (!offsets.contains(tp)) { // keep offset alive (K6)
-        offsets(tp) = nextOffset
-        offsetsChanged = true
-      }
+      val p = stateOf(tp)
+      p.eof = true
+      if (p.next < 0) setNext(p, nextOffset) // keep offset alive (K6)
       onEofReceived(tp)
     case Poll.NoMessage => onNoMessageReceived()
     case Poll.Failure(e) =>
@@ -126,15 +155,16 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
     * again (an idle or caught-up sink would otherwise commit on every
     * poll). */
   private def commitWithRetry(flushStart: Long): Option[Status] = {
-    if (!offsetsChanged) return None
-    val toCommit = offsets.toMap
+    if (pending.isEmpty) return None
+    pending.foreach(p => toCommit = toCommit.updated(p.tp, p.next))
     var lastError: Throwable = null
     var attempt = 0
     while (attempt <= config.base.sinkCommitRetryCount) {
       if (attempt > 0) commitRetries += 1
       try {
         consumer.commit(toCommit)
-        offsetsChanged = false
+        pending.foreach(_.pending = false)
+        pending.clear()
         commitCount += 1
         lastFlushToCommitMs = Some((System.nanoTime() - flushStart) / 1e6)
         return None

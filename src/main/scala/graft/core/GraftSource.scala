@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 import org.apache.avro.SchemaNormalization
 
 import graft.avro.{AvroCodec, AvroInference}
@@ -14,6 +16,10 @@ import graft.config.SourceConfig
   * → `onEof` (default: 100 ms backoff retry, S11); close always performs
   * a final offset commit (S12); the offset value itself is an arbitrary
   * schema-inferred Avro value produced to a dedicated topic (S7).
+  *
+  * A commit records the index after the last record handed to the
+  * producer, not the read position: a record whose produce threw is read
+  * again after a restart (at-least-once), and the crash names its index.
   *
   * Each of the key, value and offset schemas is compiled, fingerprinted
   * and registered once, when it is inferred; records only encode.
@@ -58,12 +64,17 @@ abstract class GraftSource(val config: SourceConfig, broker: InMemoryBroker)
   override protected def beforeRunLoop(): Unit = {
     lastCommitNanos = System.nanoTime()
     getCommittedOffset.foreach(seek)
+    producedIndex = Some(getIndex)
   }
 
   /** Periodic offset commit per `offset_commit_interval` (30 min default)
     * — the reference commits during the run loop, not only on close
     * (`config.py:387-392`; commit sites in `pyconnectsource.py`). */
   private var lastCommitNanos: Long = System.nanoTime()
+
+  /** The index a commit records: the position after the seek, then
+    * after each record the producer took. */
+  private var producedIndex: Option[Any] = None
 
   override protected def runOnce(): Option[Status] = {
     val intervalNanos = config.base.offsetCommitInterval.toNanos
@@ -72,7 +83,14 @@ abstract class GraftSource(val config: SourceConfig, broker: InMemoryBroker)
       lastCommitNanos = System.nanoTime()
     }
     read() match {
-      case Some((key, value)) => produce(key, value); None
+      case Some((key, value)) =>
+        try produce(key, value)
+        catch { case NonFatal(e) =>
+          throw new RuntimeException(
+            s"record at source index ${producedIndex.orNull} not produced: ${e.getMessage}", e)
+        }
+        producedIndex = Some(getIndex)
+        None
       case None => onEof()
     }
   }
@@ -99,11 +117,12 @@ abstract class GraftSource(val config: SourceConfig, broker: InMemoryBroker)
     produceCount += 1
   }
 
-  /** Final commit of the source's own read position to the offset topic
+  /** Commit of the source's own position to the offset topic
     * (`pyconnectsource.py:216-238`): infer the offset value's schema,
-    * produce, flush. */
+    * produce, flush. Before the run loop starts no record was read, so
+    * the position is `getIndex`. */
   protected def commitOffset(): Unit = {
-    val idx = getIndex
+    val idx = producedIndex.getOrElse(getIndex)
     val start = System.nanoTime()
     if (idx != null)
       producer.produce(config.offsetTopic, null, offsetWriterFor(idx).encode(idx))

@@ -11,7 +11,11 @@ import scala.collection.mutable
   * `graft.sources.KafkaOptions` builds the real Spark Kafka options for
   * cluster deployments (SURVEY.md §2-A S13/K3 passthrough).
   */
-final case class TopicPartition(topic: String, partition: Int)
+final case class TopicPartition(topic: String, partition: Int) {
+  /** Computed once: partitions key the broker's logs and the sink's
+    * offsets. */
+  override val hashCode: Int = scala.util.hashing.MurmurHash3.productHash(this)
+}
 
 final case class Message(
     key: Array[Byte], value: Array[Byte],
@@ -54,7 +58,8 @@ trait TransportConsumer {
 final class InMemoryBroker(numPartitions: Int = 1) {
   private val logs =
     mutable.Map[TopicPartition, mutable.ArrayBuffer[(Array[Byte], Array[Byte])]]()
-  private val committedOffsets = mutable.Map[(String, TopicPartition), Long]()
+  /** Committed offsets by consumer group. */
+  private val committedOffsets = mutable.Map[String, mutable.Map[TopicPartition, Long]]()
   private val schemas = mutable.Map[Int, String]()
 
   /** In-memory stand-in for the Confluent schema registry: id ↔ schema
@@ -73,8 +78,7 @@ final class InMemoryBroker(numPartitions: Int = 1) {
   def append(topic: String, key: Array[Byte], value: Array[Byte]): Unit = {
     val partition =
       if (numPartitions == 1) 0
-      else math.floorMod(
-        Option(key).map(java.util.Arrays.hashCode).getOrElse(0), numPartitions)
+      else math.floorMod(java.util.Arrays.hashCode(key), numPartitions) // null → 0
     // append must happen inside the broker monitor: a producer's
     // produce() racing a consumer poll()/read() would otherwise mutate
     // the ArrayBuffer unsynchronized (resize corruption)
@@ -91,11 +95,14 @@ final class InMemoryBroker(numPartitions: Int = 1) {
     } else None
   }
 
+  private def offsetsOf(group: String): mutable.Map[TopicPartition, Long] =
+    synchronized(committedOffsets.getOrElseUpdate(group, mutable.Map.empty))
+
   def commit(group: String, tp: TopicPartition, offset: Long): Unit =
-    synchronized { committedOffsets((group, tp)) = offset }
+    synchronized { offsetsOf(group)(tp) = offset }
 
   def committed(group: String, tp: TopicPartition): Option[Long] =
-    synchronized(committedOffsets.get((group, tp)))
+    synchronized(offsetsOf(group).get(tp))
 
   /** Delivers each record when it is produced, in produce order; `flush`
     * has nothing left to wait for. The reference's librdkafka producer
@@ -108,53 +115,63 @@ final class InMemoryBroker(numPartitions: Int = 1) {
   }
 
   def consumer(group: String): TransportConsumer = new TransportConsumer {
+    // per assignment slot, resolved at subscribe: a poll hashes nothing
     private var tps: IndexedSeq[TopicPartition] = IndexedSeq.empty
-    private val positions = mutable.Map[TopicPartition, Long]()
-    private val eofSignalled = mutable.Set[TopicPartition]()
-    /** Index into `tps` of the partition the next poll tries first. */
+    private var logsOf: Array[mutable.ArrayBuffer[(Array[Byte], Array[Byte])]] = Array.empty
+    private var positions: Array[Long] = Array.emptyLongArray
+    private var eofSignalled: Array[Boolean] = Array.emptyBooleanArray
+    /** Slot of the partition the next poll tries first. */
     private var cursor = 0
     private var closed = false
+    private val groupOffsets = offsetsOf(group)
 
     def subscribe(topics: Seq[String]): Unit = {
       tps = topics.flatMap(partitionsOf).toIndexedSeq
+      logsOf = tps.map(log).toArray
+      // auto.offset.reset=earliest unless a commit exists (K3 parity)
+      positions = tps.map(InMemoryBroker.this.committed(group, _).getOrElse(0L)).toArray
+      eofSignalled = new Array[Boolean](tps.length)
       cursor = 0
-      tps.foreach { tp =>
-        // auto.offset.reset=earliest unless a commit exists (K3 parity)
-        positions(tp) = InMemoryBroker.this.committed(group, tp).getOrElse(0L)
-      }
+    }
+
+    /** The record at slot `at`'s position, or null when it is caught up. */
+    private def next(at: Int): (Array[Byte], Array[Byte]) = {
+      val l = logsOf(at)
+      val pos = positions(at)
+      InMemoryBroker.this.synchronized(if (pos < l.length) l(pos.toInt) else null)
     }
 
     def poll(timeoutMs: Long): Poll = {
       require(!closed, "consumer closed")
       // round-robin across assigned partitions: start after the partition
       // that delivered last, read each record once
+      val n = tps.length
       var i = 0
-      while (i < tps.length) {
-        val at = (cursor + i) % tps.length
-        val tp = tps(at)
-        val next = read(tp, positions(tp))
-        if (next.isDefined) {
-          positions(tp) += 1
-          eofSignalled -= tp
+      while (i < n) {
+        val at = (cursor + i) % n
+        val kv = next(at)
+        if (kv != null) {
+          val tp = tps(at)
+          val offset = positions(at)
+          positions(at) = offset + 1
+          eofSignalled(at) = false
           cursor = at + 1
-          return Poll.Record(next.get)
+          return Poll.Record(Message(kv._1, kv._2, tp.topic, tp.partition, offset))
         }
         i += 1
       }
       // EOF signalled once per catch-up, re-armed when new data arrives
       // (partition-EOF parity)
-      tps.find(tp => !eofSignalled.contains(tp)) match {
-        case Some(tp) =>
-          eofSignalled += tp
-          Poll.Eof(tp, positions(tp))
-        case None => Poll.NoMessage
+      val at = eofSignalled.indexOf(false)
+      if (at < 0) Poll.NoMessage
+      else {
+        eofSignalled(at) = true
+        Poll.Eof(tps(at), positions(at))
       }
     }
 
     def commit(offsets: Map[TopicPartition, Long]): Unit =
-      offsets.foreach { case (tp, off) =>
-        InMemoryBroker.this.commit(group, tp, off)
-      }
+      InMemoryBroker.this.synchronized(offsets.foreachEntry(groupOffsets.update(_, _)))
 
     def committed(tp: TopicPartition): Option[Long] =
       InMemoryBroker.this.committed(group, tp)

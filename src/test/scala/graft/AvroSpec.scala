@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.avro.{AvroCodec, AvroInference}
+import graft.sources.Json
 
 /** Schema-inference goldens ported from the reference's
   * test_avroparser.py (SURVEY §5 / FIXTURES §1.2), plus binary codec and
@@ -97,6 +98,22 @@ class AvroSpec extends AnyFunSuite {
     val schema = AvroCodec.parseable(AvroInference.toValueSchema(value))
     val bytes = AvroCodec.encode(value, schema)
     assert(AvroCodec.decode(bytes, schema) == value)
+  }
+
+  test("a decoded record lists its fields in schema order, also past " +
+      "four fields, so its JSON line does too") {
+    val schema = AvroCodec.parseable("""{"type": "record", "name": "R",
+      "fields": [{"name": "z", "type": "long"}, {"name": "y", "type": "string"},
+                 {"name": "x", "type": "double"}, {"name": "w", "type": "boolean"},
+                 {"name": "v", "type": "long"}, {"name": "u", "type": "null"}]}""")
+    val value = Map("u" -> null, "v" -> 5L, "w" -> true, "x" -> 1.5,
+      "y" -> "s", "z" -> 7L)
+    val decoded = AvroCodec.decode(AvroCodec.encode(value, schema), schema)
+    assert(decoded == value)
+    assert(decoded.asInstanceOf[Map[String, Any]].keys.toList ==
+      List("z", "y", "x", "w", "v", "u"))
+    assert(Json.render(decoded) ==
+      """{"z": 7, "y": "s", "x": 1.5, "w": true, "v": 5, "u": null}""")
   }
 
   test("confluent framing: magic byte + schema id round-trip (§7.4.1)") {

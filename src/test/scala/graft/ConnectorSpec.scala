@@ -148,6 +148,29 @@ class ConnectorSpec extends AnyFunSuite {
     assert(second.produceCount == 0)   // nothing re-produced
   }
 
+  test("source: a restart produces the record whose produce threw " +
+      "(at-least-once), and the crash names its index") {
+    val broker = new InMemoryBroker()
+    // the schema inferred from {x} has no y; the one from {x, y} needs y
+    val values = Seq[Any](Map("x" -> 1L), Map("x" -> 2L, "y" -> 2L), Map("x" -> 3L))
+    val records = values.zipWithIndex.map { case (v, i) => (s"k$i": Any, v) }
+    val crashes = mutable.ArrayBuffer[String]()
+    var stopped = false
+    while (!stopped) {
+      assert(crashes.size < records.size, crashes)
+      val src = new TestSource(records, broker)
+      try { src.run(); stopped = true }
+      catch { case e: RuntimeException => crashes += e.getMessage }
+    }
+    assert(crashes.size == 2)
+    assert(crashes(0).startsWith("record at source index 1 not produced"), crashes)
+    assert(crashes(0).contains("field 'y' not in schema"), crashes)
+    assert(crashes(1).startsWith("record at source index 2 not produced"), crashes)
+    val sink = new TestSink(broker)
+    sink.run()
+    assert(sink.received.toSeq == values)
+  }
+
   test("sink: receives everything, commit-after-flush (K5/K9)") {
     val broker = new InMemoryBroker()
     val expected = produce(broker, 5)
@@ -364,6 +387,50 @@ class ConnectorSpec extends AnyFunSuite {
     assert(consumer.poll(0).asInstanceOf[Poll.Record].msg.partition == 1)
     assert(consumer.poll(0) == Poll.Eof(TopicPartition("t", 1), 5))
     assert(consumer.poll(0) == Poll.NoMessage)
+  }
+
+  test("in-memory consumer: on a 3-partition topic each partition signals " +
+      "EOF once per catch-up; a second consumer of the group starts at its " +
+      "committed offsets") {
+    val broker = new InMemoryBroker(numPartitions = 3)
+    val producer = broker.producer()
+    // a 1-byte key b lands in partition (31 + b) mod 3
+    def send(bs: Int*): Unit =
+      bs.foreach(b => producer.produce("t", Array(b.toByte), Array(b.toByte)))
+    def tp(p: Int) = TopicPartition("t", p)
+    /** Polls until NoMessage: (partition, offset) of each record, and the EOFs. */
+    def drain(c: TransportConsumer): (Set[(Int, Long)], Seq[Poll]) = {
+      val polls = Iterator.continually(c.poll(0)).takeWhile(_ != Poll.NoMessage).toSeq
+      (polls.collect { case Poll.Record(m) => (m.partition, m.offset) }.toSet,
+        polls.filter(_.isInstanceOf[Poll.Eof]))
+    }
+    send(0 until 6: _*)
+    val first = broker.consumer("g")
+    first.subscribe(Seq("t"))
+    val (records, eofs) = drain(first)
+    assert(records == (for (p <- 0 until 3; o <- 0L until 2L) yield (p, o)).toSet)
+    assert(eofs == Seq(Poll.Eof(tp(0), 2), Poll.Eof(tp(1), 2), Poll.Eof(tp(2), 2)))
+    assert(first.poll(0) == Poll.NoMessage)
+    send(1) // partition 2 only: its EOF alone is re-armed
+    assert(drain(first) == ((Set((2, 2L)), Seq(Poll.Eof(tp(2), 3)))))
+    first.commit(Map(tp(0) -> 1L, tp(1) -> 0L, tp(2) -> 3L))
+    first.close()
+
+    val second = broker.consumer("g")
+    second.subscribe(Seq("t"))
+    assert(drain(second) == ((Set((0, 1L), (1, 0L), (1, 1L)),
+      Seq(Poll.Eof(tp(0), 2), Poll.Eof(tp(1), 2), Poll.Eof(tp(2), 3)))))
+  }
+
+  test("broker: equal keys land in one partition, a null key in partition 0") {
+    val broker = new InMemoryBroker(numPartitions = 4)
+    val producer = broker.producer()
+    (0 until 3).foreach(_ => producer.produce("t", "same".getBytes, Array[Byte](1)))
+    producer.produce("t", null, Array[Byte](2))
+    val counts = (0 until 4).map(p => broker.endOffset(TopicPartition("t", p)))
+    val keyed = Math.floorMod(java.util.Arrays.hashCode("same".getBytes), 4)
+    assert(keyed != 0)
+    assert(counts == (0 until 4).map(p => if (p == keyed) 3L else if (p == 0) 1L else 0L))
   }
 
   /** Writes raw values to topic `t`, bypassing any source. */

@@ -126,6 +126,40 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("a decoded record behaves as a plain Map of the same entries, " +
+      "iterates in schema field order and survives Java serialization") {
+    check(Prop.forAllNoShrink(record(2), fieldName) { (rec, other) =>
+      val schema = AvroCodec.parseable(AvroInference.toValueSchema(rec))
+      val plain = norm(rec).asInstanceOf[Map[String, Any]]
+      val decoded = AvroCodec.decode(AvroCodec.encode(plain, schema), schema)
+        .asInstanceOf[Map[String, Any]]
+      val key = plain.keys.head
+      val absent = "absent_" + other
+      val order = schema.getFields.asScala.map(_.name).toList
+      val entries = List.newBuilder[String]
+      decoded.foreachEntry((k, _) => entries += k)
+      val copy = {
+        val out = new java.io.ByteArrayOutputStream()
+        val oos = new java.io.ObjectOutputStream(out)
+        oos.writeObject(decoded); oos.close()
+        new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(out.toByteArray))
+          .readObject()
+      }
+      decoded == plain && plain == decoded && decoded.hashCode == plain.hashCode &&
+        decoded.size == plain.size && decoded.knownSize == plain.size &&
+        decoded.keys.toList == order && decoded.iterator.map(_._1).toList == order &&
+        entries.result() == order &&
+        decoded.get(key) == plain.get(key) && decoded.get(absent).isEmpty &&
+        !decoded.contains(absent) && decoded.getOrElse(absent, 0L) == 0L &&
+        decoded.updated(key, 1L) == plain.updated(key, 1L) &&
+        decoded.updated(absent, 1L) == plain.updated(absent, 1L) &&
+        decoded + (absent -> "x") == plain + (absent -> "x") &&
+        decoded.removed(key) == plain.removed(key) &&
+        decoded - key == plain - key && decoded - absent == plain &&
+        copy == plain && copy.hashCode == plain.hashCode
+    })
+  }
+
   /** Bytes of Avro's Generic writer on `toDatum(value)`. */
   private def genericBytes(value: Any, schema: Schema): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
