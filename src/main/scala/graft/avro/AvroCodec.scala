@@ -1,16 +1,17 @@
 package graft.avro
 
-import java.io.OutputStream
+import java.io.EOFException
 import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
 
 import scala.collection.{AbstractIterator, immutable, mutable}
 import scala.collection.generic.DefaultSerializable
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.{AvroTypeException, Schema, UnresolvedUnionException}
+import org.apache.avro.{AvroTypeException, InvalidNumberEncodingException, Schema,
+  SystemLimitException, UnresolvedUnionException}
 import org.apache.avro.Schema.Type._
 import org.apache.avro.generic.{GenericData, GenericEnumSymbol, GenericFixed, GenericRecord}
-import org.apache.avro.io.{Decoder, DecoderFactory, Encoder, EncoderFactory}
 
 /** Binary Avro encode/decode with optional Confluent wire framing.
   *
@@ -27,7 +28,8 @@ import org.apache.avro.io.{Decoder, DecoderFactory, Encoder, EncoderFactory}
   * values are Avro's own `GenericEnumSymbol` and `GenericFixed`, as the
   * Generic datum reader returns them. A decoded record is an immutable
   * `Map` that iterates in schema field order and equals (and hashes as)
-  * any `Map` with the same entries.
+  * any `Map` with the same entries; a decoded array is an
+  * `immutable.ArraySeq`, equal to any `Seq` of the same items.
   */
 object AvroCodec {
 
@@ -96,117 +98,282 @@ object AvroCodec {
     if (record >= 0) record else branches.indexWhere(_.getType == MAP)
   }
 
-  /** One node of a compiled schema: writes a Scala value of its schema
-    * to an encoder, and reads one back from a decoder. */
+  /** Avro binary read in place from a byte array, as the Avro
+    * specification's binary encoding lays it out: zig-zag varints,
+    * little-endian floats, length-prefixed bytes and strings, counted
+    * blocks. It rejects what Avro's `BinaryDecoder` rejects: an overlong
+    * varint, a negative length, a read past the end of the array, and a
+    * string, bytes or collection length over `SystemLimitException`'s
+    * limits. */
+  private final class Reader(buf: Array[Byte], private var pos: Int) {
+    def remaining: Int = buf.length - pos
+
+    /** Start of the next `n` bytes, which are then consumed. */
+    private def take(n: Int): Int = {
+      if (n > buf.length - pos) throw new EOFException()
+      pos += n
+      pos - n
+    }
+
+    def readByte(): Int = {
+      if (pos >= buf.length) throw new EOFException()
+      pos += 1
+      buf(pos - 1) & 0xff
+    }
+
+    def readInt(): Int = {
+      var n = 0
+      var shift = 0
+      var b = 0x80
+      while ((b & 0x80) != 0) {
+        if (shift == 35) throw new InvalidNumberEncodingException("Invalid int encoding")
+        b = readByte()
+        n |= (b & 0x7f) << shift
+        shift += 7
+      }
+      (n >>> 1) ^ -(n & 1)
+    }
+
+    def readLong(): Long = {
+      var n = 0L
+      var shift = 0
+      var b = 0x80
+      while ((b & 0x80) != 0) {
+        if (shift == 70) throw new InvalidNumberEncodingException("Invalid long encoding")
+        b = readByte()
+        n |= (b & 0x7fL) << shift
+        shift += 7
+      }
+      (n >>> 1) ^ -(n & 1)
+    }
+
+    private def littleEndian(n: Int): Long = {
+      val at = take(n)
+      var v = 0L
+      var i = n - 1
+      while (i >= 0) { v = (v << 8) | (buf(at + i) & 0xff); i -= 1 }
+      v
+    }
+    def readFloat(): Float = java.lang.Float.intBitsToFloat(littleEndian(4).toInt)
+    def readDouble(): Double = java.lang.Double.longBitsToDouble(littleEndian(8))
+
+    def readFixed(n: Int): Array[Byte] = {
+      val at = take(n)
+      java.util.Arrays.copyOfRange(buf, at, at + n)
+    }
+    def readBytes(): Array[Byte] =
+      readFixed(SystemLimitException.checkMaxBytesLength(readLong()))
+    def readString(): String = {
+      val n = SystemLimitException.checkMaxStringLength(readLong())
+      new String(buf, take(n), n, StandardCharsets.UTF_8)
+    }
+
+    /** Item count of a collection's next block, 0 at its end, after
+      * `seen` items of it. A negative count is followed by the block's
+      * size in bytes, which reading in order does not need. */
+    def blockCount(seen: Long): Int = {
+      var n = readLong()
+      if (n < 0) { readLong(); n = -n }
+      SystemLimitException.checkMaxCollectionLength(seen, n)
+      n.toInt
+    }
+  }
+
+  /** Avro binary written into a growing byte array: the writing half of
+    * [[Reader]], byte for byte what Avro's `BinaryEncoder` writes. Not
+    * synchronized; each encode makes its own. */
+  private final class Writer {
+    private var buf = new Array[Byte](128)
+    private var count = 0
+
+    private def reserve(n: Int): Unit =
+      if (n > buf.length - count)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length << 1, count + n))
+
+    def writeByte(b: Int): Unit = {
+      reserve(1)
+      buf(count) = b.toByte
+      count += 1
+    }
+
+    /** An int's varint is that of the same value as a long. */
+    def writeLong(n: Long): Unit = {
+      reserve(10)
+      var v = (n << 1) ^ (n >> 63)
+      while ((v & ~0x7fL) != 0) {
+        buf(count) = ((v & 0x7f) | 0x80).toByte
+        count += 1
+        v >>>= 7
+      }
+      buf(count) = v.toByte
+      count += 1
+    }
+
+    private def littleEndian(v: Long, n: Int): Unit = {
+      reserve(n)
+      var i = 0
+      while (i < n) { buf(count + i) = (v >>> (i << 3)).toByte; i += 1 }
+      count += n
+    }
+    def writeFloat(f: Float): Unit =
+      littleEndian(java.lang.Float.floatToRawIntBits(f).toLong, 4)
+    def writeDouble(d: Double): Unit =
+      littleEndian(java.lang.Double.doubleToRawLongBits(d), 8)
+
+    def writeFixed(b: Array[Byte], len: Int): Unit = {
+      reserve(len)
+      System.arraycopy(b, 0, buf, count, len)
+      count += len
+    }
+    def writeBytes(b: Array[Byte]): Unit = { writeLong(b.length); writeFixed(b, b.length) }
+
+    /** An ASCII string is copied char by char after its length; any other
+      * is encoded by `getBytes(UTF_8)`, as Avro encodes it (an unpaired
+      * surrogate becomes '?'). */
+    def writeString(s: String): Unit = {
+      val n = s.length
+      val start = count
+      writeLong(n)
+      reserve(n)
+      var i = 0
+      while (i < n) {
+        val c = s.charAt(i)
+        if (c >= 0x80) {
+          count = start
+          writeBytes(s.getBytes(StandardCharsets.UTF_8))
+          return
+        }
+        buf(count + i) = c.toByte
+        i += 1
+      }
+      count += n
+    }
+
+    def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, count)
+  }
+
+  /** One node of a compiled schema: writes a Scala value of its schema,
+    * and reads one back. */
   private abstract class Node {
-    def write(value: Any, out: Encoder): Unit
-    def read(in: Decoder): Any
+    def write(value: Any, out: Writer): Unit
+    def read(in: Reader): Any
   }
 
   // Primitive writers convert as GenericDatumWriter does: numbers through
   // `Number`, so an Int fits a long slot; a null in a non-null slot
   // throws, and a null slot writes nothing whatever the value.
   private object NullNode extends Node {
-    def write(value: Any, out: Encoder): Unit = out.writeNull()
-    def read(in: Decoder): Any = { in.readNull(); null }
+    def write(value: Any, out: Writer): Unit = ()
+    def read(in: Reader): Any = null
   }
   private object BooleanNode extends Node {
-    def write(value: Any, out: Encoder): Unit =
-      out.writeBoolean(value.asInstanceOf[java.lang.Boolean].booleanValue)
-    def read(in: Decoder): Any = in.readBoolean()
+    def write(value: Any, out: Writer): Unit =
+      out.writeByte(if (value.asInstanceOf[java.lang.Boolean].booleanValue) 1 else 0)
+    // as BinaryDecoder: any byte but 1 reads false
+    def read(in: Reader): Any = in.readByte() == 1
   }
   private object IntNode extends Node {
-    def write(value: Any, out: Encoder): Unit =
-      out.writeInt(value.asInstanceOf[Number].intValue)
-    def read(in: Decoder): Any = in.readInt()
+    def write(value: Any, out: Writer): Unit =
+      out.writeLong(value.asInstanceOf[Number].intValue)
+    def read(in: Reader): Any = in.readInt()
   }
   private object LongNode extends Node {
-    def write(value: Any, out: Encoder): Unit =
+    def write(value: Any, out: Writer): Unit =
       out.writeLong(value.asInstanceOf[Number].longValue)
-    def read(in: Decoder): Any = in.readLong()
+    def read(in: Reader): Any = in.readLong()
   }
   private object FloatNode extends Node {
-    def write(value: Any, out: Encoder): Unit =
+    def write(value: Any, out: Writer): Unit =
       out.writeFloat(value.asInstanceOf[Number].floatValue)
-    def read(in: Decoder): Any = in.readFloat()
+    def read(in: Reader): Any = in.readFloat()
   }
   private object DoubleNode extends Node {
-    def write(value: Any, out: Encoder): Unit =
+    def write(value: Any, out: Writer): Unit =
       out.writeDouble(value.asInstanceOf[Number].doubleValue)
-    def read(in: Decoder): Any = in.readDouble()
+    def read(in: Reader): Any = in.readDouble()
   }
   private object StringNode extends Node {
-    def write(value: Any, out: Encoder): Unit =
-      out.writeString(value.asInstanceOf[CharSequence])
-    def read(in: Decoder): Any = in.readString()
+    def write(value: Any, out: Writer): Unit =
+      out.writeString(value.asInstanceOf[CharSequence].toString)
+    def read(in: Reader): Any = in.readString()
   }
   private object BytesNode extends Node {
-    def write(value: Any, out: Encoder): Unit =
+    def write(value: Any, out: Writer): Unit =
       out.writeBytes(value.asInstanceOf[Array[Byte]])
-    // readBytes(null) allocates a buffer of exactly the payload's length
-    def read(in: Decoder): Any = in.readBytes(null).array()
+    def read(in: Reader): Any = in.readBytes()
   }
 
   private final class EnumNode(schema: Schema) extends Node {
     private val symbols: Array[AnyRef] = schema.getEnumSymbols.asScala
       .map(s => new GenericData.EnumSymbol(schema, s): AnyRef).toArray
-    def write(value: Any, out: Encoder): Unit = value match {
-      case e: GenericEnumSymbol[_] => out.writeEnum(schema.getEnumOrdinal(e.toString))
+    def write(value: Any, out: Writer): Unit = value match {
+      case e: GenericEnumSymbol[_] => out.writeLong(schema.getEnumOrdinal(e.toString))
       case _ => throw new AvroTypeException(
         s"value $value is not a symbol of enum ${schema.getFullName}")
     }
-    def read(in: Decoder): Any = symbols(in.readEnum())
+    def read(in: Reader): Any = symbols(in.readInt())
   }
 
   private final class FixedNode(schema: Schema) extends Node {
     private val size = schema.getFixedSize
-    def write(value: Any, out: Encoder): Unit =
-      out.writeFixed(value.asInstanceOf[GenericFixed].bytes(), 0, size)
-    def read(in: Decoder): Any = {
-      val bytes = new Array[Byte](size)
-      in.readFixed(bytes, 0, size)
-      new GenericData.Fixed(schema, bytes)
-    }
+    def write(value: Any, out: Writer): Unit =
+      out.writeFixed(value.asInstanceOf[GenericFixed].bytes(), size)
+    def read(in: Reader): Any = new GenericData.Fixed(schema, in.readFixed(size))
   }
 
+  /** Writes one block of all items, then the end marker, as Avro's
+    * encoder does. Reads any blocking into one `immutable.ArraySeq`. */
   private final class ArrayNode(items: Node) extends Node {
-    def write(value: Any, out: Encoder): Unit = {
+    def write(value: Any, out: Writer): Unit = {
       val xs = value.asInstanceOf[Seq[Any]]
-      out.writeArrayStart()
-      out.setItemCount(xs.size)
-      val it = xs.iterator
-      while (it.hasNext) { out.startItem(); items.write(it.next(), out) }
-      out.writeArrayEnd()
-    }
-    def read(in: Decoder): Any = {
-      val xs = List.newBuilder[Any]
-      var n = in.readArrayStart()
-      while (n > 0) {
-        var i = 0L
-        while (i < n) { xs += items.read(in); i += 1 }
-        n = in.arrayNext()
+      val n = xs.size
+      if (n > 0) {
+        out.writeLong(n)
+        val it = xs.iterator
+        while (it.hasNext) items.write(it.next(), out)
       }
-      xs.result()
+      out.writeByte(0)
+    }
+    def read(in: Reader): Any = {
+      var n = in.blockCount(0)
+      if (n == 0) return immutable.ArraySeq.empty[AnyRef]
+      // a count read from the frame sizes the array no larger than the
+      // frame's remaining bytes; items of no bytes (null) grow it
+      var xs = new Array[AnyRef](math.max(1, math.min(n, in.remaining)))
+      var size = 0
+      while (n > 0) {
+        var i = 0
+        while (i < n) {
+          if (size == xs.length) xs = java.util.Arrays.copyOf(xs, size << 1)
+          xs(size) = items.read(in).asInstanceOf[AnyRef]
+          size += 1
+          i += 1
+        }
+        n = in.blockCount(size)
+      }
+      immutable.ArraySeq.unsafeWrapArray(
+        if (size == xs.length) xs else java.util.Arrays.copyOf(xs, size))
     }
   }
 
   private final class MapNode(values: Node) extends Node {
-    def write(value: Any, out: Encoder): Unit = {
+    def write(value: Any, out: Writer): Unit = {
       val m = value.asInstanceOf[Map[String, Any]]
-      out.writeMapStart()
-      out.setItemCount(m.size)
-      m.foreachEntry { (k, v) =>
-        out.startItem(); out.writeString(k); values.write(v, out)
+      if (m.nonEmpty) {
+        out.writeLong(m.size)
+        m.foreachEntry { (k, v) => out.writeString(k); values.write(v, out) }
       }
-      out.writeMapEnd()
+      out.writeByte(0)
     }
-    def read(in: Decoder): Any = {
+    def read(in: Reader): Any = {
       val m = Map.newBuilder[String, Any]
-      var n = in.readMapStart()
+      var seen = 0L
+      var n = in.blockCount(0)
       while (n > 0) {
-        var i = 0L
+        var i = 0
         while (i < n) { m += in.readString() -> values.read(in); i += 1 }
-        n = in.mapNext()
+        seen += n
+        n = in.blockCount(seen)
       }
       m.result()
     }
@@ -221,7 +388,7 @@ object AvroCodec {
     var fields: Array[Node] = _
 
     /** Keys are checked before any field is written, as toDatum does. */
-    def write(value: Any, out: Encoder): Unit = {
+    def write(value: Any, out: Writer): Unit = {
       val values = new Array[Any](names.length)
       value.asInstanceOf[Map[String, Any]].foreachEntry { (k, v) =>
         val i = index.get(k)
@@ -231,7 +398,7 @@ object AvroCodec {
       var i = 0
       while (i < values.length) { fields(i).write(values(i), out); i += 1 }
     }
-    def read(in: Decoder): Any = {
+    def read(in: Reader): Any = {
       val values = new Array[Any](names.length)
       var i = 0
       while (i < values.length) { values(i) = fields(i).read(in); i += 1 }
@@ -250,6 +417,10 @@ object AvroCodec {
     def get(key: String): Option[Any] = {
       val i = index.get(key)
       if (i == null) None else Some(slots(i))
+    }
+    override def apply(key: String): Any = {
+      val i = index.get(key)
+      if (i == null) default(key) else slots(i)
     }
     def iterator: Iterator[(String, Any)] = new AbstractIterator[(String, Any)] {
       private var i = 0
@@ -299,13 +470,13 @@ object AvroCodec {
       case _ => -1
     }
 
-    def write(value: Any, out: Encoder): Unit = {
+    def write(value: Any, out: Writer): Unit = {
       val i = branchOf(value)
       if (i < 0) throw new UnresolvedUnionException(schema, value)
-      out.writeIndex(i)
+      out.writeLong(i)
       branches(i).write(value, out)
     }
-    def read(in: Decoder): Any = branches(in.readIndex()).read(in)
+    def read(in: Reader): Any = branches(in.readInt()).read(in)
   }
 
   /** One node per schema node; a named record compiles once, so a
@@ -334,52 +505,34 @@ object AvroCodec {
       case NULL => NullNode
     }
 
-  /** `ByteArrayOutputStream` without its monitor, which the direct
-    * encoder would otherwise take once per byte written. */
-  private final class ByteSink extends OutputStream {
-    private var buf = new Array[Byte](128)
-    private var count = 0
-    private def reserve(n: Int): Unit =
-      if (count + n > buf.length)
-        buf = java.util.Arrays.copyOf(buf, math.max(buf.length << 1, count + n))
-    override def write(b: Int): Unit = {
-      reserve(1); buf(count) = b.toByte; count += 1
-    }
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      reserve(len); System.arraycopy(b, off, buf, count, len); count += len
-    }
-    def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, count)
-  }
-
   /** A schema compiled once for the hot path into one writer/reader node
     * per schema node. Encoding walks the Scala value straight into a
-    * direct binary encoder over a byte buffer; decoding reads the binary
-    * decoder straight into Scala values. The nodes are immutable once
-    * built and each call makes its own buffer and encoder or decoder, so
-    * one instance may be shared across threads. */
+    * [[Writer]]'s byte array; decoding reads the frame's own byte array
+    * in place with a [[Reader]], straight into Scala values. The nodes
+    * are immutable once built and each call makes its own writer or
+    * reader, so one instance may be shared across threads. */
   final case class Compiled(schema: Schema) {
     private val root = compile(schema, mutable.Map.empty)
 
-    private def write(value: Any, out: ByteSink): Array[Byte] = {
-      root.write(value, EncoderFactory.get().directBinaryEncoder(out, null))
+    private def write(value: Any, out: Writer): Array[Byte] = {
+      root.write(value, out)
       out.toByteArray
     }
 
     private def read(bytes: Array[Byte], offset: Int): Any =
-      root.read(DecoderFactory.get()
-        .binaryDecoder(bytes, offset, bytes.length - offset, null))
+      root.read(new Reader(bytes, offset))
 
-    def encode(value: Any): Array[Byte] = write(value, new ByteSink)
+    def encode(value: Any): Array[Byte] = write(value, new Writer)
 
     def decode(bytes: Array[Byte]): Any = read(bytes, 0)
 
     /** Confluent frame of `value`: header and payload written into one
       * buffer. */
     def encodeFramed(value: Any, schemaId: Int): Array[Byte] = {
-      val out = new ByteSink
-      out.write(MagicByte)
-      out.write(schemaId >>> 24); out.write(schemaId >>> 16)
-      out.write(schemaId >>> 8); out.write(schemaId)
+      val out = new Writer
+      out.writeByte(MagicByte)
+      out.writeByte(schemaId >>> 24); out.writeByte(schemaId >>> 16)
+      out.writeByte(schemaId >>> 8); out.writeByte(schemaId)
       write(value, out)
     }
 
@@ -413,7 +566,8 @@ object AvroCodec {
   /** Schema id of a Confluent frame (0x00 + 4-byte BE id + payload). */
   def schemaIdOf(bytes: Array[Byte]): Int = {
     checkFrame(bytes)
-    ByteBuffer.wrap(bytes, 1, 4).getInt
+    (bytes(1) & 0xff) << 24 | (bytes(2) & 0xff) << 16 |
+      (bytes(3) & 0xff) << 8 | (bytes(4) & 0xff)
   }
 
   /** Strip a Confluent frame → (schemaId, payload copy). */

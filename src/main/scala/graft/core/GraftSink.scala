@@ -75,11 +75,14 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
     * schema id against the broker registry (K3's deserializer role). */
   protected def decodeFramed(bytes: Array[Byte]): Any = {
     val id = AvroCodec.schemaIdOf(bytes)
-    codecs.getOrElseUpdate(id, {
+    var codec = codecs.getOrNull(id)
+    if (codec == null) {
       val schemaJson = broker.schemaById(id).getOrElse(
         throw new IllegalStateException(s"unknown schema id $id (poison pill)"))
-      AvroCodec.Compiled(AvroCodec.parseable(schemaJson))
-    }).decodeChecked(bytes)
+      codec = AvroCodec.Compiled(AvroCodec.parseable(schemaJson))
+      codecs(id) = codec
+    }
+    codec.decodeChecked(bytes)
   }
 
   def hasPartitionAssignments: Boolean = consumer.assignment.nonEmpty
@@ -95,7 +98,8 @@ abstract class GraftSink(val config: SinkConfig, broker: InMemoryBroker)
 
   override protected def runOnce(): Option[Status] = {
     val polled = consumer.poll(config.pollTimeout.toMillis)
-    flushIfNeeded().orElse(dispatch(polled))
+    val flushed = flushIfNeeded()
+    if (flushed.isDefined) flushed else dispatch(polled)
   }
 
   private def stateOf(topic: String, partition: Int): PartitionState = {

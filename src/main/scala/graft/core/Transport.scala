@@ -1,6 +1,6 @@
 package graft.core
 
-import scala.collection.mutable
+import scala.collection.{immutable, mutable}
 
 /** Message-plane abstraction. The reference talks to Kafka through
   * confluent-kafka clients; offline this repo has no Kafka broker or
@@ -12,8 +12,8 @@ import scala.collection.mutable
   * cluster deployments (SURVEY.md §2-A S13/K3 passthrough).
   */
 final case class TopicPartition(topic: String, partition: Int) {
-  /** Computed once: partitions key the broker's logs and the sink's
-    * offsets. */
+  /** Computed once: partitions key the committed offsets and the sink's
+    * partition states. */
   override val hashCode: Int = scala.util.hashing.MurmurHash3.productHash(this)
 }
 
@@ -56,8 +56,10 @@ trait TransportConsumer {
 /** Single-process broker with per-partition logs, consumer-group commits,
   * and partition-EOF signalling (enable.partition.eof parity). */
 final class InMemoryBroker(numPartitions: Int = 1) {
-  private val logs =
-    mutable.Map[TopicPartition, mutable.ArrayBuffer[(Array[Byte], Array[Byte])]]()
+  private type Log = mutable.ArrayBuffer[(Array[Byte], Array[Byte])]
+  /** Every partition's log of a topic, by partition, made at the topic's
+    * first use: an append finds its log with one lookup by topic name. */
+  private val topicLogs = new java.util.HashMap[String, Array[Log]]()
   /** Committed offsets by consumer group. */
   private val committedOffsets = mutable.Map[String, mutable.Map[TopicPartition, Long]]()
   private val schemas = mutable.Map[Int, String]()
@@ -68,8 +70,19 @@ final class InMemoryBroker(numPartitions: Int = 1) {
     synchronized { schemas(id) = json }
   def schemaById(id: Int): Option[String] = synchronized(schemas.get(id))
 
-  private def log(tp: TopicPartition) =
-    synchronized(logs.getOrElseUpdate(tp, mutable.ArrayBuffer.empty))
+  private def logsOf(topic: String): Array[Log] = synchronized {
+    var l = topicLogs.get(topic)
+    if (l == null) {
+      l = Array.fill(numPartitions)(mutable.ArrayBuffer.empty)
+      topicLogs.put(topic, l)
+    }
+    l
+  }
+
+  /** A partition the topic does not have reads as an empty log. */
+  private def log(tp: TopicPartition): Log =
+    if (tp.partition < 0 || tp.partition >= numPartitions) mutable.ArrayBuffer.empty
+    else logsOf(tp.topic)(tp.partition)
 
   /** Every partition of `topic`, whether or not it holds data yet. */
   def partitionsOf(topic: String): Seq[TopicPartition] =
@@ -82,7 +95,7 @@ final class InMemoryBroker(numPartitions: Int = 1) {
     // append must happen inside the broker monitor: a producer's
     // produce() racing a consumer poll()/read() would otherwise mutate
     // the ArrayBuffer unsynchronized (resize corruption)
-    synchronized { log(TopicPartition(topic, partition)) += ((key, value)) }
+    synchronized { logsOf(topic)(partition) += ((key, value)) }
   }
 
   def endOffset(tp: TopicPartition): Long = synchronized(log(tp).length.toLong)
@@ -116,8 +129,8 @@ final class InMemoryBroker(numPartitions: Int = 1) {
 
   def consumer(group: String): TransportConsumer = new TransportConsumer {
     // per assignment slot, resolved at subscribe: a poll hashes nothing
-    private var tps: IndexedSeq[TopicPartition] = IndexedSeq.empty
-    private var logsOf: Array[mutable.ArrayBuffer[(Array[Byte], Array[Byte])]] = Array.empty
+    private var tps: Array[TopicPartition] = Array.empty
+    private var logs: Array[Log] = Array.empty
     private var positions: Array[Long] = Array.emptyLongArray
     private var eofSignalled: Array[Boolean] = Array.emptyBooleanArray
     /** Slot of the partition the next poll tries first. */
@@ -126,17 +139,17 @@ final class InMemoryBroker(numPartitions: Int = 1) {
     private val groupOffsets = offsetsOf(group)
 
     def subscribe(topics: Seq[String]): Unit = {
-      tps = topics.flatMap(partitionsOf).toIndexedSeq
-      logsOf = tps.map(log).toArray
+      tps = topics.flatMap(partitionsOf).toArray
+      logs = tps.map(log)
       // auto.offset.reset=earliest unless a commit exists (K3 parity)
-      positions = tps.map(InMemoryBroker.this.committed(group, _).getOrElse(0L)).toArray
+      positions = tps.map(InMemoryBroker.this.committed(group, _).getOrElse(0L))
       eofSignalled = new Array[Boolean](tps.length)
       cursor = 0
     }
 
     /** The record at slot `at`'s position, or null when it is caught up. */
     private def next(at: Int): (Array[Byte], Array[Byte]) = {
-      val l = logsOf(at)
+      val l = logs(at)
       val pos = positions(at)
       InMemoryBroker.this.synchronized(if (pos < l.length) l(pos.toInt) else null)
     }
@@ -146,9 +159,10 @@ final class InMemoryBroker(numPartitions: Int = 1) {
       // round-robin across assigned partitions: start after the partition
       // that delivered last, read each record once
       val n = tps.length
+      var at = cursor
       var i = 0
       while (i < n) {
-        val at = (cursor + i) % n
+        if (at >= n) at = 0
         val kv = next(at)
         if (kv != null) {
           val tp = tps(at)
@@ -158,15 +172,16 @@ final class InMemoryBroker(numPartitions: Int = 1) {
           cursor = at + 1
           return Poll.Record(Message(kv._1, kv._2, tp.topic, tp.partition, offset))
         }
+        at += 1
         i += 1
       }
       // EOF signalled once per catch-up, re-armed when new data arrives
       // (partition-EOF parity)
-      val at = eofSignalled.indexOf(false)
-      if (at < 0) Poll.NoMessage
+      val eof = eofSignalled.indexOf(false)
+      if (eof < 0) Poll.NoMessage
       else {
-        eofSignalled(at) = true
-        Poll.Eof(tps(at), positions(at))
+        eofSignalled(eof) = true
+        Poll.Eof(tps(eof), positions(eof))
       }
     }
 
@@ -176,7 +191,8 @@ final class InMemoryBroker(numPartitions: Int = 1) {
     def committed(tp: TopicPartition): Option[Long] =
       InMemoryBroker.this.committed(group, tp)
 
-    def assignment: Seq[TopicPartition] = tps
+    // tps is replaced at subscribe, never written in place
+    def assignment: Seq[TopicPartition] = immutable.ArraySeq.unsafeWrapArray(tps)
 
     def lastMessage(topic: String): Option[Message] = {
       val parts = partitionsOf(topic)

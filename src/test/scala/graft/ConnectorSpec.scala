@@ -536,6 +536,29 @@ class ConnectorSpec extends AnyFunSuite {
     assert(sink.status == Status.Stopped)
   }
 
+  test("a decoded array is an ArraySeq equal to the List or Vector it was " +
+      "encoded from, and its file sink JSON line is unchanged") {
+    val schema = AvroCodec.parseable("""{"type": "record", "name": "A",
+      "fields": [{"name": "xs", "type": {"type": "array", "items": "string"}},
+                 {"name": "ys", "type": {"type": "array", "items": "long"}}]}""")
+    val codec = AvroCodec.Compiled(schema)
+    val values = Seq(
+      Map("xs" -> List("a", "b"), "ys" -> Vector(1L, 2L, 3L)),
+      Map("xs" -> Vector.empty[String], "ys" -> List(7L)))
+    val decoded = values.map(v => codec.decode(codec.encode(v)).asInstanceOf[Map[String, Any]])
+    assert(decoded == values)
+    assert(decoded.forall(_.values.forall(_.isInstanceOf[scala.collection.immutable.ArraySeq[_]])))
+
+    val broker = new InMemoryBroker()
+    broker.registerSchema(3, schema.toString)
+    values.foreach(v => broker.append("arrays", null, codec.encodeFramed(v, 3)))
+    val out = Files.createTempFile("graft-sink", ".jsonl")
+    new FileSink(out.toString, sinkConfig("arrays"), broker).run()
+    assert(Files.readAllLines(out).asScala == Seq(
+      """{"key": null, "value": {"xs": ["a", "b"], "ys": [1, 2, 3]}}""",
+      """{"key": null, "value": {"xs": [], "ys": [7]}}"""))
+  }
+
   test("file source: offset survives restart, no duplicate production (E1)") {
     val broker = new InMemoryBroker()
     val in = Files.createTempFile("graft-src", ".jsonl")

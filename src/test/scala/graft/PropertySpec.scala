@@ -1,9 +1,11 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.avro.Schema
+import org.apache.avro.{InvalidNumberEncodingException, Schema, SystemLimitException}
 import org.apache.avro.Schema.Type._
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
@@ -234,9 +236,13 @@ class PropertySpec extends AnyFunSuite {
         (if (branches.isEmpty) Seq(Schema.create(NULL)) else branches).asJava)
     }))
 
-  /** A Scala value of `schema`, in the codec's value model. */
-  private def valueOf(schema: Schema): Gen[Any] = {
-    val small = Gen.choose(0, 3)
+  /** A Scala value of `schema`, in the codec's value model, with strings
+    * from `strings` and up to `items` items per array or map. */
+  private def valueOf(schema: Schema,
+      strings: Gen[String] = Gen.oneOf(Gen.alphaNumStr, Arbitrary.arbitrary[String]),
+      items: Int = 3): Gen[Any] = {
+    def of(s: Schema): Gen[Any] = valueOf(s, strings, items)
+    val small = Gen.choose(0, items)
     schema.getType match {
       case NULL => Gen.const(null)
       case BOOLEAN => Arbitrary.arbitrary[Boolean]
@@ -244,19 +250,19 @@ class PropertySpec extends AnyFunSuite {
       case LONG => Gen.oneOf(Arbitrary.arbitrary[Long], Arbitrary.arbitrary[Int])
       case FLOAT => Arbitrary.arbitrary[Float].map(f => if (f.isNaN) 0f else f)
       case DOUBLE => Arbitrary.arbitrary[Double].map(d => if (d.isNaN) 0.0 else d)
-      case STRING => Gen.oneOf(Gen.alphaNumStr, Arbitrary.arbitrary[String])
+      case STRING => strings
       case BYTES => Gen.listOf(Arbitrary.arbitrary[Byte]).map(_.toArray)
       case ENUM => Gen.oneOf(schema.getEnumSymbols.asScala.toSeq)
         .map(new GenericData.EnumSymbol(schema, _))
       case FIXED => Gen.listOfN(schema.getFixedSize, Arbitrary.arbitrary[Byte])
         .map(b => new GenericData.Fixed(schema, b.toArray))
-      case ARRAY => small.flatMap(Gen.listOfN(_, valueOf(schema.getElementType)))
+      case ARRAY => small.flatMap(Gen.listOfN(_, of(schema.getElementType)))
       case MAP => small.flatMap(Gen.listOfN(_,
-        Gen.zip(fieldName, valueOf(schema.getValueType)))).map(_.toMap)
+        Gen.zip(fieldName, of(schema.getValueType)))).map(_.toMap)
       case RECORD => Gen.sequence[List[Any], Any](
-          schema.getFields.asScala.map(f => valueOf(f.schema())))
+          schema.getFields.asScala.map(f => of(f.schema())))
         .map(vs => schema.getFields.asScala.map(_.name).zip(vs).toMap)
-      case UNION => Gen.oneOf(schema.getTypes.asScala.toSeq).flatMap(valueOf)
+      case UNION => Gen.oneOf(schema.getTypes.asScala.toSeq).flatMap(of)
     }
   }
 
@@ -278,6 +284,165 @@ class PropertySpec extends AnyFunSuite {
         case (Some(_), None) => false
       }
     }, n = 300)
+  }
+
+  /** Strings of ASCII, 2- and 3-byte UTF-8 chars, surrogate pairs and
+    * unpaired surrogates (which UTF-8 encoding replaces by '?'); the
+    * `Arbitrary[String]` generator never produces a surrogate. */
+  private val unicode: Gen[String] = Gen.listOf(Gen.frequency(
+    4 -> Gen.alphaNumChar.map(_.toString),
+    1 -> Gen.choose('\u0080', '\u07ff').map(_.toString),
+    1 -> Gen.choose('\u0800', '\ud7ff').map(_.toString),
+    1 -> Gen.choose(0x10000, 0x10ffff).map(c => new String(Character.toChars(c))),
+    1 -> Gen.choose('\ud800', '\udfff').map(_.toString))).map(_.mkString)
+
+  private val schemaAndValue: Gen[(Schema, Any)] = for {
+    schema <- Gen.frequency(3 -> recordOf(2, "r"), 1 -> schemaOf(2, "t"))
+    value <- valueOf(schema, unicode, items = 8)
+  } yield (schema, value)
+
+  /** Bytes of Avro's Generic writer through a blocking encoder with
+    * 64-byte blocks: arrays and maps longer than a block are written as
+    * several blocks, each with a negative count and its size in bytes. */
+  private def blockedBytes(value: Any, schema: Schema): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val enc = new EncoderFactory().configureBlockSize(64)
+      .blockingBinaryEncoder(out, null)
+    new GenericDatumWriter[Any](schema).write(AvroCodec.toDatum(value, schema), enc)
+    enc.flush()
+    out.toByteArray
+  }
+
+  test("the compiled writer writes the bytes of Avro's Generic writer and " +
+      "binary encoder, for non-ASCII strings and unpaired surrogates too") {
+    check(Prop.forAllNoShrink(schemaAndValue, Gen.choose(0, Int.MaxValue)) {
+      case ((schema, value), id) =>
+        val codec = AvroCodec.Compiled(schema)
+        Try(genericBytes(value, schema)).toOption match {
+          case None => Try(codec.encode(value)).isFailure
+          case Some(reference) =>
+            val header = java.nio.ByteBuffer.allocate(5)
+              .put(AvroCodec.MagicByte).putInt(id).array()
+            codec.encode(value).sameElements(reference) &&
+              codec.encodeFramed(value, id).sameElements(header ++ reference)
+        }
+    }, n = 300)
+  }
+
+  test("the compiled reader reads what Avro's Generic reader reads from a " +
+      "blocking encoder's multi-block arrays and maps") {
+    check(Prop.forAllNoShrink(schemaAndValue) { case (schema, value) =>
+      val codec = AvroCodec.Compiled(schema)
+      Try(blockedBytes(value, schema)).toOption.forall { bytes =>
+        val header = Array[Byte](AvroCodec.MagicByte, 0, 0, 0, 9)
+        same(codec.decode(bytes), genericValue(bytes, schema)) &&
+          same(codec.decodeFramed(header ++ bytes), genericValue(bytes, schema))
+      }
+    }, n = 300)
+  }
+
+  test("golden: a blocked array and map with negative block counts decode " +
+      "alike, and unpaired surrogates write as '?'") {
+    val schema = AvroCodec.parseable("""{"type": "record", "name": "B",
+      "fields": [{"name": "xs", "type": {"type": "array", "items": "string"}},
+                 {"name": "m", "type": {"type": "map", "values": "long"}}]}""")
+    val xs = (0 until 40).map(i => s"item-$i")
+    val m = (0 until 40).map(i => s"key-$i" -> i.toLong).toMap
+    val value = Map("xs" -> xs, "m" -> m)
+    val blocked = blockedBytes(value, schema)
+    val plain = AvroCodec.encode(value, schema)
+    // the blocking encoder split both collections: its first count is
+    // negative (zig-zag: odd) and the bytes differ from one block each
+    assert((blocked(0) & 1) == 1 && !blocked.sameElements(plain))
+    assert(AvroCodec.decode(blocked, schema) == value)
+    assert(AvroCodec.decode(plain, schema) == value)
+
+    val text = AvroCodec.parseable("\"string\"")
+    for (s <- Seq("a\ud800b", "\udc00", "x\ud83d", "é€😀", "\ud83d\ude00\udfff")) {
+      val bytes = AvroCodec.encode(s, text)
+      assert(bytes.sameElements(genericBytes(s, text)), s)
+      assert(AvroCodec.decode(bytes, text) ==
+        new String(s.getBytes(StandardCharsets.UTF_8), StandardCharsets.UTF_8))
+    }
+    assert(AvroCodec.decode(AvroCodec.encode("a\ud800b", text), text) == "a?b")
+  }
+
+  test("every strict prefix of an encoded value fails to decode with " +
+      "EOFException") {
+    val small = for {
+      schema <- Gen.frequency(3 -> recordOf(2, "r"), 1 -> schemaOf(2, "t"))
+      value <- valueOf(schema, unicode)
+    } yield (schema, value)
+    check(Prop.forAllNoShrink(small) { case (schema, value) =>
+      val codec = AvroCodec.Compiled(schema)
+      Try(codec.encode(value)).toOption.forall { bytes =>
+        (0 until bytes.length).forall(n =>
+          Try(codec.decode(bytes.take(n))).failed.toOption
+            .exists(_.isInstanceOf[java.io.EOFException]))
+      }
+    }, n = 200)
+  }
+
+  test("malformed input throws as Avro's decoder throws: an overlong " +
+      "varint, a negative length, a length past the end of the frame") {
+    def rejected(json: String, bytes: Int*): Throwable = {
+      val schema = AvroCodec.parseable(json)
+      val payload = bytes.map(_.toByte).toArray
+      val avro = intercept[Exception](genericValue(payload, schema))
+      val ours = intercept[Exception](AvroCodec.decode(payload, schema))
+      assert(ours.getClass == avro.getClass, s"$ours vs $avro")
+      intercept[Exception](AvroCodec.Compiled(schema)
+        .decodeFramed(Array[Byte](AvroCodec.MagicByte, 0, 0, 0, 1) ++ payload))
+      ours
+    }
+    // a sixth int byte and an eleventh long byte
+    assert(rejected("\"int\"", 0x80, 0x80, 0x80, 0x80, 0x80, 0x01)
+      .isInstanceOf[InvalidNumberEncodingException])
+    assert(rejected("\"long\"", Seq.fill(10)(0x80) :+ 0x01: _*)
+      .isInstanceOf[InvalidNumberEncodingException])
+    assert(rejected("\"string\"", 0x01, 0x41).getMessage.contains("negative"))
+    assert(rejected("\"bytes\"", 0x03, 0x41).getMessage.contains("negative"))
+    assert(rejected("\"string\"", 0x14, 0x41, 0x42).isInstanceOf[java.io.EOFException])
+    assert(rejected("\"bytes\"", 0x14, 0x41).isInstanceOf[java.io.EOFException])
+    assert(rejected("""{"type": "fixed", "name": "F", "size": 4}""", 0x41)
+      .isInstanceOf[java.io.EOFException])
+  }
+
+  test("Avro's string, bytes and collection length limits apply") {
+    val props = Seq(SystemLimitException.MAX_STRING_LENGTH_PROPERTY,
+      SystemLimitException.MAX_BYTES_LENGTH_PROPERTY,
+      SystemLimitException.MAX_COLLECTION_LENGTH_PROPERTY)
+    // the limits are read from the properties when the class initializes
+    val reset = classOf[SystemLimitException].getDeclaredMethod("resetLimits")
+    reset.setAccessible(true)
+    val schema = AvroCodec.parseable("""{"type": "record", "name": "L",
+      "fields": [{"name": "s", "type": "string"}, {"name": "b", "type": "bytes"},
+                 {"name": "a", "type": {"type": "array", "items": "long"}},
+                 {"name": "m", "type": {"type": "map", "values": "long"}}]}""")
+    val ok = Map("s" -> "abcd", "b" -> Array[Byte](1, 2, 3, 4),
+      "a" -> Seq(1L, 2L, 3L, 4L), "m" -> (1 to 4).map(i => s"k$i" -> 0L).toMap)
+    try {
+      props.foreach(System.setProperty(_, "4"))
+      reset.invoke(null)
+      val codec = AvroCodec.Compiled(schema)
+      assert(codec.decode(codec.encode(ok)).asInstanceOf[Map[String, Any]]("s") == "abcd")
+      val over = Seq("s" -> "abcde", "b" -> Array[Byte](1, 2, 3, 4, 5),
+        "a" -> Seq(1L, 2L, 3L, 4L, 5L), "m" -> (1 to 5).map(i => s"k$i" -> 0L).toMap)
+      for ((field, v) <- over) {
+        val bytes = codec.encode(ok.updated(field, v))
+        intercept[SystemLimitException](genericValue(bytes, schema))
+        intercept[SystemLimitException](codec.decode(bytes))
+      }
+      // the collection limit counts items over all blocks of one array:
+      // two blocks of 3 (-3, size, ...) exceed 4
+      val twoBlocks = Array[Byte](0x02, 0x41, 0x00) ++ // s = "A", b = empty
+        Array[Byte](0x05, 0x06, 2, 4, 6, 0x05, 0x06, 8, 10, 12, 0x00) ++ Array[Byte](0x00)
+      intercept[SystemLimitException](genericValue(twoBlocks, schema))
+      intercept[SystemLimitException](codec.decode(twoBlocks))
+    } finally {
+      props.foreach(System.clearProperty)
+      reset.invoke(null)
+    }
   }
 
   test("golden: a recursive schema compiles and round-trips") {
