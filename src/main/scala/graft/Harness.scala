@@ -5,19 +5,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{Memo, Memos}
 
 /** The session factory and timing helpers shared by the sbt mains
-  * (Bench, Verify, Probe, Plans), so they all run on one configuration.
+  * (Bench, Verify, Probe, Plans) and the test specs, so they all run on
+  * one configuration.
   */
 object Harness {
 
   /** Local core count: SPARK_GRAFT_CPUS, or every available processor
-    * when unset. Also the shuffle partition count. */
+    * when unset. */
   val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors.toString)
 
-  def session(): SparkSession = {
+  /** The local session on `cores` cores, which is also the shuffle
+    * partition count. */
+  def session(cores: String = cpus): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       // Write timestamps as TIMESTAMP_MICROS (not INT96, which pyarrow

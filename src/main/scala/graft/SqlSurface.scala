@@ -558,7 +558,7 @@ object SqlSurface {
       TextOps.uniStateOf(a.table(0)) },
 
     fn("graft_serp_dedup", "results", "components")(
-      """SERP near-dup collapse (q301/round-15 serving twin): a
+      """SERP near-dup collapse (q301, round 15): a
         |(orig_rank, doc_id, score) result-list view collapsed by a
         |(doc_id, component) label view.""") { a =>
       Dedup.serpDedupCollapse(a.table(0), a.table(1)) },

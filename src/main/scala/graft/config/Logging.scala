@@ -111,8 +111,6 @@ object Logging {
     new AtomicReference[(LogConfig, PrintStream)](
       (fromEnv(), System.out))
 
-  def current: LogConfig = state.get()._1
-
   /** Render + emit through the configured sink if `level` clears the
     * threshold. Caller site (name/function/line) is resolved from the
     * stack the way InterceptHandler walks frames (config.py:291-295). */

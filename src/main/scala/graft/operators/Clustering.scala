@@ -71,12 +71,6 @@ object Clustering {
     call_function(NearestCentroidExpr.name, augment(v),
       typedlit(cids.toSeq), typedlit(augmentMat(mat).map(_.toSeq).toSeq))
 
-  /** Public Euclidean argmin-assignment against a driver-held codebook
-    * (the augmented argmax-dot trick above) — zero-shuffle codegen'd
-    * projection; used by [[Similarity.pqEncode]] per subspace. */
-  def assignEuclidean(v: Column, mat: Array[Array[Double]]): Column =
-    assignCell(v, Array.tabulate(mat.length)(_.toLong), mat)
-
   /** Train a k-cell codebook; returns (cell ids 0..k-1, centroids). */
   def kMeansCentroids(vectors: DataFrame, vecCol: String, k: Int,
       iters: Int = 5): (Array[Long], Array[Array[Double]]) = {
@@ -204,11 +198,7 @@ object Clustering {
     *
     * Scale: each round is one broadcast(m·kSub·subDim codebook rows)
     * join + two partial-combining aggregates — the k-means-assignment
-    * shuffle shape; dist is N·m·kSub slim rows. The PRODUCTION path at
-    * 100 TB stays [[Similarity.pqTrain]]/[[Similarity.pqEncode]]
-    * (zero-shuffle codegen'd argmin-dot per subspace); this shared
-    * twin is what CI gates, exactly as kMeansShared gates the float
-    * trainer's discipline. */
+    * shuffle shape; dist is N·m·kSub slim rows. */
   def pqShared(embeddings: DataFrame, subDim: Int, kSub: Int,
       rounds: Int): (DataFrame, DataFrame, DataFrame) = {
     require(subDim >= 1)

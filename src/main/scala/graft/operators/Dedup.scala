@@ -35,9 +35,6 @@ object Dedup {
       sequence(lit(0), greatest(size(w) - k, lit(0))),
       i => concat_ws(" ", slice(w, i + 1, lit(k)))))
 
-  def shingles(text: Column, k: Int): Column =
-    shinglesOf(split(text, " "), k)
-
   /** Eagerly materialize a (small) RESULT frame, then release the
     * internal persisted subtrees — the advice-r6 leak fix that keeps
     * persist's speed: internal shingle/postings frames stay in the
@@ -68,91 +65,21 @@ object Dedup {
   private def sizesHint(sizes: DataFrame, nDocs: Long): DataFrame =
     if (nDocs <= SizesBroadcastCeiling) broadcast(sizes) else sizes
 
-  def minhashSignature(sh: Column, numHashes: Int): Column =
-    call_function("graft_minhash", sh, lit(numHashes))
-
-  /** LSH band keys: hash of each r-slice of the signature. Collision in
-    * ANY band → candidate pair (P = 1-(1-j^r)^b). */
-  def bandKeys(sig: Column, bands: Int, r: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(b, slice(sig, b * lit(r) + 1, lit(r))))
-
-  /** LSH PARAMETER PLANNER — pick (bands, rows) for a signature of
-    * `numHashes` so the banding S-curve's threshold (1/b)^(1/r) (the
-    * jaccard at which collision probability crosses ½, standard MMDS
-    * §3.4 analysis) lands closest to the target. The knob users
-    * otherwise hand-tune; `minhashPairs`' defaults (64 hashes, 16
-    * bands) are exactly `lshPlan(0.5, 64)` — (1/16)^(1/4) = 0.5 on
-    * the nose (DedupSpec pins this and the monotone rows-per-band
-    * growth with threshold). Driver-side arithmetic over the ≤
-    * d(numHashes) divisors — no data touched. */
-  def lshPlan(threshold: Double, numHashes: Int = 64): (Int, Int) = {
-    require(threshold > 0 && threshold < 1 && numHashes > 0)
-    (1 to numHashes).filter(numHashes % _ == 0)
-      .map(b => (b, numHashes / b))
-      .minBy { case (b, r) =>
-        math.abs(math.pow(1.0 / b, 1.0 / r) - threshold)
-      }
-  }
-
-  /** MinHash+LSH near-dup pairs with exact-Jaccard verification.
-    * Returns (doc_a, doc_b, jaccard) for pairs ≥ threshold. */
-  def minhashPairs(docs: DataFrame, k: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, threshold: Double = 0.5): DataFrame = {
-    graft.functions.SignatureExprs.register(docs.sparkSession)
-    val r = numHashes / bands
-    // shingle sets carried as 64-bit hashes: verification intersects long
-    // arrays instead of shingle text (same jaccard modulo ~n²/2⁶⁴
-    // collisions; ~3× cheaper and the join moves no document text).
-    // Persisted: this subtree feeds the band explode AND both
-    // verification sides — recomputed up to 3× in one DAG otherwise
-    // (ReuseExchange can't cover it: the three consumers partition on
-    // different keys). MEMORY_AND_DISK so a 100 TB corpus spills; the
-    // blocks are released by finishAndRelease below (advice r6 — no
-    // session-lifetime leak).
-    val withSh = docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id"),
-        array_distinct(transform(shinglesOf(col("w"), k),
-          s => xxhash64(s))).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = withSh
-      .select(col("doc_id"),
-        posexplode(bandKeys(minhashSignature(col("sh"), numHashes),
-          bands, r)).as(Seq("band", "bkey")))
-    // Slim band join: only (doc_id, band, bkey) shuffles here.
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    // Verification: shingle-hash sets join back once per side.
-    finishAndRelease(cand
-      .join(withSh.as("va"), col("doc_a") === col("va.doc_id"))
-      .join(withSh.as("vb"), col("doc_b") === col("vb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
-        (size(array_intersect(col("va.sh"), col("vb.sh"))).cast("double") /
-          size(array_union(col("va.sh"), col("vb.sh"))).cast("double"))
-          .as("jaccard"))
-      .filter(col("jaccard") >= threshold), withSh)
-  }
-
-  /** ENGINE-SHARED MinHash+LSH pairs — the ORACLE-GATED form of
-    * [[minhashPairs]] (round-10 flip of the q34c/q151b deterministic-
-    * config playbook onto the LSH family): shingles hash via the
-    * q95/tx4 polynomial fold (`graft_polyhash`, base 31 mod 10⁹+7) and
-    * permutation k is the universal hash (aₖ·x + bₖ) mod P
-    * (`graft_minhash_mod`, constants Mix.modMults/modAdds — the same
-    * literals the DuckDB oracle inlines), so the SIGNATURES, the band
-    * collisions, and therefore the exact candidate-pair set are
-    * bit-identical in any engine that can do BIGINT arithmetic. Band
-    * keys are the raw r-slices of the signature compared by array
-    * equality — no second-level hash to diverge on. Same scale shape
-    * as the production path: slim (doc_id, band, slice) band join,
+  /** ENGINE-SHARED MinHash+LSH pairs with exact-Jaccard verification,
+    * returning (doc_a, doc_b, jaccard) for pairs ≥ threshold (the
+    * q34c/q151b deterministic-config playbook applied to the LSH
+    * family): shingles hash via the q95/tx4 polynomial fold
+    * (`graft_polyhash`, base 31 mod 10⁹+7) and permutation k is the
+    * universal hash (aₖ·x + bₖ) mod P (`graft_minhash_mod`, constants
+    * Mix.modMults/modAdds — the same literals the DuckDB oracle
+    * inlines), so the SIGNATURES, the band collisions, and therefore
+    * the exact candidate-pair set are bit-identical in any engine that
+    * can do BIGINT arithmetic. Band keys are the raw r-slices of the
+    * signature compared by array equality — no second-level hash to
+    * diverge on. Scale shape: slim (doc_id, band, slice) band join,
     * hash-set verification join, never O(n²). Recall at a given
-    * jaccard is the standard 1−(1−j^r)^b S-curve — UNCHANGED — but the
-    * oracle replays the identical banding, so the gate is exact. */
+    * jaccard is the standard 1−(1−j^r)^b S-curve, and the oracle
+    * replays the identical banding, so the gate is exact. */
   def minhashPairsShared(docs: DataFrame, k: Int = 3, numHashes: Int = 64,
       bands: Int = 16, threshold: Double = 0.5): DataFrame = {
     graft.functions.SignatureExprs.register(docs.sparkSession)
@@ -197,9 +124,9 @@ object Dedup {
     * hotter than the cap would be missed — the oracle-gated entries
     * therefore run uncapped; see `exactPairs`). The survivor set is
     * DuckDB-expressible and sits under the hard oracle (q33f), unlike
-    * dropping the losers of [[minhashPairs]], whose survivors depend
-    * on LSH band collisions. Same scale shape: the pair set is the
-    * postings join, and removal is one anti-join on doc_id. */
+    * dropping the losers of [[minhashPairsShared]], whose survivors
+    * depend on LSH band collisions. Same scale shape: the pair set is
+    * the postings join, and removal is one anti-join on doc_id. */
   def dropNearDuplicatesExact(docs: DataFrame, k: Int = 3,
       threshold: Double = 0.5): DataFrame =
     dropPairLosers(docs,
@@ -635,7 +562,7 @@ object Dedup {
       .select(col("doc_id"),
         explode(transform(shinglesOf(col("w"), k),
           s => xxhash64(s))).as("sh"))
-      // shingles() is array_distinct per doc, so count(*) after the
+      // shinglesOf() is array_distinct per doc, so count(*) after the
       // semi-join IS the distinct-overlap count
       .join(broadcast(benchSh), Seq("sh"))
       .groupBy("doc_id")
@@ -1195,13 +1122,13 @@ object Dedup {
   }
 
   /** The q301 collapse stage over ANY result list (orig_rank,
-    * doc_id, score) against a (doc_id, component) label frame —
-    * factored to ONE body so the gated batch query and the serving
-    * stream ([[graft.streaming.StreamOps.serpDedupStream]]) cannot
-    * drift. Unlabeled docs are their own singleton group; each
-    * group's best-ranked hit survives carrying `n_collapsed`; dense
-    * new ranks re-number by original rank. Windows sort ≤ top-k
-    * rows — result-list-sized, corpus-independent. */
+    * doc_id, score) against a (doc_id, component) label frame; a
+    * stream of result lists runs it unchanged in `foreachBatch`, one
+    * list per micro-batch, with no stream state. Unlabeled docs are
+    * their own singleton group; each group's best-ranked hit survives
+    * carrying `n_collapsed`; dense new ranks re-number by original
+    * rank. Windows sort ≤ top-k rows — result-list-sized,
+    * corpus-independent. */
   def serpDedupCollapse(results: DataFrame, components: DataFrame)
       : DataFrame = {
     val g = results
@@ -1675,9 +1602,8 @@ object Dedup {
     * second LSH tuning dial next to q237's threshold sweep: narrower
     * bands move the S-curve left (more candidates, more recall, less
     * precision) — this is the measured curve a banding decision reads
-    * instead of trusting the (1/b)^(1/r) formula blind ([[lshPlan]]
-    * picks from the same family). One signature pass, one slim band
-    * join per config. */
+    * instead of trusting the (1/b)^(1/r) formula blind. One signature
+    * pass, one slim band join per config. */
   def bandingSweep(docs: DataFrame,
       bandConfigs: Seq[Int] = Seq(8, 16, 32)): DataFrame = {
     graft.functions.SignatureExprs.register(docs.sparkSession)

@@ -1210,51 +1210,24 @@ object Graph {
     d
   }
 
-  /** K-CORE: the maximal subgraph in which every node has degree ≥ k —
-    * the standard graph-cleaning primitive (peel leaves/noise before
-    * community detection or embedding training). Iterative peeling:
-    * remove all nodes of degree < k, recompute degrees, repeat to the
-    * fixpoint. Peeling is monotone (the survivor set only shrinks), so
-    * the fixpoint is the unique k-core regardless of removal order.
+  /** K-CORE PEEL: `rounds` synchronous rounds of removing every node
+    * of degree < k and recomputing degrees. Peeling is monotone (the
+    * survivor set only shrinks), so once a round removes nothing the
+    * result is the k-core — the maximal subgraph in which every node
+    * has degree ≥ k, the standard graph-cleaning primitive (peel
+    * leaves/noise before community detection or embedding training).
+    * A FIXED round count is the q93/q99 discipline: both engines run
+    * EXACTLY `rounds` rounds, so the result is deterministic whether
+    * or not the peel has converged; a caller that needs the k-core
+    * itself picks a round count at or past the peeling depth.
     *
     * Scale shape per round: one partial+final degree agg over the
     * surviving edge list + two broadcast-able anti-joins; edges
     * localCheckpoint per round (iterative-loop rule — lineage growth
-    * would otherwise re-analyze an O(rounds)-deep plan). Rounds needed
-    * = peeling depth, O(log n) on real sparse graphs. REFUSES to
-    * return an unconverged subgraph (the connectedComponents
-    * discipline: a wrong answer must not look like an answer).
+    * would otherwise re-analyze an O(rounds)-deep plan). Peeling depth
+    * is O(log n) on real sparse graphs.
     *
-    * Returns the k-core's edge list (u, v). */
-  def kCore(edges: DataFrame, k: Long, maxIter: Int = 30): DataFrame = {
-    var cur = edges.select(col("u"), col("v")).localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val deg = cur.select(col("u").as("n"))
-        .unionAll(cur.select(col("v").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val bad = deg.filter(col("d") < k).select(col("n"))
-      if (bad.isEmpty) converged = true
-      else {
-        cur = cur
-          .join(bad.withColumnRenamed("n", "u"), Seq("u"), "left_anti")
-          .join(bad.withColumnRenamed("n", "v"), Seq("v"), "left_anti")
-          .select(col("u"), col("v"))
-          .localCheckpoint()
-      }
-      i += 1
-    }
-    require(converged,
-      s"k-core peeling did not converge in $maxIter rounds — raise " +
-        "maxIter; refusing to return a non-fixpoint subgraph")
-    cur
-  }
-
-  /** Fixed-round peel — the oracle-gateable sibling of [[kCore]] (the
-    * q93/q99 discipline: both engines run EXACTLY `rounds` rounds, so
-    * the result is deterministic whether or not the peel has converged;
-    * [[kCore]] remains the to-convergence operator). */
+    * Returns the surviving edge list (u, v). */
   def kCorePeel(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
     var cur = edges.select(col("u"), col("v")).localCheckpoint()
     for (_ <- 1 to rounds) {
@@ -1324,32 +1297,15 @@ object Graph {
       .select(col("u"), col("v"))
   }
 
-  /** K-TRUSS (to convergence): the maximal subgraph where every edge
-    * closes ≥ k−2 triangles — the edge-cohesion sibling of [[kCore]]
-    * (Cohen 2008, public): trusses are to edges what cores are to
-    * nodes, and a k-truss is always inside the (k−1)-core but strictly
-    * tighter (a star survives any core radius but no truss). Same
-    * convergence discipline as kCore: synchronous peel rounds,
-    * refuses a non-fixpoint result. */
-  def kTruss(edges: DataFrame, k: Long, maxIter: Int = 30): DataFrame = {
-    var cur = edges.select(col("u"), col("v")).localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val next = trussPeelRound(cur, k).localCheckpoint()
-      if (next.count() == cur.count()) converged = true
-      cur = next
-      i += 1
-    }
-    require(converged,
-      s"k-truss peeling did not converge in $maxIter rounds — raise " +
-        "maxIter; refusing to return a non-fixpoint subgraph")
-    cur
-  }
-
-  /** Fixed-round truss peel — the oracle-gateable sibling of
-    * [[kTruss]] (the q131 discipline: both engines run EXACTLY
-    * `rounds` rounds, deterministic whether or not converged). */
+  /** K-TRUSS PEEL: `rounds` synchronous rounds of removing every edge
+    * that closes < k−2 triangles among the survivors. Once a round
+    * removes nothing the result is the k-truss — the edge-cohesion
+    * sibling of the k-core (Cohen 2008, public): trusses are to edges
+    * what cores are to nodes, and a k-truss is always inside the
+    * (k−1)-core but strictly tighter (a star survives any core radius
+    * but no truss). Fixed rounds, the [[kCorePeel]] discipline: both
+    * engines run EXACTLY `rounds` rounds, deterministic whether or
+    * not converged. */
   def kTrussPeel(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
     var cur = edges.select(col("u"), col("v")).localCheckpoint()
     for (_ <- 1 to rounds)

@@ -194,53 +194,6 @@ object Similarity {
         aggregate(col("codes"), lit(0L), (a, x) => a + x).as("code_sum"))
       .orderBy("vec_id")
 
-  // ------------------------------------------------------- PQ (round 6)
-
-  /** PRODUCT QUANTIZATION codebooks: the vector space is split into `m`
-    * contiguous subspaces and each gets its own `kSub`-cell Lloyd's
-    * codebook (Jégou/Douze/Schmid, TPAMI'11 — the public standard for
-    * billion-scale ANN). Driver state is m·kSub·(dim/m) = kSub·dim
-    * doubles — independent of N; each training pass is
-    * [[Clustering.kMeansCentroids]]'s zero-shuffle assignment +
-    * partial-combining sum. Returns books(s)(c) = centroid c of
-    * subspace s. */
-  def pqTrain(vectors: DataFrame, m: Int = 8, kSub: Int = 16,
-      iters: Int = 3): Array[Array[Array[Double]]] = {
-    val base = vectors.select(asDouble(col("embedding")).as("v"))
-    val dim = base.select(size(col("v"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val d = dim / m
-    (0 until m).map { s =>
-      val sub = base.select(slice(col("v"), s * d + 1, d).as("sv"))
-      Clustering.kMeansCentroids(sub, "sv", kSub, iters)._2
-    }.toArray
-  }
-
-  /** Encode every vector as `m` small codes (argmin-Euclidean per
-    * subspace — a pure codegen'd projection, no shuffle) plus the
-    * reconstructed norm² from the codebooks (needed for approximate
-    * cosine; computed ONCE at encode time, not per query). 64 doubles
-    * → 8 codes is a 64× compression of what the compressed-domain scan
-    * reads. */
-  def pqEncode(vectors: DataFrame,
-      books: Array[Array[Array[Double]]]): DataFrame = {
-    NearestCentroidExpr.register(vectors.sparkSession)
-    val m = books.length
-    val d = books(0)(0).length
-    val base = vectors
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val codes = array((0 until m).map { s =>
-      Clustering.assignEuclidean(slice(col("v"), s * d + 1, d), books(s))
-    }: _*)
-    val cn2 = typedlit(books.map(_.map(c =>
-      c.map(x => x * x).sum).toSeq).toSeq) // m × kSub centroid norms²
-    base.withColumn("codes", codes)
-      .withColumn("vn2a", aggregate(sequence(lit(0), lit(m - 1)),
-        lit(0.0), (acc, s) => acc + element_at(element_at(cn2, s + 1),
-          element_at(col("codes"), s + 1).cast("int") + 1)))
-      .drop("v")
-  }
-
   /** Exact cosine pair join: every unordered vector pair whose cosine,
     * rounded to integer millionths (the q34a discipline — identical raw
     * doubles round identically in any engine), clears `thresholdE6`.
@@ -868,12 +821,10 @@ object Similarity {
     * codebook-quality artifact a PQ deployment signs off (empty cells,
     * skewed cells, and distortion budget all read off this table).
     * Closes the round-12 gap where PQ was only recall-SPEC'd
-    * (SimilaritySpec) while k-means/IVF were gated (q246/q270).
+    * while k-means/IVF were gated (q246/q270).
     *
     * Scale: the encode pass is N·m·kSub slim rows (the k-means-
-    * assignment shuffle); the readout is a (subspace, cell) rollup.
-    * Production encodes with the zero-shuffle codegen'd
-    * [[pqEncode]]; this chain is what CI gates. */
+    * assignment shuffle); the readout is a (subspace, cell) rollup. */
   def q282PqTrain(spark: SparkSession, dir: String): DataFrame = {
     val (_, _, dist) = pqShared168(spark, dir)
     pqCodes(dist)
@@ -1017,135 +968,6 @@ object Similarity {
   def q285IvfAdcTopK(spark: SparkSession, dir: String): DataFrame =
     ivfAdcTopK(spark, dir, probes = 4, shortlist = 50, k = 10)
 
-  // ------------------------------------------------------- ADC serving
-
-  /** One corpus entry of the driver-held IVF-ADC serving replica:
-    * assigned coarse cell, one PQ code per subspace (index = s), and
-    * the full-precision e3 vector for the exact re-rank stage (the
-    * refine side-car a production deployment keeps next to the
-    * compressed index, DiskANN-style). */
-  final case class IvfAdcEntry(vecId: Long, cell: Long,
-      codes: Array[Long], vec: Array[Long]) extends Serializable
-
-  /** Driver-held serving replica of the GATED IVF-ADC index state
-    * (q285's inputs collected): integer e3 centroids, per-subspace
-    * integer PQ codebooks, and the coded corpus. A real ANN serving
-    * node holds exactly this in RAM (codes are the 64×-compressed
-    * form; at 10⁹ vectors the codes fit ~4 GB — shard by cell and
-    * route queries when a single replica no longer does, or fall back
-    * to foreachBatch over the relational q285 chain). */
-  final case class IvfAdcIndex(subDim: Int,
-      cents: Map[Long, Array[Long]],
-      books: Map[Long, Map[Long, Array[Long]]],
-      entries: Array[IvfAdcEntry]) extends Serializable {
-    /** Cell-keyed posting lists (advice r14): serving enumerates ONLY
-      * the probed cells' populations instead of linearly scanning the
-      * whole entries array per query — per-query work becomes
-      * proportional to the probed-cell population, which is the IVF
-      * deal. @transient: rebuilt lazily per JVM after deserialization
-      * (cheap one-time groupBy; keeps the shipped replica = the flat
-      * array). */
-    @transient lazy val byCell: Map[Long, Array[IvfAdcEntry]] =
-      entries.groupBy(_.cell)
-  }
-
-  /** Collect the serving replica off the memoized gated trainer state
-    * — bounded by index size (centroids + codebooks + N·(dims + m)
-    * longs), the codebook-class driver state rule
-    * ([[pqEncode]]'s discipline, scaled to the coded corpus). */
-  def ivfAdcIndexBuild(spark: SparkSession, dir: String): IvfAdcIndex = {
-    val (kcent, _) = kmeansShared83(spark, dir)
-    val (ex, pcent, pdist) = pqShared168(spark, dir)
-    val subDim = 16
-    val cents = kcent.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._1)
-      .map { case (cell, rows) =>
-        cell -> rows.sortBy(_._2).map(_._3) }
-    val books = pcent.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .groupBy(_._1)
-      .map { case (s, rows) =>
-        s -> rows.groupBy(_._2).map { case (cell, rs) =>
-          cell -> rs.sortBy(_._3).map(_._4) } }
-    // assignment against the FINAL centroids (the q285 serving rule);
-    // argmin as a hash agg (round 17) — same (d2, cell) total order.
-    val a3 = ex.join(broadcast(kcent), "dim")
-      .groupBy(col("vec_id"), col("cell"))
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("d2"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("cell"))).as("m"))
-      .select(col("vec_id"), col("m.cell").as("cell"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val codes = pqCodes(pdist).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._1)
-      .map { case (v, rows) => v -> rows.sortBy(_._2).map(_._3) }
-    val vecs = ex.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getAs[Long]("x")))
-      .groupBy(_._1)
-      .map { case (v, rows) => v -> rows.sortBy(_._2).map(_._3) }
-    val entries = vecs.keys.toArray.sorted.map { v =>
-      IvfAdcEntry(v, a3(v), codes(v), vecs(v)) }
-    IvfAdcIndex(subDim, cents, books, entries)
-  }
-
-  /** IVF-ADC SERVING against the driver-held replica — q285's exact
-    * semantics (probe the `probes` nearest cells under (d2, cell),
-    * ADC-rank candidates under (adc_d2, vec_id), keep `shortlist`,
-    * exact-re-rank to the top `k` under (d2, vec_id)) as ONE stateless
-    * per-row projection: every stage is in-memory index arithmetic, so
-    * the SAME body serves a batch frame and a query STREAM (zero
-    * state stores, zero shuffles — serve latency is micro-batch
-    * latency). StreamingSpec pins serve ≡ the gated q285 chain row for
-    * row, and batch ≡ stream across overlapping batches with a
-    * planted tie. */
-  def ivfAdcServe(queries: DataFrame, ix: IvfAdcIndex, probes: Int,
-      shortlist: Int, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    queries
-      .select(col("vec_id").cast("long"),
-        col("embedding").cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .flatMap { case (qid, emb) =>
-        val q = emb.map(x => math.floor(x * 1000.0 + 0.5).toLong).toArray
-        def d2(a: Array[Long], b: Array[Long], off: Int): Long = {
-          var d = 0L; var i = 0
-          while (i < b.length) {
-            val t = a(off + i) - b(i); d += t * t; i += 1 }
-          d
-        }
-        val probed = ix.cents.toArray
-          .map { case (cell, c) => (d2(q, c, 0), cell) }
-          .sorted.take(probes).map(_._2)
-        // ADC lookup: per (subspace, PQ code) — m·kSub entries, coarse-
-        // cell-independent for raw PQ, so it is already probe-bounded.
-        val lut: Map[Long, Map[Long, Long]] = ix.books.map {
-          case (s, cb) => s -> cb.map { case (cell, sub) =>
-            cell -> d2(q, sub, s.toInt * ix.subDim) } }
-        // Candidate enumeration walks ONLY the probed cells' posting
-        // lists (advice r14) — O(probed population), not O(N). The
-        // downstream (adc, vec_id) sort makes the result independent
-        // of enumeration order.
-        val cands = probed.iterator
-          .flatMap(c =>
-            ix.byCell.getOrElse(c, Array.empty[IvfAdcEntry]).iterator)
-          .filter(e => e.vecId != qid)
-          .map { e =>
-            var adc = 0L; var s = 0
-            while (s < e.codes.length) {
-              adc += lut(s.toLong)(e.codes(s)); s += 1 }
-            (adc, e.vecId, e.vec)
-          }.toArray.sortBy(t => (t._1, t._2)).take(shortlist)
-        cands.map { case (_, vid, v) => (d2(q, v, 0), vid) }
-          .sorted.take(k).zipWithIndex
-          .map { case ((dd, vid), i) => (qid, (i + 1).toLong, vid, dd) }
-          .toSeq
-      }
-      .toDF("qid", "rank", "neighbor", "d2")
-  }
-
   /** Q309: REFINE-RE-RANK SHORTLIST SWEEP — recall@10 vs the brute
     * exact top-10 when the refine-decode re-rank (q303's finale) runs
     * over ADC shortlists {10, 50, 100, 200}, all cut from ONE ranked
@@ -1195,141 +1017,6 @@ object Similarity {
         col("n_found"),
         expr("(n_found * 1000000) div n_brute").as("recall_ppm"))
       .orderBy("shortlist", "qid")
-  }
-
-  // ------------------------------------------ IVFADC+R serving replica
-
-  /** One corpus entry of the CODES-ONLY serving replica (IVFADC+R):
-    * coarse cell + m residual codes + m′ refine codes — NO raw
-    * vector, which is q303's whole point (m + m′ small integers per
-    * vector instead of 8·dims raw bytes). */
-  final case class IvfAdcRefineEntry(vecId: Long, cell: Long,
-      rcodes: Array[Long], fcodes: Array[Long]) extends Serializable
-
-  /** Driver-held IVFADC+R replica: integer coarse centroids, residual
-    * and refine codebooks (per (subspace, cell): the subDim-wide
-    * subvector), and the coded corpus. Replica arithmetic at 10⁹
-    * vectors, m = m′ = 4, kSub ≤ 256: 8 code bytes/vec ≈ 8 GB —
-    * vs ~512 GB when the exact re-rank keeps raw 64-dim vectors
-    * (ivfAdcIndexBuild's refine side-car). SCALE.md carries the
-    * bytes/vec table. */
-  final case class IvfAdcRefineIndex(subDim: Int,
-      cents: Map[Long, Array[Long]],
-      rbooks: Map[Long, Map[Long, Array[Long]]],
-      fbooks: Map[Long, Map[Long, Array[Long]]],
-      entries: Array[IvfAdcRefineEntry]) extends Serializable {
-    /** Cell-keyed posting lists (the advice-r14 discipline). */
-    @transient lazy val byCell: Map[Long, Array[IvfAdcRefineEntry]] =
-      entries.groupBy(_.cell)
-  }
-
-  /** Collect the codes-only replica off the memoized gated trainer
-    * state — bounded by index size (centroids + 2 codebooks +
-    * N·(m + m′) longs; the raw coordinate stream never leaves the
-    * cluster). */
-  def ivfAdcRefineIndexBuild(spark: SparkSession, dir: String)
-      : IvfAdcRefineIndex = {
-    val (kcent, _) = kmeansShared83(spark, dir)
-    val (_, rcent, rdist, a3f) = pqResShared(spark, dir)
-    val (_, fcent, fdist) = pqRefShared(spark, dir)
-    val cents = kcent.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._1)
-      .map { case (cell, rows) => cell -> rows.sortBy(_._2).map(_._3) }
-    def books(cent: DataFrame): Map[Long, Map[Long, Array[Long]]] =
-      cent.select(col("s"), col("cell"), col("dim"), col("c"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3)))
-        .groupBy(_._1)
-        .map { case (s, rows) =>
-          s -> rows.groupBy(_._2).map { case (cell, rs) =>
-            cell -> rs.sortBy(_._3).map(_._4) } }
-    def codesMap(dist: DataFrame): Map[Long, Array[Long]] =
-      pqCodes(dist).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .groupBy(_._1)
-        .map { case (v, rows) => v -> rows.sortBy(_._2).map(_._3) }
-    val a3 = a3f.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rc = codesMap(rdist)
-    val fc = codesMap(fdist)
-    val entries = rc.keys.toArray.sorted.map { v =>
-      IvfAdcRefineEntry(v, a3(v), rc(v), fc(v)) }
-    IvfAdcRefineIndex(16, cents, books(rcent), books(fcent), entries)
-  }
-
-  /** IVFADC+R SERVING against the codes-only replica — q303's exact
-    * semantics (probe `probes` cells under (d2, cell), residual-ADC
-    * rank under (adc_d2, vec_id), keep `shortlist`, DECODE cc+rc+fc
-    * and re-rank on the reconstruction distance under (d2r, vec_id))
-    * as ONE stateless per-row projection: the same body serves a
-    * batch frame and a query stream (zero state stores). No raw
-    * vector is ever touched — the refine stage reads only codebook
-    * lookups, so this is the serve body a replica actually sized by
-    * codes can run. StreamingSpec pins serve ≡ the gated q303 chain
-    * row for row. */
-  def ivfAdcRefineServe(queries: DataFrame, ix: IvfAdcRefineIndex,
-      probes: Int, shortlist: Int, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    queries
-      .select(col("vec_id").cast("long"),
-        col("embedding").cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .flatMap { case (qid, emb) =>
-        val q = emb.map(x => math.floor(x * 1000.0 + 0.5).toLong)
-          .toArray
-        def d2(a: Array[Long], b: Array[Long], off: Int): Long = {
-          var d = 0L; var i = 0
-          while (i < b.length) {
-            val t = a(off + i) - b(i); d += t * t; i += 1 }
-          d
-        }
-        val probed = ix.cents.toArray
-          .map { case (cell, c) => (d2(q, c, 0), cell) }
-          .sorted.take(probes).map(_._2)
-        // residual-ADC lookup per (probed cell, subspace, rcell):
-        // Σ (q_d − cc_d − rc_d)² over the subspace — probe-bounded
-        val lut: Map[(Long, Long, Long), Long] =
-          probed.iterator.flatMap { cell =>
-            val cc = ix.cents(cell)
-            ix.rbooks.iterator.flatMap { case (s, cb) =>
-              val off = s.toInt * ix.subDim
-              cb.iterator.map { case (rcell, sub) =>
-                var d = 0L; var i = 0
-                while (i < sub.length) {
-                  val t = q(off + i) - cc(off + i) - sub(i)
-                  d += t * t; i += 1 }
-                ((cell, s, rcell), d)
-              } } }.toMap
-        val cands = probed.iterator
-          .flatMap(c => ix.byCell
-            .getOrElse(c, Array.empty[IvfAdcRefineEntry]).iterator)
-          .filter(_.vecId != qid)
-          .map { e =>
-            var adc = 0L; var s = 0
-            while (s < e.rcodes.length) {
-              adc += lut((e.cell, s.toLong, e.rcodes(s))); s += 1 }
-            (adc, e.vecId, e)
-          }.toArray.sortBy(t => (t._1, t._2)).take(shortlist)
-        cands.map { case (_, vid, e) =>
-          val cc = ix.cents(e.cell)
-          var d = 0L; var s = 0
-          while (s < e.rcodes.length) {
-            val rc = ix.rbooks(s.toLong)(e.rcodes(s))
-            val fc = ix.fbooks(s.toLong)(e.fcodes(s))
-            val off = s * ix.subDim
-            var i = 0
-            while (i < ix.subDim) {
-              val t = q(off + i) - cc(off + i) - rc(i) - fc(i)
-              d += t * t; i += 1 }
-            s += 1 }
-          (d, vid)
-        }.sorted.take(k).zipWithIndex
-          .map { case ((dd, vid), i) => (qid, (i + 1).toLong, vid, dd) }
-          .toSeq
-      }
-      .toDF("qid", "rank", "neighbor", "d2r")
   }
 
   // ---------------------------------------------------------------- q291

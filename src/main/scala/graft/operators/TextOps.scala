@@ -729,12 +729,10 @@ object TextOps {
     * word-length symbol rows); windows partition by word — maximal
     * parallelism, no global sort. The driver loop localCheckpoints
     * each round (iterative-lineage rule) and the 1-row argmax
-    * broadcasts into the merge-application join. */
-  def bpeTrain(docs: DataFrame, rounds: Int): DataFrame =
-    bpeTrainState(docs, rounds)._1
-
-  /** [[bpeTrain]] plus the final vocabulary segmentation state
-    * (w, c, pos, sym) — q231 reads tokens-per-word off it — plus the
+    * broadcasts into the merge-application join.
+    *
+    * Returns the merge table, the final vocabulary segmentation state
+    * (w, c, pos, sym) — q231 reads tokens-per-word off it — and the
     * per-round weighted token totals (round → Σc over state rows;
     * round 0 = character count) — q238 reads the vocab-budget curve
     * off them. Each total is one tiny aggregate over the round's
@@ -997,10 +995,10 @@ object TextOps {
 
   // ---------------------------------------------------------------- q248
 
-  /** BATCHED BPE TRAINING — [[bpeTrain]]'s merge rule, but each round
-    * takes the top-`k` candidate pairs (same (weight desc, l, r) rank)
-    * and applies the PREFIX-GREEDY CONFLICT-FREE subset: walking the
-    * candidates in rank order, a pair is accepted iff both its symbols
+  /** BATCHED BPE TRAINING — [[bpeTrainState]]'s merge rule, but each
+    * round takes the top-`k` candidate pairs (same (weight desc, l, r)
+    * rank) and applies the PREFIX-GREEDY CONFLICT-FREE subset: walking
+    * the candidates in rank order, a pair is accepted iff both its symbols
     * are disjoint from every already-accepted pick of this round.
     * Disjoint accepted pairs cannot produce adjacent matches (two
     * matches at consecutive positions share the middle symbol, which
@@ -1011,7 +1009,7 @@ object TextOps {
     *
     * This is the round-count axis the sequential trainer can't reach:
     * a production ~30k-merge vocabulary is ~30k sequential
-    * driver-coordinated jobs under [[bpeTrain]] but ~30k/k rounds
+    * driver-coordinated jobs under [[bpeTrainState]] but ~30k/k rounds
     * here — with k = 64 that is ~470 rounds, a realistic training
     * run. The trade is fidelity at the margin: counts of pairs
     * SHARING a symbol with an earlier accepted pick shift after that
@@ -1020,17 +1018,18 @@ object TextOps {
     * would have re-ranked — the standard batched-BPE caveat (public
     * practice in distributed tokenizer trainers). For k = 1 the
     * conflict filter is vacuous and the trainer is EXACTLY
-    * [[bpeTrain]] (pinned in TextOpsSpec), so fidelity is a knob, not
-    * a fork.
+    * [[bpeTrainState]] (pinned in TextOpsSpec), so fidelity is a knob,
+    * not a fork.
     *
     * Output: (merge_round, merge_l, merge_r, weight) where
     * merge_round is the GLOBAL acceptance ordinal (rounds in order,
-    * rank order within a round) — k = 1 reproduces [[bpeTrain]]'s
+    * rank order within a round) — k = 1 reproduces [[bpeTrainState]]'s
     * numbering bit-for-bit. Scale shape per round is unchanged
     * (vocabulary-sized frames, per-word windows, broadcast of ≤ k
     * accepted pairs into the match join, per-round localCheckpoint);
     * the ≤ k-row candidate collect is driver-side by design — it IS
-    * the round's coordination point, same as bpeTrain's limit(1). */
+    * the round's coordination point, same as bpeTrainState's
+    * limit(1). */
   def bpeTrainBatched(docs: DataFrame, rounds: Int, k: Int): DataFrame = {
     require(rounds >= 1 && k >= 1)
     val spark = docs.sparkSession
@@ -1341,7 +1340,7 @@ object TextOps {
     * ONE body: the Viterbi DP and the greedy WordPiece encoder read
     * the SAME edge frame, so the two tokenizers can never disagree
     * about the vocabulary. Returns (uwd = (w, c, len), uvoc =
-    * (piece, freq, kb) — the serving replica's source — and uedge). */
+    * (piece, freq, kb), and uedge). */
   private[graft] def uniEdgesOf(docs: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
@@ -1376,7 +1375,7 @@ object TextOps {
         .withColumn("rk", row_number().over(wr))
         .crossJoin(broadcast(budgets))
         .filter(col("rk") <= col("kb")).drop("rk"))
-      .localCheckpoint() // the edge join AND the serving replica
+      .localCheckpoint() // the edge join AND the returned uvoc
     val uedge = ugen.join(uvoc, "piece")
       .select(col("kb"), col("w"), (col("i") - 1).as("i0"),
         (col("i") - 1 + col("l")).as("nj"), col("freq"))
@@ -1387,9 +1386,9 @@ object TextOps {
   /** Memoized (uwd, uvoc, uedge) head over the corpus — built once,
     * read by BOTH tokenizer memos (`memo:unigram_state` and
     * `memo:wordpiece_state`; whichever builds first pays the head,
-    * the pq_res/pq_ref dependency precedent) and the serving-replica
-    * builder. Not a bench line item of its own: its cost is part of
-    * whichever tokenizer memo builds first. */
+    * the pq_res/pq_ref dependency precedent). Not a bench line item
+    * of its own: its cost is part of whichever tokenizer memo builds
+    * first. */
   private[graft] val uniEdges: Memo[(DataFrame, DataFrame, DataFrame)] =
     Memo("uni_edges") { (spark, dir) =>
       uniEdgesOf(load(spark, dir, "documents"))
@@ -1548,80 +1547,6 @@ object TextOps {
         expr("(n_pieces_corpus * 1000) div n_tokens_corpus")
           .as("fertility_e3"))
       .orderBy("kb")
-
-  /** Driver-held unigram SERVING REPLICA: the kb = 500 vocabulary
-    * (piece → corpus frequency) collected off the memoized head —
-    * vocab-sized driver state (the codebook-class rule: ≤ kb + |code
-    * points| entries, independent of corpus size). Encoding an unseen
-    * stream against a FIXED vocab is stateless, so the stream twin is
-    * one flatMap over this replica (the [[Similarity.pqEncode]]
-    * discipline). */
-  def unigramVocabBuild(spark: SparkSession, dir: String)
-      : Map[String, Long] = {
-    val (_, uvoc, _) = uniEdges(spark, dir)
-    uvoc.filter(col("kb") === 500L)
-      .select(col("piece"), col("freq"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-  }
-
-  /** The q304 Viterbi objective as a driver-side fold over CODE
-    * POINTS (the round-11 unicode contract: `length`/`substring`
-    * count code points in both engines, so the replica must too):
-    * lexicographic (fewest pieces, max Σfreq) over vocab pieces of
-    * ≤ 6 code points. Returns (n, fs) or None when the word is out
-    * of the 1..16 scope or unsegmentable (a code point outside the
-    * trained vocab — production adds a byte-fallback tier; the twin
-    * serves the trained distribution). ONE body for the stream twin
-    * and the StreamingSpec replay. */
-  private[graft] def unigramSegment(w: String,
-      vocab: Map[String, Long]): Option[(Long, Long)] = {
-    val cps = w.codePoints.toArray
-    val n = cps.length
-    if (n < 1 || n > 16) return None
-    val best = Array.fill[Option[(Long, Long)]](n + 1)(None)
-    best(0) = Some((0L, 0L))
-    for (j <- 0 until n; if best(j).isDefined;
-        l <- 1 to math.min(6, n - j)) {
-      val piece = new String(cps, j, l)
-      vocab.get(piece).foreach { f =>
-        val (bn, bf) = best(j).get
-        val cand = (bn + 1, bf + f)
-        if (best(j + l).forall(cur => cand._1 < cur._1 ||
-            (cand._1 == cur._1 && cand._2 > cur._2)))
-          best(j + l) = Some(cand)
-      }
-    }
-    best(n)
-  }
-
-  /** The q312 greedy rule as a driver-side fold over CODE POINTS
-    * (the unigramSegment discipline — `length`/`substring` count
-    * code points in both engines, so the replica must too): leftmost-
-    * longest vocab match, piece length ≤ 6. Returns the piece count,
-    * or None when the word is out of the 1..16 scope or a position
-    * has no vocab piece (an unseen code point — production adds a
-    * byte-fallback tier). ONE body for the stream twin and the
-    * StreamingSpec replay. */
-  private[graft] def wordPieceSegment(w: String,
-      vocab: Map[String, Long]): Option[Long] = {
-    val cps = w.codePoints.toArray
-    val n = cps.length
-    if (n < 1 || n > 16) return None
-    var j = 0
-    var cnt = 0L
-    while (j < n) {
-      var l = math.min(6, n - j)
-      var found = -1
-      while (l >= 1 && found < 0) {
-        if (vocab.contains(new String(cps, j, l))) found = l
-        else l -= 1
-      }
-      if (found < 0) return None
-      j += found
-      cnt += 1
-    }
-    Some(cnt)
-  }
 
   /** Q312: WORDPIECE ENCODE CENSUS — q304's per-length readout for
     * the greedy encoder at the graded kb = 500 vocab: distinct words,
@@ -1868,88 +1793,6 @@ object TextOps {
         col("score"), col("n_terms"))
   }
 
-  /** Driver-held BM25 SERVING REPLICA (round-15 verdict item 8 — the
-    * lexical sibling of `Similarity.ivfAdcIndexBuild`): per term its
-    * df + posting list (doc_id, tf), per doc its length, and the two
-    * corpus scalars. Collected off the SAME aggregates the gated
-    * q247/q255 chains build, so serve ≡ the gated ranking is a
-    * structural identity, not a re-implementation. Replica size =
-    * the postings volume (Σ tf entries ≈ distinct (doc, term) pairs)
-    * — the honest single-node ceiling is priced in SCALE.md; past it
-    * the replica shards BY TERM (each query term probes one shard,
-    * the IVF posting-list discipline applied to text). */
-  final case class Bm25Index(df: Map[String, Long],
-      postings: Map[String, Array[(Long, Long)]],
-      dl: Map[Long, Long], tTokens: Long, dDocs: Long)
-      extends Serializable
-
-  def bm25IndexBuild(docs: DataFrame): Bm25Index = {
-    val toks = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-    val tf = toks.groupBy("doc_id", "term")
-      .agg(count(lit(1)).as("tf")).localCheckpoint()
-    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val postings = tf.collect()
-      .map(r => (r.getString(1), r.getLong(0), r.getLong(2)))
-      .groupBy(_._1)
-      .map { case (t, rows) =>
-        t -> rows.map(r => (r._2, r._3)).sortBy(_._1) }
-    val dlRows = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    Bm25Index(df, postings, dlRows.toMap,
-      dlRows.map(_._2).sum, dlRows.length.toLong)
-  }
-
-  /** Stateless BM25 serving over the replica — q255's EXACT integer
-    * div chain as one flatMap (works on batch AND streaming frames,
-    * the ivfAdcServe contract): input rows (query_id, terms array),
-    * output the per-query top-k under (score desc, doc_id).
-    * StreamingSpec pins serve ≡ the gated q255 row for row. Terms
-    * with no postings contribute nothing (the inner-join semantics);
-    * per-query work is Σ postings of ITS terms — probe-bounded. */
-  def bm25Serve(queries: DataFrame, ix: Bm25Index, topK: Int = 10)
-      : DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val avgdlE3 = (ix.tTokens * 1000L) / math.max(ix.dDocs, 1L)
-    queries
-      .select(col("query_id").cast("long"),
-        col("terms").cast("array<string>"))
-      .as[(Long, Seq[String])]
-      .flatMap { case (qid, terms) =>
-        val acc = scala.collection.mutable.LongMap.empty[(Long, Long)]
-        // NO .distinct (round-17 advice fix): the gated q255 batch
-        // chain scores duplicate (query_id, term) rows independently
-        // — a repeated query term contributes its tscore (and its
-        // n_terms increment) once PER OCCURRENCE. The serve ≡ batch
-        // pin previously held only because the gated query table is
-        // duplicate-free; this makes the equivalence unconditional.
-        terms.foreach { t =>
-          ix.postings.get(t).foreach { pl =>
-            val dfT = ix.df(t)
-            val idfX = (ix.dDocs * 1000000L) / dfT
-            pl.foreach { case (docId, tfV) =>
-              val dlV = ix.dl(docId)
-              val ratioE3 = (dlV * 1000000L) / avgdlE3
-              val normE3 = 250L + (750L * ratioE3) / 1000L
-              val denE3 = tfV * 1000L + (1200L * normE3) / 1000L
-              val tscore =
-                (idfX * ((tfV * 2200L * 1000000L) / denE3)) / 1000000L
-              val (s0, n0) = acc.getOrElse(docId, (0L, 0L))
-              acc(docId) = (s0 + tscore, n0 + 1L)
-            }
-          }
-        }
-        acc.toSeq
-          .map { case (docId, (s, nt)) => (s, docId, nt) }
-          .sortBy { case (s, docId, _) => (-s, docId) }
-          .take(topK).zipWithIndex
-          .map { case ((s, docId, nt), i) =>
-            (qid, (i + 1).toLong, docId, s, nt) }
-      }
-      .toDF("query_id", "rank", "doc_id", "score", "n_terms")
-  }
   private[graft] def bm25QueryTable(docs: DataFrame): DataFrame = {
     val dfr = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))

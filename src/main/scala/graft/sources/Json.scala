@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.util.Base64
+
+import org.apache.avro.generic.GenericFixed
+
 /** Minimal JSON renderer for connector outputs (inverse of
   * `graft.config.Parsers.flatJson`). */
 object Json {
@@ -25,6 +29,9 @@ object Json {
     case d: Double =>
       if (d == d.floor && !d.isInfinite) d.toLong.toString else d.toString
     case f: Float => render(f.toDouble)
+    // base64, as Spark's to_json writes binary and from_json reads it
+    case b: Array[Byte] => render(Base64.getEncoder.encodeToString(b))
+    case f: GenericFixed => render(f.bytes())
     case other => render(other.toString)
   }
 }

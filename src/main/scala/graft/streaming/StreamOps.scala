@@ -781,75 +781,6 @@ object StreamOps {
       .select(col("w.start").as("w_start"), col("source"),
         col("n_docs"), col("tok_sum"), col("n_en"))
 
-  /** STREAMING UNIGRAM ENCODER (q304's serving twin — round-15
-    * verdict item 7): an incoming micro-batch of words segments
-    * against the driver-held kb = 500 vocab replica
-    * ([[graft.operators.TextOps.unigramVocabBuild]] off the memoized
-    * gated head) — the Viterbi DP per word is a pure function of
-    * (word, vocab), so there is NO state store, no watermark, no
-    * shuffle (the [[graft.operators.Similarity.pqEncode]]
-    * discipline: encode against FIXED trained state is stateless;
-    * vocab refresh = restart or
-    * foreachBatch re-broadcast). Out-of-scope / unsegmentable words
-    * emit nothing (production adds a byte-fallback tier).
-    * StreamingSpec pins stream ≡ the gated q304 state (kb = 500)
-    * row for row on overlapping batches. */
-  def unigramEncodeStream(words: DataFrame,
-      vocab: Map[String, Long]): DataFrame = {
-    import words.sparkSession.implicits._
-    words.select(col("w").cast("string"))
-      .as[String]
-      .flatMap { w =>
-        graft.operators.TextOps.unigramSegment(w, vocab)
-          .map { case (n, fs) => (w, n, fs) }
-      }
-      .toDF("w", "n", "fs")
-  }
-
-  /** STREAMING WORDPIECE ENCODER (q312's serving twin — completes
-    * the tokenizer serving triad beside the BPE encoder and
-    * [[unigramEncodeStream]]): greedy longest-match against the SAME
-    * driver-held kb = 500 vocab replica, stateless (one flatMap, no
-    * state store, no shuffle). StreamingSpec pins stream ≡ the gated
-    * q312 state (kb = 500) row for row on overlapping batches. */
-  def wordPieceEncodeStream(words: DataFrame,
-      vocab: Map[String, Long]): DataFrame = {
-    import words.sparkSession.implicits._
-    words.select(col("w").cast("string"))
-      .as[String]
-      .flatMap { w =>
-        graft.operators.TextOps.wordPieceSegment(w, vocab)
-          .map(n => (w, n))
-      }
-      .toDF("w", "n")
-  }
-
-  /** STREAMING SERP DEDUP (q301's twin) — serving-time result-list
-    * collapse as a foreachBatch deployment: each micro-batch is one
-    * result list (orig_rank, doc_id, score) and the batch op is the
-    * ONE collapse body q301 gates
-    * ([[graft.operators.Dedup.serpDedupCollapse]]), joined against
-    * the STATIC memoized component table. Zero stream state (the
-    * invIndexDeltaStream discipline) — the collapse windows are
-    * result-LIST-local, which is exactly why the deployment form is
-    * foreachBatch over the batch op rather than a continuous
-    * stateful query (the q137 "100 TB = foreachBatch over the capped
-    * batch op" pattern). `sink` receives each batch's collapsed
-    * list; StreamingSpec pins batch ≡ stream incl. a batch where two
-    * results share a component. */
-  def serpDedupStream(results: DataFrame, components: DataFrame)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    results.writeStream
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: Long) =>
-          sink(graft.operators.Dedup
-            .serpDedupCollapse(batch.toDF(), components))
-      }
-      .start()
-
   /** STREAMING CORPUS PREP — the q63 chain as a continuous pipeline
     * (documents arrive as a stream; the benchmark/eval corpus is a
     * static table):
@@ -899,7 +830,7 @@ object StreamOps {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark(Seq("__h"))
       .crossJoin(broadcast(benchSet))
-      // shingles() is already array_distinct per doc, so the intersect
+      // shinglesOf() is already array_distinct per doc, so the intersect
       // size IS the distinct-overlap count (same as Dedup.decontaminate)
       .filter(size(array_intersect(
         transform(shinglesOf(col("__w"), k), s => xxhash64(s)),

@@ -72,4 +72,21 @@ class AvroStreamSpec extends SparkSpecBase {
     assert(rows.count(_.isNullAt(1)) == 1) // poison row → nulls
     assert(rows.exists(r => !r.isNullAt(1) && r.getString(1) == "berlin"))
   }
+
+  test("a bytes field decodes into a BinaryType column equal to the " +
+      "encoded bytes") {
+    val bytesSchemaJson = AvroInference.toValueSchema(
+      Map("b" -> Array[Byte](0, 1, 2, -1)))
+    val raw = Array[Byte](0, 1, 2, -1, 127, -128)
+    val value = AvroCodec.encodeFramed(Map("b" -> raw),
+      AvroCodec.parseable(bytesSchemaJson), 3)
+    val key = AvroCodec.encodeFramed("k",
+      AvroCodec.parseable(keySchemaJson), 1)
+    val decoded = AvroStreamOps.decodeKafkaShaped(
+      Seq((key, value)).toDF("key", "value"), keySchemaJson,
+      bytesSchemaJson, StructType(Seq(StructField("b", BinaryType))))
+    val rows = decoded.collect()
+    assert(rows.length == 1)
+    assert(rows(0).getAs[Array[Byte]]("b").sameElements(raw))
+  }
 }

@@ -559,6 +559,23 @@ class ConnectorSpec extends AnyFunSuite {
       """{"key": null, "value": {"xs": [], "ys": [7]}}"""))
   }
 
+  test("file sink writes bytes and fixed fields as base64 strings") {
+    val schema = AvroCodec.parseable("""{"type": "record", "name": "B",
+      "fields": [{"name": "b", "type": "bytes"},
+                 {"name": "f", "type": {"type": "fixed", "name": "F", "size": 2}}]}""")
+    val codec = AvroCodec.Compiled(schema)
+    val fixed = new org.apache.avro.generic.GenericData.Fixed(
+      schema.getField("f").schema(), Array[Byte](-1, 0))
+    val broker = new InMemoryBroker()
+    broker.registerSchema(4, schema.toString)
+    broker.append("bytes", null, codec.encodeFramed(
+      Map("b" -> Array[Byte](0, 1, 2, -1), "f" -> fixed), 4))
+    val out = Files.createTempFile("graft-sink", ".jsonl")
+    new FileSink(out.toString, sinkConfig("bytes"), broker).run()
+    assert(Files.readAllLines(out).asScala == Seq(
+      """{"key": null, "value": {"b": "AAEC/w==", "f": "/wA="}}"""))
+  }
+
   test("file source: offset survives restart, no duplicate production (E1)") {
     val broker = new InMemoryBroker()
     val in = Files.createTempFile("graft-src", ".jsonl")

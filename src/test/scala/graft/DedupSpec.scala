@@ -14,36 +14,11 @@ class DedupSpec extends SparkSpecBase {
   private lazy val docs = load(spark, sf, "documents")
   private def planted(n: Long) = (0L until n).map(i => (i, i + NearDupIdOffset))
 
-  test("minhash+LSH finds planted near-dups with high recall, verified") {
-    val pairs = Dedup.minhashPairs(Dedup.docsWithNearDups(docs))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val found = pairs.toSet
-    val recall = planted(500).count(found.contains).toDouble / 500
-    assert(recall > 0.95, s"recall $recall")
-  }
-
-  test("minhash verification filters by true jaccard") {
-    val jac = Dedup.minhashPairs(Dedup.docsWithNearDups(docs))
-      .collect().map(_.getDouble(2))
-    assert(jac.forall(_ >= 0.5))
-  }
-
   test("ngram jaccard exact pairs ⊇ planted pairs") {
     val found = Dedup.ngramJaccardPairs(Dedup.docsWithNearDups(docs))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = planted(500).count(found.contains).toDouble / 500
     assert(recall > 0.99, s"recall $recall")
-  }
-
-  test("minhash candidates ≈ exact jaccard pairs (LSH vs ground truth)") {
-    val lsh = Dedup.minhashPairs(Dedup.docsWithNearDups(docs))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = Dedup.ngramJaccardPairs(Dedup.docsWithNearDups(docs))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // LSH output is a subset of exact (same threshold, verified), and
-    // misses few pairs.
-    assert(lsh.subsetOf(exact))
-    assert(lsh.size.toDouble / exact.size > 0.9)
   }
 
   test("SHARED minhash (mod-P family): planted recall high, verified " +
@@ -57,6 +32,8 @@ class DedupSpec extends SparkSpecBase {
     val exact = Dedup.ngramJaccardPairs(Dedup.docsWithNearDups(docs))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(found.subsetOf(exact))
+    assert(found.size.toDouble / exact.size > 0.9,
+      s"LSH found ${found.size} of ${exact.size} exact pairs")
   }
 
   test("graft_minhash_mod ≡ driver-side (a·x+b) mod P fold on a hand frame") {
@@ -341,19 +318,6 @@ class DedupSpec extends SparkSpecBase {
         graft.operators.Dedup.crossCorpusIndexOf(existing), incoming)
       .collect().map(_.getLong(0)).toSet
     assert(survivors == Set(12L, 13L))
-  }
-
-  test("lshPlan: the minhashPairs defaults are the planned optimum at " +
-      "t=0.5, and rows-per-band grow monotonically with threshold") {
-    assert(Dedup.lshPlan(0.5, 64) == ((16, 4))) // (1/16)^(1/4) = 0.5
-    val rs = Seq(0.2, 0.5, 0.8, 0.95)
-      .map(t => Dedup.lshPlan(t, 64)._2)
-    assert(rs == rs.sorted, s"rows not monotone in threshold: $rs")
-    // bands * rows always equals the signature length
-    Seq(0.3, 0.6, 0.9).foreach { t =>
-      val (b, r) = Dedup.lshPlan(t, 48)
-      assert(b * r == 48)
-    }
   }
 
   test("crossCorpusDedup: df-capped ≡ uncapped, for caps that force " +

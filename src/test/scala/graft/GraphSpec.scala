@@ -355,18 +355,29 @@ class GraphSpec extends SparkSpecBase {
       df.select(col("u").as("n"))
         .unionAll(df.select(col("v").as("n")))
         .distinct().collect().map(_.getLong(0)).toSet
-    assert(nodes(Graph.kCore(g, 1)) == Set(1L, 2L, 3L, 4L, 5L, 6L, 7L))
-    assert(nodes(Graph.kCore(g, 2)) == Set(1L, 2L, 3L, 4L))
-    assert(nodes(Graph.kCore(g, 3)) == Set(1L, 2L, 3L, 4L))
-    assert(Graph.kCore(g, 4).isEmpty)
+    // the tail peels one node per round, so 3 rounds reach every
+    // fixpoint here; a 4th round must change nothing
+    def core(k: Long): Set[Long] = {
+      val got = nodes(Graph.kCorePeel(g, k, rounds = 3))
+      assert(nodes(Graph.kCorePeel(g, k, rounds = 4)) == got,
+        s"k=$k: 3 rounds did not reach the fixpoint")
+      got
+    }
+    assert(core(1) == Set(1L, 2L, 3L, 4L, 5L, 6L, 7L))
+    assert(core(2) == Set(1L, 2L, 3L, 4L))
+    assert(core(3) == Set(1L, 2L, 3L, 4L))
+    assert(core(4).isEmpty)
+    // one round short of the fixpoint, the tail is still peeling
+    assert(nodes(Graph.kCorePeel(g, 2, rounds = 2)) ==
+      Set(1L, 2L, 3L, 4L, 5L))
   }
 
   test("k-core on the co-supply graph ≡ a driver-side peeling replay") {
     val edges = Graph.coEdges25(spark, sf)
-    val mine = Graph.kCore(edges, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // independent replay: naive peel over the collected edge list
+    // independent replay: naive synchronous peel over the collected
+    // edge list, counting the rounds that removed something
     var es = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    var rounds = 0
     var changed = true
     while (changed) {
       val deg = es.toSeq.flatMap(e => Seq(e._1, e._2))
@@ -374,9 +385,14 @@ class GraphSpec extends SparkSpecBase {
       val bad = deg.filter(_._2 < 3).keySet
       val next = es.filter(e => !bad(e._1) && !bad(e._2))
       changed = next != es
+      if (changed) rounds += 1
       es = next
     }
+    def peel(n: Int) = Graph.kCorePeel(edges, 3, rounds = n).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val mine = peel(rounds)
     assert(mine == es, s"spark ${mine.size} edges vs replay ${es.size}")
+    assert(peel(rounds + 1) == mine, "one more round changed the core")
     assert(mine.nonEmpty || es.isEmpty)
   }
 
@@ -533,15 +549,16 @@ class GraphSpec extends SparkSpecBase {
       (3L, 4L), (4L, 5L), (4L, 6L), (5L, 6L)).toDF("u", "v")
     val k4 = Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L))
-    val t4 = Graph.kTruss(edges, k = 4).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def truss(k: Long, rounds: Int) =
+      Graph.kTrussPeel(edges, k = k, rounds = rounds).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the pendant triangle goes in round 1; round 2 changes nothing
+    val t4 = truss(4, rounds = 1)
     assert(t4 == k4, s"$t4")
+    assert(truss(4, rounds = 2) == k4)
     // k = 3 keeps every edge that closes at least one triangle — all 9
-    assert(Graph.kTruss(edges, k = 3).count() == 9)
-    // q131-discipline sibling: fixed rounds reach the same fixpoint
-    val fixed = Graph.kTrussPeel(edges, k = 4, rounds = 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(fixed == k4)
+    assert(truss(3, rounds = 1).size == 9)
+    assert(truss(3, rounds = 2).size == 9)
   }
 
   test("trussPeelRound degree orientation: a planted hub star + " +
@@ -575,7 +592,7 @@ class GraphSpec extends SparkSpecBase {
     assert(oriented == Set((100L, 1L), (100L, 2L), (100L, 3L),
       (1L, 2L), (1L, 3L), (2L, 3L)), s"$oriented")
     // and to convergence: the K4-like 4-truss on {100,1,2,3} is stable
-    assert(Graph.kTruss(edges, k = 4L).collect()
+    assert(Graph.kTrussPeel(edges, k = 4L, rounds = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet == oriented)
   }
 

@@ -174,33 +174,6 @@ class SimilaritySpec extends SparkSpecBase {
     }
   }
 
-  test("PQ: codes are m small ints, encode norm² tracks the true norm², " +
-      "and ADC+refine recall vs brute force is useful and refine-monotone") {
-    val books = Similarity.pqTrain(emb, m = 8, kSub = 16, iters = 3)
-    assert(books.length == 8 && books.forall(_.length == 16) &&
-      books.forall(_.forall(_.length == 8)))
-    val coded = Similarity.pqEncode(emb, books)
-    val rows = coded.limit(50).collect()
-    rows.foreach { r =>
-      val codes = r.getSeq[Long](r.fieldIndex("codes"))
-      assert(codes.length == 8 && codes.forall(c => c >= 0 && c < 16))
-    }
-    // Reconstructed norm² is positive and bounded by the true scale.
-    // (The fixture embeddings are UNIT-normalized — true norm² ≡ 1.0 —
-    // so there is no variance to correlate against; and Σ|c_s|²
-    // systematically UNDERestimates because averaging diverse
-    // subvectors shrinks centroids toward 0 — inherent PQ bias, shared
-    // by all candidates, which is why ADC ranking still works and why
-    // the shortlist is re-ranked exactly afterwards.)
-    val vn2as = Similarity.pqEncode(emb, books)
-      .select(col("vn2a")).collect().map(_.getDouble(0))
-    // (≤ 2.0: Jensen shrinks each |c_s|² below its cell's max |v_s|²,
-    // but different subspaces may cap at different vectors)
-    assert(vn2as.forall(v => v > 0 && v <= 2.0),
-      s"reconstructed norm² outside (0, 2]: " +
-        s"${vn2as.filter(v => v <= 0 || v > 2.0).take(3).mkString(",")}")
-  }
-
   test("q154 dispersion identity == brute-force pairwise sum on " +
       "planted vectors (incl. a singleton label)") {
     import spark.implicits._

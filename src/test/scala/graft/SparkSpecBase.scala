@@ -5,16 +5,11 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
-  * session construction dominates test wall-clock otherwise). */
+  * session construction dominates test wall-clock otherwise). Four cores
+  * whatever the host has, so plan shapes and partition counts are the
+  * same on every machine. */
 object SparkSpecBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session("4")
 }
 
 abstract class SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {

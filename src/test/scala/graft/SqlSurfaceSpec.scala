@@ -65,9 +65,10 @@ class SqlSurfaceSpec extends SparkSpecBase {
     val ids = rows.map(_.getLong(0)).toSet
     val viaScala = Tables.load(spark, sf, "documents")
       .filter(col("doc_id").isin(ids.toSeq: _*))
-      .select(col("doc_id"), Dedup.minhashSignature(
-        array_distinct(transform(Dedup.shingles(col("text"), 3),
-          s => xxhash64(s))), 64).as("sig"))
+      .select(col("doc_id"), call_function("graft_minhash",
+        array_distinct(transform(
+          Dedup.shinglesOf(split(col("text"), " "), 3),
+          s => xxhash64(s))), lit(64)).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     rows.foreach(r => assert(r.getSeq[Long](1) == viaScala(r.getLong(0))))
   }

@@ -26,9 +26,6 @@ case class SRep(ts: Timestamp, text: String, lang: String, source: String)
 case class EvI(ts: Timestamp, event_type: String, value: Double,
     user_id: Long, event_id: Long)
 
-/** Streaming vector row — PQ-encode twin test. */
-case class SVec(vec_id: Long, embedding: Seq[Float])
-
 /** Streaming semantics (SURVEY §2-B Q35): batch≡stream equivalence for
   * tumbling windows, late-data drop past the watermark, session windows,
   * streaming dedup, and the foreachBatch at-least-once file sink (the
@@ -303,101 +300,6 @@ class StreamingSpec extends SparkSpecBase {
       (w1, "s1", 1L, 2L, 1L)))
   }
 
-  test("streaming PQ encode ≡ batch pqEncode against the same trained " +
-      "codebook (stateless vector-ingest compression twin)") {
-    val static = Seq(
-      SVec(0L, Seq(0f, 0f, 1f, 1f)), SVec(1L, Seq(4f, 4f, 5f, 5f)),
-      SVec(2L, Seq(0.1f, 0f, 1f, 1.1f)), SVec(3L, Seq(4f, 4.1f, 5f, 5f)))
-      .toDF("vec_id", "embedding")
-    val books = graft.operators.Similarity.pqTrain(static, m = 2,
-      kSub = 2, iters = 1)
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("vec_id"), col("codes").cast("array<long>"),
-        col("vn2a"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getDouble(2)))
-      .toSet
-    val batch = key(graft.operators.Similarity.pqEncode(static, books))
-    val input = MemoryStream[SVec](spark)
-    input.addData(
-      SVec(0L, Seq(0f, 0f, 1f, 1f)), SVec(1L, Seq(4f, 4f, 5f, 5f)),
-      SVec(2L, Seq(0.1f, 0f, 1f, 1.1f)), SVec(3L, Seq(4f, 4.1f, 5f, 5f)))
-    val streamed = key(runAvailableNow(
-      graft.operators.Similarity.pqEncode(input.toDF(), books),
-      "pqencode"))
-    assert(streamed == batch && batch.size == 4)
-  }
-
-  test("streaming IVF-ADC serve ≡ the gated q285 chain row for row " +
-      "(q285 twin: stateless serving replica, no state store), and an " +
-      "OVERLAPPING second batch re-serves its query identically") {
-    import graft.operators.Similarity
-    val ix = Similarity.ivfAdcIndexBuild(spark, sf)
-    val gated = Similarity.queries("q285_ivfadc_topk")(spark, sf)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    val qvecs = graft.Tables.load(spark, sf, "embeddings")
-      .filter(col("vec_id") < 5)
-      .select(col("vec_id"), col("embedding").cast("array<float>"))
-      .collect()
-      .map(r => SVec(r.getLong(0), r.getSeq[Float](1)))
-    val input = MemoryStream[SVec](spark)
-    val df = Similarity.ivfAdcServe(input.toDF(), ix, probes = 4,
-      shortlist = 50, k = 10)
-    val q = df.writeStream.format("memory").queryName("ivfserve")
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("ckpt-ivfserve").toString)
-      .start()
-    try {
-      input.addData(qvecs.take(3): _*); q.processAllAvailable()
-      // batch 2 OVERLAPS batch 1 on qid 2 — a stateless server answers
-      // the repeat identically (no dedup state to interfere)
-      input.addData(qvecs.drop(2): _*); q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("ivfserve").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(rows.toSet == gated,
-      s"serve rows ${rows.toSet.size} != gated ${gated.size}")
-    // qid 2 was served twice, identically (60 = 50 distinct + 10 repeat)
-    assert(rows.length == 60 && rows.count(_._1 == 2L) == 20)
-  }
-
-  test("streaming IVFADC+R serve ≡ the gated q303 chain row for row " +
-      "(q303 twin: CODES-ONLY replica — no raw vectors anywhere in " +
-      "the serve path — stateless, overlapping batch re-serves " +
-      "identically)") {
-    import graft.operators.Similarity
-    val ix = Similarity.ivfAdcRefineIndexBuild(spark, sf)
-    val gated = Similarity.queries("q303_ivfadc_refine_topk")(spark, sf)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    val qvecs = graft.Tables.load(spark, sf, "embeddings")
-      .filter(col("vec_id") < 5)
-      .select(col("vec_id"), col("embedding").cast("array<float>"))
-      .collect()
-      .map(r => SVec(r.getLong(0), r.getSeq[Float](1)))
-    val input = MemoryStream[SVec](spark)
-    val df = Similarity.ivfAdcRefineServe(input.toDF(), ix, probes = 4,
-      shortlist = 50, k = 10)
-    val q = df.writeStream.format("memory").queryName("ivfrefserve")
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("ckpt-ivfrefserve").toString)
-      .start()
-    try {
-      input.addData(qvecs.take(3): _*); q.processAllAvailable()
-      input.addData(qvecs.drop(2): _*); q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("ivfrefserve").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(rows.toSet == gated,
-      s"serve rows ${rows.toSet.size} != gated ${gated.size}")
-    assert(rows.length == 60 && rows.count(_._1 == 2L) == 20)
-  }
-
   test("streaming SERP dedup ≡ hand-computed per-list collapse " +
       "(q301 twin: foreachBatch over the ONE gated collapse body, " +
       "zero stream state) — incl. a batch where two results share a " +
@@ -408,14 +310,18 @@ class StreamingSpec extends SparkSpecBase {
     val input = MemoryStream[(Long, Long, Long)](spark)
     val got = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long, Long, Long, Long)]
-    val q = StreamOps.serpDedupStream(
-        input.toDF().toDF("orig_rank", "doc_id", "score"),
-        components) { out =>
-      got.synchronized {
-        got ++= out.collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+    val q = input.toDF().toDF("orig_rank", "doc_id", "score")
+      .writeStream.outputMode("append")
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        val out = graft.operators.Dedup.serpDedupCollapse(batch,
+          components)
+        got.synchronized {
+          got ++= out.collect().map(r => (r.getLong(0), r.getLong(1),
+            r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+        }
+        ()
       }
-    }
+      .start()
     try {
       // list 1: docs 10 and 11 share component 1 → 11 collapses
       input.addData((1L, 10L, 90L), (2L, 11L, 80L), (3L, 20L, 70L),
@@ -435,31 +341,6 @@ class StreamingSpec extends SparkSpecBase {
       val b2 = got.synchronized(got.toSet)
       assert(b2 == Set((1L, 11L, 1L, 95L, 1L, 2L)), s"batch2: $b2")
     } finally q.stop()
-  }
-
-  test("ivfAdcServe tie rule: equal-distance candidates break by " +
-      "vec_id at every stage (the (d2, vec_id) total order)") {
-    import graft.operators.Similarity
-    // one cell, one subspace of 2 dims, identical codebook entries →
-    // two candidates equidistant from the query at BOTH the ADC and
-    // the exact stage; vec_id must break the tie
-    val sub = Map(0L -> Array(0L, 0L))
-    val ix = Similarity.IvfAdcIndex(2,
-      Map(0L -> Array(0L, 0L)),
-      Map(0L -> sub),
-      Array(
-        Similarity.IvfAdcEntry(7L, 0L, Array(0L), Array(1000L, 0L)),
-        Similarity.IvfAdcEntry(3L, 0L, Array(0L), Array(0L, 1000L)),
-        Similarity.IvfAdcEntry(9L, 0L, Array(0L), Array(3000L, 3000L))))
-    val queries = Seq((100L, Seq(0f, 0f)))
-      .toDF("vec_id", "embedding")
-    val out = Similarity.ivfAdcServe(queries, ix, probes = 1,
-      shortlist = 2, k = 2).collect()
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-    // 3 and 7 tie at d2 = 1e6; 3 < 7 wins rank 1; 9 is cut by the
-    // shortlist (ADC ties also broke by vec_id keeping {3, 7})
-    assert(out.toSeq == Seq((1L, 3L, 1000000L), (2L, 7L, 1000000L)),
-      s"${out.toSeq}")
   }
 
   test("streaming incremental cross-corpus dedup ≡ batch crossCorpusDedup " +
@@ -1526,111 +1407,5 @@ class StreamingSpec extends SparkSpecBase {
         closed.exists(t => t._1 == 2L && t._4 == 2L),
         "delta == gap must MERGE (abutting windows coalesce — measured)")
     } finally q.stop()
-  }
-
-  test("streaming unigram encode ≡ the gated q304 state (kb=500) row " +
-      "for row over EVERY fixture word, served statelessly against " +
-      "the driver-held vocab replica; an overlapping second batch " +
-      "re-encodes identically (q304 serving twin, round-15 item 7)") {
-    import graft.operators.TextOps
-    val vocab = TextOps.unigramVocabBuild(spark, sf)
-    val gated = TextOps.uniState(spark, sf)
-      .filter(col("kb") === 500L)
-      .select("w", "n", "fs").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val words = gated.map(_._1).toSeq.sorted
-    val input = MemoryStream[SDoc](spark) // reuse (ts, text) carrier
-    val df = StreamOps.unigramEncodeStream(
-      input.toDF().select(col("text").as("w")), vocab)
-    val q = df.writeStream.format("memory").queryName("uniserve")
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("ckpt-uniserve").toString)
-      .start()
-    try {
-      val batch1 = words.take(words.length / 2 + 1)
-      input.addData(batch1.map(w => SDoc(ts(1), w)): _*)
-      q.processAllAvailable()
-      // overlap: the last word of batch 1 re-arrives in batch 2
-      input.addData(words.drop(words.length / 2)
-        .map(w => SDoc(ts(2), w)): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("uniserve").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    assert(rows.toSet == gated,
-      s"stream ${rows.toSet.size} rows != gated ${gated.size}")
-    // the overlapped word was served twice, identically
-    val dupW = words(words.length / 2)
-    assert(rows.count(_._1 == dupW) == 2)
-    // out-of-scope input emits nothing (17 code points)
-    assert(TextOps.unigramSegment("a" * 17, vocab).isEmpty)
-  }
-
-  test("streaming WordPiece encode ≡ the gated q312 state (kb=500) " +
-      "row for row against the same vocab replica (stateless greedy " +
-      "serving — the tokenizer serving triad complete)") {
-    import graft.operators.TextOps
-    val vocab = TextOps.unigramVocabBuild(spark, sf)
-    val gated = TextOps.wpState(spark, sf)
-      .filter(col("kb") === 500L)
-      .select("w", "n").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    val words = gated.map(_._1).toSeq.sorted
-    val input = MemoryStream[SDoc](spark)
-    val df = StreamOps.wordPieceEncodeStream(
-      input.toDF().select(col("text").as("w")), vocab)
-    val q = df.writeStream.format("memory").queryName("wpserve")
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("ckpt-wpserve").toString)
-      .start()
-    try {
-      input.addData(words.map(w => SDoc(ts(1), w)): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("wpserve").collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    assert(rows.toSet == gated,
-      s"stream ${rows.toSet.size} != gated ${gated.size}")
-    assert(TextOps.wordPieceSegment("a" * 17, vocab).isEmpty)
-  }
-
-  test("streaming BM25 serve ≡ the gated q255 multi-query ranking row " +
-      "for row against the driver-held postings replica (stateless; " +
-      "overlapping batch re-serves identically — round-15 item 8)") {
-    import graft.operators.TextOps
-    val docs = graft.Tables.load(spark, sf, "documents")
-    val ix = TextOps.bm25IndexBuild(docs)
-    val gated = TextOps.queries("q255_bm25_multi")(spark, sf)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSet
-    val qpairs: Seq[(Long, String)] = TextOps.bm25QueryTable(docs)
-      .collect().toSeq
-      .map(r => (r.getLong(0), r.getString(1)))
-    val qtab: Seq[(Long, Seq[String])] = qpairs.groupBy(_._1).toSeq
-      .map { case (qid, ts2) => (qid, ts2.map(_._2)) }
-      .sortBy(_._1)
-    val input = MemoryStream[(Long, Seq[String])](spark)
-    val df = TextOps.bm25Serve(
-      input.toDF().toDF("query_id", "terms"), ix)
-    val q = df.writeStream.format("memory").queryName("bm25serve")
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("ckpt-bm25serve").toString)
-      .start()
-    try {
-      input.addData(qtab.take(2): _*); q.processAllAvailable()
-      // overlap on the second query — stateless repeat
-      input.addData(qtab.drop(1): _*); q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("bm25serve").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
-    assert(rows.toSet == gated,
-      s"serve ${rows.toSet.size} != gated ${gated.size}")
-    assert(rows.count(_._1 == qtab(1)._1) == 20,
-      "overlapped query must serve twice, identically")
   }
 }

@@ -413,7 +413,7 @@ class TextOpsSpec extends SparkSpecBase {
     // Round 4: no adjacent pairs anywhere -> NO row (argmax of empty).
     val docs = Seq((1L, "aaab aaab ab"), (2L, "aaaa"))
       .toDF("doc_id", "text")
-    val got = TextOps.bpeTrain(docs, rounds = 5).collect()
+    val got = TextOps.bpeTrainState(docs, rounds = 5)._1.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getLong(3)))
     assert(got.toSeq == Seq(
@@ -480,10 +480,10 @@ class TextOpsSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getLong(3))).toSeq
     assert(rows(TextOps.bpeTrainBatched(hand, rounds = 5, k = 1)) ==
-      rows(TextOps.bpeTrain(hand, rounds = 5)))
+      rows(TextOps.bpeTrainState(hand, rounds = 5)._1))
     val real = graft.Tables.load(spark, sf, "documents").limit(200)
     assert(rows(TextOps.bpeTrainBatched(real, rounds = 4, k = 1)) ==
-      rows(TextOps.bpeTrain(real, rounds = 4)))
+      rows(TextOps.bpeTrainState(real, rounds = 4)._1))
   }
 
   test("bpeTrainBatched planted-conflict golden: rank-2 pair sharing a " +
@@ -512,7 +512,7 @@ class TextOpsSpec extends SparkSpecBase {
         r.getLong(3))).toSeq
     assert(got == Seq((0L, "a", "b", 3L), (1L, "c", "d", 2L)), s"$got")
     // sequential needs two rounds for the same table
-    assert(TextOps.bpeTrain(docs, rounds = 1).count() == 1L)
+    assert(TextOps.bpeTrainState(docs, rounds = 1)._1.count() == 1L)
   }
 
   test("bpeTrainStateBatched ≡ bpeTrainState on ALL THREE components " +

@@ -1,16 +1,25 @@
 #!/usr/bin/env python3
-"""List the public API in src/main that only tests use.
+"""Check the public API in src/main that only tests use against a keep table.
 
-Prints every public `def` declared in an object, class or trait body under
-src/main whose name appears nowhere outside comments in src/main,
-perfbench/src or tools, one line each:
+A def is test-only when it is a public `def` declared in an object, class
+or trait body under src/main and its name appears nowhere outside
+comments in src/main, perfbench/src or tools (this file excepted).  The
+defining token itself does not count as a reference; `override` and
+`implicit` defs, and members of private templates, are skipped.  Names
+are matched as whole words, so an overloaded name counts as referenced
+when any overload is.
+
+KEEP below maps each test-only def that stays, as `<file stem>.<name>`,
+to the one-line reason it stays.  The tool prints
 
     file:line name [test files naming it]
 
-The defining token itself does not count as a reference; `override` and
-`implicit` defs, and members of private templates, are skipped.  Names are
-matched as whole words, so an overloaded name counts as referenced when any
-overload is.
+for every test-only def not in KEEP, and
+
+    KEEP Stem.name: no longer a test-only def
+
+for every KEEP entry that matches none, and exits 1 if it printed
+anything, 0 otherwise.
 
 Usage: python3 tools/test_only_api.py   (from the repository root)
 """
@@ -30,6 +39,86 @@ DEF = re.compile(
     r"^\s*((?:(?:final|override|implicit|lazy|private|protected)"
     r"(?:\[[\w.]+\])?|@[\w.]+)\s+)*def\s+([A-Za-z_]\w*)")
 TEMPLATE = re.compile(r"\b(object|class|trait)\b|^\s*(extends|with)\b")
+
+
+STREAM_STATE = "streaming-only semantics: "
+KEEP = {
+    # reference parity: the pyconnect API surface
+    "Configs.fromJsonString": "reference parity (config from a JSON string)",
+    "Configs.jsonFile": "reference parity (config from a JSON file)",
+    "Configs.hideSensitive": "reference parity (masked config rendering)",
+    "Logging.debug": "reference parity (logger level method)",
+    "Logging.warn": "reference parity (logger level method)",
+    "FileConnectors.forSink": "reference parity (file sink factory)",
+    "FileConnectors.forSource": "reference parity (file source factory)",
+    "FileConnectors.forOffsetConsumer":
+        "reference parity (offset consumer factory)",
+    "SchemaRegistryHttp.getById": "reference parity (registry lookup by id)",
+    "Connector.statusInfo": "reference parity (connector status report)",
+    # session seams
+    "SqlSurface.registerTables":
+        "registers a data directory's tables on a GraftExtensions session",
+    "ApproxDistinctRule.enable": "switches the optimizer rule on a session",
+    "ApproxDistinctRule.disable": "switches the optimizer rule off again",
+    "BandedRangeJoinRule.enable": "switches the optimizer rule on a session",
+    "BandedRangeJoinRule.disable": "switches the optimizer rule off again",
+    "Logging.configureForTest":
+        "points the log sink at a stream without touching env or JUL",
+    # references the kept operators are checked against
+    "StreamOps.batchTumblingCounts":
+        "batch reference for the windowed stream equivalence tests",
+    "TextOps.bpeTrainState":
+        "sequential BPE trainer that bpeTrainBatched(k = 1) must reproduce",
+    "Percentiles.contByRank":
+        "whole-group PERCENTILE_CONT that contByRankSplit must match",
+    "VectorOps.cosine":
+        "interpreted cosine that the native graft_cosine must match",
+    "Clustering.wcss":
+        "Lloyd's objective that shows kMeansCentroids converges",
+    "Graph.itemSimilarity":
+        "its hand golden is the one exact-value check of itemSimilarityFrom",
+    # operators whose body has no gated twin
+    "Clustering.kMeansCentroids":
+        "float Lloyd's trainer, the centroid source knnIvf and semanticDedup "
+        "document; the gated kMeansShared is integer and differs in rules",
+    "Dedup.embeddingNearDupPairs":
+        "float-cosine hyperplane LSH, the Scala form of the SQL near-dup "
+        "join over graft_hyperplane/graft_cosine",
+    "ZOrder.zOrderWrite": "the only writer of the Z-ordered layout",
+    "AvroStreamOps.decodeKafkaShaped":
+        "decodes the Kafka (key, value) binary shape of a stream",
+    # stream operators whose semantics a batch body cannot express
+    "StreamOps.tumblingCounts": STREAM_STATE + "watermarked window state",
+    "StreamOps.sessionCounts": STREAM_STATE + "watermarked session windows",
+    "StreamOps.dedupWithinWatermark":
+        STREAM_STATE + "dropDuplicatesWithinWatermark",
+    "StreamOps.nearDedupWithinWatermark":
+        STREAM_STATE + "dropDuplicatesWithinWatermark on a simhash key",
+    "StreamOps.dedupRateStream": STREAM_STATE + "watermarked window state",
+    "StreamOps.lastTouchStream": STREAM_STATE + "flatMapGroupsWithState",
+    "StreamOps.runningUserCounts": STREAM_STATE + "flatMapGroupsWithState",
+    "StreamOps.hllRegistersStream": STREAM_STATE + "mapGroupsWithState",
+    "StreamOps.cmsRegistersStream": STREAM_STATE + "mapGroupsWithState",
+    "StreamOps.quantileSketchStream": STREAM_STATE + "flatMapGroupsWithState",
+    "StreamOps.funnelDepthStream": STREAM_STATE + "flatMapGroupsWithState",
+    "StreamOps.funnelWindowedStream": STREAM_STATE + "flatMapGroupsWithState",
+    "StreamOps.scd2Stream": STREAM_STATE + "flatMapGroupsWithState",
+    "StreamOps.arrivalGapsStream": STREAM_STATE + "flatMapGroupsWithState",
+    "StreamOps.ewmaStream": STREAM_STATE + "flatMapGroupsWithState",
+    "StreamOps.rollingWauStream":
+        STREAM_STATE + "dropDuplicatesWithinWatermark and window state",
+    "StreamOps.holtStream": STREAM_STATE + "flatMapGroupsWithState",
+    "StreamOps.ohlcStream": STREAM_STATE + "watermarked window state",
+    "StreamOps.peakRateStream": STREAM_STATE + "watermarked window state",
+    "StreamOps.asofJoinStreamStatic":
+        STREAM_STATE + "stream-static as-of join",
+    "StreamOps.corpusReportStream": STREAM_STATE + "watermarked window state",
+    "StreamOps.corpusPrepStream":
+        STREAM_STATE + "dropDuplicatesWithinWatermark",
+    "StreamOps.invIndexDeltaStream":
+        STREAM_STATE + "stream-static left join; q261's full outer join "
+        "cannot run on a stream",
+}
 
 
 def scala_code(text):
@@ -103,8 +192,9 @@ def python_code(text):
 def sources(top, exts):
     for d, _, files in os.walk(os.path.join(ROOT, top)):
         for f in sorted(files):
-            if f.endswith(exts):
-                yield os.path.join(d, f)
+            path = os.path.join(d, f)
+            if f.endswith(exts) and path != os.path.abspath(__file__):
+                yield path
 
 
 def code_of(path):
@@ -166,11 +256,21 @@ def main():
     for path in sources(TEST, (".scala",)):
         for w in words(code_of(path)[0]):
             tests.setdefault(w, []).append(os.path.basename(path))
+    printed = False
+    test_only = set()
     for rel, lineno, name in decls:
         if use.get(name, 0) <= ndefs[name]:
-            print("%s:%d %s [%s]" % (rel, lineno, name,
-                                     ", ".join(tests.get(name, []))))
-    return 0
+            key = "%s.%s" % (os.path.splitext(os.path.basename(rel))[0],
+                             name)
+            test_only.add(key)
+            if key not in KEEP:
+                print("%s:%d %s [%s]" % (rel, lineno, name,
+                                         ", ".join(tests.get(name, []))))
+                printed = True
+    for key in sorted(set(KEEP) - test_only):
+        print("KEEP %s: no longer a test-only def" % key)
+        printed = True
+    return 1 if printed else 0
 
 
 if __name__ == "__main__":
